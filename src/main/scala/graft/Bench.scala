@@ -1,5 +1,6 @@
 package graft
 
+import graft.runtime.Sessions
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -32,14 +33,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // spec: local[32]
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt // spec: local[32]
+    val spark = Sessions.local(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // Timing window covers ONLY the query execution: cache cleanup and the

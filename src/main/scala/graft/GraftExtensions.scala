@@ -1,196 +1,228 @@
 package graft
 
-import graft.functions.expressions.{CosineSimilarity, L2DistanceSq, MinHashSignature, PolyHash, SimHash}
+import graft.functions.expressions._
 import graft.operators.Dedup
+import graft.plans.{AsofJoinStrategy, RangeJoinStrategy}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{Decimal, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions. Activate with
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`); for an already-running
-  * session use [[graft.FunctionRegistrar]].
+import scala.reflect.ClassTag
+
+/** SparkSessionExtensions entry point and the engine's only registration
+  * path: installs every SQL function in [[GraftExtensions.functions]] and
+  * the as-of / range-join planner strategies. Every session from
+  * [[graft.runtime.Sessions]] loads it through
+  * `spark.sql.extensions=graft.GraftExtensions`. Extensions apply when a
+  * session is created, so a session built any other way has neither the
+  * functions nor the custom join operators.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "cosine_similarity(a, b) takes 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("l2_distance_sq"),
-      new ExpressionInfo(classOf[L2DistanceSq].getName, "l2_distance_sq"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "l2_distance_sq(a, b) takes 2 arguments")
-        L2DistanceSq(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s) => PolyHash(s, Dedup.M)
-        case Seq(s, Literal(m: Long, _)) => PolyHash(s, m)
-        // SQL users write plain int literals (`poly_hash(s, 1000003)`
-        // parses as IntegerType) — widen rather than reject.
-        case Seq(s, Literal(m: Int, _)) => PolyHash(s, m.toLong)
-        case _ => throw new IllegalArgumentException(
-          "poly_hash(str[, mod]) takes a string and an optional integer literal modulus")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.withIntArgs("minhash_signature", children, 8, 3)(MinHashSignature.apply)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "simhash"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.withIntArgs("simhash", children, 16, 3)(SimHash.apply)))
-    ext.injectFunction((
-      FunctionIdentifier("nearest_cell_fixed"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.NearestCellFixed].getName,
-        "nearest_cell_fixed"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, c) => graft.functions.expressions.NearestCellFixed(v, c)
-        case _ => throw new IllegalArgumentException(
-          "nearest_cell_fixed(vec, cents) takes a long-array vector and a " +
-            "array<struct<cell, cv>> centroid list")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("clean_tokens"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.CleanTokens].getName, "clean_tokens"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, arr) =>
-          graft.functions.expressions.CleanTokens(
-            s, GraftExtensions.stringArrayArg("clean_tokens", arr))
-        case _ => throw new IllegalArgumentException(
-          "clean_tokens(str, array(stopword, ...)) takes a string column and a literal string array")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("clean_tokens_count"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.CleanTokensCount].getName,
-        "clean_tokens_count"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, arr) =>
-          graft.functions.expressions.CleanTokensCount(
-            s, GraftExtensions.stringArrayArg("clean_tokens_count", arr))
-        case _ => throw new IllegalArgumentException(
-          "clean_tokens_count(str, array(stopword, ...)) takes a string column and a literal string array")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("pii_scrub"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.PiiScrub].getName, "pii_scrub"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s) => graft.functions.expressions.PiiScrub(s)
-        case _ => throw new IllegalArgumentException(
-          "pii_scrub(str) takes one string column")
-      }))
-    // Aggregates: the analyzer wraps a returned AggregateFunction in an
-    // AggregateExpression itself (same path as built-in percentile).
-    ext.injectFunction((
-      FunctionIdentifier("topk_agg"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.BoundedTopKAgg].getName, "topk_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, id, Literal(k: Int, _)) =>
-          graft.functions.expressions.BoundedTopKAgg(v, id, k)
-        case _ => throw new IllegalArgumentException(
-          "topk_agg(value, id, k) takes two columns and an int literal k")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.MisraGriesAgg].getName, "misra_gries"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, Literal(k: Int, _)) =>
-          graft.functions.expressions.MisraGriesAgg(v, k)
-        case _ => throw new IllegalArgumentException(
-          "misra_gries(item, k) takes a string column and an int literal k")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_build"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.BloomBuildAgg].getName, "bloom_build"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, Literal(logBits: Int, _), Literal(k: Int, _)) =>
-          graft.functions.expressions.BloomBuildAgg(v, logBits, k)
-        case _ => throw new IllegalArgumentException(
-          "bloom_build(id, logBits, numHashes) takes a bigint column and two int literals")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.BloomMightContain].getName,
-        "bloom_might_contain"),
-      (children: Seq[Expression]) => children match {
-        case Seq(b, v, Literal(k: Int, _)) =>
-          graft.functions.expressions.BloomMightContain(b, v, k)
-        case _ => throw new IllegalArgumentException(
-          "bloom_might_contain(blob, id, numHashes) takes a binary column, a bigint column, and an int literal")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.BpeEncode].getName, "bpe_encode"),
-      (children: Seq[Expression]) => children match {
-        case Seq(w, Literal(m: org.apache.spark.unsafe.types.UTF8String, _)) =>
-          graft.functions.expressions.BpeEncode(w,
-            graft.functions.expressions.BpeEncode.parseModel(m.toString))
-        case _ => throw new IllegalArgumentException(
-          "bpe_encode(word, model) takes a string column and a " +
-            "'lhs rhs,lhs rhs,…' model literal")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("fixed_point_vector_sum"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.FixedPointVectorSum].getName,
-        "fixed_point_vector_sum"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, Literal(s: Long, _)) =>
-          graft.functions.expressions.FixedPointVectorSum(v, s)
-        case Seq(v, Literal(s: Int, _)) =>
-          graft.functions.expressions.FixedPointVectorSum(v, s.toLong)
-        case _ => throw new IllegalArgumentException(
-          "fixed_point_vector_sum(vec, scale) takes a vector column and an integer literal scale")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("levenshtein_within"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.LevenshteinWithin].getName,
-        "levenshtein_within"),
-      (children: Seq[Expression]) => children match {
-        case Seq(l, r, Literal(tau: Int, _)) =>
-          graft.functions.expressions.LevenshteinWithin(l, r, tau)
-        case _ => throw new IllegalArgumentException(
-          "levenshtein_within(l, r, tau) takes two strings and an int literal tau")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("deletion_variants"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.DeletionVariants].getName,
-        "deletion_variants"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, Literal(tau: Int, _)) =>
-          graft.functions.expressions.DeletionVariants(s, tau)
-        case _ => throw new IllegalArgumentException(
-          "deletion_variants(s, tau) takes a string and an int literal tau in {1, 2}")
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
+    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
+    ext.injectPlannerStrategy(_ => RangeJoinStrategy)
   }
 }
 
 object GraftExtensions {
+  type Builder = Seq[Expression] => Expression
+
+  private def fn[E <: Expression: ClassTag](name: String)(build: Builder)
+      : (String, Class[_], Builder) =
+    (name, implicitly[ClassTag[E]].runtimeClass, build)
+
+  /** The SQL function table: (name, expression class, builder). */
+  val functions: Seq[(String, Class[_], Builder)] = Seq(
+    fn[CosineSimilarity]("cosine_similarity") { children =>
+      require(children.length == 2, "cosine_similarity(a, b) takes 2 arguments")
+      CosineSimilarity(children.head, children(1))
+    },
+    fn[L2DistanceSq]("l2_distance_sq") { children =>
+      require(children.length == 2, "l2_distance_sq(a, b) takes 2 arguments")
+      L2DistanceSq(children.head, children(1))
+    },
+    fn[PolyHash]("poly_hash") {
+      case Seq(s) => PolyHash(s, Dedup.M)
+      case Seq(s, Literal(m: Long, _)) => PolyHash(s, m)
+      // SQL users write plain int literals (`poly_hash(s, 1000003)`
+      // parses as IntegerType) — widen rather than reject.
+      case Seq(s, Literal(m: Int, _)) => PolyHash(s, m.toLong)
+      case _ => throw new IllegalArgumentException(
+        "poly_hash(str[, mod]) takes a string and an optional integer literal modulus")
+    },
+    fn[MinHashSignature]("minhash_signature") { children =>
+      withIntArgs("minhash_signature", children, 8, 3)(MinHashSignature.apply)
+    },
+    fn[SimHash]("simhash") { children =>
+      withIntArgs("simhash", children, 16, 3)(SimHash.apply)
+    },
+    fn[NearestCellFixed]("nearest_cell_fixed") {
+      case Seq(v, c) => NearestCellFixed(v, c)
+      case _ => throw new IllegalArgumentException(
+        "nearest_cell_fixed(vec, cents) takes a long-array vector and a " +
+          "array<struct<cell, cv>> centroid list")
+    },
+    fn[MinCellDistFixed]("min_cell_dist_fixed") {
+      case Seq(v, c) => MinCellDistFixed(v, c)
+      case _ => throw new IllegalArgumentException(
+        "min_cell_dist_fixed(vec, cents) takes a long-array vector and a " +
+          "array<struct<cell, cv>> center list")
+    },
+    fn[ScriptMix]("script_mix") {
+      case Seq(t) => ScriptMix(t)
+      case _ => throw new IllegalArgumentException(
+        "script_mix(text) takes one string column")
+    },
+    fn[CleanTokens]("clean_tokens") {
+      case Seq(s, arr) => CleanTokens(s, stringArrayArg("clean_tokens", arr))
+      case _ => throw new IllegalArgumentException(
+        "clean_tokens(str, array(stopword, ...)) takes a string column and a literal string array")
+    },
+    fn[CleanTokensCount]("clean_tokens_count") {
+      case Seq(s, arr) => CleanTokensCount(s, stringArrayArg("clean_tokens_count", arr))
+      case _ => throw new IllegalArgumentException(
+        "clean_tokens_count(str, array(stopword, ...)) takes a string column and a literal string array")
+    },
+    fn[GopherStats]("gopher_stats") {
+      case Seq(s, arr) => GopherStats(s, stringArrayArg("gopher_stats", arr))
+      case _ => throw new IllegalArgumentException(
+        "gopher_stats(str, array(stopword, ...)) takes a string column and a literal string array")
+    },
+    fn[PiiScrub]("pii_scrub") {
+      case Seq(s) => PiiScrub(s)
+      case _ => throw new IllegalArgumentException(
+        "pii_scrub(str) takes one string column")
+    },
+    fn[BpeEncode]("bpe_encode") {
+      case Seq(w, Literal(m: UTF8String, _)) =>
+        BpeEncode(w, BpeEncode.parseModel(m.toString))
+      case _ => throw new IllegalArgumentException(
+        "bpe_encode(word, model) takes a string column and a " +
+          "'lhs rhs,lhs rhs,…' model literal")
+    },
+    fn[LevenshteinWithin]("levenshtein_within") {
+      case Seq(l, r, Literal(tau: Int, _)) => LevenshteinWithin(l, r, tau)
+      case _ => throw new IllegalArgumentException(
+        "levenshtein_within(l, r, tau) takes two strings and an int literal tau")
+    },
+    fn[DeletionVariants]("deletion_variants") {
+      case Seq(s, Literal(tau: Int, _)) => DeletionVariants(s, tau)
+      case _ => throw new IllegalArgumentException(
+        "deletion_variants(s, tau) takes a string and an int literal tau in {1, 2}")
+    },
+    fn[HashedFeatureScore]("hashed_feature_score") {
+      case Seq(s) => HashedFeatureScore(s, 1024, Dedup.M)
+      case Seq(s, Literal(b: Int, _)) => HashedFeatureScore(s, b, Dedup.M)
+      case _ => throw new IllegalArgumentException(
+        "hashed_feature_score(text[, buckets]) takes a string column " +
+          "and an optional int literal bucket count")
+    },
+    fn[SignProject]("sign_project") {
+      case Seq(v, Literal(o: Int, _), Literal(d: Int, _)) =>
+        SignProject(v, o, d, 42L, 1000L)
+      case Seq(v, Literal(o: Int, _), Literal(d: Int, _), Literal(s: Int, _)) =>
+        SignProject(v, o, d, s.toLong, 1000L)
+      case Seq(v, Literal(o: Int, _), Literal(d: Int, _), Literal(s: Int, _),
+          Literal(sc: Int, _)) =>
+        SignProject(v, o, d, s.toLong, sc.toLong)
+      case _ => throw new IllegalArgumentException(
+        "sign_project(vec, dOut, dim[, seed[, scale]]) takes a vector " +
+          "column and int literals")
+    },
+    fn[ScaleVector]("scale_vector") {
+      case Seq(v, Literal(s: Long, _)) => ScaleVector(v, s)
+      case Seq(v, Literal(s: Int, _)) => ScaleVector(v, s.toLong)
+      case _ => throw new IllegalArgumentException(
+        "scale_vector(vec, scale) takes a numeric-array column and an integer literal scale")
+    },
+    fn[CdcChunks]("cdc_chunks") {
+      // w accepts Int OR Long literals (`cdc_chunks(t, 3L, 8)` is
+      // valid SQL) — widen/narrow rather than fall to the generic
+      // error; an out-of-Int-range w still gets the clear message.
+      case Seq(s, Literal(w: Int, _), Literal(d: Long, _)) =>
+        CdcChunks(s, w, d, Dedup.M)
+      case Seq(s, Literal(w: Int, _), Literal(d: Int, _)) =>
+        CdcChunks(s, w, d.toLong, Dedup.M)
+      case Seq(s, Literal(w: Long, _), Literal(d: Long, _)) if w.isValidInt =>
+        CdcChunks(s, w.toInt, d, Dedup.M)
+      case Seq(s, Literal(w: Long, _), Literal(d: Int, _)) if w.isValidInt =>
+        CdcChunks(s, w.toInt, d.toLong, Dedup.M)
+      case _ => throw new IllegalArgumentException(
+        "cdc_chunks(text, w, divisor) takes a string column and two integer literals")
+    },
+    fn[EncodeWavPcm8]("encode_wav_pcm8") {
+      case Seq(s) => EncodeWavPcm8(s)
+      case _ => throw new IllegalArgumentException(
+        "encode_wav_pcm8(samples) takes one array<int> column")
+    },
+    fn[WavEnergyHash]("wav_energy_hash") {
+      case Seq(b) => WavEnergyHash(b)
+      case _ => throw new IllegalArgumentException(
+        "wav_energy_hash(payload) takes one binary column")
+    },
+    fn[BloomMightContain]("bloom_might_contain") {
+      case Seq(b, v, Literal(k: Int, _)) => BloomMightContain(b, v, k)
+      case _ => throw new IllegalArgumentException(
+        "bloom_might_contain(blob, id, numHashes) takes a binary column, a bigint column, and an int literal")
+    },
+    // Aggregates: the analyzer wraps a returned AggregateFunction in an
+    // AggregateExpression itself (same path as built-in percentile).
+    fn[BoundedTopKAgg]("topk_agg") {
+      case Seq(v, id, Literal(k: Int, _)) => BoundedTopKAgg(v, id, k)
+      case _ => throw new IllegalArgumentException(
+        "topk_agg(value, id, k) takes two columns and an int literal k")
+    },
+    fn[MisraGriesAgg]("misra_gries") {
+      case Seq(v, Literal(k: Int, _)) => MisraGriesAgg(v, k)
+      case _ => throw new IllegalArgumentException(
+        "misra_gries(item, k) takes a string column and an int literal k")
+    },
+    fn[CountMinAgg]("count_min") {
+      case Seq(v, Literal(d: Int, _), Literal(w: Int, _)) =>
+        CountMinAgg(Cast(v, LongType), d, w)
+      case _ => throw new IllegalArgumentException(
+        "count_min(id, depth, width) takes a long column and two int literals")
+    },
+    fn[KminSketchAgg]("kmin_sketch") {
+      case Seq(v, Literal(k: Int, _)) => KminSketchAgg(Cast(v, LongType), k)
+      case _ => throw new IllegalArgumentException(
+        "kmin_sketch(hash, k) takes a bigint column and an int literal k")
+    },
+    fn[QuantileSketchAgg]("quantile_sketch") {
+      case Seq(v, Literal(k: Int, _), qs @ _*) if qs.nonEmpty =>
+        QuantileSketchAgg(v, k, qs.map {
+          case Literal(q: Double, _) => q
+          // bare 0.5 parses as a DECIMAL literal in SQL text
+          case Literal(q: Decimal, _) => q.toDouble
+          case other => throw new IllegalArgumentException(
+            s"quantile_sketch: quantiles must be numeric literals, got $other")
+        })
+      case _ => throw new IllegalArgumentException(
+        "quantile_sketch(value, k, q1[, q2...]) takes a column, an int " +
+          "literal k, and one or more numeric literal quantiles")
+    },
+    fn[BloomBuildAgg]("bloom_build") {
+      case Seq(v, Literal(logBits: Int, _), Literal(k: Int, _)) => BloomBuildAgg(v, logBits, k)
+      case _ => throw new IllegalArgumentException(
+        "bloom_build(id, logBits, numHashes) takes a bigint column and two int literals")
+    },
+    fn[FixedPointVectorSum]("fixed_point_vector_sum") {
+      case Seq(v, Literal(s: Long, _)) => FixedPointVectorSum(v, s)
+      case Seq(v, Literal(s: Int, _)) => FixedPointVectorSum(v, s.toLong)
+      case _ => throw new IllegalArgumentException(
+        "fixed_point_vector_sum(vec, scale) takes a vector column and an integer literal scale")
+    }
+  )
+
   /** Evaluates a foldable array<string> argument (SQL `array('a', 'b')`
     * parses as CreateArray, not Literal, so match on foldability).
     */
-  def stringArrayArg(name: String, e: Expression): Seq[String] = {
+  private def stringArrayArg(name: String, e: Expression): Seq[String] = {
     import org.apache.spark.sql.types.{ArrayType, StringType}
     val isStringArray = e.dataType match {
       case ArrayType(StringType, _) => true
@@ -199,12 +231,12 @@ object GraftExtensions {
     require(e.foldable && isStringArray,
       s"$name expects a literal array<string>, got ${e.dataType.catalogString}")
     val data = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    data.toArray[org.apache.spark.unsafe.types.UTF8String](StringType)
+    data.toArray[UTF8String](StringType)
       .map(s => if (s == null) null else s.toString).toSeq
   }
 
   /** Builder for `fn(str[, n[, k]])` signatures with int-literal options. */
-  def withIntArgs(name: String, children: Seq[Expression],
+  private def withIntArgs(name: String, children: Seq[Expression],
       defaultN: Int, defaultK: Int)(
       build: (Expression, Int, Int) => Expression): Expression = children match {
     case Seq(s) => build(s, defaultN, defaultK)

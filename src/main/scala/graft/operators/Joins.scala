@@ -95,10 +95,6 @@ object Joins {
                 leftTs: String, rightTs: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
-
     val l = left.withColumn(leftTs, col(leftTs).cast("timestamp"))
     val r0 = right.withColumn(rightTs, col(rightTs).cast("timestamp"))
       .na.drop(keys :+ rightTs)
@@ -138,10 +134,6 @@ object Joins {
                      loMicros: Long, hiMicros: Long): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.RangeJoinStrategy
-
     require(keys.nonEmpty, "range join requires at least one key column")
     val overlap = right.columns.toSet intersect left.columns.toSet
     require(overlap.isEmpty || keys.toSet.subsetOf(overlap),

@@ -128,8 +128,8 @@ case class RangeJoinExec(
 }
 
 /** Planner strategy mapping the logical [[RangeJoin]] to [[RangeJoinExec]].
-  * Register via `spark.experimental.extraStrategies` (done by
-  * graft.operators.Joins.rangeJoinMerge) or session extensions.
+  * Installed by [[graft.GraftExtensions]] (`injectPlannerStrategy`) on every
+  * session from graft.runtime.Sessions.
   */
 object RangeJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -2,8 +2,11 @@ package graft.runtime
 
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated session factory: the confs a graft deployment wants, sized
-  * from the environment rather than hard-coded (SCALING.md).
+/** The engine's only session factory: the confs a graft deployment wants,
+  * sized from the environment rather than hard-coded (SCALING.md). Tests,
+  * Verify, Bench and the tools all get their session here, so the config
+  * that is tested, verified, benched and shipped is one config, and every
+  * session loads [[graft.GraftExtensions]].
   */
 object Sessions {
 

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.runtime.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator for scale testing beyond the
@@ -45,13 +46,8 @@ object GenData {
     val outDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val scale = if (args.length > 1) args(1).toInt else 10 // ×sf0.1
     val skew = args.length > 2 && args(2) == "skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus, "graft-gendata")
     spark.sparkContext.setLogLevel("WARN")
 
     def ids(n: Long, name: String) =

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.runtime.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev measurement for the round-7 HOF audit: isolates the surviving
@@ -24,12 +25,7 @@ import org.apache.spark.sql.functions._
 object HofBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(32, "graft-hofbench")
     spark.sparkContext.setLogLevel("WARN")
 
     def best3(name: String)(df: => DataFrame): Double = {

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.runtime.Sessions
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes `.explain("formatted")` output for named SparkEntry queries to
@@ -15,12 +15,8 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus, "graft-plandump")
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.split(",").foreach { name =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.runtime.Sessions
 
 /** Executed-plan audit over many queries in one JVM: per query, the
   * number of parquet scans, exchanges, reused exchanges/subqueries and
@@ -12,12 +12,8 @@ import org.apache.spark.sql.SparkSession
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus, "graft-scanaudit")
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.runtime.Sessions
 import org.apache.spark.sql.functions._
 
 /** Dev measurement: native wire-decode expressions vs their UDF
@@ -12,11 +12,7 @@ import org.apache.spark.sql.functions._
 object SerdeBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(32, "graft-serdebench")
     spark.sparkContext.setLogLevel("WARN")
 
     val avro = graft.serde.AvroSerde(

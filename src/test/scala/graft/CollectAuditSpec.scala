@@ -49,8 +49,6 @@ class CollectAuditSpec extends AnyFunSuite {
       "greedy coverage: 1 bounded winner row per round + its token set (maxTokensPerDoc)"),
     "graft/testkit/TestHarness.scala" -> (2,
       "testkit only: in-memory TestClient batches, never production data"),
-    "graft/tools/ExplainProbe.scala" -> (1,
-      "diagnostic tool main, not an operator path"),
     "graft/queries/ExtraQueries.scala" -> (2,
       "exact-percentile scalar grids: <= groups x probes rows, localCheckpoint'ed"),
     "graft/queries/RelationalQueries.scala" -> (1,

@@ -1,0 +1,40 @@
+package graft
+
+import java.sql.Timestamp
+
+import graft.operators.Joins
+
+/** The single registration path: every graft SQL function and both custom
+  * join strategies reach the shared session (built by
+  * [[graft.runtime.Sessions]]) through [[GraftExtensions]] alone, with no
+  * per-call registration and no runtime strategy mutation.
+  */
+class GraftExtensionsSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("every GraftExtensions function resolves on the Sessions-built session") {
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.size == 29)
+    assert(names.distinct.size == names.size, s"duplicate names: ${names.diff(names.distinct)}")
+    val missing = names.filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not resolvable: ${missing.mkString(", ")}")
+  }
+
+  test("as-of and range joins plan their custom execs without extraStrategies") {
+    val l = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"))).toDF("k", "t")
+    val r = Seq(
+      (1L, Timestamp.valueOf("2024-01-01 09:00:00"), 7L), // as-of match
+      (1L, Timestamp.valueOf("2024-01-01 10:02:00"), 8L)  // range match
+    ).toDF("k", "rt", "payload")
+
+    val asof = Joins.asofMerge(l, r, Seq("k"), "t", "rt")
+    assert(asof.queryExecution.executedPlan.toString.contains("AsofJoin"))
+    assert(asof.select("asof_payload").as[Long].collect().toSeq == Seq(7L))
+
+    val range = Joins.rangeJoinMerge(l, r, Seq("k"), "t", "rt", 0L, 5L * 60 * 1000000)
+    assert(range.queryExecution.executedPlan.toString.contains("RangeJoin"))
+    assert(range.select("payload").as[Long].collect().toSeq == Seq(8L))
+
+    assert(spark.experimental.extraStrategies.isEmpty)
+  }
+}

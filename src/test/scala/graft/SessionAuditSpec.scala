@@ -1,0 +1,61 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The one-factory gate: every SparkSession in the engine, its tools and
+  * its specs comes from `graft.runtime.Sessions`, and every SQL function
+  * and planner strategy is installed by [[GraftExtensions]]. A second
+  * session builder, a runtime function registrar, or a runtime
+  * strategy-list mutation fails this spec, so the config that is tested,
+  * verified, benched and shipped cannot drift apart again.
+  *
+  * The searched names are assembled from pieces so this file never
+  * matches itself.
+  */
+class SessionAuditSpec extends AnyFunSuite {
+
+  private val factory = "src/main/scala/graft/runtime/Sessions.scala"
+  private val builderCall = "SparkSession" + ".builder"
+  private val registrar = "Function" + "Registrar"
+  private val strategyList = "extra" + "Strategies"
+
+  /** (path from the project root, lines) of every .scala file under `dir`. */
+  private def sources(dir: String): Seq[(String, Array[String])] = {
+    val root = new java.io.File(dir)
+    assert(root.isDirectory, s"expected to run from the project root; cwd=${new java.io.File(".").getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(root).map { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      f.getPath.replace('\\', '/') -> src.split("\n", -1)
+    }
+  }
+
+  private lazy val mainSources = sources("src/main/scala")
+  private lazy val testSources = sources("src/test/scala")
+
+  /** `path:line` of every line containing `needle`. */
+  private def sites(needle: String, files: Seq[(String, Array[String])]): Seq[String] =
+    files.flatMap { case (path, lines) =>
+      lines.zipWithIndex.collect { case (l, i) if l.contains(needle) => s"$path:${i + 1}" }
+    }
+
+  test("only graft/runtime/Sessions.scala builds a SparkSession") {
+    val all = sites(builderCall, mainSources ++ testSources)
+    val (inFactory, elsewhere) = all.partition(_.startsWith(factory + ":"))
+    assert(inFactory.nonEmpty, s"$factory no longer builds sessions")
+    assert(elsewhere.isEmpty,
+      s"session built outside the factory (use Sessions.local): ${elsewhere.mkString("; ")}")
+  }
+
+  test("GraftExtensions is the only function and strategy registration path") {
+    val registrars = sites(registrar, mainSources ++ testSources)
+    assert(registrars.isEmpty, s"runtime function registrar: ${registrars.mkString("; ")}")
+    val sessionSpec = testSources.filter(_._1 == "src/test/scala/graft/SparkSpec.scala")
+    assert(sessionSpec.size == 1, "shared test session moved; update this audit")
+    val strategyEdits = sites(strategyList, mainSources ++ sessionSpec)
+    assert(strategyEdits.isEmpty,
+      s"planner strategies installed outside GraftExtensions: ${strategyEdits.mkString("; ")}")
+  }
+}

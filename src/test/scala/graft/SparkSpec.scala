@@ -3,20 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM-wide session, UTC, small
-  * shuffle parallelism for test speed).
+/** Shared local session for all specs: one JVM-wide session from the
+  * production factory, small shuffle parallelism for test speed.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // TableLayout specs call saveAsTable; SparkConf picks up spark.*
+    // system properties, so the temp warehouse needs no factory option.
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    val s = graft.runtime.Sessions.local(4, "graft-tests")
     s.sparkContext.setLogLevel("WARN")
     s
   }

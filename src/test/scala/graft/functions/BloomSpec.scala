@@ -32,7 +32,6 @@ class BloomSpec extends SparkSpec {
   test("distributed build is partition-count and order invariant (OR merge)") {
     val ids = (0L until 5000L).map(i => i * 2654435761L + 17L)
     def build(parts: Int): Array[Byte] = {
-      org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
       ids.toDF("id").repartition(parts)
         .agg(expr("bloom_build(id, 16, 5)").as("b"))
         .collect().head.getAs[Array[Byte]]("b")
@@ -45,7 +44,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("SQL surface: bloom_build + bloom_might_contain round-trip") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     Seq(1L, 2L, 3L).toDF("id").createOrReplaceTempView("bloom_in")
     val out = spark.sql("""
       WITH b AS (SELECT bloom_build(id, 10, 3) AS blob FROM bloom_in)

@@ -64,7 +64,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("sql registration: count_min works end-to-end") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     Seq(5L, 5L, 9L).toDF("id").createOrReplaceTempView("cm_in")
     val grid = spark.sql(s"SELECT count_min(id, $depth, $width) FROM cm_in")
       .collect()(0).getSeq[Long](0).toArray

@@ -58,7 +58,6 @@ class PiiScrubSpec extends SparkSpec {
 
   test("sql registration: pii_scrub works end-to-end") {
     import spark.implicits._
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val out = Seq("reach me at jane.doe@corp.example.org or 555-867-5309 from 192.168.0.1")
       .toDF("t").selectExpr("pii_scrub(t) as s").as[String].collect()(0)
     assert(out == "reach me at <EMAIL> or <PHONE> from <IP>")

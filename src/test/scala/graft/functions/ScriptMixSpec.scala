@@ -47,7 +47,6 @@ class ScriptMixSpec extends SparkSpec {
   }
 
   test("sql registration: script_mix end-to-end") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     Seq("ab 1中").toDF("t").createOrReplaceTempView("sm_in")
     val r = spark.sql("SELECT script_mix(t) AS m FROM sm_in")
       .select(col("m.*")).collect()(0)

@@ -48,7 +48,6 @@ class BpeSpec extends SparkSpec {
     both.foreach { case (hof, nat) =>
       assert(hof == nat, s"HOF '$hof' != native '$nat'") }
     // SQL registration path, model as the rank-ordered literal
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     words.createOrReplaceTempView("bpe_words")
     val sql = spark.sql(
       "SELECT bpe_encode(word, 'l o,lo w,e w,n ew,d e,i de') FROM bpe_words")

@@ -310,7 +310,6 @@ class ClusteringSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(empty.forall(_ == Long.MaxValue))
     // SQL registration (the every-kernel house rule)
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     vecs.createOrReplaceTempView("mcd_in")
     val viaSql = spark.sql(
       """SELECT id, min_cell_dist_fixed(v, array(

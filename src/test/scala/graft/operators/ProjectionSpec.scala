@@ -75,7 +75,6 @@ class ProjectionSpec extends SparkSpec {
   }
 
   test("sign_project is SQL-registered with identical results") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val rng = new scala.util.Random(13)
     val df = (0L until 10L).map(i => (i, randVec(rng, 16))).toDF("id", "v")
     df.createOrReplaceTempView("sp_probe")

@@ -85,7 +85,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("kmin_sketch is SQL-registered") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     Seq(("g", 1L), ("g", 2L)).toDF("g", "id").createOrReplaceTempView("kmv_t")
     val r = spark.sql(
       "SELECT kmin_sketch(id, 4) AS s FROM kmv_t GROUP BY g")

@@ -108,7 +108,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("custom aggregates register as SQL functions") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     Seq((1L, 10.0, 100L), (1L, 30.0, 101L), (1L, 20.0, 102L), (2L, 5.0, 103L))
       .toDF("g", "v", "id").createOrReplaceTempView("tk")
     val top = spark.sql(
@@ -129,7 +128,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("wav and quantile kernels register as SQL functions") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     // encode -> decode-hash round trip entirely in SQL
     val h = spark.sql(
       """SELECT wav_energy_hash(encode_wav_pcm8(
@@ -154,7 +152,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("scale_vector and cdc_chunks register as SQL functions") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val sv = spark.sql(
       "SELECT scale_vector(array(CAST(1.5 AS FLOAT), CAST(-0.0005 AS FLOAT)), 1000) AS v")
       .collect()(0).getSeq[Long](0)
@@ -178,7 +175,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("nearest_cell_fixed registers as a SQL function") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val cell = spark.sql(
       """SELECT nearest_cell_fixed(array(1L, 1L),
            array(named_struct('cell', 7L, 'cv', array(0L, 0L)),
@@ -188,7 +184,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cosine_similarity registers as a SQL function") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val c = spark.sql(
       "SELECT cosine_similarity(array(3.0D, 4.0D), array(4.0D, 3.0D)) AS c")
       .collect()(0).getDouble(0)
@@ -196,7 +191,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("poly_hash registers as a SQL function and matches the Column API") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val viaSql = spark.sql("SELECT poly_hash('the quick brown') AS h")
       .collect()(0).getLong(0)
     val viaCol = Seq("the quick brown").toDF("s")
@@ -207,7 +201,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("levenshtein_within and deletion_variants register as SQL functions") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val r = spark.sql(
       """SELECT levenshtein_within('gear', 'fear', 1) AS a,
         levenshtein_within('gear', 'spark', 1) AS b,
@@ -218,7 +211,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("clean_tokens and clean_tokens_count register as SQL functions") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val r = spark.sql(
       """SELECT clean_tokens('x the x x and y', array('the', 'and')) AS c,
         clean_tokens_count('x the x x and y', array('the', 'and')) AS n""")
@@ -232,7 +224,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("minhash_signature and simhash register as SQL functions") {
-    org.apache.spark.sql.graftbridge.FunctionRegistrar.registerAll(spark)
     val txt = "the quick brown fox jumps over the lazy dog"
     val viaSql = spark.sql(s"SELECT minhash_signature('$txt') AS s, simhash('$txt') AS h")
       .collect()(0)
