@@ -48,13 +48,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every table as a temp view so `spark.sql` works against them.
-    * Goes through the typed accessors so `events` gets its ns→us fixup.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

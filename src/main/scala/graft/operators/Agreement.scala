@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Inter-rater agreement (Cohen 1960, κ) — the redundancy audit for
   * label sources and gate suites: two quality filters that pass 90% of
@@ -41,7 +42,7 @@ object Agreement {
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(gs :+ col(aCol).as("__a") :+ col(bCol).as("__b"): _*)
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint() // bounded (group × alphabet²); consumed 4x
+      .transform(Materialize.seam) // bounded (group × alphabet²); consumed 4x
     kappaFromCells(ct, groupCols, "__a", "__b", "__c")
   }
 

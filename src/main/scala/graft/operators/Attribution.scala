@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.runtime.Materialize
 
 /** Multi-touch attribution — the fractional-credit complement of the
   * q219 last-touch readout: a conversion's credit splits across ALL the
@@ -93,7 +94,7 @@ object Attribution {
         (-unix_micros(col("asof___bnts"))
           - unix_micros(col("__tts"))).as("__gap"))
       .filter(col("__gap") >= 0L && col("__gap") <= windowMicros)
-      .localCheckpoint()
+      .transform(Materialize.seam)
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__cid")).orderBy(col("__tts"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Distributed BPE tokenizer training (byte-pair encoding, Sennrich et
   * al. 2016, arXiv:1508.07909): iteratively find the most frequent
@@ -69,7 +70,7 @@ object Bpe {
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .select(col("word"), col("cnt"), initialPieces(col("word")).as("s"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var it = 1
     var exhausted = false
@@ -87,7 +88,7 @@ object Bpe {
         merges += ((it.toLong, lhs, rhs, cnt))
         pieces = pieces
           .select(col("word"), col("cnt"), applyMerge(col("s"), lhs, rhs).as("s"))
-          .localCheckpoint()
+          .transform(Materialize.seam)
         it += 1
       }
     }

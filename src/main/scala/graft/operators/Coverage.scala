@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Greedy coverage-maximizing selection (the facility-location /
   * submodular data-pruning primitive — Nemhauser 1978's (1−1/e)
@@ -73,7 +74,7 @@ object Coverage {
         explode(split(col(textCol), " ")).as("__tok"))
       .filter(col("__tok") =!= "")
       .distinct()
-      .localCheckpoint() // k rounds re-read it; tokenize once
+      .transform(Materialize.seam) // k rounds re-read it; tokenize once
     // Portable per-round subsample gate (identity when samplePct = 100).
     def gate(r: Int) =
       if (samplePct >= 100) lit(true)

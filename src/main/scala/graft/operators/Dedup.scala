@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.runtime.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,20 +50,13 @@ object Dedup {
     *
     * Computed by the native codegen'd expression
     * [[graft.functions.expressions.PolyHash]] (one tight loop over the
-    * UTF-8 bytes); [[polyHashViaHof]] is the built-ins-only formulation
-    * kept for parity testing.
+    * UTF-8 bytes).
     */
   def polyHash(s: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(
       graft.functions.expressions.PolyHash(ColumnBridge.expression(s), M))
   }
-
-  /** Same fold through built-in HOFs (allocates a per-char array per value —
-    * parity-test reference, not the hot path).
-    */
-  def polyHashViaHof(s: Column): Column =
-    aggregate(split(s, ""), lit(0L), (acc, c) => (acc * 31L + ascii(c)) % M)
 
   /** (a, b) parameters of the K hash permutations h_i(x) = (a*x + b) mod P.
     * Fixed primes: deterministic across runs and engines.
@@ -471,7 +465,7 @@ object Dedup {
       .filter(col(jacCol).isNotNull)
       .select(least(floor(col(jacCol) * 100), lit(99L)).cast("long").as("__jb"))
       .groupBy(col("__jb")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     grid.map { case (bands, rows) =>
       val s = (col("__jb").cast("double") + lit(0.5)) / lit(100.0)
       val sr = Seq.fill(rows)(s).reduce(_ * _)
@@ -685,15 +679,14 @@ object Dedup {
       .persist()
     try {
       var labels = nodes.select(col(idCol).as("__node"), col(idCol).as("__label"))
-        .localCheckpoint()
+        .transform(Materialize.seam)
       // node-sized label table, constant row count across iterations: one
       // count decides broadcast-vs-shuffle for the run (the Graphs /
       // degreeMixing guard) — while it fits, the adjacency list streams
       // through a broadcast join instead of re-shuffling every iteration;
       // checkpointed plans carry no stats, so the planner alone would
       // always sort-merge here
-      val bcastOk = labels.count() <= 2000000L
-      def bc(t: DataFrame): DataFrame = if (bcastOk) broadcast(t) else t
+      val bc = Materialize.broadcastIfFits(labels)
       var iter = 0
       var changed = 1L
       while (changed > 0 && iter < maxIter) {
@@ -706,7 +699,7 @@ object Dedup {
         val prop = labels.join(neighborMin, Seq("__node"), "left")
           .select(col("__node"), col("__label").as("__old"),
             least(col("__label"), coalesce(col("__nmin"), col("__label"))).as("__label"))
-          .localCheckpoint()
+          .transform(Materialize.seam)
         changed = prop.filter(col("__label") =!= col("__old")).count()
         labels = prop.select(col("__node"), col("__label"))
         iter += 1
@@ -777,12 +770,12 @@ object Dedup {
         .distinct()
     }
 
-    var e = e0.distinct().localCheckpoint()
+    var e = e0.distinct().transform(Materialize.seam)
     var iter = 0
     var converged = e.isEmpty
     var lastSig: (Long, Long) = null
     while (!converged && iter < maxIter) {
-      e = smallStar(largeStar(e)).localCheckpoint()
+      e = smallStar(largeStar(e)).transform(Materialize.seam)
       // count + order-independent xor checksum (sum would overflow ANSI
       // long arithmetic); the edge list is distinct, so equal signatures
       // mean the fixpoint with overwhelming probability.

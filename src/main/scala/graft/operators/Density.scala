@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Grid-density clustering labels (DBSCAN-lite) over an embedding
   * column — the density form the clustering family lacked: k-means
@@ -76,7 +77,7 @@ object Density {
     val cells = pts.groupBy(dIdx.map(i => col(s"__c$i")): _*)
       .agg(count(lit(1)).as("__cn"),
         sum(col("__id").cast("decimal(38,0)")).as("__ids"))
-      .localCheckpoint() // scattered 3^D times inside censusFromCells
+      .transform(Materialize.seam) // scattered 3^D times inside censusFromCells
     censusFromCells(cells, dIdx.map(i => s"__c$i"), "__cn", "__ids",
       densityPpm)
   }
@@ -186,7 +187,7 @@ object Density {
     val cells = pts.groupBy(dIdx.map(i => col(s"__c$i")): _*)
       .agg(count(lit(1)).as("__cn"),
         sum(col("__id").cast("decimal(38,0)")).as("__ids"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     clustersFromCells(cells, dIdx.map(i => s"__c$i"), "__cn", "__ids",
       densityPpm)
   }
@@ -221,7 +222,7 @@ object Density {
       .select(encoded.as("__cell") +:
         (dIdx.map(i => col(s"__c$i")) ++
           Seq(col("__cn"), col("__ids"), col("__n"))): _*)
-      .localCheckpoint() // CC collect + census
+      .transform(Materialize.seam) // CC collect + census
     // Connected components run DRIVER-SIDE over the collected cell
     // list: the core-cell table is grid-bounded by contract
     // ((domain/cellWidth)^D — the same bounded-model-table class as
@@ -350,6 +351,6 @@ object Density {
       .withColumn("__core",
         expr(s"CAST(__bn AS $dec) * 1000000 >= " +
           s"CAST($densityPpm AS $dec) * __n"))
-    if (checkpoint) flagged.localCheckpoint() else flagged
+    if (checkpoint) Materialize.seam(flagged) else flagged
   }
 }

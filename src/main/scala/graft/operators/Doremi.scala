@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Domain mixture reweighting — the DoReMi shape (Xie et al. 2023,
   * "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
@@ -71,7 +72,7 @@ object Doremi {
     var cur = per.crossJoin(broadcast(ref))
       .withColumn("excess", greatest(lit(0L), col("loss") - col("__ref")))
       .withColumn("w0", expr(s"${scale}L div __k"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     for (t <- 1 to iters) {
       val prev = s"w${t - 1}"
       // Multiplier bounds: w <= scale (1e6), scale + excess <= 2*scale,

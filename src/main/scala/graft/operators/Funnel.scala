@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Ordered k-step funnel — the product-analytics generalization of the
   * q83 two-step conversion: how many users complete step 1, then step
@@ -63,7 +64,7 @@ object Funnel {
             .as("__prevt"))
         .select(col("__u"), col("__w.__t").as("__t"),
           col("__w.__s").as("__s"), col("__prevt"))
-      frontier = next.localCheckpoint(eager = false)
+      frontier = next.transform(Materialize.lazySeam)
       val n = frontier.agg(count(lit(1)).as("n_reached"))
       val medGap =
         if (i == 0)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Whole-graph structure statistics over candidate/edge tables — the
   * density complement to [[graft.operators.Dedup]]'s connected
@@ -14,21 +15,17 @@ object Graphs {
 
   private val dec = "decimal(38,0)"
 
-  /** Broadcast guard for vertex-sized join sides (the [[degreeMixing]]
-    * `maxBroadcastDegreeRows` / B40 rule generalized to the whole
-    * family): a checkpointed vertex table broadcasts while its
-    * materialized row count fits — the edge set then streams through a
-    * BroadcastHashJoin and never shuffles — and falls back to a shuffle
-    * join when even the vertex set doesn't fit (never an unconditional
-    * hint that could OOM the driver on a billion-vertex graph).
-    * Checkpointed plans carry no usable stats, so without the explicit
-    * count the planner always picks a sort-merge join here and the edge
-    * table pays an Exchange per join per iteration. Callers must pass a
-    * checkpointed (cheap-to-count) table.
-    */
-  private val maxBroadcastVertexRows = 2000000L
-  private def maybeBroadcast(t: DataFrame): DataFrame =
-    if (t.count() <= maxBroadcastVertexRows) broadcast(t) else t
+  // Broadcast guard for vertex-sized join sides (the B40 rule, applied
+  // to the whole family): every vertex table a join broadcasts goes
+  // through Materialize.broadcastIfFits on a checkpointed table, so it
+  // broadcasts while its materialized row count fits under
+  // Materialize.MaxBroadcastRows — the edge set then streams through a
+  // BroadcastHashJoin and never shuffles — and falls back to a shuffle
+  // join when even the vertex set doesn't fit (never an unconditional
+  // hint that could OOM the driver on a billion-vertex graph).
+  // Checkpointed plans carry no usable stats, so without the explicit
+  // count the planner always picks a sort-merge join here and the edge
+  // table pays an Exchange per join per iteration.
 
   /** Canonical simple-graph edges: nulls and self-loops dropped,
     * endpoints ordered (a < b), duplicates and reversals collapsed.
@@ -40,7 +37,7 @@ object Graphs {
     .select(least(col(srcCol), col(dstCol)).cast("long").as("__a"),
       greatest(col(srcCol), col(dstCol)).cast("long").as("__b"))
     .distinct()
-    .localCheckpoint()
+    .transform(Materialize.seam)
 
   /** Vertex degrees of a canonical edge set: (__v, __d). */
   private def degrees(canon: DataFrame): DataFrame =
@@ -80,15 +77,14 @@ object Graphs {
     * vertex-sized and checkpointed so the groupBy runs once.
     */
   private def closedWedges(canon: DataFrame, deg: DataFrame): DataFrame = {
-    val oriented = orientedEdges(canon, deg).localCheckpoint()
+    val oriented = orientedEdges(canon, deg).transform(Materialize.seam)
     val adj = oriented.groupBy(col("__u"))
       .agg(collect_list(col("__w")).as("__nbrs"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     // adj is vertex-ROW-bounded but its payload is Σ outdeg = E array
     // elements, so the broadcast guard keys on the EDGE count, not the
     // adjacency row count
-    val adjB =
-      if (oriented.count() <= maxBroadcastVertexRows) broadcast(adj) else adj
+    val adjB = Materialize.broadcastIfFits(oriented)(adj)
     oriented
       .join(adjB, Seq("__u"))
       .withColumnRenamed("__nbrs", "__nu")
@@ -102,8 +98,8 @@ object Graphs {
   /** Census core over canonical edges: one row
     * (n_vertices, n_edges, __wed DECIMAL, __tri DECIMAL). */
   private def census(canon: DataFrame): DataFrame = {
-    val deg = degrees(canon).localCheckpoint()
-    val triangles = closedWedges(canon, maybeBroadcast(deg))
+    val deg = degrees(canon).transform(Materialize.seam)
+    val triangles = closedWedges(canon, Materialize.broadcastIfFits(deg)(deg))
       .agg(coalesce(sum(size(col("__zs")).cast(dec)), lit(0).cast(dec))
         .as("__tri"))
     canon.agg(count(lit(1)).as("n_edges"))
@@ -202,13 +198,12 @@ object Graphs {
             maxRounds: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val canon = canonical(edges, srcCol, dstCol)
-    var deg = degrees(canon).localCheckpoint()
+    var deg = degrees(canon).transform(Materialize.seam)
     // one decision for the whole peel: every per-round table (weak,
     // removed, their union, the decrement counts) is bounded by the
     // INITIAL vertex count, so the broadcast-vs-shuffle choice is made
     // once, from a count on the checkpointed degree table
-    val bcastOk = deg.count() <= maxBroadcastVertexRows
-    def bc(t: DataFrame): DataFrame = if (bcastOk) broadcast(t) else t
+    val bc = Materialize.broadcastIfFits(deg)
     val spark = edges.sparkSession
     var removed = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -219,7 +214,7 @@ object Graphs {
     var done = false
     while (!done) {
       val weak = deg.filter(col("__d") < k).select(col("__v"))
-        .localCheckpoint()
+        .transform(Materialize.seam)
       if (weak.isEmpty) done = true
       else {
         round += 1
@@ -260,8 +255,8 @@ object Graphs {
           .select(col("__v"),
             (col("__d") - coalesce(col("__dec"), lit(0L))).as("__d"))
           .filter(col("__d") > 0)
-          .localCheckpoint()
-        removed = removed.unionAll(weak).localCheckpoint()
+          .transform(Materialize.seam)
+        removed = removed.unionAll(weak).transform(Materialize.seam)
       }
     }
     deg.select(col("__v").as("vertex"), col("__d").as("core_deg"))
@@ -293,8 +288,9 @@ object Graphs {
     require(minDegree >= 2, s"minDegree must be >= 2 (cc needs a pair), " +
       s"got $minDegree")
     val canon = canonical(edges, srcCol, dstCol)
-    val deg = degrees(canon).localCheckpoint()
-    val perVertex = perVertexTriangles(closedWedges(canon, maybeBroadcast(deg)))
+    val deg = degrees(canon).transform(Materialize.seam)
+    val perVertex = perVertexTriangles(
+      closedWedges(canon, Materialize.broadcastIfFits(deg)(deg)))
     deg.filter(col("__d") >= minDegree)
       .join(perVertex, Seq("__v"), "left")
       .select(col("__v").as("vertex"), col("__d").as("degree"),
@@ -339,9 +335,10 @@ object Graphs {
     val deg = degrees(canon) // exact denominator
     val kept = canon.filter(
       pmod(col("__a") * 1000003L + col("__b") * 7919L + 17L,
-        lit(1000000007L)) % pInv === 0).localCheckpoint()
+        lit(1000000007L)) % pInv === 0).transform(Materialize.seam)
+    val keptDeg = degrees(kept).transform(Materialize.seam)
     val perVertex = perVertexTriangles(closedWedges(kept,
-      maybeBroadcast(degrees(kept).localCheckpoint())))
+      Materialize.broadcastIfFits(keptDeg)(keptDeg)))
     val p3 = pInv.toLong * pInv * pInv
     deg.filter(col("__d") >= minDegree)
       .join(perVertex, Seq("__v"), "left")
@@ -382,7 +379,7 @@ object Graphs {
     val canon = canonical(edges, srcCol, dstCol)
     val kept = canon.filter(
       pmod(col("__a") * 1000003L + col("__b") * 7919L + 17L,
-        lit(1000000007L)) % pInv === 0).localCheckpoint()
+        lit(1000000007L)) % pInv === 0).transform(Materialize.seam)
     census(kept)
       .select(col("n_edges").as("kept_edges"), col("__wed"), col("__tri"))
       .crossJoin(canon.agg(count(lit(1)).as("n_edges")))
@@ -440,7 +437,7 @@ object Graphs {
       if (pInv == 1L) canon
       else canon.filter(
         pmod(col("__a") * 1000003L + col("__b") * 7919L + 17L,
-          lit(1000000007L)) % pInv === 0).localCheckpoint()
+          lit(1000000007L)) % pInv === 0).transform(Materialize.seam)
     census(kept)
       .select(col("__wed"), col("__tri"))
       .crossJoin(canon.agg(count(lit(1)).as("n_edges")))
@@ -486,11 +483,10 @@ object Graphs {
       s"iters must be in [1, 16] (each is two edge joins), got $iters")
     val canon = canonical(edges, srcCol, dstCol)
     var labels = degrees(canon).select(col("__v"), col("__v").as("__l"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     // the label table stays exactly |non-isolated V| rows every
     // iteration — one count decides broadcast-vs-shuffle for the run
-    val bcastOk = labels.count() <= maxBroadcastVertexRows
-    def bc(t: DataFrame): DataFrame = if (bcastOk) broadcast(t) else t
+    val bc = Materialize.broadcastIfFits(labels)
     for (_ <- 1 to iters) {
       // both label attachments in ONE edge scan (emit each edge's two
       // neighbor messages from one row) — the unioned two-scan form
@@ -509,7 +505,7 @@ object Graphs {
         .groupBy(col("__v"))
         .agg(max(struct(col("__c"), (-col("__l")).as("__nl"))).as("__w"))
         .select(col("__v"), (-col("__w.__nl")).as("__l"))
-        .localCheckpoint()
+        .transform(Materialize.seam)
     }
     labels.select(col("__v").as("vertex"), col("__l").as("community"))
   }
@@ -546,27 +542,29 @@ object Graphs {
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.seam)
     var a = e.select(col("dst")).distinct()
-      .withColumn("a", lit(scale)).localCheckpoint()
-    // score tables hold one row per (in- or out-) endpoint every
-    // iteration — one count decides broadcast-vs-shuffle for the run
-    val bcastOk = a.count() <= maxBroadcastVertexRows
-    def bc(t: DataFrame): DataFrame = if (bcastOk) broadcast(t) else t
+      .withColumn("a", lit(scale)).transform(Materialize.seam)
+    // each score table holds one row per in- (a) or out-endpoint (h)
+    // every iteration — one count PER SIDE decides broadcast-vs-shuffle
+    // for the run (a hub table can be far larger than the authority
+    // table, so the authority count must not guard the hub join)
+    val bcA = Materialize.broadcastIfFits(a)
+    val bcH = Materialize.broadcastIfFits(e.select(col("src")).distinct())
     var h: DataFrame = null
     for (_ <- 1 to iters) {
-      val hp = e.join(bc(a), "dst").groupBy(col("src"))
+      val hp = e.join(bcA(a), "dst").groupBy(col("src"))
         .agg(sum(col("a").cast(dec)).as("__hp"))
       h = hp.crossJoin(broadcast(hp.agg(max(col("__hp")).as("__hm"))))
         .select(col("src"),
           expr(s"CAST((__hp * ${scale}L) div __hm AS BIGINT)").as("h"))
-        .localCheckpoint()
-      val ap = e.join(bc(h), "src").groupBy(col("dst"))
+        .transform(Materialize.seam)
+      val ap = e.join(bcH(h), "src").groupBy(col("dst"))
         .agg(sum(col("h").cast(dec)).as("__ap"))
       a = ap.crossJoin(broadcast(ap.agg(max(col("__ap")).as("__am"))))
         .select(col("dst"),
           expr(s"CAST((__ap * ${scale}L) div __am AS BIGINT)").as("a"))
-        .localCheckpoint()
+        .transform(Materialize.seam)
     }
     h.select(col("src").as("vertex"), col("h").as("hub"))
       .join(a.select(col("dst").as("vertex"), col("a").as("auth")),
@@ -604,22 +602,22 @@ object Graphs {
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.seam)
     // out-degree is loop-invariant: attach it to the edge set ONCE and
     // checkpoint, instead of re-joining the degree table every
     // iteration (saves one |V|-table join per iteration)
     val e = e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("__deg")),
-      "src").localCheckpoint()
+      "src").transform(Materialize.seam)
     val sd = seeds.select(col(seedCol).cast("long").as("vertex"))
-      .filter(col("vertex").isNotNull).distinct().localCheckpoint()
+      .filter(col("vertex").isNotNull).distinct().transform(Materialize.seam)
     val nTab = sd.agg(count(lit(1)).as("__ns"))
     val restart = sd.crossJoin(broadcast(nTab))
       .select(col("vertex"),
         expr(s"((${scale}L * 15) div 100) div __ns").as("__restart"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     var r = sd.crossJoin(broadcast(nTab))
       .select(col("vertex"), expr(s"${scale}L div __ns").as("rank_fp"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     for (_ <- 1 to iters) {
       // NOTE: a guarded broadcast of the frontier (the LPA/k-core
       // pattern) was measured here and REJECTED — best-of-5 at sf0.1
@@ -636,7 +634,7 @@ object Graphs {
           (coalesce(col("__restart"), lit(0L)) +
             expr("(85 * coalesce(__in, 0L)) div 100")).as("rank_fp"))
         .filter(col("rank_fp") > 0L)
-        .localCheckpoint()
+        .transform(Materialize.seam)
     }
     r.join(sd.withColumn("is_seed", lit(true)), Seq("vertex"), "left")
       .select(col("vertex"), col("rank_fp"),
@@ -669,7 +667,7 @@ object Graphs {
     * but NO wedge enumeration: this is the cheap pre-flight before
     * q233's Σ outdeg² bill. The degree table is counted off its
     * checkpoint (one cheap action) and BROADCAST to both endpoint
-    * joins when it fits under `maxBroadcastDegreeRows` — the edge set
+    * joins when it fits under `Materialize.MaxBroadcastRows` — the edge set
     * then never shuffles at all (two broadcast-hash probes of the same
     * ~vertex-sized table); an over-limit vertex set falls back to
     * shuffle joins instead of a driver-OOM broadcast (the B40 rule).
@@ -678,12 +676,10 @@ object Graphs {
     * mean_degree_milli, degree_cv2_milli, assortativity_milli).
     */
   def degreeMixing(edges: DataFrame, srcCol: String,
-                   dstCol: String,
-                   maxBroadcastDegreeRows: Long = 2000000L): DataFrame = {
+                   dstCol: String): DataFrame = {
     val canon = canonical(edges, srcCol, dstCol)
-    val deg0 = degrees(canon).localCheckpoint()
-    val deg =
-      if (deg0.count() <= maxBroadcastDegreeRows) broadcast(deg0) else deg0
+    val deg0 = degrees(canon).transform(Materialize.seam)
+    val deg = Materialize.broadcastIfFits(deg0)(deg0)
     val vstats = deg.agg(
       count(lit(1)).cast(dec).as("__v"),
       max(col("__d")).as("max_degree"),

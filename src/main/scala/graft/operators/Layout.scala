@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Write-side data-layout audit — the file-skipping half of the 100 TB
   * story, completing q106's zone-map view. A skipping reader prunes a
@@ -59,7 +60,7 @@ object LayoutAudit {
         graft.functions.Layout.interleaveBits(col("__xb"), col("__yb"), bits))
       // both layout rankings consume this narrow subtree — the house
       // twice-consumed-seam rule (q191/q193): 6.38 -> 1.65 s at sf0.1
-      .localCheckpoint(eager = false)
+      .transform(Materialize.lazySeam)
     def chunks(keyCol: String, label: String): DataFrame = {
       val ranked = Budget.takeByBudget(
         b.select(col("__pid"), (-col(keyCol)).as("__neg"), lit(1L).as("__one")),
@@ -112,7 +113,7 @@ object LayoutAudit {
       .filter(col(orderCol).isNotNull && col(valueCol).isNotNull)
       .select(col(orderCol).cast("long").as("__o"),
         col(valueCol).cast("long").as("__v"))
-      .localCheckpoint(eager = false) // ranked + selected-count consumers
+      .transform(Materialize.lazySeam) // ranked + selected-count consumers
     val tot = base.agg(count(lit(1)).as("__n"))
     val ranked = Budget.takeByBudget(
       base.select(col("__v").as("__id"), (-col("__o")).as("__neg"),
@@ -123,12 +124,13 @@ object LayoutAudit {
       .groupBy(expr("(cum_cost - 1L) div __csize").as("__chunk"))
       .agg(count(lit(1)).as("__cn"),
         min(col("__id")).as("__vmin"), max(col("__id")).as("__vmax"))
-      .localCheckpoint() // one probe sweep per probe
+      .transform(Materialize.seam) // one probe sweep per probe
     val selCols = probes.zipWithIndex.map { case ((lo, hi), i) =>
       sum(when(col("__v") >= lo && col("__v") <= hi, 1L).otherwise(0L))
         .as(s"__sel$i")
     }
-    val selected = base.agg(selCols.head, selCols.tail: _*).localCheckpoint()
+    val selected = base.agg(selCols.head, selCols.tail: _*)
+      .transform(Materialize.seam)
     probes.zipWithIndex.map { case ((lo, hi), i) =>
       chunkTable
         .agg(count(lit(1)).as("n_chunks"),
@@ -201,7 +203,7 @@ object LayoutAudit {
         .select(col(ord).cast("long").as("__o") +:
           vcols.zipWithIndex.map { case (v, i) =>
             col(v).cast("long").as(s"__v$i") }: _*)
-        .localCheckpoint(eager = false) // ranked + selected consumers
+        .transform(Materialize.lazySeam) // ranked + selected consumers
       val tot = base.agg(count(lit(1)).as("__n"))
       // two-phase rank = the shared bucket cumsum with unit weights
       // and a composite (o, v1..vk) tie-break (Budget.bucketCumsum —
@@ -220,7 +222,7 @@ object LayoutAudit {
           expr(s"(__n + ${nChunks}L - 1L) div ${nChunks}L"))
         .groupBy(expr("(__cum - 1L) div __csize").as("__chunk"))
         .agg(chunkAggs.head, chunkAggs.tail: _*)
-        .localCheckpoint() // one probe sweep per probe
+        .transform(Materialize.seam) // one probe sweep per probe
       // exact selected counts: every probe in ONE corpus aggregate
       val probeList = byCol.zipWithIndex.flatMap { case ((_, ps), i) =>
         ps.map(p => (i, p._2, p._3)) }
@@ -229,7 +231,7 @@ object LayoutAudit {
           .otherwise(0L)).as(s"__sel$j")
       }
       val selected = base.agg(selCols.head, selCols.tail: _*)
-        .localCheckpoint()
+        .transform(Materialize.seam)
       probeList.zipWithIndex.map { case ((i, lo, hi), j) =>
         val miss = col(s"__vmax$i") < lo || col(s"__vmin$i") > hi
         chunkTable

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** N-gram language-model scoring — the perplexity-style quality filter a
   * pretraining pipeline runs over candidate documents (CCNet scores every
@@ -100,33 +101,30 @@ object LmScore {
     */
   def stupidBackoffScores(corpus: DataFrame, train: DataFrame, idCol: String,
                           textCol: String, scale: Long = 1000000L,
-                          maxBroadcastModelRows: Long = 2000000L): DataFrame = {
+                          maxBroadcastModelRows: Long =
+                            Materialize.MaxBroadcastRows): DataFrame = {
     // every model table is vocabulary-bounded and consumed twice+ (the
     // guard count / both join sides), so each is checkpointed — without
     // the seams the train corpus is re-scanned ~7x per call; the total
     // token count derives from c1 (Σ counts) instead of an extra pass
     val c3 = trigramTriples(train, idCol, textCol)
       .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c3"))
-      .localCheckpoint()
-    val small = c3.count() <= maxBroadcastModelRows
+      .transform(Materialize.seam)
+    val side = Materialize.broadcastIfFits(c3, maxBroadcastModelRows,
+      _.hint("shuffle_hash"))
     val c1 = train.select(explode(split(col(textCol), " ")).as("__t"))
       .groupBy(col("__t")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val c2 = bigramPairs(train, idCol, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val n = c1.agg(sum(col("c1")).as("nn"))
     val triples = trigramTriples(corpus, idCol, textCol)
-    def maybeB(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("shuffle_hash")
-    def j(l: DataFrame, r: DataFrame, keys: Seq[String]): DataFrame =
-      if (small) l.join(broadcast(r), keys, "left")
-      else l.join(r.hint("shuffle_hash"), keys, "left")
-    val modeled = j(triples, c3, Seq("w1", "w2", "w3"))
-      .join(maybeB(c2.withColumnRenamed("c2", "c2ctx")), Seq("w1", "w2"), "left")
-      .join(maybeB(c2.toDF("w2", "w3", "c2bo")), Seq("w2", "w3"), "left")
-      .join(maybeB(c1.toDF("w2", "c1mid")), Seq("w2"), "left")
-      .join(maybeB(c1.toDF("w3", "c1last")), Seq("w3"), "left")
+    val modeled = triples.join(side(c3), Seq("w1", "w2", "w3"), "left")
+      .join(side(c2.withColumnRenamed("c2", "c2ctx")), Seq("w1", "w2"), "left")
+      .join(side(c2.toDF("w2", "w3", "c2bo")), Seq("w2", "w3"), "left")
+      .join(side(c1.toDF("w2", "c1mid")), Seq("w2"), "left")
+      .join(side(c1.toDF("w3", "c1last")), Seq("w3"), "left")
       .crossJoin(broadcast(n))
     val scored = modeled.select(col(idCol),
       when(col("c3").isNotNull, 0L)
@@ -159,28 +157,25 @@ object LmScore {
 
   def bigramScores(corpus: DataFrame, train: DataFrame, idCol: String,
                    textCol: String, scale: Long = 1000000L,
-                   maxBroadcastModelRows: Long = 2000000L): DataFrame = {
+                   maxBroadcastModelRows: Long =
+                     Materialize.MaxBroadcastRows): DataFrame = {
     // model-sized (bigram-vocabulary-bounded) with THREE consumers (the
     // guard count, the broadcast, and the cu prefix derivation) — the
     // checkpoint stops the train-side explode+aggregate from running
     // once per consumer
     val cb = bigramPairs(train, idCol, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
-      .localCheckpoint()
-    val small = cb.count() <= maxBroadcastModelRows
+      .transform(Materialize.seam)
+    val side = Materialize.broadcastIfFits(cb, maxBroadcastModelRows,
+      _.hint("shuffle_hash"))
     // Prefix counts derived FROM the bigram table (c(w1,·) = how often w1
     // opens a bigram) — the standard conditional denominator.
     val cu = cb.groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
     val vocab = train.select(explode(split(col(textCol), " ")).as("__t"))
       .agg(countDistinct(col("__t")).as("vs"))
     val pairs = bigramPairs(corpus, idCol, textCol)
-    val modeled =
-      if (small)
-        pairs.join(broadcast(cb), Seq("w1", "w2"), "left")
-          .join(broadcast(cu), Seq("w1"), "left")
-      else
-        pairs.join(cb.hint("shuffle_hash"), Seq("w1", "w2"), "left")
-          .join(cu.hint("shuffle_hash"), Seq("w1"), "left")
+    val modeled = pairs.join(side(cb), Seq("w1", "w2"), "left")
+      .join(side(cu), Seq("w1"), "left")
     val scored = modeled
       .crossJoin(broadcast(vocab))
       .select(col(idCol),

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.runtime.Materialize
 
 /** Distributed exact interpolated percentiles (SQL PERCENTILE_CONT).
   *
@@ -275,7 +276,7 @@ object Percentiles {
     // same order as the final result), then release the sorted table's
     // cache: library callers get a leak-free frame, and the already-eager
     // pass-2 collect means this adds no new laziness surprise.
-    val boundariesChk = boundaries.localCheckpoint()
+    val boundariesChk = boundaries.transform(Materialize.seam)
     sorted.unpersist()
 
     // Null-SAFE key equality: groups with a NULL key are real groups (the

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** RFM segmentation (Hughes 1994 — the classic recency/frequency/
   * monetary customer census): each user scores 1–5 on each dimension
@@ -47,7 +48,7 @@ object Rfm {
         max(expr(s"unix_micros($tsCol)")).as("__anchor"))))
       .select(col(userCol), (col("__anchor") - col("__last")).as("__r"),
         col("__f"), col("__m"))
-      .localCheckpoint() // thresholds + scoring both read it
+      .transform(Materialize.seam) // thresholds + scoring both read it
     scoredCensus(users, userCol)
   }
 
@@ -68,7 +69,7 @@ object Rfm {
       .crossJoin(broadcast(users0.agg(max(col(lastCol)).as("__anchor"))))
       .select(col(userCol), (col("__anchor") - col(lastCol)).as("__r"),
         col(fCol).cast("long").as("__f"), col(mCol).cast("long").as("__m"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     scoredCensus(users, userCol)
   }
 

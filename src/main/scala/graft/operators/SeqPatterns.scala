@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Level-2 sequential pattern mining with a max-gap constraint —
   * the PrefixSpan/GSP length-2 level (Pei et al. 2001; Srikant &
@@ -127,7 +128,7 @@ object SeqPatterns {
         sum(when(col(s"__mg_${a}_$b") <= gapUs, 1L).otherwise(0L))
           .as(s"__np_${a}_$b")))
     val stats = perEntity.agg(statAggs.head, statAggs.tail: _*)
-      .localCheckpoint()
+      .transform(Materialize.seam)
     // assemble all k² rows in ONE select (explode of a struct array —
     // a k²-way unionAll of per-pair selects costs k² tiny jobs)
     val packed = idx.flatMap(a => idx.map(b =>
@@ -212,7 +213,7 @@ object SeqPatterns {
         sum(when(col(s"__m_${a}_${b}_$c") <= gapUs, 1L).otherwise(0L))
           .as(s"__np_${a}_${b}_$c"))))
     val stats = perEntity.agg(statAggs.head, statAggs.tail: _*)
-      .localCheckpoint()
+      .transform(Materialize.seam)
     // ONE exploded select for all k³ rows (the level2 assembly form —
     // a k³-way unionAll would cost k³ tiny jobs)
     val packed = idx.flatMap(a => idx.flatMap(b => idx.map(c =>
@@ -310,7 +311,7 @@ object SeqPatterns {
       cnt(r3).as("__n3"),
       cnt(col("__ha1") === 1L && !r2 && saw2).as("__ge2"),
       cnt(r2 && !r3 && saw3).as("__ge3"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     assembleDropoff(stats, steps)
   }
 
@@ -373,7 +374,7 @@ object SeqPatterns {
         col("__saw2") === 1L).as("__ge2"),
       cnt(col("__r2") === 1L && col("__r3") === 0L &&
         col("__saw3") === 1L).as("__ge3"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     assembleDropoff(stats, steps)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Event-time windowing wrappers. These work identically in batch and
   * Structured Streaming (the same `window`/`session_window` expressions);
@@ -177,7 +178,7 @@ object Windows {
     val ag = gaps.agg(
       countDistinct(col(entityCol)).as("__ne"),
       (count(lit(1)).as("__nev") +: thrAggs): _*)
-      .localCheckpoint()
+      .transform(Materialize.seam)
     // Empty-corpus guard: with zero entities n_sessions is 0 (the
     // coalesce above — a bare sum() would null it) and the means are
     // 0/0 — Spark (non-ANSI) would emit null while the DuckDB twin

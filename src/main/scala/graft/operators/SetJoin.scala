@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** EXACT set-similarity self-join by prefix filtering (the All-Pairs /
   * PPJoin family — Chaudhuri et al. 2006, Bayardo et al. 2007, Xiao et
@@ -60,9 +61,9 @@ object SetJoin {
     // the id table feeds five consumers (df, sizes, prefix, both verify
     // legs) — checkpoint the seam so the upstream tokenize/distinct
     // executes once (20.4 → 8.0 s at sf0.1 with the prefix seam below)
-    val ids = idsIn.select(col(idCol), col(elemCol)).localCheckpoint()
+    val ids = idsIn.select(col(idCol), col(elemCol)).transform(Materialize.seam)
     val sizes = ids.groupBy(col(idCol)).agg(count(lit(1)).as("__sz"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val cand = candidatePairs(ids, sizes, idCol, elemCol, tauPpm, ell = 2)
     val inter = cand
       .join(ids.select(col(idCol).as("id_a"), col(elemCol).as("__t")), "id_a")
@@ -108,7 +109,7 @@ object SetJoin {
       .filter(col("__rn") <= col("__p1") + lit(if (ell == 2) 1 else 0))
       .select(col(idCol), col(elemCol), col("__sz"), col("__rn"),
         col("__p1"))
-      .localCheckpoint() // both sides of the candidate self-join
+      .transform(Materialize.seam) // both sides of the candidate self-join
     // positional filter (the "PP" of PPJoin): matching at positions
     // (rn_a, rn_b) leaves at most 1 + min(sz−rn) more shared elements
     // under the common total order, which must reach the pair's overlap

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
+import graft.runtime.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,7 +78,7 @@ object Similarity {
       .filter(col("__id").isNotNull && col("__v").isNotNull &&
         col("__rel").isNotNull)
       .withColumn("__maxsim", lit(0L))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val picked = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long)]
     for (r <- 1 to k) {
@@ -103,7 +104,7 @@ object Similarity {
               .cast("long"))
           .select(col("__id"), col("__v"), col("__rel"),
             greatest(col("__maxsim"), col("__sim")).as("__maxsim"))
-          .localCheckpoint()
+          .transform(Materialize.seam)
       }
     }
     picked.toSeq
@@ -410,7 +411,7 @@ object Similarity {
     // guard mode materializes the labels once so the size check and the
     // output read the same computation instead of re-running the DAG
     val clusters =
-      if (maxComponentSize > 0) clusters0.localCheckpoint() else clusters0
+      if (maxComponentSize > 0) Materialize.seam(clusters0) else clusters0
     val sizes = clusters.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     if (maxComponentSize > 0) {

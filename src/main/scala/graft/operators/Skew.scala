@@ -22,14 +22,6 @@ object Skew {
                  factor: Int, joinType: String = "inner"): DataFrame =
     Joins.saltedJoin(big, small, Seq(key), factor, joinType)
 
-  /** Per-key frequency histogram — use to pick `factor` and decide whether
-    * salting is worth it (one cheap agg pass).
-    */
-  def keyHistogram(df: DataFrame, key: String, topN: Int = 20): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col(key).asc)
-      .limit(topN)
-
   /** Exact join-size audit: the output row count an equi-join WILL
     * produce — Σ_k cL(k)·cR(k) over the matched key values — before
     * anyone pays for running it, plus the largest single key's

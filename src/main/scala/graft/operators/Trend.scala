@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Materialize
 
 /** Robust trend estimation — Theil–Sen (Theil 1950; Sen 1968): the
   * slope of a series as the MEDIAN of all pairwise slopes, with the
@@ -107,7 +108,7 @@ object Trend {
       .join(sa, Seq("__t"), "left").join(sb, Seq("__t"), "left")
       .select(col("__t"), coalesce(col("__xa"), lit(0L)).as("__xa"),
         coalesce(col("__xb"), lit(0L)).as("__xb"))
-      .localCheckpoint() // consumed by sums + the lag sweep
+      .transform(Materialize.seam) // consumed by sums + the lag sweep
     val sums = grid.agg(count(lit(1)).as("__n"),
       sum(col("__xa")).as("__sxa"), sum(col("__xb")).as("__sxb"))
     val centered = grid.crossJoin(broadcast(sums))

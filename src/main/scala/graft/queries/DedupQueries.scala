@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Dedup
+import graft.runtime.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,9 +41,9 @@ object DedupQueries extends QueryGroup {
     // corpus 36 times.
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .transform(Materialize.seam)
     val nTab = docs.agg(count(lit(1)).as("__n"))
     val nodes = docs.select(col("doc_id"))
     val r0 = nodes.crossJoin(broadcast(nTab))
@@ -94,7 +95,7 @@ object DedupQueries extends QueryGroup {
       // join feed ~15M).
       graft.operators.EditDistance.pairs(
           Tables.customer(s, d).select(col("c_name")), "c_name", tau = 1)
-        .localCheckpoint()
+        .transform(Materialize.seam)
         .orderBy(col("s_a"), col("s_b"))
     },
 
@@ -109,7 +110,7 @@ object DedupQueries extends QueryGroup {
           cust.where(col("c_custkey") % 10 === 0).select(col("c_name")),
           cust.where(col("c_custkey") % 10 =!= 0).select(col("c_name")),
           "c_name", tau = 1)
-        .localCheckpoint()
+        .transform(Materialize.seam)
         .orderBy(col("s_a"), col("s_b"))
     },
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Dedup, Joins, Windows}
+import graft.runtime.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -884,7 +885,7 @@ object EventQueries extends QueryGroup {
       .agg(count(lit(1)).as("n"),
         (max(expr("unix_micros(ts)")) - min(expr("unix_micros(ts)")))
           .as("span"))
-      .localCheckpoint() // rollup + two percentile passes
+      .transform(Materialize.seam) // rollup + two percentile passes
     val q = graft.operators.Percentiles.percentileDisc(
         sess.select(lit(0).as("__g"), col("span").as("__v")),
         "__g", "__v", Seq(0.5, 0.9))

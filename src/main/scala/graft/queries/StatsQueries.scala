@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions
+import graft.runtime.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,7 +91,7 @@ object StatsQueries extends QueryGroup {
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey")),
         "l_orderkey", "l_partkey", minSupport = 2L)
-        .localCheckpoint()
+        .transform(Materialize.seam)
       def top(by: String) = graft.operators.TopK.perGroupAgg(
           rules, Seq("antecedent"), col(by), col("consequent"), 3)
         .select(col("antecedent"), col("rn").cast("long").as("rn"),
@@ -115,7 +116,7 @@ object StatsQueries extends QueryGroup {
       // the rule-mining pair join executes once, not once per consumer
       val recs = graft.operators.Association.alsoBought(
         baskets, "l_orderkey", "l_partkey", minSupport = 2L, k = 3)
-        .localCheckpoint()
+        .transform(Materialize.seam)
       graft.operators.Association.recExposure(
         baskets, "l_orderkey", "l_partkey", recs,
         "antecedent", "consequent")
@@ -471,7 +472,7 @@ object StatsQueries extends QueryGroup {
       val edges = parts.as("x").join(parts.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
         .select(col("x.pk").as("src"), col("y.pk").as("dst"))
-        .localCheckpoint() // consumed by both fixtures
+        .transform(Materialize.seam) // consumed by both fixtures
       graft.operators.Graphs
         .triangleAuto(edges, "src", "dst", budgetWedges = 1000000000000000L)
         .select(lit("wide_budget").as("fixture"), col("*"))

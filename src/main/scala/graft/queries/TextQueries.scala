@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, LmScore, Packing, Percentiles, RankFusion, Retrieval, Sampling, Vocab}
+import graft.runtime.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -671,7 +672,7 @@ object TextQueries extends QueryGroup {
         .join(LmScore.bigramScores(docs,
             docs.filter(col("source") === "src0"), "doc_id", "text")
           .select(col("doc_id"), col("avg_score")), "doc_id")
-        .localCheckpoint()
+        .transform(Materialize.seam)
       val th = Percentiles.percentileDisc(scored, "lang", "avg_score",
           Seq(1.0 / 3, 2.0 / 3))
         .groupBy(col("lang")).agg(
@@ -933,7 +934,7 @@ object TextQueries extends QueryGroup {
         .select(col("doc_id"),
           hashedFeatureScore(col("text")).as("feat_score"))
         .join(lm, "doc_id")
-        .localCheckpoint()
+        .transform(Materialize.seam)
       RankFusion.borda(scored, "doc_id", Seq("feat_score", "score_sum"),
           bucketWidth = 1000L)
         .orderBy(col("doc_id"))
@@ -961,14 +962,14 @@ object TextQueries extends QueryGroup {
           hashedFeatureScore(col("text")).as("feat_score"),
           size(split(col("text"), " ")).cast("long").as("n_toks"))
         .join(lm, "doc_id")
-        .localCheckpoint()
+        .transform(Materialize.seam)
       val fused = RankFusion.borda(
         scored.select(col("doc_id"), col("feat_score"), col("score_sum")),
         "doc_id", Seq("feat_score", "score_sum"), bucketWidth = 1000L)
       val sel = graft.operators.Budget.takeByBudget(
         fused.join(scored.select(col("doc_id"), col("n_toks")), "doc_id")
           .withColumn("__neg", -col("fused_rank"))
-          .localCheckpoint(),
+          .transform(Materialize.seam),
         "doc_id", "__neg", "n_toks", budget = 12000L, bucketWidth = 100L)
       Packing.packWhole(sel, "doc_id", "n_toks", capacity = 64L, m = 4,
           bucketWidth = 100L)
@@ -1140,7 +1141,7 @@ object TextQueries extends QueryGroup {
         .select((col("doc_id") * 1000000L + col("chunk_idx")).as("cid"),
           col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
           col("chunk"))
-        .localCheckpoint()
+        .transform(Materialize.seam)
       val scored = LmScore.bigramScores(
         chunks.select(col("cid"), col("chunk").as("text")),
         docs.filter(col("source") === "src0")

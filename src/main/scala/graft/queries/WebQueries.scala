@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.{TextFunctions, UrlFunctions}
 import graft.functions.TextFunctions.piiScrub
 import graft.operators.{Budget, Dedup, Repetition, Snapshot, TopK}
+import graft.runtime.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -396,7 +397,8 @@ object WebQueries extends QueryGroup {
             .as(Seq("chunk_idx", "chunk")))
         .select((col("doc_id") * 1000000L + col("chunk_idx")).as("cid"),
           col("doc_id"), col("source"), col("chunk"))
-        .localCheckpoint() // two consumers of the narrow subtree (q182)
+        // two consumers of the narrow subtree (q182)
+        .transform(Materialize.seam)
       val scored = graft.operators.LmScore.bigramScores(
         chunks.select(col("cid"), col("chunk").as("text")),
         docs.filter(col("source") === "src0")
@@ -411,7 +413,7 @@ object WebQueries extends QueryGroup {
         .filter(col("n_toks") > 0L)
         // two consumers (the quota aggregate and the cap join): without
         // the seam the whole LM-scoring subtree executes twice
-        .localCheckpoint()
+        .transform(Materialize.seam)
       val perSrc = rebuilt.groupBy(col("source"))
         .agg(sum(col("n_toks")).as("n"))
       val caps = Budget.waterFillCaps(perSrc, "source", "n", budget = 2000L)

@@ -14,8 +14,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * container ships no spark-avro/spark-protobuf modules): DECODE is a
   * native Catalyst expression per format (AvroDecode/PbDecode —
   * codegen-resident hot path) with the original UDF codecs retained as
-  * `deserializeUdf` parity references; SERIALIZE stays UDF-backed (it
-  * feeds sink writes, not the analytic hot path).
+  * `deserializeUdf` parity references. SERIALIZE is native for Avro
+  * (AvroEncode, with `serializeUdf` as its parity reference) and
+  * UDF-backed for Protobuf (it feeds sink writes, not the analytic hot
+  * path).
   */
 trait Serde extends Serializable {
   /** Spark type produced by deserialize. */
@@ -23,33 +25,19 @@ trait Serde extends Serializable {
   def deserialize(bytes: Column): Column
   def serialize(value: Column): Column
 
-  /** True for records whose payload fails to deserialize — the condition
-    * the pipeline uses for DLQ routing. Default: non-null input decoded to
-    * null (the UDF codecs return null on any codec exception).
-    */
-  def failureIndicator(raw: Column): Column =
-    failureFromDecoded(raw, deserialize(raw))
-
-  /** Failure indicator derived from an ALREADY-decoded column, so the hot
-    * ingestion path decodes each record once and reuses the result — for
-    * UDF-backed codecs (Avro/Protobuf) re-invoking `deserialize` per filter
-    * would multiply decode CPU. Formats whose decode cannot signal failure
-    * through null (e.g. PERMISSIVE JSON's all-null struct) override this
-    * with a raw-based check instead.
-    */
-  def failureFromDecoded(raw: Column, decoded: Column): Column =
-    raw.isNotNull && decoded.isNull
-
-  /** Decode once, returning (typedValue, failureIndicator) as expressions
-    * over ONE decode evaluation. The default derives both from the same
-    * `deserialize` tree (deterministic expressions — Catalyst's
-    * subexpression elimination evaluates it once per row); formats whose
-    * failure signal needs a different parse (JSON's corrupt-record column)
+  /** The decode contract: (typedValue, failed) as expressions over ONE
+    * decode evaluation, where `failed` is true for records whose payload
+    * fails to deserialize — the condition the pipeline uses for DLQ
+    * routing. Default: non-null input decoded to null (the codecs return
+    * null on malformed input), both derived from the same `deserialize`
+    * tree (deterministic expressions — Catalyst's subexpression
+    * elimination evaluates it once per row). Formats whose decode cannot
+    * signal failure through null (PERMISSIVE JSON's all-null struct)
     * override this so the hot path still parses each record exactly once.
     */
   def decodeWithFailure(raw: Column): (Column, Column) = {
     val d = deserialize(raw)
-    (d, failureFromDecoded(raw, d))
+    (d, raw.isNotNull && d.isNull)
   }
 }
 
@@ -81,43 +69,22 @@ object BytesSerde extends Serde {
   */
 final case class JsonSerde(schema: StructType) extends Serde {
   val dataType: DataType = schema
-  /** Null-on-failure (PERMISSIVE): malformed payloads become null structs,
-    * which the pipeline routes to the DLQ. `deserializeStrict` is the
-    * fail-the-job variant for pipelines that prefer crashing to skipping.
+  /** Null-on-failure (PERMISSIVE): malformed payloads become all-null
+    * structs; [[decodeWithFailure]] flags them for the DLQ.
     */
   def deserialize(bytes: Column): Column =
     from_json(bytes.cast("string"), schema)
-  def deserializeStrict(bytes: Column): Column =
-    from_json(bytes.cast("string"), schema, Map("mode" -> "FAILFAST"))
   def serialize(value: Column): Column = to_json(value).cast("binary")
 
   /** PERMISSIVE `from_json` yields an all-null struct (not null) for
-    * malformed input, so failure detection uses a corrupt-record column:
-    * populated iff the payload failed to parse as the declared schema.
-    */
-  override def failureIndicator(raw: Column): Column = {
-    val withCorrupt = StructType(schema.fields :+ StructField("__corrupt", StringType))
-    raw.isNotNull &&
-      from_json(raw.cast("string"), withCorrupt,
-        Map("columnNameOfCorruptRecord" -> "__corrupt"))
-        .getField("__corrupt").isNotNull
-  }
-
-  /** The decoded struct can't distinguish malformed input (all-null struct)
-    * from a legitimate all-null payload, so the corrupt-record parse of the
-    * raw bytes stays the failure source. `from_json` is a codegen'd Catalyst
-    * expression — cheap relative to a UDF round-trip — and subexpression
-    * elimination dedupes it within a projection.
-    */
-  override def failureFromDecoded(raw: Column, decoded: Column): Column =
-    failureIndicator(raw)
-
-  /** Single-parse decode: ONE corrupt-record-augmented `from_json` serves
-    * both outputs — the typed value is the parsed struct minus the corrupt
-    * field, the failure indicator is that field's non-nullness. Without
-    * this, value decode and failure detection are two different parses of
-    * every record (different schemas, so subexpression elimination can't
-    * merge them) — measurable on the ingest hot path.
+    * malformed input, which a legitimate all-null payload also yields, so
+    * failure detection uses a corrupt-record column: populated iff the
+    * payload failed to parse as the declared schema. ONE
+    * corrupt-record-augmented `from_json` serves both outputs — the typed
+    * value is the parsed struct minus the corrupt field, the failure
+    * indicator is that field's non-nullness. Two separate parses (value
+    * and failure, different schemas) could not be merged by
+    * subexpression elimination — measurable on the ingest hot path.
     */
   override def decodeWithFailure(raw: Column): (Column, Column) = {
     val withCorrupt = StructType(schema.fields :+ StructField("__corrupt", StringType))
@@ -146,7 +113,5 @@ final case class JsonSerde(schema: StructType) extends Serde {
 object VariantSerde extends Serde {
   val dataType: DataType = org.apache.spark.sql.types.VariantType
   def deserialize(bytes: Column): Column = try_parse_json(bytes.cast("string"))
-  /** Fail-the-job variant (`parse_json` throws on malformed input). */
-  def deserializeStrict(bytes: Column): Column = parse_json(bytes.cast("string"))
   def serialize(value: Column): Column = to_json(value).cast("binary")
 }

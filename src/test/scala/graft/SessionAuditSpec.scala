@@ -7,7 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and planner strategy is installed by [[GraftExtensions]]. A second
   * session builder, a runtime function registrar, or a runtime
   * strategy-list mutation fails this spec, so the config that is tested,
-  * verified, benched and shipped cannot drift apart again.
+  * verified, benched and shipped cannot drift apart again. Likewise every
+  * local checkpoint and every count-guarded broadcast goes through
+  * `graft.runtime.Materialize`, so the materialisation policy has one
+  * home.
   *
   * The searched names are assembled from pieces so this file never
   * matches itself.
@@ -18,6 +21,9 @@ class SessionAuditSpec extends AnyFunSuite {
   private val builderCall = "SparkSession" + ".builder"
   private val registrar = "Function" + "Registrar"
   private val strategyList = "extra" + "Strategies"
+  private val materializer = "src/main/scala/graft/runtime/Materialize.scala"
+  private val checkpointCall = ".local" + "Checkpoint("
+  private val broadcastGuard = "count() " + "<="
 
   /** (path from the project root, lines) of every .scala file under `dir`. */
   private def sources(dir: String): Seq[(String, Array[String])] = {
@@ -57,5 +63,16 @@ class SessionAuditSpec extends AnyFunSuite {
     val strategyEdits = sites(strategyList, mainSources ++ sessionSpec)
     assert(strategyEdits.isEmpty,
       s"planner strategies installed outside GraftExtensions: ${strategyEdits.mkString("; ")}")
+  }
+
+  test("only graft/runtime/Materialize.scala checkpoints or count-guards a broadcast") {
+    for (needle <- Seq(checkpointCall, broadcastGuard)) {
+      val (inModule, elsewhere) =
+        sites(needle, mainSources).partition(_.startsWith(materializer + ":"))
+      assert(elsewhere.isEmpty,
+        s"${elsewhere.size} `$needle` sites outside $materializer (use " +
+          s"Materialize.seam / broadcastIfFits): ${elsewhere.mkString("; ")}")
+      assert(inModule.nonEmpty, s"$materializer no longer holds `$needle`")
+    }
   }
 }

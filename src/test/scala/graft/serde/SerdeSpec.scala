@@ -337,10 +337,10 @@ class SerdeSpec extends SparkSpec {
       """{"a": {"b": 7}, "tags": [1, "two", null]}""",
       """not json at all""").toDF("s")
       .select(col("s").cast("binary").as("raw"))
-    val decoded = df.select(col("raw"),
-      VariantSerde.deserialize(col("raw")).as("v"))
+    val (value, failed) = VariantSerde.decodeWithFailure(col("raw"))
+    val decoded = df.select(col("raw"), value.as("v"), failed.as("failed"))
 
-    val good = decoded.filter(!VariantSerde.failureFromDecoded(col("raw"), col("v")))
+    val good = decoded.filter(!col("failed"))
       .select(
         variant_get(col("v"), "$.a.b", "long").as("ab"),
         variant_get(col("v"), "$.tags[1]", "string").as("t1"),
@@ -354,7 +354,7 @@ class SerdeSpec extends SparkSpec {
     assert(good(0).isNullAt(3))
 
     // Malformed payload trips the default null-on-failure DLQ indicator.
-    val bad = decoded.filter(VariantSerde.failureFromDecoded(col("raw"), col("v")))
+    val bad = decoded.filter(col("failed"))
       .select(col("raw").cast("string")).collect()
     assert(bad.map(_.getString(0)).toSeq == Seq("not json at all"))
 

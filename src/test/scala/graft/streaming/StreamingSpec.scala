@@ -299,16 +299,9 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState running counts persist across micro-batches") {
     implicit val sc = spark.sqlContext
-    // state API v2 requires the RocksDB provider (multiple column families)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { transformWithStateBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    // state API v2 requires the RocksDB provider (multiple column
+    // families), which every Sessions session sets
+    transformWithStateBody()
   }
 
   private def transformWithStateBody(): Unit = {
@@ -331,27 +324,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup: candidate pairs emitted across micro-batches") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { streamingNearDupBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    streamingNearDupBody()
   }
 
   test("streaming ANN: incremental neighbors via IVF cell state") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { streamingAnnBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    streamingAnnBody()
   }
 
   private def streamingAnnBody(): Unit = {
@@ -390,81 +367,63 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ANN: cross-cell global top-k composes in foreachBatch") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val cents = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)))
+      .toDF("cell", "cv")
+    val input = MemoryStream[(Long, Seq[Double])]
+    val hits = AnnStream.neighbors(
+      input.toDF().toDF("vec_id", "embedding"), cents,
+      "vec_id", "embedding", k = 5, nprobe = 2, minCosine = 0.0)
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
+    val q = AnnStream.globalTopK(hits, k = 2) { (ranked, _) =>
+      collected ++= ranked.collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    }.start()
     try {
-      implicit val sc = spark.sqlContext
-      val cents = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)))
-        .toDF("cell", "cv")
-      val input = MemoryStream[(Long, Seq[Double])]
-      val hits = AnnStream.neighbors(
-        input.toDF().toDF("vec_id", "embedding"), cents,
-        "vec_id", "embedding", k = 5, nprobe = 2, minCosine = 0.0)
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-      val q = AnnStream.globalTopK(hits, k = 2) { (ranked, _) =>
-        collected ++= ranked.collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      }.start()
-      try {
-        input.addData((1L, Seq(0.9, 0.1, 0.0)), (2L, Seq(0.1, 0.9, 0.0)))
-        q.processAllAvailable()
-        // a diagonal arrival probes BOTH cells: its per-cell hits (vec 1 in
-        // cell 0, vec 2 in cell 1) merge into one cross-cell ranking
-        input.addData((3L, Seq(0.7, 0.7, 0.0)))
-        q.processAllAvailable()
-        val r3 = collected.filter(_._1 == 3L).sortBy(_._2)
-        assert(r3.map(_._3) == Seq(1L, 2L) || r3.map(_._3) == Seq(2L, 1L))
-        assert(r3.size == 2 && r3.map(_._2) == Seq(1, 2))
-        // symmetric cosines: both neighbors score identically
-        assert(math.abs(r3(0)._4 - r3(1)._4) < 1e-12)
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+      input.addData((1L, Seq(0.9, 0.1, 0.0)), (2L, Seq(0.1, 0.9, 0.0)))
+      q.processAllAvailable()
+      // a diagonal arrival probes BOTH cells: its per-cell hits (vec 1 in
+      // cell 0, vec 2 in cell 1) merge into one cross-cell ranking
+      input.addData((3L, Seq(0.7, 0.7, 0.0)))
+      q.processAllAvailable()
+      val r3 = collected.filter(_._1 == 3L).sortBy(_._2)
+      assert(r3.map(_._3) == Seq(1L, 2L) || r3.map(_._3) == Seq(2L, 1L))
+      assert(r3.size == 2 && r3.map(_._2) == Seq(1, 2))
+      // symmetric cosines: both neighbors score identically
+      assert(math.abs(r3(0)._4 - r3(1)._4) < 1e-12)
+    } finally q.stop()
   }
 
   test("streaming ANN: nprobe > 1 probes neighbor cells without storing there") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val cents = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)))
+      .toDF("cell", "cv")
+    val input = MemoryStream[(Long, Seq[Double])]
+    val hits = AnnStream.neighbors(
+      input.toDF().toDF("vec_id", "embedding"), cents,
+      "vec_id", "embedding", k = 3, nprobe = 2, minCosine = 0.0)
+    val q = hits.writeStream.format("memory").queryName("ann_probe")
+      .outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val cents = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)))
-        .toDF("cell", "cv")
-      val input = MemoryStream[(Long, Seq[Double])]
-      val hits = AnnStream.neighbors(
-        input.toDF().toDF("vec_id", "embedding"), cents,
-        "vec_id", "embedding", k = 3, nprobe = 2, minCosine = 0.0)
-      val q = hits.writeStream.format("memory").queryName("ann_probe")
-        .outputMode("append").start()
-      try {
-        input.addData((1L, Seq(0.9, 0.1, 0.0)))
-        q.processAllAvailable()
-        // On-diagonal arrival: home cell is 1 (closer to y), probes cell 0
-        // too — finds vec 1 there even though they live in different cells.
-        input.addData((2L, Seq(0.6, 0.8, 0.0)))
-        q.processAllAvailable()
-        val got = spark.table("ann_probe")
-          .select("queryId", "neighborId", "cell").as[(Long, Long, Long)].collect().toSet
-        assert(got == Set((2L, 1L, 0L)), s"got $got")
-        // vec 2 was stored only in its home cell 1: a later cell-0 arrival
-        // with nprobe=1 must NOT see it, but sees vec 1.
-        val input3 = Seq((3L, Seq(0.99, 0.01, 0.0)))
-        input.addData(input3: _*)
-        q.processAllAvailable()
-        val r3 = spark.table("ann_probe").filter(col("queryId") === 3L)
-          .select("neighborId", "cell").as[(Long, Long)].collect().toSet
-        assert(r3.contains((1L, 0L)), s"got $r3")
-        assert(!r3.contains((2L, 0L)), s"vec 2 must not be stored in cell 0: $r3")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+      input.addData((1L, Seq(0.9, 0.1, 0.0)))
+      q.processAllAvailable()
+      // On-diagonal arrival: home cell is 1 (closer to y), probes cell 0
+      // too — finds vec 1 there even though they live in different cells.
+      input.addData((2L, Seq(0.6, 0.8, 0.0)))
+      q.processAllAvailable()
+      val got = spark.table("ann_probe")
+        .select("queryId", "neighborId", "cell").as[(Long, Long, Long)].collect().toSet
+      assert(got == Set((2L, 1L, 0L)), s"got $got")
+      // vec 2 was stored only in its home cell 1: a later cell-0 arrival
+      // with nprobe=1 must NOT see it, but sees vec 1.
+      val input3 = Seq((3L, Seq(0.99, 0.01, 0.0)))
+      input.addData(input3: _*)
+      q.processAllAvailable()
+      val r3 = spark.table("ann_probe").filter(col("queryId") === 3L)
+        .select("neighborId", "cell").as[(Long, Long)].collect().toSet
+      assert(r3.contains((1L, 0L)), s"got $r3")
+      assert(!r3.contains((2L, 0L)), s"vec 2 must not be stored in cell 0: $r3")
+    } finally q.stop()
   }
 
   test("streaming decontamination: stream-static bench join flags shared shingles") {
@@ -555,15 +514,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming session labels equal batch withSessionIds on a two-batch split") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { sessionLabelParityBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    sessionLabelParityBody()
   }
 
   private def sessionLabelParityBody(): Unit = {
@@ -602,15 +553,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming bounded sequences equal the batch q110 shape across batches") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { boundedSequenceParityBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    boundedSequenceParityBody()
   }
 
   private def boundedSequenceParityBody(): Unit = {
@@ -675,41 +618,32 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming sequence packing: per-shard offsets persist, batch == stream") {
     implicit val sc = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[(Long, Long, Long)] // (shard, docId, nTokens)
+    val packed = PackingStream(input.toDS(), capacity = 10L)
+    val q = packed.writeStream.format("memory").queryName("pack_stream")
+      .outputMode("update").start()
     try {
-      val input = MemoryStream[(Long, Long, Long)] // (shard, docId, nTokens)
-      val packed = PackingStream(input.toDS(), capacity = 10L)
-      val q = packed.writeStream.format("memory").queryName("pack_stream")
-        .outputMode("update").start()
-      try {
-        // shard 2 leads with a ZERO-token doc at offset 0 — the edge
-        // where batch and stream lastBin formulas previously diverged
-        input.addData((0L, 0L, 7L), (1L, 1L, 5L), (0L, 2L, 6L), (2L, 9L, 0L))
-        q.processAllAvailable()
-        input.addData((0L, 3L, 0L), (0L, 4L, 9L), (1L, 3L, 2L))
-        q.processAllAvailable()
-        val stream = spark.table("pack_stream")
-          .as[(Long, Long, Long, Long, Long)].collect().toSet
-        // batch reference: Packing.packPositions per shard on the union
-        val union = Seq((0L, 0L, 7L), (0L, 2L, 6L), (0L, 3L, 0L), (0L, 4L, 9L),
-          (1L, 1L, 5L), (1L, 3L, 2L), (2L, 9L, 0L))
-        val batch = union.groupBy(_._1).flatMap { case (shard, docs) =>
-          graft.operators.Packing.packPositions(
-              docs.map { case (_, id, n) => (id, n) }.toDF("doc_id", "n"),
-              "doc_id", "n", capacity = 10L)
-            .collect().toSeq.map(r => (shard, r.getAs[Long]("doc_id"),
-              r.getAs[Long]("start_off"), r.getAs[Long]("first_bin"),
-              r.getAs[Long]("last_bin")))
-        }.toSet
-        assert(stream == batch, s"stream $stream vs batch $batch")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+      // shard 2 leads with a ZERO-token doc at offset 0 — the edge
+      // where batch and stream lastBin formulas previously diverged
+      input.addData((0L, 0L, 7L), (1L, 1L, 5L), (0L, 2L, 6L), (2L, 9L, 0L))
+      q.processAllAvailable()
+      input.addData((0L, 3L, 0L), (0L, 4L, 9L), (1L, 3L, 2L))
+      q.processAllAvailable()
+      val stream = spark.table("pack_stream")
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      // batch reference: Packing.packPositions per shard on the union
+      val union = Seq((0L, 0L, 7L), (0L, 2L, 6L), (0L, 3L, 0L), (0L, 4L, 9L),
+        (1L, 1L, 5L), (1L, 3L, 2L), (2L, 9L, 0L))
+      val batch = union.groupBy(_._1).flatMap { case (shard, docs) =>
+        graft.operators.Packing.packPositions(
+            docs.map { case (_, id, n) => (id, n) }.toDF("doc_id", "n"),
+            "doc_id", "n", capacity = 10L)
+          .collect().toSeq.map(r => (shard, r.getAs[Long]("doc_id"),
+            r.getAs[Long]("start_off"), r.getAs[Long]("first_bin"),
+            r.getAs[Long]("last_bin")))
+      }.toSet
+      assert(stream == batch, s"stream $stream vs batch $batch")
+    } finally q.stop()
   }
 
   test("streaming CDC chunking: per-document op composes in foreachBatch, batch == stream") {
@@ -878,15 +812,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composed ingest gate: stateless filters feed the near-dup state in ONE query") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { composedGateBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    composedGateBody()
   }
 
   private def composedGateBody(): Unit = {
@@ -999,16 +925,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming domain quota: first-arrival cap persists across batches") {
-    // state API v2 requires the RocksDB provider (multiple column families)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { domainQuotaBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    // state API v2 requires the RocksDB provider (multiple column
+    // families), which every Sessions session sets
+    domainQuotaBody()
   }
 
   private def domainQuotaBody(): Unit = {
@@ -1076,39 +995,30 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming CDC resemblance: chunk-bucket state pairs cross-batch near-dups") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val base = "the quick brown fox jumps over the lazy dog while " +
+      "rain falls softly on the quiet village roofs tonight and nobody minds"
+    val input = MemoryStream[(Long, String)]
+    val cands = graft.streaming.CdcDedupStream.candidates(
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      w = 3, divisor = 4L)
+    val q = cands.writeStream.format("memory").queryName("cdc_stream")
+      .outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val base = "the quick brown fox jumps over the lazy dog while " +
-        "rain falls softly on the quiet village roofs tonight and nobody minds"
-      val input = MemoryStream[(Long, String)]
-      val cands = graft.streaming.CdcDedupStream.candidates(
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        w = 3, divisor = 4L)
-      val q = cands.writeStream.format("memory").queryName("cdc_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          (1L, base),
-          (2L, "completely different words about spark execution engines here"))
-        q.processAllAvailable()
-        assert(spark.table("cdc_stream").count() == 0)
-        // An insertion-edited near-copy arrives later: CDC boundaries
-        // survive the edit, so it must pair with doc 1 via chunk state.
-        input.addData((3L, "inserted " + base))
-        q.processAllAvailable()
-        val pairs = spark.table("cdc_stream")
-          .select("idA", "idB").distinct()
-          .as[(Long, Long)].collect().toSet
-        assert(pairs == Set((1L, 3L)), s"got $pairs")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+      input.addData(
+        (1L, base),
+        (2L, "completely different words about spark execution engines here"))
+      q.processAllAvailable()
+      assert(spark.table("cdc_stream").count() == 0)
+      // An insertion-edited near-copy arrives later: CDC boundaries
+      // survive the edit, so it must pair with doc 1 via chunk state.
+      input.addData((3L, "inserted " + base))
+      q.processAllAvailable()
+      val pairs = spark.table("cdc_stream")
+        .select("idA", "idB").distinct()
+        .as[(Long, Long)].collect().toSet
+      assert(pairs == Set((1L, 3L)), s"got $pairs")
+    } finally q.stop()
   }
 
   test("streaming span corruption: per-document op composes in foreachBatch, batch == stream") {
@@ -1142,15 +1052,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming heavy hitters: state carries across batches, batch == stream in the exact regime") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { heavyHittersBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    heavyHittersBody()
   }
 
   private def heavyHittersBody(): Unit = {
@@ -1185,15 +1087,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming weighted sample: reservoir state carries, batch == stream") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { weightedSampleBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    weightedSampleBody()
   }
 
   private def weightedSampleBody(): Unit = {
@@ -1230,15 +1124,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming weighted sample: a re-offered id with a changed weight keeps ONE slot") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { reofferBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    reofferBody()
   }
 
   private def reofferBody(): Unit = {
@@ -1267,15 +1153,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming heavy hitters: the MG guarantee holds across batches under decrements") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { heavyHittersGuaranteeBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    heavyHittersGuaranteeBody()
   }
 
   test("streaming isotropy projection: history-fit model, batch == stream") {
@@ -1303,15 +1181,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming typo pairs: cross-batch detection matches the batch join") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { typoStreamBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    typoStreamBody()
   }
 
   private def typoStreamBody(): Unit = {
@@ -1340,15 +1210,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming typo pairs: bucket cap bounds state, survivors still verify") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { typoCapBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    typoCapBody()
   }
 
   private def typoCapBody(): Unit = {
@@ -1376,15 +1238,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming image near-dup: cross-batch pairs match the batch LSH join") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { imageStreamBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    imageStreamBody()
   }
 
   private def imageStreamBody(): Unit = {
@@ -1423,15 +1277,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming audio near-dup: cross-batch pairs match the batch LSH join") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { audioStreamBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    audioStreamBody()
   }
 
   private def audioStreamBody(): Unit = {
@@ -1473,15 +1319,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming quantiles: exact below k, guarantee above, state carries") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { quantileStreamBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    quantileStreamBody()
   }
 
   private def quantileStreamBody(): Unit = {
@@ -1514,15 +1352,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming weighted sample: state survives a query restart from checkpoint") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { restartBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    restartBody()
   }
 
   private def restartBody(): Unit = {
@@ -1567,257 +1397,224 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming anonymity gate: a group releases only once it reaches k, batch == stream") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long)]
-      val q = AnonymityGateStream(input.toDS(), k = 3)
-        .toDF("qi", "id", "rn")
-        .writeStream.format("memory").queryName("anon_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(("a", 1L), ("a", 2L), ("b", 10L))
-        q.processAllAvailable()
-        // nothing released: both groups are below k
-        assert(spark.table("anon_stream").count() == 0)
-        input.addData(("a", 3L), ("a", 4L), ("b", 11L))
-        q.processAllAvailable()
-        val got = spark.table("anon_stream")
-          .as[(String, Long, Long)].collect().toSet
-        // group a crossed k: the barrier flushes 1..3 together, 4 streams
-        // through; group b (2 members) still withholds everything
-        assert(got == Set(("a", 1L, 1L), ("a", 2L, 2L), ("a", 3L, 3L),
-          ("a", 4L, 4L)), s"got $got")
-        // released ID set == the batch operator's level-0 release over
-        // the union of the two micro-batches
-        val all = Seq(("a", 1L), ("a", 2L), ("b", 10L),
-          ("a", 3L), ("a", 4L), ("b", 11L))
-        val batch = graft.operators.Privacy.kAnonymize(
-            all.toDF("qi", "id"), Seq("qi"), k = 3L)
-          .filter(col("anon_level") === 0)
-          .select("id").as[Long].collect().toSet
-        assert(got.map(_._2) == batch, s"stream ${got.map(_._2)} vs batch $batch")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long)]
+    val q = AnonymityGateStream(input.toDS(), k = 3)
+      .toDF("qi", "id", "rn")
+      .writeStream.format("memory").queryName("anon_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(("a", 1L), ("a", 2L), ("b", 10L))
+      q.processAllAvailable()
+      // nothing released: both groups are below k
+      assert(spark.table("anon_stream").count() == 0)
+      input.addData(("a", 3L), ("a", 4L), ("b", 11L))
+      q.processAllAvailable()
+      val got = spark.table("anon_stream")
+        .as[(String, Long, Long)].collect().toSet
+      // group a crossed k: the barrier flushes 1..3 together, 4 streams
+      // through; group b (2 members) still withholds everything
+      assert(got == Set(("a", 1L, 1L), ("a", 2L, 2L), ("a", 3L, 3L),
+        ("a", 4L, 4L)), s"got $got")
+      // released ID set == the batch operator's level-0 release over
+      // the union of the two micro-batches
+      val all = Seq(("a", 1L), ("a", 2L), ("b", 10L),
+        ("a", 3L), ("a", 4L), ("b", 11L))
+      val batch = graft.operators.Privacy.kAnonymize(
+          all.toDF("qi", "id"), Seq("qi"), k = 3L)
+        .filter(col("anon_level") === 0)
+        .select("id").as[Long].collect().toSet
+      assert(got.map(_._2) == batch, s"stream ${got.map(_._2)} vs batch $batch")
+    } finally q.stop()
   }
 
   test("streaming anonymity gate: held-back members survive a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_anonr").toString
-      val input = MemoryStream[(String, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-      def start() = AnonymityGateStream(input.toDS(), k = 3)
-        .writeStream
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[(String, Long, Long)], _: Long) =>
-          collected.synchronized { collected ++= ds.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try { input.addData(("g", 1L), ("g", 2L)); q1.processAllAvailable() }
-      finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // member 3 arrives only AFTER the restart: the barrier flushes
-        // 1 and 2 iff their buffered ids were RESTORED from checkpoint
-        input.addData(("g", 3L))
-        q2.processAllAvailable()
-        assert(collected.synchronized(collected.toSet) ==
-          Set(("g", 1L, 1L), ("g", 2L, 2L), ("g", 3L, 3L)),
-          s"buffered members must survive the restart: $collected")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_anonr").toString
+    val input = MemoryStream[(String, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    def start() = AnonymityGateStream(input.toDS(), k = 3)
+      .writeStream
+      .foreachBatch {
+        (ds: org.apache.spark.sql.Dataset[(String, Long, Long)], _: Long) =>
+        collected.synchronized { collected ++= ds.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try { input.addData(("g", 1L), ("g", 2L)); q1.processAllAvailable() }
+    finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // member 3 arrives only AFTER the restart: the barrier flushes
+      // 1 and 2 iff their buffered ids were RESTORED from checkpoint
+      input.addData(("g", 3L))
+      q2.processAllAvailable()
+      assert(collected.synchronized(collected.toSet) ==
+        Set(("g", 1L, 1L), ("g", 2L, 2L), ("g", 3L, 3L)),
+        s"buffered members must survive the restart: $collected")
+    } finally q2.stop()
   }
 
-  // Shared RocksDB wrapper for the restart suite below — checkpoint
-  // recovery is THE ingest-resilience claim at 100 TB, so every
-  // stateful twin gets a stop-the-query/resume-from-checkpoint test
-  // whose expected output differs by construction from a state reset.
-  private def withRocksDb(body: => Unit): Unit = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
-  }
+  // The restart suite below — checkpoint recovery is THE
+  // ingest-resilience claim at 100 TB, so every stateful twin gets a
+  // stop-the-query/resume-from-checkpoint test whose expected output
+  // differs by construction from a state reset.
 
   test("streaming CDC dedup: chunk-bucket state survives a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val base = "the quick brown fox jumps over the lazy dog while " +
-        "rain falls softly on the quiet village roofs tonight and nobody minds"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcr").toString
-      val input = MemoryStream[(Long, String)]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      def start() = graft.streaming.CdcDedupStream.candidates(
-          input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          w = 3, divisor = 4L)
-        .writeStream
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.CdcDedupStream.ChunkPair],
-           _: Long) =>
-          collected.synchronized { collected ++= ds.collect().map(p => (p.idA, p.idB)) }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try { input.addData((1L, base)); q1.processAllAvailable() }
-      finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // the near-copy arrives only AFTER the restart: the pair exists
-        // iff doc 1's chunk posting lists were RESTORED from checkpoint
-        input.addData((3L, "inserted " + base))
-        q2.processAllAvailable()
-        assert(collected.synchronized(collected.toSet) == Set((1L, 3L)),
-          s"chunk state must survive the restart: $collected")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val base = "the quick brown fox jumps over the lazy dog while " +
+      "rain falls softly on the quiet village roofs tonight and nobody minds"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcr").toString
+    val input = MemoryStream[(Long, String)]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def start() = graft.streaming.CdcDedupStream.candidates(
+        input.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        w = 3, divisor = 4L)
+      .writeStream
+      .foreachBatch {
+        (ds: org.apache.spark.sql.Dataset[graft.streaming.CdcDedupStream.ChunkPair],
+         _: Long) =>
+        collected.synchronized { collected ++= ds.collect().map(p => (p.idA, p.idB)) }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try { input.addData((1L, base)); q1.processAllAvailable() }
+    finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // the near-copy arrives only AFTER the restart: the pair exists
+      // iff doc 1's chunk posting lists were RESTORED from checkpoint
+      input.addData((3L, "inserted " + base))
+      q2.processAllAvailable()
+      assert(collected.synchronized(collected.toSet) == Set((1L, 3L)),
+        s"chunk state must survive the restart: $collected")
+    } finally q2.stop()
   }
 
   test("streaming typo pairs: variant-bucket state survives a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_typor").toString
-      val input = MemoryStream[String]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
-      def start() = graft.streaming.TypoStream.pairs(
-          input.toDF().toDF("s"), "s", tau = 1)
-        .writeStream
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.TypoStream.TypoPair],
-           _: Long) =>
-          collected.synchronized { collected ++= ds.collect().map(p => (p.sA, p.sB, p.dist)) }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try { input.addData("hello", "spark"); q1.processAllAvailable() }
-      finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData("helo") // ED 1 from "hello", seen before the restart
-        q2.processAllAvailable()
-        // lexical pair order: "hello" < "helo" ('l' < 'o' at index 3)
-        assert(collected.synchronized(collected.toSet) == Set(("hello", "helo", 1)),
-          s"variant state must survive the restart: $collected")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_typor").toString
+    val input = MemoryStream[String]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
+    def start() = graft.streaming.TypoStream.pairs(
+        input.toDF().toDF("s"), "s", tau = 1)
+      .writeStream
+      .foreachBatch {
+        (ds: org.apache.spark.sql.Dataset[graft.streaming.TypoStream.TypoPair],
+         _: Long) =>
+        collected.synchronized { collected ++= ds.collect().map(p => (p.sA, p.sB, p.dist)) }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try { input.addData("hello", "spark"); q1.processAllAvailable() }
+    finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData("helo") // ED 1 from "hello", seen before the restart
+      q2.processAllAvailable()
+      // lexical pair order: "hello" < "helo" ('l' < 'o' at index 3)
+      assert(collected.synchronized(collected.toSet) == Set(("hello", "helo", 1)),
+        s"variant state must survive the restart: $collected")
+    } finally q2.stop()
   }
 
   test("streaming image dedup: band-bucket state survives a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      def img(noise: Int) = graft.functions.MediaCodecs.encodeBmpGray8(
-        Array.tabulate(64)(i => if (i == 0) noise else if (i % 2 == 0) 220 else 30))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_imgr").toString
-      val input = MemoryStream[(Long, Array[Byte])]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      def start() = graft.streaming.ImageDedupStream.pairs(
-          input.toDF().toDF("media_id", "payload"), "media_id", "payload",
-          maxHamming = 4)
-        .writeStream
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.ImageDedupStream.ImagePair],
-           _: Long) =>
-          collected.synchronized { collected ++= ds.collect().map(p => (p.idA, p.idB)) }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try { input.addData((1L, img(250))); q1.processAllAvailable() }
-      finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData((2L, img(240))) // near-dup of the pre-restart image
-        q2.processAllAvailable()
-        assert(collected.synchronized(collected.toSet) == Set((1L, 2L)),
-          s"band state must survive the restart: $collected")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    def img(noise: Int) = graft.functions.MediaCodecs.encodeBmpGray8(
+      Array.tabulate(64)(i => if (i == 0) noise else if (i % 2 == 0) 220 else 30))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_imgr").toString
+    val input = MemoryStream[(Long, Array[Byte])]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def start() = graft.streaming.ImageDedupStream.pairs(
+        input.toDF().toDF("media_id", "payload"), "media_id", "payload",
+        maxHamming = 4)
+      .writeStream
+      .foreachBatch {
+        (ds: org.apache.spark.sql.Dataset[graft.streaming.ImageDedupStream.ImagePair],
+         _: Long) =>
+        collected.synchronized { collected ++= ds.collect().map(p => (p.idA, p.idB)) }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try { input.addData((1L, img(250))); q1.processAllAvailable() }
+    finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData((2L, img(240))) // near-dup of the pre-restart image
+      q2.processAllAvailable()
+      assert(collected.synchronized(collected.toSet) == Set((1L, 2L)),
+        s"band state must survive the restart: $collected")
+    } finally q2.stop()
   }
 
   test("streaming domain quota: admission counts survive a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_dqr").toString
-      val input = MemoryStream[(String, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-      def start() = DomainQuotaProcessor(input.toDS(), k = 2)
-        .writeStream
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[(String, Long, Long)], _: Long) =>
-          collected.synchronized { collected ++= ds.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try { input.addData(("x", 10L), ("x", 11L)); q1.processAllAvailable() }
-      finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // x's quota filled BEFORE the restart: 12/13 must be rejected
-        // (a reset would re-admit both with rn 1,2); y starts fresh
-        input.addData(("x", 12L), ("x", 13L), ("y", 20L))
-        q2.processAllAvailable()
-        assert(collected.synchronized(collected.toSet) == Set(("y", 20L, 1L)),
-          s"quota counts must survive the restart: $collected")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_dqr").toString
+    val input = MemoryStream[(String, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    def start() = DomainQuotaProcessor(input.toDS(), k = 2)
+      .writeStream
+      .foreachBatch {
+        (ds: org.apache.spark.sql.Dataset[(String, Long, Long)], _: Long) =>
+        collected.synchronized { collected ++= ds.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try { input.addData(("x", 10L), ("x", 11L)); q1.processAllAvailable() }
+    finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // x's quota filled BEFORE the restart: 12/13 must be rejected
+      // (a reset would re-admit both with rn 1,2); y starts fresh
+      input.addData(("x", 12L), ("x", 13L), ("y", 20L))
+      q2.processAllAvailable()
+      assert(collected.synchronized(collected.toSet) == Set(("y", 20L, 1L)),
+        s"quota counts must survive the restart: $collected")
+    } finally q2.stop()
   }
 
   test("streaming heavy hitters: MG counters survive a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_hhr").toString
-      val input = MemoryStream[(Long, String)]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-      def start() = HeavyHittersStream(input.toDS(), k = 2)
-        .writeStream
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[(Long, String, Long)], _: Long) =>
-          collected.synchronized { collected ++= ds.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData((0L, "a"), (0L, "a"), (0L, "a"), (0L, "b"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // restored MG state {a:3, b:1} + "c" at full capacity decrements
-        // everything -> {a:2}; a reset would emit {c:1} instead
-        input.addData((0L, "c"))
-        q2.processAllAvailable()
-        assert(collected.synchronized(collected.toSet) == Set((0L, "a", 2L)),
-          s"MG counters must survive the restart: $collected")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_hhr").toString
+    val input = MemoryStream[(Long, String)]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
+    def start() = HeavyHittersStream(input.toDS(), k = 2)
+      .writeStream
+      .foreachBatch {
+        (ds: org.apache.spark.sql.Dataset[(Long, String, Long)], _: Long) =>
+        collected.synchronized { collected ++= ds.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData((0L, "a"), (0L, "a"), (0L, "a"), (0L, "b"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // restored MG state {a:3, b:1} + "c" at full capacity decrements
+      // everything -> {a:2}; a reset would emit {c:1} instead
+      input.addData((0L, "c"))
+      q2.processAllAvailable()
+      assert(collected.synchronized(collected.toSet) == Set((0L, "a", 2L)),
+        s"MG counters must survive the restart: $collected")
+    } finally q2.stop()
   }
 
   test("streaming quantiles: summary state survives a query restart") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { quantileRestartBody() }
-    finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    quantileRestartBody()
   }
 
   private def quantileRestartBody(): Unit = {
@@ -1883,887 +1680,843 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming LOCF enrichment: batch == stream (lag window), late rows monotone") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long, Long, Double)]
-      val q = LocfStream.enrichWithPrev(input.toDS())
-        .writeStream.format("memory").queryName("locf_stream")
-        .outputMode("append").start()
-      try {
-        // batch 1: key a twice (intra-batch chain, added out of order),
-        // key b once
-        input.addData(("a", 200L, 2L, 20.0), ("a", 100L, 1L, 10.0),
-          ("b", 100L, 7L, 70.0))
-        q.processAllAvailable()
-        // batch 2: key a again -> prev is the batch-1 tail
-        input.addData(("a", 300L, 3L, 30.0))
-        q.processAllAvailable()
-        val got = spark.table("locf_stream")
-          .as[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])]
-          .collect().map(r => (r._1, r._2) -> ((r._5, r._6))).toMap
-        // exactly the batch lag-window over the union, because arrival
-        // respected event order across batches
-        assert(got(("a", 100L)) == ((None, None)))
-        assert(got(("a", 200L)) == ((Some((100L, 1L, 10.0)), Some(100L))))
-        assert(got(("a", 300L)) == ((Some((200L, 2L, 20.0)), Some(100L))))
-        assert(got(("b", 100L)) == ((None, None)))
-        // batch 3: a LATE row (ts 150 < held 300) — enriched against the
-        // held state, which must NOT regress
-        input.addData(("a", 150L, 9L, 15.0))
-        q.processAllAvailable()
-        input.addData(("a", 400L, 4L, 40.0))
-        q.processAllAvailable()
-        val late = spark.table("locf_stream")
-          .as[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])]
-          .collect().map(r => (r._1, r._2) -> ((r._5, r._6))).toMap
-        assert(late(("a", 150L)) == ((Some((300L, 3L, 30.0)), Some(-150L))))
-        assert(late(("a", 400L)) == ((Some((300L, 3L, 30.0)), Some(100L))),
-          "late row must not replace the newer held observation")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, Long, Double)]
+    val q = LocfStream.enrichWithPrev(input.toDS())
+      .writeStream.format("memory").queryName("locf_stream")
+      .outputMode("append").start()
+    try {
+      // batch 1: key a twice (intra-batch chain, added out of order),
+      // key b once
+      input.addData(("a", 200L, 2L, 20.0), ("a", 100L, 1L, 10.0),
+        ("b", 100L, 7L, 70.0))
+      q.processAllAvailable()
+      // batch 2: key a again -> prev is the batch-1 tail
+      input.addData(("a", 300L, 3L, 30.0))
+      q.processAllAvailable()
+      val got = spark.table("locf_stream")
+        .as[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])]
+        .collect().map(r => (r._1, r._2) -> ((r._5, r._6))).toMap
+      // exactly the batch lag-window over the union, because arrival
+      // respected event order across batches
+      assert(got(("a", 100L)) == ((None, None)))
+      assert(got(("a", 200L)) == ((Some((100L, 1L, 10.0)), Some(100L))))
+      assert(got(("a", 300L)) == ((Some((200L, 2L, 20.0)), Some(100L))))
+      assert(got(("b", 100L)) == ((None, None)))
+      // batch 3: a LATE row (ts 150 < held 300) — enriched against the
+      // held state, which must NOT regress
+      input.addData(("a", 150L, 9L, 15.0))
+      q.processAllAvailable()
+      input.addData(("a", 400L, 4L, 40.0))
+      q.processAllAvailable()
+      val late = spark.table("locf_stream")
+        .as[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])]
+        .collect().map(r => (r._1, r._2) -> ((r._5, r._6))).toMap
+      assert(late(("a", 150L)) == ((Some((300L, 3L, 30.0)), Some(-150L))))
+      assert(late(("a", 400L)) == ((Some((300L, 3L, 30.0)), Some(100L))),
+        "late row must not replace the newer held observation")
+    } finally q.stop()
   }
 
   test("streaming funnel: one verdict per completed user, batch q83 semantics") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(Long, Long, String)]
-      val q = FunnelStream.conversions(input.toDS(),
-          windowMicros = 7L * 86400L * 1000000L)
-        .writeStream.format("memory").queryName("funnel_stream")
-        .outputMode("append").start()
-      val day = 86400L * 1000000L
-      try {
-        // u1: signup then purchase on day 2 -> converted
-        // u2: purchase BEFORE signup -> decided, not converted (q83 rule)
-        // u3: signup then purchase on day 9 -> after but outside window
-        // u4: signup only -> never emits
-        input.addData((1L, 1L * day, "signup"), (2L, 1L * day, "purchase"),
-          (3L, 1L * day, "signup"), (4L, 1L * day, "signup"))
-        q.processAllAvailable()
-        assert(spark.table("funnel_stream").count() == 0)
-        input.addData((1L, 2L * day, "purchase"), (2L, 3L * day, "signup"),
-          (3L, 10L * day, "purchase"))
-        q.processAllAvailable()
-        val got = spark.table("funnel_stream")
-          .as[(Long, Long, Long, Boolean, Boolean)].collect()
-          .map(r => r._1 -> ((r._4, r._5))).toMap
-        assert(got == Map(1L -> ((true, true)), 2L -> ((false, false)),
-          3L -> ((true, false))), s"got $got")
-        // a second purchase must not re-emit or flip anything
-        input.addData((2L, 4L * day, "purchase"), (1L, 3L * day, "purchase"))
-        q.processAllAvailable()
-        assert(spark.table("funnel_stream").count() == 3)
-        // aggregate parity with the q83 batch rollup over the same events
-        val n = spark.table("funnel_stream")
-          .as[(Long, Long, Long, Boolean, Boolean)].collect()
-        assert(n.count(_._4) == 2 && n.count(_._5) == 1)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(Long, Long, String)]
+    val q = FunnelStream.conversions(input.toDS(),
+        windowMicros = 7L * 86400L * 1000000L)
+      .writeStream.format("memory").queryName("funnel_stream")
+      .outputMode("append").start()
+    val day = 86400L * 1000000L
+    try {
+      // u1: signup then purchase on day 2 -> converted
+      // u2: purchase BEFORE signup -> decided, not converted (q83 rule)
+      // u3: signup then purchase on day 9 -> after but outside window
+      // u4: signup only -> never emits
+      input.addData((1L, 1L * day, "signup"), (2L, 1L * day, "purchase"),
+        (3L, 1L * day, "signup"), (4L, 1L * day, "signup"))
+      q.processAllAvailable()
+      assert(spark.table("funnel_stream").count() == 0)
+      input.addData((1L, 2L * day, "purchase"), (2L, 3L * day, "signup"),
+        (3L, 10L * day, "purchase"))
+      q.processAllAvailable()
+      val got = spark.table("funnel_stream")
+        .as[(Long, Long, Long, Boolean, Boolean)].collect()
+        .map(r => r._1 -> ((r._4, r._5))).toMap
+      assert(got == Map(1L -> ((true, true)), 2L -> ((false, false)),
+        3L -> ((true, false))), s"got $got")
+      // a second purchase must not re-emit or flip anything
+      input.addData((2L, 4L * day, "purchase"), (1L, 3L * day, "purchase"))
+      q.processAllAvailable()
+      assert(spark.table("funnel_stream").count() == 3)
+      // aggregate parity with the q83 batch rollup over the same events
+      val n = spark.table("funnel_stream")
+        .as[(Long, Long, Long, Boolean, Boolean)].collect()
+      assert(n.count(_._4) == 2 && n.count(_._5) == 1)
+    } finally q.stop()
   }
 
   test("streaming CUSUM: incremental recurrence matches the reference; state survives restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_cusum").toString
-      val input = MemoryStream[(String, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Boolean)] // (key, tick, cusum, alarm)
-      // mu = 5, k = 1, h = 6 (micro-units x 1e6)
-      def start() = CusumStream.monitor(input.toDS(),
-          muMicro = 5000000L, slackMicro = 1000000L, hMicro = 6000000L)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean)],
-           _: Long) =>
-          collected.synchronized {
-            collected ++= df.collect().map(r => (r._1, r._2, r._4, r._5))
-          }
-          ()
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_cusum").toString
+    val input = MemoryStream[(String, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Boolean)] // (key, tick, cusum, alarm)
+    // mu = 5, k = 1, h = 6 (micro-units x 1e6)
+    def start() = CusumStream.monitor(input.toDS(),
+        muMicro = 5000000L, slackMicro = 1000000L, hMicro = 6000000L)
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean)],
+         _: Long) =>
+        collected.synchronized {
+          collected ++= df.collect().map(r => (r._1, r._2, r._4, r._5))
         }
-        .option("checkpointLocation", ckpt).start()
-      // reference: x = 5,9,9 -> S: max(0,-1)=0, then 3e6, then 6e6 (no
-      // alarm: 6e6 is not > 6e6); next batch x=9 -> 9e6 -> ALARM
-      val q1 = start()
-      try {
-        input.addData(("a", 2L, 9L), ("a", 1L, 5L), ("a", 3L, 9L)) // out of order
-        q1.processAllAvailable()
-      } finally q1.stop()
-      val firstRun = collected.synchronized(collected.toList)
-      assert(firstRun == List(("a", 1L, 0L, false), ("a", 2L, 3000000L, false),
-        ("a", 3L, 6000000L, false)), s"got $firstRun")
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData(("a", 4L, 9L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        // restored S = 6e6 -> 9e6 alarm; a reset would give 3e6, no alarm
-        assert(got == List(("a", 4L, 9000000L, true)),
-          s"state must survive the restart: $got")
-      } finally q2.stop()
-    }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    // reference: x = 5,9,9 -> S: max(0,-1)=0, then 3e6, then 6e6 (no
+    // alarm: 6e6 is not > 6e6); next batch x=9 -> 9e6 -> ALARM
+    val q1 = start()
+    try {
+      input.addData(("a", 2L, 9L), ("a", 1L, 5L), ("a", 3L, 9L)) // out of order
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val firstRun = collected.synchronized(collected.toList)
+    assert(firstRun == List(("a", 1L, 0L, false), ("a", 2L, 3000000L, false),
+      ("a", 3L, 6000000L, false)), s"got $firstRun")
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData(("a", 4L, 9L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      // restored S = 6e6 -> 9e6 alarm; a reset would give 3e6, no alarm
+      assert(got == List(("a", 4L, 9000000L, true)),
+        s"state must survive the restart: $got")
+    } finally q2.stop()
   }
 
   test("streaming LOCF enrichment: held observation survives a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_locf").toString
-      val input = MemoryStream[(String, Long, Long, Double)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Option[(Long, Long, Double)])]
-      def start() = LocfStream.enrichWithPrev(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Double,
-            Option[(Long, Long, Double)], Option[Long])], _: Long) =>
-          collected.synchronized {
-            collected ++= df.collect().map(r => (r._1, r._2, r._5))
-          }
-          ()
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_locf").toString
+    val input = MemoryStream[(String, Long, Long, Double)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Option[(Long, Long, Double)])]
+    def start() = LocfStream.enrichWithPrev(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Double,
+          Option[(Long, Long, Double)], Option[Long])], _: Long) =>
+        collected.synchronized {
+          collected ++= df.collect().map(r => (r._1, r._2, r._5))
         }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("a", 100L, 1L, 10.0))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData(("a", 200L, 2L, 20.0))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        // restored state enriches with the pre-restart observation; a
-        // reset would emit prev = None by construction
-        assert(got == List(("a", 200L, Some((100L, 1L, 10.0)))),
-          s"state must survive the restart: $got")
-      } finally q2.stop()
-    }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("a", 100L, 1L, 10.0))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData(("a", 200L, 2L, 20.0))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      // restored state enriches with the pre-restart observation; a
+      // reset would emit prev = None by construction
+      assert(got == List(("a", 200L, Some((100L, 1L, 10.0)))),
+        s"state must survive the restart: $got")
+    } finally q2.stop()
   }
 
   test("streaming decay: trending weight == batch operator, order-free") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val day = 24L * 3600L * 1000000L
-      val input = MemoryStream[(String, Long)]
-      val q = DecayStream.trending(input.toDS(), halfLifeDays = 7)
-        .writeStream.format("memory").queryName("decay_stream")
-        .outputMode("append").start()
-      try {
-        // batch 1 arrives OUT OF EVENT ORDER — decay is a pure function
-        // of (bucket, anchor), so order cannot matter
-        input.addData(("a", 92L * day), ("a", 99L * day), ("a", 92L * day))
-        q.processAllAvailable()
-        input.addData(("a", 85L * day), ("b", 99L * day))
-        q.processAllAvailable()
-        val rows = spark.table("decay_stream")
-          .as[(String, Long, Long, Long)].collect()
-        val last = rows.filter(_._1 == "a").last
-        // buckets: 14 (1 event), 13 (2), 12 (1): 1 + 2>>1 + 1>>2 = 2
-        assert(last == (("a", 14L, 4L, 2L)))
-        // parity with the batch operator anchored at the key's max ts
-        val batch = graft.operators.Decay.halfLifeCounts(
-          Seq(("a", new java.sql.Timestamp(92L * day / 1000)),
-            ("a", new java.sql.Timestamp(99L * day / 1000)),
-            ("a", new java.sql.Timestamp(92L * day / 1000)),
-            ("a", new java.sql.Timestamp(85L * day / 1000)))
-            .toDF("k", "ts"),
-          "k", "ts", 7, asOfMicros = 99L * day).collect()(0)
-        assert(batch.getAs[Long]("n_events") == 4L)
-        assert(batch.getAs[Long]("decayed_weight") == 2L)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val day = 24L * 3600L * 1000000L
+    val input = MemoryStream[(String, Long)]
+    val q = DecayStream.trending(input.toDS(), halfLifeDays = 7)
+      .writeStream.format("memory").queryName("decay_stream")
+      .outputMode("append").start()
+    try {
+      // batch 1 arrives OUT OF EVENT ORDER — decay is a pure function
+      // of (bucket, anchor), so order cannot matter
+      input.addData(("a", 92L * day), ("a", 99L * day), ("a", 92L * day))
+      q.processAllAvailable()
+      input.addData(("a", 85L * day), ("b", 99L * day))
+      q.processAllAvailable()
+      val rows = spark.table("decay_stream")
+        .as[(String, Long, Long, Long)].collect()
+      val last = rows.filter(_._1 == "a").last
+      // buckets: 14 (1 event), 13 (2), 12 (1): 1 + 2>>1 + 1>>2 = 2
+      assert(last == (("a", 14L, 4L, 2L)))
+      // parity with the batch operator anchored at the key's max ts
+      val batch = graft.operators.Decay.halfLifeCounts(
+        Seq(("a", new java.sql.Timestamp(92L * day / 1000)),
+          ("a", new java.sql.Timestamp(99L * day / 1000)),
+          ("a", new java.sql.Timestamp(92L * day / 1000)),
+          ("a", new java.sql.Timestamp(85L * day / 1000)))
+          .toDF("k", "ts"),
+        "k", "ts", 7, asOfMicros = 99L * day).collect()(0)
+      assert(batch.getAs[Long]("n_events") == 4L)
+      assert(batch.getAs[Long]("decayed_weight") == 2L)
+    } finally q.stop()
   }
 
   test("streaming decay: histogram survives a restart; anchor advances") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val day = 24L * 3600L * 1000000L
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_decay")
-        .toString
-      val input = MemoryStream[(String, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long)]
-      def start() = DecayStream.trending(input.toDS(), halfLifeDays = 7)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("a", 92L * day), ("a", 92L * day), ("a", 92L * day),
-          ("a", 92L * day))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // one new event a bucket later: the restored 4-count bucket
-        // re-ages to 1 under the advanced anchor -> 4>>1 + 1 = 3
-        input.addData(("a", 99L * day))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("a", 14L, 5L, 3L)),
-          s"histogram must survive the restart and re-age: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val day = 24L * 3600L * 1000000L
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_decay")
+      .toString
+    val input = MemoryStream[(String, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long)]
+    def start() = DecayStream.trending(input.toDS(), halfLifeDays = 7)
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("a", 92L * day), ("a", 92L * day), ("a", 92L * day),
+        ("a", 92L * day))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // one new event a bucket later: the restored 4-count bucket
+      // re-ages to 1 under the advanced anchor -> 4>>1 + 1 = 3
+      input.addData(("a", 99L * day))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("a", 14L, 5L, 3L)),
+        s"histogram must survive the restart and re-age: $got")
+    } finally q2.stop()
   }
 
   test("streaming TWA: running average == batch operator on an in-order feed") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long, Long, Long)]
-      val q = TwaStream.runningTwa(input.toDS())
-        .writeStream.format("memory").queryName("twa_stream")
-        .outputMode("append").start()
-      try {
-        // key a: 1000c holds 3s, 2000c holds 1s (intra-batch, added out
-        // of event order — the processor sorts), batch boundary, then
-        // 3000c closes. Running twa after each row:
-        input.addData(("a", 3000000L, 2L, 2000L), ("a", 0L, 1L, 1000L))
-        q.processAllAvailable()
-        input.addData(("a", 4000000L, 3L, 3000L), ("b", 0L, 9L, 500L))
-        q.processAllAvailable()
-        val got = spark.table("twa_stream")
-          .as[(String, Long, Long, Long, Long, Option[Long])]
-          .collect().map(r => (r._1, r._2) -> ((r._5, r._6))).toMap
-        assert(got(("a", 0L)) == ((0L, None)))
-        assert(got(("a", 3000000L)) == ((3000000L, Some(1000L))))
-        // (1000*3e6 + 2000*1e6) / 4e6 = 1250
-        assert(got(("a", 4000000L)) == ((4000000L, Some(1250L))))
-        assert(got(("b", 0L)) == ((0L, None)))
-        // parity: the final running row equals the batch operator
-        val batch = graft.operators.Resample.timeWeightedAvg(
-          Seq(("a", new java.sql.Timestamp(0L), 1L, 10.0),
-            ("a", new java.sql.Timestamp(3000L), 2L, 20.0),
-            ("a", new java.sql.Timestamp(4000L), 3L, 30.0))
-            .toDF("k", "ts", "id", "v"), "k", "ts", "v", "id")
-          .collect()(0)
-        assert(batch.getAs[Long]("twa_cents") == 1250L)
-        assert(batch.getAs[Long]("span_us") == 4000000L)
-        // a LATE row (ts behind the holder): observed, nothing regresses
-        input.addData(("a", 1000000L, 8L, 9999L))
-        q.processAllAvailable()
-        val late = spark.table("twa_stream")
-          .as[(String, Long, Long, Long, Long, Option[Long])]
-          .collect().filter(r => r._2 == 1000000L)(0)
-        assert((late._5, late._6) == ((4000000L, Some(1250L))),
-          "late row must not change the running stats")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, Long, Long)]
+    val q = TwaStream.runningTwa(input.toDS())
+      .writeStream.format("memory").queryName("twa_stream")
+      .outputMode("append").start()
+    try {
+      // key a: 1000c holds 3s, 2000c holds 1s (intra-batch, added out
+      // of event order — the processor sorts), batch boundary, then
+      // 3000c closes. Running twa after each row:
+      input.addData(("a", 3000000L, 2L, 2000L), ("a", 0L, 1L, 1000L))
+      q.processAllAvailable()
+      input.addData(("a", 4000000L, 3L, 3000L), ("b", 0L, 9L, 500L))
+      q.processAllAvailable()
+      val got = spark.table("twa_stream")
+        .as[(String, Long, Long, Long, Long, Option[Long])]
+        .collect().map(r => (r._1, r._2) -> ((r._5, r._6))).toMap
+      assert(got(("a", 0L)) == ((0L, None)))
+      assert(got(("a", 3000000L)) == ((3000000L, Some(1000L))))
+      // (1000*3e6 + 2000*1e6) / 4e6 = 1250
+      assert(got(("a", 4000000L)) == ((4000000L, Some(1250L))))
+      assert(got(("b", 0L)) == ((0L, None)))
+      // parity: the final running row equals the batch operator
+      val batch = graft.operators.Resample.timeWeightedAvg(
+        Seq(("a", new java.sql.Timestamp(0L), 1L, 10.0),
+          ("a", new java.sql.Timestamp(3000L), 2L, 20.0),
+          ("a", new java.sql.Timestamp(4000L), 3L, 30.0))
+          .toDF("k", "ts", "id", "v"), "k", "ts", "v", "id")
+        .collect()(0)
+      assert(batch.getAs[Long]("twa_cents") == 1250L)
+      assert(batch.getAs[Long]("span_us") == 4000000L)
+      // a LATE row (ts behind the holder): observed, nothing regresses
+      input.addData(("a", 1000000L, 8L, 9999L))
+      q.processAllAvailable()
+      val late = spark.table("twa_stream")
+        .as[(String, Long, Long, Long, Long, Option[Long])]
+        .collect().filter(r => r._2 == 1000000L)(0)
+      assert((late._5, late._6) == ((4000000L, Some(1250L))),
+        "late row must not change the running stats")
+    } finally q.stop()
   }
 
   test("streaming TWA: running sums survive a query restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_twa").toString
-      val input = MemoryStream[(String, Long, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Option[Long])]
-      def start() = TwaStream.runningTwa(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long,
-            Long, Option[Long])], _: Long) =>
-          collected.synchronized {
-            collected ++= df.collect().map(r => (r._1, r._2, r._5, r._6))
-          }
-          ()
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_twa").toString
+    val input = MemoryStream[(String, Long, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Option[Long])]
+    def start() = TwaStream.runningTwa(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long,
+          Long, Option[Long])], _: Long) =>
+        collected.synchronized {
+          collected ++= df.collect().map(r => (r._1, r._2, r._5, r._6))
         }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("a", 0L, 1L, 1000L), ("a", 2000000L, 2L, 4000L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // 1000c held 2s pre-restart; 4000c holds 2s across the restart
-        // -> twa = (1000*2e6 + 4000*2e6) / 4e6 = 2500
-        input.addData(("a", 4000000L, 3L, 9L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("a", 4000000L, 4000000L, Some(2500L))),
-          s"running sums must survive the restart: $got")
-      } finally q2.stop()
-    }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("a", 0L, 1L, 1000L), ("a", 2000000L, 2L, 4000L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // 1000c held 2s pre-restart; 4000c holds 2s across the restart
+      // -> twa = (1000*2e6 + 4000*2e6) / 4e6 = 2500
+      input.addData(("a", 4000000L, 3L, 9L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("a", 4000000L, 4000000L, Some(2500L))),
+        s"running sums must survive the restart: $got")
+    } finally q2.stop()
   }
 
   test("streaming upsert compaction: batch == stream under out-of-order arrival") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long, Long, String, Long)]
-      val q = UpsertStream.compact(input.toDS())
-        .writeStream.format("memory").queryName("upsert_stream")
-        .outputMode("append").start()
-      try {
-        // batch 1: a upserted twice OUT OF ORDER, b inserted
-        input.addData(("a", 200L, 2L, "U", 20L), ("a", 100L, 1L, "U", 10L),
-          ("b", 100L, 3L, "U", 30L))
-        q.processAllAvailable()
-        // batch 2: b tombstoned; a gets a STALE change (counts, no regress);
-        // c delete-then-reinsert within one batch
-        input.addData(("b", 200L, 4L, "D", 0L), ("a", 50L, 0L, "U", 5L),
-          ("c", 100L, 5L, "D", 0L), ("c", 200L, 6L, "U", 60L))
-        q.processAllAvailable()
-        val rows = spark.table("upsert_stream")
-          .as[(String, Long, Long, Long, Boolean, Long)].collect()
-        // latest emission per key == the batch compact over the union
-        val last = rows.groupBy(_._1).map { case (k, rs) =>
-          k -> rs.maxBy(_._6)
-        }
-        assert(last("a") == (("a", 200L, 2L, 20L, true, 3L)))
-        assert(last("b") == (("b", 200L, 4L, 0L, false, 2L)))
-        assert(last("c") == (("c", 200L, 6L, 60L, true, 2L)))
-        val batch = graft.operators.Changelog.compact(
-          Seq(("a", 200L, 2L, "U", 20L), ("a", 100L, 1L, "U", 10L),
-            ("b", 100L, 3L, "U", 30L), ("b", 200L, 4L, "D", 0L),
-            ("a", 50L, 0L, "U", 5L), ("c", 100L, 5L, "D", 0L),
-            ("c", 200L, 6L, "U", 60L)).toDF("k", "ts", "seq", "op", "v"),
-          "k", "ts", "seq", "op", Seq("v"))
-          .collect().map(r => r.getAs[String]("k") ->
-            ((r.getAs[String]("k"), r.getAs[Long]("last_ts"),
-              r.getAs[Long]("last_seq"), r.getAs[Long]("v"),
-              r.getAs[Boolean]("live"), r.getAs[Long]("n_changes")))).toMap
-        assert(last.toMap == batch, "stream final emissions must equal batch compact")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, Long, String, Long)]
+    val q = UpsertStream.compact(input.toDS())
+      .writeStream.format("memory").queryName("upsert_stream")
+      .outputMode("append").start()
+    try {
+      // batch 1: a upserted twice OUT OF ORDER, b inserted
+      input.addData(("a", 200L, 2L, "U", 20L), ("a", 100L, 1L, "U", 10L),
+        ("b", 100L, 3L, "U", 30L))
+      q.processAllAvailable()
+      // batch 2: b tombstoned; a gets a STALE change (counts, no regress);
+      // c delete-then-reinsert within one batch
+      input.addData(("b", 200L, 4L, "D", 0L), ("a", 50L, 0L, "U", 5L),
+        ("c", 100L, 5L, "D", 0L), ("c", 200L, 6L, "U", 60L))
+      q.processAllAvailable()
+      val rows = spark.table("upsert_stream")
+        .as[(String, Long, Long, Long, Boolean, Long)].collect()
+      // latest emission per key == the batch compact over the union
+      val last = rows.groupBy(_._1).map { case (k, rs) =>
+        k -> rs.maxBy(_._6)
+      }
+      assert(last("a") == (("a", 200L, 2L, 20L, true, 3L)))
+      assert(last("b") == (("b", 200L, 4L, 0L, false, 2L)))
+      assert(last("c") == (("c", 200L, 6L, 60L, true, 2L)))
+      val batch = graft.operators.Changelog.compact(
+        Seq(("a", 200L, 2L, "U", 20L), ("a", 100L, 1L, "U", 10L),
+          ("b", 100L, 3L, "U", 30L), ("b", 200L, 4L, "D", 0L),
+          ("a", 50L, 0L, "U", 5L), ("c", 100L, 5L, "D", 0L),
+          ("c", 200L, 6L, "U", 60L)).toDF("k", "ts", "seq", "op", "v"),
+        "k", "ts", "seq", "op", Seq("v"))
+        .collect().map(r => r.getAs[String]("k") ->
+          ((r.getAs[String]("k"), r.getAs[Long]("last_ts"),
+            r.getAs[Long]("last_seq"), r.getAs[Long]("v"),
+            r.getAs[Boolean]("live"), r.getAs[Long]("n_changes")))).toMap
+      assert(last.toMap == batch, "stream final emissions must equal batch compact")
+    } finally q.stop()
   }
 
   test("streaming upsert compaction: duplicate (ts, seq) ties break like batch, not by arrival") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long, Long, String, Long)]
-      val q = UpsertStream.compact(input.toDS())
-        .writeStream.format("memory").queryName("upsert_tie_stream")
-        .outputMode("append").start()
-      try {
-        // every key: two records with IDENTICAL (ts, seq) but different
-        // (op, value), offered with the struct-max WINNER arriving
-        // last — first-seen-wins (the old arrival-order rule) would
-        // keep the loser on every key.
-        // a: op tie, value decides (40 > 20); b: op decides ("U" > "D"
-        // — the tombstone LOSES the tie); c: the same op tie resolved
-        // from restored state across micro-batches.
-        input.addData(("a", 100L, 1L, "U", 20L), ("a", 100L, 1L, "U", 40L),
-          ("b", 100L, 1L, "D", 9L), ("b", 100L, 1L, "U", 7L),
-          ("c", 100L, 1L, "D", 9L))
-        q.processAllAvailable()
-        input.addData(("c", 100L, 1L, "U", 7L)) // "U" > "D": replaces held winner
-        q.processAllAvailable()
-        val rows = spark.table("upsert_tie_stream")
-          .as[(String, Long, Long, Long, Boolean, Long)].collect()
-        val last = rows.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._6) }
-        val log = Seq(("a", 100L, 1L, "U", 20L), ("a", 100L, 1L, "U", 40L),
-          ("b", 100L, 1L, "D", 9L), ("b", 100L, 1L, "U", 7L),
-          ("c", 100L, 1L, "D", 9L), ("c", 100L, 1L, "U", 7L))
-        val batch = graft.operators.Changelog.compact(
-          log.toDF("k", "ts", "seq", "op", "v"),
-          "k", "ts", "seq", "op", Seq("v"))
-          .collect().map(r => r.getAs[String]("k") ->
-            ((r.getAs[String]("k"), r.getAs[Long]("last_ts"),
-              r.getAs[Long]("last_seq"), r.getAs[Long]("v"),
-              r.getAs[Boolean]("live"), r.getAs[Long]("n_changes")))).toMap
-        assert(last.toMap == batch,
-          s"tie resolution must match batch struct order: $last vs $batch")
-        assert(last("a")._4 == 40L && last("b")._5 == true && last("c")._5 == true)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, Long, String, Long)]
+    val q = UpsertStream.compact(input.toDS())
+      .writeStream.format("memory").queryName("upsert_tie_stream")
+      .outputMode("append").start()
+    try {
+      // every key: two records with IDENTICAL (ts, seq) but different
+      // (op, value), offered with the struct-max WINNER arriving
+      // last — first-seen-wins (the old arrival-order rule) would
+      // keep the loser on every key.
+      // a: op tie, value decides (40 > 20); b: op decides ("U" > "D"
+      // — the tombstone LOSES the tie); c: the same op tie resolved
+      // from restored state across micro-batches.
+      input.addData(("a", 100L, 1L, "U", 20L), ("a", 100L, 1L, "U", 40L),
+        ("b", 100L, 1L, "D", 9L), ("b", 100L, 1L, "U", 7L),
+        ("c", 100L, 1L, "D", 9L))
+      q.processAllAvailable()
+      input.addData(("c", 100L, 1L, "U", 7L)) // "U" > "D": replaces held winner
+      q.processAllAvailable()
+      val rows = spark.table("upsert_tie_stream")
+        .as[(String, Long, Long, Long, Boolean, Long)].collect()
+      val last = rows.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._6) }
+      val log = Seq(("a", 100L, 1L, "U", 20L), ("a", 100L, 1L, "U", 40L),
+        ("b", 100L, 1L, "D", 9L), ("b", 100L, 1L, "U", 7L),
+        ("c", 100L, 1L, "D", 9L), ("c", 100L, 1L, "U", 7L))
+      val batch = graft.operators.Changelog.compact(
+        log.toDF("k", "ts", "seq", "op", "v"),
+        "k", "ts", "seq", "op", Seq("v"))
+        .collect().map(r => r.getAs[String]("k") ->
+          ((r.getAs[String]("k"), r.getAs[Long]("last_ts"),
+            r.getAs[Long]("last_seq"), r.getAs[Long]("v"),
+            r.getAs[Boolean]("live"), r.getAs[Long]("n_changes")))).toMap
+      assert(last.toMap == batch,
+        s"tie resolution must match batch struct order: $last vs $batch")
+      assert(last("a")._4 == 40L && last("b")._5 == true && last("c")._5 == true)
+    } finally q.stop()
   }
 
   test("streaming upsert compaction: winner and count survive a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_upsert").toString
-      val input = MemoryStream[(String, Long, Long, String, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Boolean, Long)]
-      def start() = UpsertStream.compact(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("a", 300L, 1L, "U", 30L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // stale post-restart row: must bump the RESTORED count to 2 and
-        // keep the pre-restart winner — a reset would emit (100, 10, n=1)
-        input.addData(("a", 100L, 0L, "U", 10L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("a", 300L, 1L, 30L, true, 2L)),
-          s"restored winner/count expected: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_upsert").toString
+    val input = MemoryStream[(String, Long, Long, String, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long, Boolean, Long)]
+    def start() = UpsertStream.compact(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("a", 300L, 1L, "U", 30L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // stale post-restart row: must bump the RESTORED count to 2 and
+      // keep the pre-restart winner — a reset would emit (100, 10, n=1)
+      input.addData(("a", 100L, 0L, "U", 10L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("a", 300L, 1L, 30L, true, 2L)),
+        s"restored winner/count expected: $got")
+    } finally q2.stop()
   }
 
   test("streaming SCD2: (key, version)-upserted emissions == batch scd2") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long, Long, String, Long)]
-      val q = Scd2Stream.history(input.toDS())
-        .writeStream.format("memory").queryName("scd2_stream")
-        .outputMode("append").start()
-      try {
-        // batch 1 SHUFFLED within the batch (intra-batch sort applies
-        // them in (ts, seq) order): a's v1+v2, b's v1
-        input.addData(("a", 200L, 2L, "U", 20L), ("a", 100L, 1L, "U", 10L),
-          ("b", 100L, 3L, "U", 30L))
-        q.processAllAvailable()
-        // batch 2: a deleted then reinserted; b updated — closes its v1
-        input.addData(("a", 300L, 4L, "D", 0L), ("a", 400L, 5L, "U", 40L),
-          ("b", 500L, 6L, "U", 50L))
-        q.processAllAvailable()
-        val emissions = spark.table("scd2_stream")
-          .as[(String, Long, Long, Option[Long], Long, Boolean)].collect()
-        // a sink upserting on (key, version): the LAST emission per
-        // (key, version) wins — closes supersede their open forms
-        val applied = emissions.zipWithIndex
-          .groupBy { case (e, _) => (e._1, e._5) }
-          .map { case (_, es) => es.maxBy(_._2)._1 }.toSet
-        val batch = graft.operators.Changelog.scd2(
-          Seq(("a", 100L, 1L, "U", 10L), ("a", 200L, 2L, "U", 20L),
-            ("a", 300L, 4L, "D", 0L), ("a", 400L, 5L, "U", 40L),
-            ("b", 100L, 3L, "U", 30L), ("b", 500L, 6L, "U", 50L))
-            .toDF("k", "ts", "seq", "op", "v"),
-          "k", "ts", "seq", "op", Seq("v"))
-          .collect().map(r => (r.getAs[String]("k"), r.getAs[Long]("v"),
-            r.getAs[Long]("valid_from"),
-            Option(r.getAs[java.lang.Long]("valid_to")).map(_.longValue()),
-            r.getAs[Long]("version"), r.getAs[Boolean]("is_current"))).toSet
-        assert(applied == batch,
-          s"upserted stream table must equal batch scd2:\n$applied\nvs\n$batch")
-        // delete numbering pin: a's post-delete version is 4 (the
-        // delete consumed 3), and exactly one open version per live key
-        assert(applied.exists(e => e._1 == "a" && e._5 == 4L && e._6))
-        assert(applied.count(e => e._1 == "a" && e._6) == 1)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, Long, String, Long)]
+    val q = Scd2Stream.history(input.toDS())
+      .writeStream.format("memory").queryName("scd2_stream")
+      .outputMode("append").start()
+    try {
+      // batch 1 SHUFFLED within the batch (intra-batch sort applies
+      // them in (ts, seq) order): a's v1+v2, b's v1
+      input.addData(("a", 200L, 2L, "U", 20L), ("a", 100L, 1L, "U", 10L),
+        ("b", 100L, 3L, "U", 30L))
+      q.processAllAvailable()
+      // batch 2: a deleted then reinserted; b updated — closes its v1
+      input.addData(("a", 300L, 4L, "D", 0L), ("a", 400L, 5L, "U", 40L),
+        ("b", 500L, 6L, "U", 50L))
+      q.processAllAvailable()
+      val emissions = spark.table("scd2_stream")
+        .as[(String, Long, Long, Option[Long], Long, Boolean)].collect()
+      // a sink upserting on (key, version): the LAST emission per
+      // (key, version) wins — closes supersede their open forms
+      val applied = emissions.zipWithIndex
+        .groupBy { case (e, _) => (e._1, e._5) }
+        .map { case (_, es) => es.maxBy(_._2)._1 }.toSet
+      val batch = graft.operators.Changelog.scd2(
+        Seq(("a", 100L, 1L, "U", 10L), ("a", 200L, 2L, "U", 20L),
+          ("a", 300L, 4L, "D", 0L), ("a", 400L, 5L, "U", 40L),
+          ("b", 100L, 3L, "U", 30L), ("b", 500L, 6L, "U", 50L))
+          .toDF("k", "ts", "seq", "op", "v"),
+        "k", "ts", "seq", "op", Seq("v"))
+        .collect().map(r => (r.getAs[String]("k"), r.getAs[Long]("v"),
+          r.getAs[Long]("valid_from"),
+          Option(r.getAs[java.lang.Long]("valid_to")).map(_.longValue()),
+          r.getAs[Long]("version"), r.getAs[Boolean]("is_current"))).toSet
+      assert(applied == batch,
+        s"upserted stream table must equal batch scd2:\n$applied\nvs\n$batch")
+      // delete numbering pin: a's post-delete version is 4 (the
+      // delete consumed 3), and exactly one open version per live key
+      assert(applied.exists(e => e._1 == "a" && e._5 == 4L && e._6))
+      assert(applied.count(e => e._1 == "a" && e._6) == 1)
+    } finally q.stop()
   }
 
   test("streaming SCD2: version counter and open version survive a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_scd2").toString
-      val input = MemoryStream[(String, Long, Long, String, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Option[Long], Long, Boolean)]
-      def start() = Scd2Stream.history(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long,
-            Option[Long], Long, Boolean)], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("u", 100L, 1L, "U", 10L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // post-restart change must CLOSE the restored v1 and open v2 —
-        // lost state would re-number from 1 and close nothing
-        input.addData(("u", 200L, 2L, "U", 20L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList).sortBy(_._5)
-        assert(got == List(
-          ("u", 10L, 100L, Some(200L), 1L, false),
-          ("u", 20L, 200L, None, 2L, true)),
-          s"restored open version must close across the restart: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_scd2").toString
+    val input = MemoryStream[(String, Long, Long, String, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Option[Long], Long, Boolean)]
+    def start() = Scd2Stream.history(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long,
+          Option[Long], Long, Boolean)], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("u", 100L, 1L, "U", 10L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // post-restart change must CLOSE the restored v1 and open v2 —
+      // lost state would re-number from 1 and close nothing
+      input.addData(("u", 200L, 2L, "U", 20L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList).sortBy(_._5)
+      assert(got == List(
+        ("u", 10L, 100L, Some(200L), 1L, false),
+        ("u", 20L, 200L, None, 2L, true)),
+        s"restored open version must close across the restart: $got")
+    } finally q2.stop()
   }
 
   test("streaming occupancy: upserted tick deltas == batch hourlyCoverage under any order") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val hour = 3600L * 1000000L
-      def tsu(us: Long) = new java.sql.Timestamp(us / 1000L)
-      // intervals: [0.5h, 2h), [1h, 3.5h), [2h, open) — the
-      // IntervalsSpec hand fixture, fed as boundary rows SPLIT ACROSS
-      // BATCHES with closes arriving before opens (order-independence)
-      val input = MemoryStream[(Long, Long)]
-      val q = OccupancyStream.tickDeltas(input.toDS())
-        .writeStream.format("memory").queryName("occ_stream")
-        .outputMode("append").start()
-      try {
-        input.addData((2L, -1L), (4L, -1L)) // both closes first
-        q.processAllAvailable()
-        input.addData((1L, 1L), (1L, 1L), (2L, 1L)) // opens catch up
-        q.processAllAvailable()
-        val last = spark.table("occ_stream").as[(Long, Long)].collect()
-          .zipWithIndex.groupBy(_._1._1)
-          .map { case (t, es) => t -> es.maxBy(_._2)._1._2 }
-        val batch = graft.operators.Intervals.hourlyCoverage(
-          Seq((tsu(hour / 2), Option(tsu(2 * hour))),
-            (tsu(hour), Option(tsu(3 * hour + hour / 2))),
-            (tsu(2 * hour), None))
-            .map { case (f, t) => (f, t.orNull) }.toDF("f", "t"),
-          "f", "t")
-          .collect().map(r => r.getAs[Long]("tick_hour") ->
-            r.getAs[Long]("delta")).toMap
-        assert(last.filter(_._2 != 0L) == batch,
-          s"nonzero tick totals must equal the batch delta table: $last vs $batch")
-        // the curve: running sum over the upserted table == batch n_open
-        val curve = last.toSeq.sortBy(_._1)
-          .scanLeft((0L, 0L)) { case ((_, acc), (t, d)) => (t, acc + d) }
-          .drop(1).toMap
-        assert(curve(1L) == 2L && curve(2L) == 2L && curve(4L) == 1L)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val hour = 3600L * 1000000L
+    def tsu(us: Long) = new java.sql.Timestamp(us / 1000L)
+    // intervals: [0.5h, 2h), [1h, 3.5h), [2h, open) — the
+    // IntervalsSpec hand fixture, fed as boundary rows SPLIT ACROSS
+    // BATCHES with closes arriving before opens (order-independence)
+    val input = MemoryStream[(Long, Long)]
+    val q = OccupancyStream.tickDeltas(input.toDS())
+      .writeStream.format("memory").queryName("occ_stream")
+      .outputMode("append").start()
+    try {
+      input.addData((2L, -1L), (4L, -1L)) // both closes first
+      q.processAllAvailable()
+      input.addData((1L, 1L), (1L, 1L), (2L, 1L)) // opens catch up
+      q.processAllAvailable()
+      val last = spark.table("occ_stream").as[(Long, Long)].collect()
+        .zipWithIndex.groupBy(_._1._1)
+        .map { case (t, es) => t -> es.maxBy(_._2)._1._2 }
+      val batch = graft.operators.Intervals.hourlyCoverage(
+        Seq((tsu(hour / 2), Option(tsu(2 * hour))),
+          (tsu(hour), Option(tsu(3 * hour + hour / 2))),
+          (tsu(2 * hour), None))
+          .map { case (f, t) => (f, t.orNull) }.toDF("f", "t"),
+        "f", "t")
+        .collect().map(r => r.getAs[Long]("tick_hour") ->
+          r.getAs[Long]("delta")).toMap
+      assert(last.filter(_._2 != 0L) == batch,
+        s"nonzero tick totals must equal the batch delta table: $last vs $batch")
+      // the curve: running sum over the upserted table == batch n_open
+      val curve = last.toSeq.sortBy(_._1)
+        .scanLeft((0L, 0L)) { case ((_, acc), (t, d)) => (t, acc + d) }
+        .drop(1).toMap
+      assert(curve(1L) == 2L && curve(2L) == 2L && curve(4L) == 1L)
+    } finally q.stop()
   }
 
   test("streaming A/B readout: running counts + Wilson == batch, restart-safe") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_ab").toString
-      val input = MemoryStream[(String, Boolean)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Long, Long)]
-      def start() = ExperimentStream.conversions(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long,
-            Long, Long)], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("A", true), ("A", false), ("B", true))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // post-restart rows must extend the RESTORED counts
-        input.addData(("A", false), ("A", false), ("B", true), ("B", false))
-        q2.processAllAvailable()
-        val last = collected.synchronized(collected.toList)
-          .groupBy(_._1).map { case (k, rs) => k -> rs.last }
-        // batch reference over the union (lift-free columns)
-        val batch = graft.operators.Experiment.conversionLift(
-          Seq(("A", true), ("A", false), ("A", false), ("A", false),
-            ("B", true), ("B", true), ("B", false))
-            .toDF("variant", "converted"), "variant", "converted", "A")
-          .collect().map(r => r.getAs[String]("variant") ->
-            ((r.getAs[String]("variant"), r.getAs[Long]("n"),
-              r.getAs[Long]("conversions"), r.getAs[Long]("rate_ppm"),
-              r.getAs[Long]("wilson_lo_ppm"),
-              r.getAs[Long]("wilson_hi_ppm")))).toMap
-        assert(last.toMap == batch,
-          s"stream final emissions must equal batch readout: $last vs $batch")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_ab").toString
+    val input = MemoryStream[(String, Boolean)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long, Long, Long)]
+    def start() = ExperimentStream.conversions(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long,
+          Long, Long)], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("A", true), ("A", false), ("B", true))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // post-restart rows must extend the RESTORED counts
+      input.addData(("A", false), ("A", false), ("B", true), ("B", false))
+      q2.processAllAvailable()
+      val last = collected.synchronized(collected.toList)
+        .groupBy(_._1).map { case (k, rs) => k -> rs.last }
+      // batch reference over the union (lift-free columns)
+      val batch = graft.operators.Experiment.conversionLift(
+        Seq(("A", true), ("A", false), ("A", false), ("A", false),
+          ("B", true), ("B", true), ("B", false))
+          .toDF("variant", "converted"), "variant", "converted", "A")
+        .collect().map(r => r.getAs[String]("variant") ->
+          ((r.getAs[String]("variant"), r.getAs[Long]("n"),
+            r.getAs[Long]("conversions"), r.getAs[Long]("rate_ppm"),
+            r.getAs[Long]("wilson_lo_ppm"),
+            r.getAs[Long]("wilson_hi_ppm")))).toMap
+      assert(last.toMap == batch,
+        s"stream final emissions must equal batch readout: $last vs $batch")
+    } finally q2.stop()
   }
 
   test("streaming basket pairs: each co-membership emitted once; counts == batch pair stage") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, String)]
-      val q = AssocStream.basketPairs(input.toDS())
-        .writeStream.format("memory").queryName("assoc_stream")
-        .outputMode("append").start()
-      try {
-        // basket 1 split ACROSS batches with a duplicate line; basket 2
-        // arrives in one batch out of order
-        input.addData(("1", "milk"), ("1", "bread"))
-        q.processAllAvailable()
-        input.addData(("1", "milk"), ("1", "butter"),
-          ("2", "bread"), ("2", "milk"))
-        q.processAllAvailable()
-        val got = spark.table("assoc_stream").as[(String, String)]
-          .collect().groupBy(identity).view.mapValues(_.length).toMap
-        // basket 1 {milk, bread, butter} -> 3 pairs (dup milk absorbed);
-        // basket 2 {bread, milk} -> 1 pair; every pair exactly once
-        assert(got == Map(
-          ("bread", "milk") -> 2, ("bread", "butter") -> 1,
-          ("butter", "milk") -> 1),
-          s"got $got")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, String)]
+    val q = AssocStream.basketPairs(input.toDS())
+      .writeStream.format("memory").queryName("assoc_stream")
+      .outputMode("append").start()
+    try {
+      // basket 1 split ACROSS batches with a duplicate line; basket 2
+      // arrives in one batch out of order
+      input.addData(("1", "milk"), ("1", "bread"))
+      q.processAllAvailable()
+      input.addData(("1", "milk"), ("1", "butter"),
+        ("2", "bread"), ("2", "milk"))
+      q.processAllAvailable()
+      val got = spark.table("assoc_stream").as[(String, String)]
+        .collect().groupBy(identity).view.mapValues(_.length).toMap
+      // basket 1 {milk, bread, butter} -> 3 pairs (dup milk absorbed);
+      // basket 2 {bread, milk} -> 1 pair; every pair exactly once
+      assert(got == Map(
+        ("bread", "milk") -> 2, ("bread", "butter") -> 1,
+        ("butter", "milk") -> 1),
+        s"got $got")
+    } finally q.stop()
   }
 
   test("streaming seasonal Hampel: slot re-emissions converge to batch flags") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val hour = 3600L * 1000000L
-      // (key, tick, count): "a" hod-0 slot gets a spike day (mad 0 —
-      // every off-median tick flags); "a" hod-1 constant (flags
-      // nothing); "b" hod-0 has nonzero mad and one true anomaly
-      val counts = Seq(
-        ("a", 0L, 5), ("a", 24L, 5), ("a", 48L, 5), ("a", 72L, 5),
-        ("a", 96L, 9),
-        ("a", 1L, 3), ("a", 25L, 3), ("a", 49L, 3),
-        ("b", 0L, 1), ("b", 24L, 2), ("b", 48L, 3), ("b", 72L, 10))
-      val events = counts.flatMap { case (k, t, n) =>
-        (0 until n).map(i => (k, t * hour + i * 1000L))
-      }
-      // split ("a", 96) across micro-batches: 4 events then 5 — the
-      // additive merge must total 9 and the slot re-emission must
-      // retract the interim profile
-      val (late, early) = events.partition {
-        case (k, us) => k == "a" && us / hour == 96L && us % hour >= 4000L
-      }
-      val input = MemoryStream[(String, Long)]
-      val q = SeasonalStream.anomalies(
-          SeasonalStream.ticksFromEvents(input.toDS()))
-        .writeStream.format("memory").queryName("seasonal_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(scala.util.Random.shuffle(early))
-        q.processAllAvailable()
-        input.addData(late)
-        q.processAllAvailable()
-        val last = spark.table("seasonal_stream")
-          .as[(String, Long, Long, Long, Long, Long, Boolean)].collect()
-          .zipWithIndex.groupBy(r => (r._1._1, r._1._2))
-          .map { case (_, es) => es.maxBy(_._2)._1 }.toSet
-        val batch = graft.operators.Seasonal.hourOfDayAnomalies(
-            events.map { case (k, us) =>
-              (k, new java.sql.Timestamp(us / 1000L))
-            }.toDF("key", "ts"), "key", "ts", k = 3L)
-          .collect().map(r => (r.getAs[String]("key"),
-            r.getAs[Long]("tick_hour"), r.getAs[Long]("hod"),
-            r.getAs[Long]("n"), r.getAs[Long]("med"),
-            r.getAs[Long]("mad"), r.getAs[Boolean]("is_anomaly"))).toSet
-        assert(last == batch,
-          s"final slot emissions must equal batch rows:\n$last\nvs\n$batch")
-        // sanity on the fixture itself: exactly two anomalies
-        assert(batch.count(_._7) == 2)
-      } finally q.stop()
+    implicit val sc = spark.sqlContext
+    val hour = 3600L * 1000000L
+    // (key, tick, count): "a" hod-0 slot gets a spike day (mad 0 —
+    // every off-median tick flags); "a" hod-1 constant (flags
+    // nothing); "b" hod-0 has nonzero mad and one true anomaly
+    val counts = Seq(
+      ("a", 0L, 5), ("a", 24L, 5), ("a", 48L, 5), ("a", 72L, 5),
+      ("a", 96L, 9),
+      ("a", 1L, 3), ("a", 25L, 3), ("a", 49L, 3),
+      ("b", 0L, 1), ("b", 24L, 2), ("b", 48L, 3), ("b", 72L, 10))
+    val events = counts.flatMap { case (k, t, n) =>
+      (0 until n).map(i => (k, t * hour + i * 1000L))
     }
+    // split ("a", 96) across micro-batches: 4 events then 5 — the
+    // additive merge must total 9 and the slot re-emission must
+    // retract the interim profile
+    val (late, early) = events.partition {
+      case (k, us) => k == "a" && us / hour == 96L && us % hour >= 4000L
+    }
+    val input = MemoryStream[(String, Long)]
+    val q = SeasonalStream.anomalies(
+        SeasonalStream.ticksFromEvents(input.toDS()))
+      .writeStream.format("memory").queryName("seasonal_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(scala.util.Random.shuffle(early))
+      q.processAllAvailable()
+      input.addData(late)
+      q.processAllAvailable()
+      val last = spark.table("seasonal_stream")
+        .as[(String, Long, Long, Long, Long, Long, Boolean)].collect()
+        .zipWithIndex.groupBy(r => (r._1._1, r._1._2))
+        .map { case (_, es) => es.maxBy(_._2)._1 }.toSet
+      val batch = graft.operators.Seasonal.hourOfDayAnomalies(
+          events.map { case (k, us) =>
+            (k, new java.sql.Timestamp(us / 1000L))
+          }.toDF("key", "ts"), "key", "ts", k = 3L)
+        .collect().map(r => (r.getAs[String]("key"),
+          r.getAs[Long]("tick_hour"), r.getAs[Long]("hod"),
+          r.getAs[Long]("n"), r.getAs[Long]("med"),
+          r.getAs[Long]("mad"), r.getAs[Boolean]("is_anomaly"))).toSet
+      assert(last == batch,
+        s"final slot emissions must equal batch rows:\n$last\nvs\n$batch")
+      // sanity on the fixture itself: exactly two anomalies
+      assert(batch.count(_._7) == 2)
+    } finally q.stop()
   }
 
   test("streaming seasonal Hampel: profile survives checkpoint restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_seasonal").toString
-      val input = MemoryStream[(String, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Long, Long, Boolean)]
-      def start() = SeasonalStream.anomalies(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long,
-            Long, Long, Boolean)], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("a", 0L, 5L), ("a", 24L, 5L), ("a", 48L, 5L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // post-restart spike must be scored against the RESTORED
-        // profile (med 5, mad 0) — lost state would give med 9/mad 0
-        // over a singleton slot and flag nothing
-        input.addData(("a", 72L, 9L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList).toSet
-        assert(got == Set(
-          ("a", 0L, 0L, 5L, 5L, 0L, false),
-          ("a", 24L, 0L, 5L, 5L, 0L, false),
-          ("a", 48L, 0L, 5L, 5L, 0L, false),
-          ("a", 72L, 0L, 9L, 5L, 0L, true)),
-          s"restored profile must score the spike: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_seasonal").toString
+    val input = MemoryStream[(String, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long, Long, Long, Boolean)]
+    def start() = SeasonalStream.anomalies(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long,
+          Long, Long, Boolean)], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("a", 0L, 5L), ("a", 24L, 5L), ("a", 48L, 5L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // post-restart spike must be scored against the RESTORED
+      // profile (med 5, mad 0) — lost state would give med 9/mad 0
+      // over a singleton slot and flag nothing
+      input.addData(("a", 72L, 9L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList).toSet
+      assert(got == Set(
+        ("a", 0L, 0L, 5L, 5L, 0L, false),
+        ("a", 24L, 0L, 5L, 5L, 0L, false),
+        ("a", 48L, 0L, 5L, 5L, 0L, false),
+        ("a", 72L, 0L, 9L, 5L, 0L, true)),
+        s"restored profile must score the spike: $got")
+    } finally q2.stop()
   }
 
   test("streaming histogram bins == batch drift table, restart-safe") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_hist").toString
-      // side A: 5, 9, -3 (bin -1 via FLOOR); side B: 1, 2, 3, 25
-      val vals = Seq((true, 5L), (true, 9L), (true, -3L),
-        (false, 1L), (false, 2L), (false, 3L), (false, 25L))
-      val input = MemoryStream[(Boolean, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long)]
-      def start() = HistDriftStream
-        .bins(HistDriftStream.binsFromValues(input.toDS(), binWidth = 10L))
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(Long, Long, Long)], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val (b1, b2) = scala.util.Random.shuffle(vals).splitAt(3)
-      val q1 = start()
-      try { input.addData(b1); q1.processAllAvailable() } finally q1.stop()
-      val q2 = start()
-      try {
-        input.addData(b2)
-        q2.processAllAvailable()
-        val last = collected.synchronized(collected.toList)
-          .zipWithIndex.groupBy(_._1._1)
-          .map { case (_, es) => es.maxBy(_._2)._1 }
-          .map(r => r._1 -> ((r._2, r._3))).toMap
-        val batch = graft.operators.Profile.histogramDrift(
-            vals.filter(_._1).map(_._2).toDF("v"),
-            vals.filterNot(_._1).map(_._2).toDF("v"), "v", 10L)
-          .collect().map(r => r.getAs[Long]("bin") ->
-            ((r.getAs[Long]("n_a"), r.getAs[Long]("n_b")))).toMap
-        assert(last == batch, s"upserted bins $last vs batch $batch")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_hist").toString
+    // side A: 5, 9, -3 (bin -1 via FLOOR); side B: 1, 2, 3, 25
+    val vals = Seq((true, 5L), (true, 9L), (true, -3L),
+      (false, 1L), (false, 2L), (false, 3L), (false, 25L))
+    val input = MemoryStream[(Boolean, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Long, Long)]
+    def start() = HistDriftStream
+      .bins(HistDriftStream.binsFromValues(input.toDS(), binWidth = 10L))
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(Long, Long, Long)], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val (b1, b2) = scala.util.Random.shuffle(vals).splitAt(3)
+    val q1 = start()
+    try { input.addData(b1); q1.processAllAvailable() } finally q1.stop()
+    val q2 = start()
+    try {
+      input.addData(b2)
+      q2.processAllAvailable()
+      val last = collected.synchronized(collected.toList)
+        .zipWithIndex.groupBy(_._1._1)
+        .map { case (_, es) => es.maxBy(_._2)._1 }
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      val batch = graft.operators.Profile.histogramDrift(
+          vals.filter(_._1).map(_._2).toDF("v"),
+          vals.filterNot(_._1).map(_._2).toDF("v"), "v", 10L)
+        .collect().map(r => r.getAs[Long]("bin") ->
+          ((r.getAs[Long]("n_a"), r.getAs[Long]("n_b")))).toMap
+      assert(last == batch, s"upserted bins $last vs batch $batch")
+    } finally q2.stop()
   }
 
   test("streaming multi-touch credits roll up to the batch attribution") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_mta").toString
-      val H = 3600L * 1000000L
-      // (user, tsMicros, seq, channel, isConv, cents): u1 a 3-touch
-      // journey then a 2nd journey; u2 direct; u3 an out-of-window
-      // touch; exact-ts collision on u1's first two touches
-      val rows = Seq(
-        ("u1", 1 * H, 1L, "click", false, 0L),
-        ("u1", 1 * H, 2L, "view", false, 0L),   // same-ts: view wins
-        ("u1", 2 * H, 3L, "click", false, 0L),
-        ("u1", 3 * H, 4L, "view", false, 0L),
-        ("u1", 4 * H, 5L, "", true, 1000L),
-        ("u1", 5 * H, 6L, "click", false, 0L),
-        ("u1", 6 * H, 7L, "", true, 200L),
-        ("u2", 2 * H, 8L, "", true, 400L),
-        ("u3", 1 * H, 9L, "view", false, 0L),
-        ("u3", 40 * H, 10L, "", true, 800L))
-      val input = MemoryStream[(String, Long, Long, String, Boolean, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, String, String, Long, Long)]
-      def start() = AttributionStream
-        .credits(input.toDS(), windowMicros = 24L * H)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, String,
-            String, Long, Long)], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      // ordered feed split across batches AND a restart mid-journey
-      val (b1, rest) = rows.sortBy(r => (r._2, r._3)).splitAt(4)
-      val q1 = start()
-      try { input.addData(b1); q1.processAllAvailable() } finally q1.stop()
-      val q2 = start()
-      try {
-        input.addData(rest)
-        q2.processAllAvailable()
-        val streamRollup = collected.synchronized(collected.toList)
-          .groupBy(r => (r._4, r._3)) // (channel, model)
-          .map { case (k, rs) =>
-            k -> ((rs.map(_._5).sum,
-              rs.map(r => r._5 * r._6).sum / 1000L,
-              rs.count(_._4 != "direct").toLong)) }
-        val batch = graft.operators.Attribution.multiTouch(
-            rows.map { case (u, ts, seq, ch, conv, cents) =>
-              (u, new java.sql.Timestamp(ts / 1000L), seq,
-                if (conv) "purchase" else ch, cents / 100.0)
-            }.toDF("user_id", "ts", "event_id", "event_type", "value"),
-            "user_id", "ts", "event_id", "event_type", "value",
-            Seq("click", "view"), "purchase", 24L * H)
-          .collect().map(r => (r.getAs[String]("channel"),
-            r.getAs[String]("model")) ->
-            ((r.getAs[Long]("conversions_ppm"),
-              r.getAs[Long]("revenue_milli_cents"),
-              r.getAs[Long]("n_touches")))).toMap
-        assert(streamRollup == batch,
-          s"stream rollup\n$streamRollup\nvs batch\n$batch")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_mta").toString
+    val H = 3600L * 1000000L
+    // (user, tsMicros, seq, channel, isConv, cents): u1 a 3-touch
+    // journey then a 2nd journey; u2 direct; u3 an out-of-window
+    // touch; exact-ts collision on u1's first two touches
+    val rows = Seq(
+      ("u1", 1 * H, 1L, "click", false, 0L),
+      ("u1", 1 * H, 2L, "view", false, 0L),   // same-ts: view wins
+      ("u1", 2 * H, 3L, "click", false, 0L),
+      ("u1", 3 * H, 4L, "view", false, 0L),
+      ("u1", 4 * H, 5L, "", true, 1000L),
+      ("u1", 5 * H, 6L, "click", false, 0L),
+      ("u1", 6 * H, 7L, "", true, 200L),
+      ("u2", 2 * H, 8L, "", true, 400L),
+      ("u3", 1 * H, 9L, "view", false, 0L),
+      ("u3", 40 * H, 10L, "", true, 800L))
+    val input = MemoryStream[(String, Long, Long, String, Boolean, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, String, String, Long, Long)]
+    def start() = AttributionStream
+      .credits(input.toDS(), windowMicros = 24L * H)
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, String,
+          String, Long, Long)], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    // ordered feed split across batches AND a restart mid-journey
+    val (b1, rest) = rows.sortBy(r => (r._2, r._3)).splitAt(4)
+    val q1 = start()
+    try { input.addData(b1); q1.processAllAvailable() } finally q1.stop()
+    val q2 = start()
+    try {
+      input.addData(rest)
+      q2.processAllAvailable()
+      val streamRollup = collected.synchronized(collected.toList)
+        .groupBy(r => (r._4, r._3)) // (channel, model)
+        .map { case (k, rs) =>
+          k -> ((rs.map(_._5).sum,
+            rs.map(r => r._5 * r._6).sum / 1000L,
+            rs.count(_._4 != "direct").toLong)) }
+      val batch = graft.operators.Attribution.multiTouch(
+          rows.map { case (u, ts, seq, ch, conv, cents) =>
+            (u, new java.sql.Timestamp(ts / 1000L), seq,
+              if (conv) "purchase" else ch, cents / 100.0)
+          }.toDF("user_id", "ts", "event_id", "event_type", "value"),
+          "user_id", "ts", "event_id", "event_type", "value",
+          Seq("click", "view"), "purchase", 24L * H)
+        .collect().map(r => (r.getAs[String]("channel"),
+          r.getAs[String]("model")) ->
+          ((r.getAs[Long]("conversions_ppm"),
+            r.getAs[Long]("revenue_milli_cents"),
+            r.getAs[Long]("n_touches")))).toMap
+      assert(streamRollup == batch,
+        s"stream rollup\n$streamRollup\nvs batch\n$batch")
+    } finally q2.stop()
   }
 
   test("streaming KMV distinct estimate == batch sketch, restart-safe") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_kmv").toString
-      val input = MemoryStream[(String, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long)]
-      def start() = KmvStream.ndv(input.toDS(), k = 16)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long)],
-            _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      // 120 distinct ids for group a (saturates k=16), 5 for b (exact),
-      // with duplicates sprinkled in; split across batches + a restart
-      val idsA = (0L until 120L).map(("a", _))
-      val idsB = (0L until 5L).map(("b", _))
-      val (batch1, batch2) = (idsA ++ idsB ++ idsA.take(30)).splitAt(70)
-      val q1 = start()
-      try {
-        input.addData(batch1)
-        q1.processAllAvailable()
-      } finally q1.stop()
-      val q2 = start()
-      try {
-        input.addData(batch2)
-        q2.processAllAvailable()
-        val last = collected.synchronized(collected.toList)
-          .groupBy(_._1).map { case (g, rs) => g -> rs.last }
-        val batch = graft.operators.Sketches.kminNdv(
-            (idsA ++ idsB).toDF("g", "id"), Seq("g"), "id", 16)
-          .collect().map(r => r.getAs[String]("g") ->
-            ((r.getAs[scala.collection.Seq[Long]]("sketch").size.toLong,
-              r.getAs[Long]("ndv_est")))).toMap
-        assert(last.map { case (g, (_, sz, est)) => g -> ((sz, est)) } ==
-          batch, s"stream $last vs batch $batch")
-        assert(last("b")._3 == 5L, "unsaturated estimate must be exact")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_kmv").toString
+    val input = MemoryStream[(String, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long)]
+    def start() = KmvStream.ndv(input.toDS(), k = 16)
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long)],
+          _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    // 120 distinct ids for group a (saturates k=16), 5 for b (exact),
+    // with duplicates sprinkled in; split across batches + a restart
+    val idsA = (0L until 120L).map(("a", _))
+    val idsB = (0L until 5L).map(("b", _))
+    val (batch1, batch2) = (idsA ++ idsB ++ idsA.take(30)).splitAt(70)
+    val q1 = start()
+    try {
+      input.addData(batch1)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val q2 = start()
+    try {
+      input.addData(batch2)
+      q2.processAllAvailable()
+      val last = collected.synchronized(collected.toList)
+        .groupBy(_._1).map { case (g, rs) => g -> rs.last }
+      val batch = graft.operators.Sketches.kminNdv(
+          (idsA ++ idsB).toDF("g", "id"), Seq("g"), "id", 16)
+        .collect().map(r => r.getAs[String]("g") ->
+          ((r.getAs[scala.collection.Seq[Long]]("sketch").size.toLong,
+            r.getAs[Long]("ndv_est")))).toMap
+      assert(last.map { case (g, (_, sz, est)) => g -> ((sz, est)) } ==
+        batch, s"stream $last vs batch $batch")
+      assert(last("b")._3 == 5L, "unsaturated estimate must be exact")
+    } finally q2.stop()
   }
 
   test("streaming basket pairs: null items drop before the intra-batch sort") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, String)]
-      val q = AssocStream.basketPairs(input.toDS())
-        .writeStream.format("memory").queryName("assoc_null_stream")
-        .outputMode("append").start()
-      try {
-        // a null item in the same micro-batch as real rows used to NPE
-        // inside Ordering[String] BEFORE the null guard could run; it
-        // must be ignored like the batch twin's (rules2) null filter
-        input.addData(("1", "milk"), ("1", null), ("1", "bread"))
-        q.processAllAvailable()
-        val got = spark.table("assoc_null_stream").as[(String, String)]
-          .collect().toSet
-        assert(got == Set(("bread", "milk")), s"got $got")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, String)]
+    val q = AssocStream.basketPairs(input.toDS())
+      .writeStream.format("memory").queryName("assoc_null_stream")
+      .outputMode("append").start()
+    try {
+      // a null item in the same micro-batch as real rows used to NPE
+      // inside Ordering[String] BEFORE the null guard could run; it
+      // must be ignored like the batch twin's (rules2) null filter
+      input.addData(("1", "milk"), ("1", null), ("1", "bread"))
+      q.processAllAvailable()
+      val got = spark.table("assoc_null_stream").as[(String, String)]
+        .collect().toSet
+      assert(got == Set(("bread", "milk")), s"got $got")
+    } finally q.stop()
   }
 
   test("occupancy boundaries: pre-epoch ticks match the batch ceiling exactly") {
@@ -2789,1031 +2542,983 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming k-step funnel: stage emissions == batch orderedFunnel rollup") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, Long, Long, String)]
-      val q = FunnelStepsStream.track(input.toDS(), Seq("A", "B", "C"))
-        .writeStream.format("memory").queryName("funnel_stream")
-        .outputMode("append").start()
-      try {
-        // u1 completes A(10)->B(40) in batch 1 (shuffled within batch)
-        // and C(100) in batch 2; u2's B arrives BEFORE its A (no B
-        // credit — order is mandatory); u3 does A->B
-        input.addData(("u1", 40L, 2L, "B"), ("u1", 10L, 1L, "A"),
-          ("u2", 5L, 3L, "B"), ("u2", 20L, 4L, "A"),
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, Long, String)]
+    val q = FunnelStepsStream.track(input.toDS(), Seq("A", "B", "C"))
+      .writeStream.format("memory").queryName("funnel_stream")
+      .outputMode("append").start()
+    try {
+      // u1 completes A(10)->B(40) in batch 1 (shuffled within batch)
+      // and C(100) in batch 2; u2's B arrives BEFORE its A (no B
+      // credit — order is mandatory); u3 does A->B
+      input.addData(("u1", 40L, 2L, "B"), ("u1", 10L, 1L, "A"),
+        ("u2", 5L, 3L, "B"), ("u2", 20L, 4L, "A"),
+        ("u3", 0L, 5L, "A"), ("u3", 10L, 6L, "B"))
+      q.processAllAvailable()
+      input.addData(("u1", 100L, 7L, "C"), ("u2", 30L, 8L, "A"))
+      q.processAllAvailable()
+      val rows = spark.table("funnel_stream")
+        .as[(String, Long, String, Long, Option[Long])].collect()
+      // per-stage counts and gap sets mirror the batch report
+      val byStage = rows.groupBy(_._2)
+      assert(byStage(1L).map(_._1).toSet == Set("u1", "u2", "u3"))
+      assert(byStage(2L).map(_._1).toSet == Set("u1", "u3"))
+      assert(byStage(3L).map(_._1).toSet == Set("u1"))
+      assert(byStage(2L).flatMap(_._5).toSet == Set(30L, 10L))
+      assert(byStage(3L).flatMap(_._5).toSet == Set(60L))
+      // one emission per (user, stage) — a second A for u2 cannot
+      // re-fire stage 1
+      assert(rows.groupBy(r => (r._1, r._2)).forall(_._2.length == 1))
+      // cross-check the rollup against the batch operator on the
+      // SAME events (micros timestamps)
+      val batch = graft.operators.Funnel.orderedFunnel(
+        Seq(("u1", 10L, 1L, "A"), ("u1", 40L, 2L, "B"),
+          ("u1", 100L, 7L, "C"), ("u2", 5L, 3L, "B"),
+          ("u2", 20L, 4L, "A"), ("u2", 30L, 8L, "A"),
           ("u3", 0L, 5L, "A"), ("u3", 10L, 6L, "B"))
-        q.processAllAvailable()
-        input.addData(("u1", 100L, 7L, "C"), ("u2", 30L, 8L, "A"))
-        q.processAllAvailable()
-        val rows = spark.table("funnel_stream")
-          .as[(String, Long, String, Long, Option[Long])].collect()
-        // per-stage counts and gap sets mirror the batch report
-        val byStage = rows.groupBy(_._2)
-        assert(byStage(1L).map(_._1).toSet == Set("u1", "u2", "u3"))
-        assert(byStage(2L).map(_._1).toSet == Set("u1", "u3"))
-        assert(byStage(3L).map(_._1).toSet == Set("u1"))
-        assert(byStage(2L).flatMap(_._5).toSet == Set(30L, 10L))
-        assert(byStage(3L).flatMap(_._5).toSet == Set(60L))
-        // one emission per (user, stage) — a second A for u2 cannot
-        // re-fire stage 1
-        assert(rows.groupBy(r => (r._1, r._2)).forall(_._2.length == 1))
-        // cross-check the rollup against the batch operator on the
-        // SAME events (micros timestamps)
-        val batch = graft.operators.Funnel.orderedFunnel(
-          Seq(("u1", 10L, 1L, "A"), ("u1", 40L, 2L, "B"),
-            ("u1", 100L, 7L, "C"), ("u2", 5L, 3L, "B"),
-            ("u2", 20L, 4L, "A"), ("u2", 30L, 8L, "A"),
-            ("u3", 0L, 5L, "A"), ("u3", 10L, 6L, "B"))
-            .map { case (u, t, s, ty) =>
-              (u, new java.sql.Timestamp(t / 1000L), s, ty) }
-            .toDF("u", "ts", "seq", "ty"),
-          "u", "ts", "seq", "ty", Seq("A", "B", "C"))
-          .collect().map(r => r.getAs[Long]("step_idx") ->
-            r.getAs[Long]("n_reached")).toMap
-        assert(byStage.view.mapValues(_.length.toLong).toMap == batch,
-          s"stream stage counts must equal batch n_reached: $batch")
-      } finally q.stop()
-    }
+          .map { case (u, t, s, ty) =>
+            (u, new java.sql.Timestamp(t / 1000L), s, ty) }
+          .toDF("u", "ts", "seq", "ty"),
+        "u", "ts", "seq", "ty", Seq("A", "B", "C"))
+        .collect().map(r => r.getAs[Long]("step_idx") ->
+          r.getAs[Long]("n_reached")).toMap
+      assert(byStage.view.mapValues(_.length.toLong).toMap == batch,
+        s"stream stage counts must equal batch n_reached: $batch")
+    } finally q.stop()
   }
 
   test("streaming k-step funnel: stage and stamp survive a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_fun").toString
-      val input = MemoryStream[(String, Long, Long, String)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, String, Long, Option[Long])]
-      def start() = FunnelStepsStream.track(input.toDS(), Seq("A", "B"))
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, String, Long,
-            Option[Long])], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("u", 10L, 1L, "A"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // a same-stamp B must NOT fire (strictly-after rule vs the
-        // RESTORED stamp); a later B must, with the gap from stage 1
-        input.addData(("u", 10L, 1L, "B"))
-        q2.processAllAvailable()
-        input.addData(("u", 25L, 2L, "B"))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("u", 2L, "B", 25L, Some(15L))),
-          s"restored frontier must gate the same-stamp B: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_fun").toString
+    val input = MemoryStream[(String, Long, Long, String)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, String, Long, Option[Long])]
+    def start() = FunnelStepsStream.track(input.toDS(), Seq("A", "B"))
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, String, Long,
+          Option[Long])], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("u", 10L, 1L, "A"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // a same-stamp B must NOT fire (strictly-after rule vs the
+      // RESTORED stamp); a later B must, with the gap from stage 1
+      input.addData(("u", 10L, 1L, "B"))
+      q2.processAllAvailable()
+      input.addData(("u", 25L, 2L, "B"))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("u", 2L, "B", 25L, Some(15L))),
+        s"restored frontier must gate the same-stamp B: $got")
+    } finally q2.stop()
   }
 
   test("streaming occupancy: tick totals survive a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_occ").toString
-      val input = MemoryStream[(Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      def start() = OccupancyStream.tickDeltas(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(Long, Long)], _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData((5L, 1L), (5L, 1L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData((5L, -1L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List((5L, 1L)),
-          s"restored total 2 minus 1 must emit 1: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_occ").toString
+    val input = MemoryStream[(Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def start() = OccupancyStream.tickDeltas(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(Long, Long)], _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData((5L, 1L), (5L, 1L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData((5L, -1L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List((5L, 1L)),
+        s"restored total 2 minus 1 must emit 1: $got")
+    } finally q2.stop()
   }
 
   test("streaming ewma: emissions match the batch chart incl. shuffled arrival and batch splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      // 30 quiet ticks then a sustained level shift: the trained sigma
-      // stays small enough that the late EWMA run crosses the 3-sigma
-      // steady-state band (both alarm states live in the fixture)
-      val xs = (0 until 30).map(i => 10L + (i % 3)) ++ Seq.fill(6)(60L)
-      val rows = xs.zipWithIndex.map { case (x, t) => ("k", t.toLong, x) }
-      // trained baseline = the full-series moments (what the batch op
-      // derives internally)
-      val nRef = xs.size.toLong
-      val totRef = xs.sum
-      val sx2Ref = xs.map(x => BigInt(x) * x).sum
-      val input = MemoryStream[(String, Long, Long)]
-      val q = EwmaStream.monitor(input.toDS(), memory = 8, l = 3,
-          nRef, totRef, sx2Ref)
-        .writeStream.format("memory").queryName("ewma_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(rows.take(13).reverse: _*) // shuffled within batch
-        q.processAllAvailable()
-        input.addData(rows.slice(13, 31): _*)
-        q.processAllAvailable()
-        input.addData(rows.drop(31): _*)
-        q.processAllAvailable()
-        val stream = spark.table("ewma_stream")
-          .collect().map(r => (r.getLong(1),
-            (r.getLong(2), r.getLong(3), r.getBoolean(4)))).toMap
-        val batch = graft.operators.Ewma.controlChart(
-            rows.toDF("k", "tick", "x"), Seq("k"), "tick", "x")
-          .collect().map(r => (r.getAs[Long]("tick"),
-            (r.getAs[Long]("x"), r.getAs[Long]("ewma_milli"),
-              r.getAs[Boolean]("alarm")))).toMap
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        assert(batch.values.exists(_._3) && batch.values.exists(!_._3))
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    // 30 quiet ticks then a sustained level shift: the trained sigma
+    // stays small enough that the late EWMA run crosses the 3-sigma
+    // steady-state band (both alarm states live in the fixture)
+    val xs = (0 until 30).map(i => 10L + (i % 3)) ++ Seq.fill(6)(60L)
+    val rows = xs.zipWithIndex.map { case (x, t) => ("k", t.toLong, x) }
+    // trained baseline = the full-series moments (what the batch op
+    // derives internally)
+    val nRef = xs.size.toLong
+    val totRef = xs.sum
+    val sx2Ref = xs.map(x => BigInt(x) * x).sum
+    val input = MemoryStream[(String, Long, Long)]
+    val q = EwmaStream.monitor(input.toDS(), memory = 8, l = 3,
+        nRef, totRef, sx2Ref)
+      .writeStream.format("memory").queryName("ewma_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(rows.take(13).reverse: _*) // shuffled within batch
+      q.processAllAvailable()
+      input.addData(rows.slice(13, 31): _*)
+      q.processAllAvailable()
+      input.addData(rows.drop(31): _*)
+      q.processAllAvailable()
+      val stream = spark.table("ewma_stream")
+        .collect().map(r => (r.getLong(1),
+          (r.getLong(2), r.getLong(3), r.getBoolean(4)))).toMap
+      val batch = graft.operators.Ewma.controlChart(
+          rows.toDF("k", "tick", "x"), Seq("k"), "tick", "x")
+        .collect().map(r => (r.getAs[Long]("tick"),
+          (r.getAs[Long]("x"), r.getAs[Long]("ewma_milli"),
+            r.getAs[Boolean]("alarm")))).toMap
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      assert(batch.values.exists(_._3) && batch.values.exists(!_._3))
+    } finally q.stop()
   }
 
   test("streaming ewma: the dyadic window survives a checkpoint restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      val xs = Seq(10L, 20L, 30L, 40L)
-      val rows = xs.zipWithIndex.map { case (x, t) => ("k", t.toLong, x) }
-      val nRef = xs.size.toLong
-      val totRef = xs.sum
-      val sx2Ref = xs.map(x => BigInt(x) * x).sum
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_ewma").toString
-      val input = MemoryStream[(String, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Boolean)]
-      def start() = EwmaStream.monitor(input.toDS(), memory = 8, l = 3,
-          nRef, totRef, sx2Ref)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(rows.take(2): _*)
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData(rows.drop(2): _*)
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList).map(r =>
-          r._2 -> r._4).toMap
-        // tick 2 with the restored {10, 20} window: num = 10+20*2+30*4,
-        // D = 7 -> 170000/7; a reset window would give 30000*... wrong
-        assert(got(2L) == 170000L / 7,
-          s"restored window must feed tick 2: $got")
-        assert(got(3L) == (10L + 20 * 2 + 30 * 4 + 40 * 8) * 1000 / 15)
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val xs = Seq(10L, 20L, 30L, 40L)
+    val rows = xs.zipWithIndex.map { case (x, t) => ("k", t.toLong, x) }
+    val nRef = xs.size.toLong
+    val totRef = xs.sum
+    val sx2Ref = xs.map(x => BigInt(x) * x).sum
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_ewma").toString
+    val input = MemoryStream[(String, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long, Boolean)]
+    def start() = EwmaStream.monitor(input.toDS(), memory = 8, l = 3,
+        nRef, totRef, sx2Ref)
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Boolean)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(rows.take(2): _*)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData(rows.drop(2): _*)
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList).map(r =>
+        r._2 -> r._4).toMap
+      // tick 2 with the restored {10, 20} window: num = 10+20*2+30*4,
+      // D = 7 -> 170000/7; a reset window would give 30000*... wrong
+      assert(got(2L) == 170000L / 7,
+        s"restored window must feed tick 2: $got")
+      assert(got(3L) == (10L + 20 * 2 + 30 * 4 + 40 * 8) * 1000 / 15)
+    } finally q2.stop()
   }
 
   test("streaming agreement: upserted cells reproduce batch kappa incl. shuffled arrival and batch splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      // two groups, mixed agreement; enough disagreement that kappa is
-      // a nontrivial value in both
-      val rows = Seq.fill(12)(("g", "y", "y")) ++
-        Seq.fill(5)(("g", "y", "n")) ++ Seq.fill(7)(("g", "n", "n")) ++
-        Seq.fill(3)(("h", "x", "x")) ++ Seq.fill(4)(("h", "x", "z"))
-      val input = MemoryStream[(String, String, String)]
-      val q = AgreementStream.cells(input.toDS())
-        .writeStream.format("memory").queryName("agree_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(rows.take(13).reverse: _*)
-        q.processAllAvailable()
-        input.addData(rows.drop(13): _*)
-        q.processAllAvailable()
-        // upsert semantics: last (= max, counts are monotone) per cell
-        val cells = spark.table("agree_stream")
-          .toDF("g", "a", "b", "n")
-          .groupBy("g", "a", "b").agg(max(col("n")).as("c"))
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(r => r.getString(0) ->
-            ((r.getAs[Long]("n"), r.getAs[Long]("po_ppm"),
-              r.getAs[Long]("pe_ppm"),
-              Option(r.getAs[Any]("kappa_milli"))))).toMap
-        val stream = snap(graft.operators.Agreement.kappaFromCells(
-          cells, Seq("g"), "a", "b", "c"))
-        val batch = snap(graft.operators.Agreement.cohenKappa(
-          rows.toDF("g", "a", "b"), "a", "b", Seq("g")))
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        assert(batch("g")._4.isDefined && batch("h")._4.isDefined)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    // two groups, mixed agreement; enough disagreement that kappa is
+    // a nontrivial value in both
+    val rows = Seq.fill(12)(("g", "y", "y")) ++
+      Seq.fill(5)(("g", "y", "n")) ++ Seq.fill(7)(("g", "n", "n")) ++
+      Seq.fill(3)(("h", "x", "x")) ++ Seq.fill(4)(("h", "x", "z"))
+    val input = MemoryStream[(String, String, String)]
+    val q = AgreementStream.cells(input.toDS())
+      .writeStream.format("memory").queryName("agree_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(rows.take(13).reverse: _*)
+      q.processAllAvailable()
+      input.addData(rows.drop(13): _*)
+      q.processAllAvailable()
+      // upsert semantics: last (= max, counts are monotone) per cell
+      val cells = spark.table("agree_stream")
+        .toDF("g", "a", "b", "n")
+        .groupBy("g", "a", "b").agg(max(col("n")).as("c"))
+      def snap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) ->
+          ((r.getAs[Long]("n"), r.getAs[Long]("po_ppm"),
+            r.getAs[Long]("pe_ppm"),
+            Option(r.getAs[Any]("kappa_milli"))))).toMap
+      val stream = snap(graft.operators.Agreement.kappaFromCells(
+        cells, Seq("g"), "a", "b", "c"))
+      val batch = snap(graft.operators.Agreement.cohenKappa(
+        rows.toDF("g", "a", "b"), "a", "b", Seq("g")))
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      assert(batch("g")._4.isDefined && batch("h")._4.isDefined)
+    } finally q.stop()
   }
 
   test("streaming ranking eval: upserted partials reproduce batch rankingReport incl. shuffled arrival, splits, re-delivery") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      // q1: mixed hits; q2: hit at 1 only; q3: nothing relevant; rank 6
-      // row for q1 must be ignored (outside k=5)
-      val rows = Seq(
-        ("q1", 1L, false), ("q1", 2L, true), ("q1", 3L, true),
-        ("q1", 4L, false), ("q1", 5L, true), ("q1", 6L, true),
-        ("q2", 1L, true), ("q2", 2L, false),
-        ("q3", 1L, false), ("q3", 2L, false))
-      val totals = Seq(("q1", 10L), ("q2", 1L), ("q3", 0L))
-        .toDF("query", "n_rel_total")
-      val input = MemoryStream[(String, Long, Boolean)]
-      val q = RankingEvalStream.partials(input.toDS(), k = 5)
-        .writeStream.format("memory").queryName("rank_stream")
-        .outputMode("append").start()
-      try {
-        // shuffled within batch 1, split mid-query, one re-delivery
-        input.addData(rows.take(6).reverse: _*)
-        q.processAllAvailable()
-        input.addData(rows.drop(6) :+ ("q1", 2L, true): _*)
-        q.processAllAvailable()
-        // upsert semantics: last row per query = max n_seen
-        val parts = spark.table("rank_stream")
-          .toDF("query", "n_seen", "n_rel_k", "first_rel_rank", "apn")
-        val last = parts.groupBy("query")
-          .agg(max(struct(col("n_seen"), col("n_rel_k"),
-            col("first_rel_rank"), col("apn"))).as("w"))
-          .select(col("query"), col("w.n_rel_k").as("n_rel_k"),
-            col("w.first_rel_rank").as("first_rel_rank"),
-            col("w.apn").as("apn"))
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(r => r.getString(0) ->
-            ((r.getAs[Long]("n_rel_k"),
-              Option(r.getAs[Any]("first_rel_rank")),
-              r.getAs[Long]("mrr_ppm"), r.getAs[Long]("p_at_k_ppm"),
-              Option(r.getAs[Any]("recall_at_k_ppm")),
-              Option(r.getAs[Any]("ap_at_k_ppm"))))).toMap
-        val stream = snap(graft.operators.Evaluation.reportFromPartials(
-          last, "query", totals, "n_rel_total", k = 5))
-        // batch sees the SAME contract: top-5 rows only, no duplicates
-        val batch = snap(graft.operators.Evaluation.rankingReport(
-          rows.filter(_._2 <= 5L).toDF("query", "rank", "rel"),
-          "query", "rank", "rel", totals, "n_rel_total", k = 5))
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        // hand values: q1 hits at 2,3,5 -> apn = 500000+666666+600000
-        assert(stream("q1") == ((3L, Some(2L), 500000L, 600000L,
-          Some(300000L), Some((500000L + 666666L + 600000L) / 5L))))
-        assert(stream("q3")._5.isEmpty && stream("q3")._6.isEmpty)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    // q1: mixed hits; q2: hit at 1 only; q3: nothing relevant; rank 6
+    // row for q1 must be ignored (outside k=5)
+    val rows = Seq(
+      ("q1", 1L, false), ("q1", 2L, true), ("q1", 3L, true),
+      ("q1", 4L, false), ("q1", 5L, true), ("q1", 6L, true),
+      ("q2", 1L, true), ("q2", 2L, false),
+      ("q3", 1L, false), ("q3", 2L, false))
+    val totals = Seq(("q1", 10L), ("q2", 1L), ("q3", 0L))
+      .toDF("query", "n_rel_total")
+    val input = MemoryStream[(String, Long, Boolean)]
+    val q = RankingEvalStream.partials(input.toDS(), k = 5)
+      .writeStream.format("memory").queryName("rank_stream")
+      .outputMode("append").start()
+    try {
+      // shuffled within batch 1, split mid-query, one re-delivery
+      input.addData(rows.take(6).reverse: _*)
+      q.processAllAvailable()
+      input.addData(rows.drop(6) :+ ("q1", 2L, true): _*)
+      q.processAllAvailable()
+      // upsert semantics: last row per query = max n_seen
+      val parts = spark.table("rank_stream")
+        .toDF("query", "n_seen", "n_rel_k", "first_rel_rank", "apn")
+      val last = parts.groupBy("query")
+        .agg(max(struct(col("n_seen"), col("n_rel_k"),
+          col("first_rel_rank"), col("apn"))).as("w"))
+        .select(col("query"), col("w.n_rel_k").as("n_rel_k"),
+          col("w.first_rel_rank").as("first_rel_rank"),
+          col("w.apn").as("apn"))
+      def snap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) ->
+          ((r.getAs[Long]("n_rel_k"),
+            Option(r.getAs[Any]("first_rel_rank")),
+            r.getAs[Long]("mrr_ppm"), r.getAs[Long]("p_at_k_ppm"),
+            Option(r.getAs[Any]("recall_at_k_ppm")),
+            Option(r.getAs[Any]("ap_at_k_ppm"))))).toMap
+      val stream = snap(graft.operators.Evaluation.reportFromPartials(
+        last, "query", totals, "n_rel_total", k = 5))
+      // batch sees the SAME contract: top-5 rows only, no duplicates
+      val batch = snap(graft.operators.Evaluation.rankingReport(
+        rows.filter(_._2 <= 5L).toDF("query", "rank", "rel"),
+        "query", "rank", "rel", totals, "n_rel_total", k = 5))
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      // hand values: q1 hits at 2,3,5 -> apn = 500000+666666+600000
+      assert(stream("q1") == ((3L, Some(2L), 500000L, 600000L,
+        Some(300000L), Some((500000L + 666666L + 600000L) / 5L))))
+      assert(stream("q3")._5.isEmpty && stream("q3")._6.isEmpty)
+    } finally q.stop()
   }
 
   test("streaming RFM: upserted user triples reproduce the batch census incl. shuffled arrival and splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      val hr = 3600000000L
-      // 10 users with spread-out recency/frequency/monetary so several
-      // quintile cells are live; cents chosen 2dp-exact
-      val rows = (1 to 10).flatMap { u =>
-        (0 until u).map(i => (s"u$u", (u * 10 + i) * hr, u * 125L + i))
-      }
-      val input = MemoryStream[(String, Long, Long)]
-      val q = RfmStream.users(input.toDS())
-        .writeStream.format("memory").queryName("rfm_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(rows.take(23).reverse: _*)
-        q.processAllAvailable()
-        input.addData(rows.drop(23): _*)
-        q.processAllAvailable()
-        // upsert semantics: frequency is monotone, last row = max f
-        val users = spark.table("rfm_stream")
-          .toDF("user", "last_us", "f", "m")
-          .groupBy("user")
-          .agg(max(struct(col("f"), col("last_us"), col("m"))).as("w"))
-          .select(col("user"), col("w.last_us").as("last_us"),
-            col("w.f").as("f"), col("w.m").as("m"))
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(r => (r.getAs[Long]("r_score"),
-            r.getAs[Long]("f_score"), r.getAs[Long]("m_score")) ->
-            ((r.getAs[Long]("n_users"), r.getAs[Long]("sum_cents")))).toMap
-        val stream = snap(graft.operators.Rfm.censusFromUsers(
-          users, "user", "last_us", "f", "m"))
-        val batch = snap(graft.operators.Rfm.rfmCensus(
-          rows.map { case (u, ts, c) => (u, ts, c / 100.0) }
-            .toDF("user", "us", "value")
-            .withColumn("ts", timestamp_micros(col("us"))),
-          "user", "ts", "value"))
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        assert(stream.values.map(_._1).sum == 10L) // every user in a cell
-      } finally q.stop()
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val hr = 3600000000L
+    // 10 users with spread-out recency/frequency/monetary so several
+    // quintile cells are live; cents chosen 2dp-exact
+    val rows = (1 to 10).flatMap { u =>
+      (0 until u).map(i => (s"u$u", (u * 10 + i) * hr, u * 125L + i))
     }
+    val input = MemoryStream[(String, Long, Long)]
+    val q = RfmStream.users(input.toDS())
+      .writeStream.format("memory").queryName("rfm_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(rows.take(23).reverse: _*)
+      q.processAllAvailable()
+      input.addData(rows.drop(23): _*)
+      q.processAllAvailable()
+      // upsert semantics: frequency is monotone, last row = max f
+      val users = spark.table("rfm_stream")
+        .toDF("user", "last_us", "f", "m")
+        .groupBy("user")
+        .agg(max(struct(col("f"), col("last_us"), col("m"))).as("w"))
+        .select(col("user"), col("w.last_us").as("last_us"),
+          col("w.f").as("f"), col("w.m").as("m"))
+      def snap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long]("r_score"),
+          r.getAs[Long]("f_score"), r.getAs[Long]("m_score")) ->
+          ((r.getAs[Long]("n_users"), r.getAs[Long]("sum_cents")))).toMap
+      val stream = snap(graft.operators.Rfm.censusFromUsers(
+        users, "user", "last_us", "f", "m"))
+      val batch = snap(graft.operators.Rfm.rfmCensus(
+        rows.map { case (u, ts, c) => (u, ts, c / 100.0) }
+          .toDF("user", "us", "value")
+          .withColumn("ts", timestamp_micros(col("us"))),
+        "user", "ts", "value"))
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      assert(stream.values.map(_._1).sum == 10L) // every user in a cell
+    } finally q.stop()
   }
 
   test("streaming RFM: user triples survive a checkpoint restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_rfm").toString
-      val input = MemoryStream[(String, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long)]
-      def start() = RfmStream.users(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("u", 5000000L, 250L), ("u", 9000000L, 100L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        // an EARLIER event after restart: last must stay 9s, f and m
-        // must accumulate on the restored triple (a reset would give
-        // f=1, m=50)
-        input.addData(("u", 2000000L, 50L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("u", 9000000L, 3L, 400L)),
-          s"restored triple must accumulate: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_rfm").toString
+    val input = MemoryStream[(String, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long)]
+    def start() = RfmStream.users(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("u", 5000000L, 250L), ("u", 9000000L, 100L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      // an EARLIER event after restart: last must stay 9s, f and m
+      // must accumulate on the restored triple (a reset would give
+      // f=1, m=50)
+      input.addData(("u", 2000000L, 50L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("u", 9000000L, 3L, 400L)),
+        s"restored triple must accumulate: $got")
+    } finally q2.stop()
   }
 
   test("streaming ranking eval: slots survive a checkpoint restart; changed k refuses") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_rank").toString
-      val input = MemoryStream[(String, Long, Boolean)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Long)]
-      def start(k: Int) = RankingEvalStream.partials(input.toDS(), k)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start(5)
-      try {
-        input.addData(("q1", 3L, true), ("q1", 5L, false))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start(5)
-      try {
-        // rank 1 lands after restart: restored slots must yield
-        // n_seen=3 and keep first_rel_rank=3 (a reset would give 1, 0)
-        input.addData(("q1", 1L, false))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("q1", 3L, 1L, 3L, 333333L)),
-          s"restored slots must feed the partial: $got")
-      } finally q2.stop()
-      // same query, different k: slot positions are only meaningful
-      // under the k that wrote them — the fingerprint must refuse
-      val q3 = start(7)
-      try {
-        val ex = intercept[Exception] {
-          input.addData(("q1", 2L, true))
-          q3.processAllAvailable()
-        }
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(e =>
-            Option(e.getMessage).toSeq ++ messages(e.getCause))
-        assert(messages(ex).exists(_.contains("different k")), ex)
-      } finally q3.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_rank").toString
+    val input = MemoryStream[(String, Long, Boolean)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long, Long, Long, Long)]
+    def start(k: Int) = RankingEvalStream.partials(input.toDS(), k)
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, Long, Long, Long, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start(5)
+    try {
+      input.addData(("q1", 3L, true), ("q1", 5L, false))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start(5)
+    try {
+      // rank 1 lands after restart: restored slots must yield
+      // n_seen=3 and keep first_rel_rank=3 (a reset would give 1, 0)
+      input.addData(("q1", 1L, false))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("q1", 3L, 1L, 3L, 333333L)),
+        s"restored slots must feed the partial: $got")
+    } finally q2.stop()
+    // same query, different k: slot positions are only meaningful
+    // under the k that wrote them — the fingerprint must refuse
+    val q3 = start(7)
+    try {
+      val ex = intercept[Exception] {
+        input.addData(("q1", 2L, true))
+        q3.processAllAvailable()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(ex).exists(_.contains("different k")), ex)
+    } finally q3.stop()
   }
 
   test("streaming tick dispersion: upserted cells reproduce the batch Fisher index incl. splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      val hr = 3600000000L
-      // bursty key (mass in tick 0, a straggler in tick 7) + steady key
-      val rows = (0 until 8).map(_ => ("b", 5L)) ++ Seq(("b", 7 * hr)) ++
-        (0L until 6L).map(t => ("s", t * hr))
-      val binned = rows.map { case (g, us) =>
-        (g, Math.floorDiv(us, hr)) }
-      val input = MemoryStream[(String, Long)]
-      val q = TickDispersionStream.cells(input.toDS())
-        .writeStream.format("memory").queryName("disp_stream")
-        .outputMode("append").start()
-      try {
-        input.addData(binned.take(9).reverse: _*)
-        q.processAllAvailable()
-        input.addData(binned.drop(9): _*)
-        q.processAllAvailable()
-        val cells = spark.table("disp_stream")
-          .toDF("g", "tick", "n")
-          .groupBy("g", "tick").agg(max(col("n")).as("c"))
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(r => r.getString(0) ->
-            ((r.getAs[Long]("span_ticks"), r.getAs[Long]("active_ticks"),
-              r.getAs[Long]("total"), r.getAs[Long]("mean_milli"),
-              Option(r.getAs[Any]("dispersion_milli"))))).toMap
-        val stream = snap(graft.operators.Burstiness.dispersionFromTicks(
-          cells, "g", "tick", "c"))
-        val batch = snap(graft.operators.Burstiness.tickDispersion(
-          rows.toDF("g", "us")
-            .withColumn("ts", timestamp_micros(col("us"))),
-          "g", "ts", 3600L))
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        assert(batch("b")._5 == Some(6097L)) // the hand-checked burst
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val hr = 3600000000L
+    // bursty key (mass in tick 0, a straggler in tick 7) + steady key
+    val rows = (0 until 8).map(_ => ("b", 5L)) ++ Seq(("b", 7 * hr)) ++
+      (0L until 6L).map(t => ("s", t * hr))
+    val binned = rows.map { case (g, us) =>
+      (g, Math.floorDiv(us, hr)) }
+    val input = MemoryStream[(String, Long)]
+    val q = TickDispersionStream.cells(input.toDS())
+      .writeStream.format("memory").queryName("disp_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(binned.take(9).reverse: _*)
+      q.processAllAvailable()
+      input.addData(binned.drop(9): _*)
+      q.processAllAvailable()
+      val cells = spark.table("disp_stream")
+        .toDF("g", "tick", "n")
+        .groupBy("g", "tick").agg(max(col("n")).as("c"))
+      def snap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) ->
+          ((r.getAs[Long]("span_ticks"), r.getAs[Long]("active_ticks"),
+            r.getAs[Long]("total"), r.getAs[Long]("mean_milli"),
+            Option(r.getAs[Any]("dispersion_milli"))))).toMap
+      val stream = snap(graft.operators.Burstiness.dispersionFromTicks(
+        cells, "g", "tick", "c"))
+      val batch = snap(graft.operators.Burstiness.tickDispersion(
+        rows.toDF("g", "us")
+          .withColumn("ts", timestamp_micros(col("us"))),
+        "g", "ts", 3600L))
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      assert(batch("b")._5 == Some(6097L)) // the hand-checked burst
+    } finally q.stop()
   }
 
   test("streaming agreement: cell counts survive a checkpoint restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_agree").toString
-      val input = MemoryStream[(String, String, String)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, String, Long)]
-      def start() = AgreementStream.cells(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, String, String, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("g", "y", "y"), ("g", "y", "y"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData(("g", "y", "y"))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        assert(got == List(("g", "y", "y", 3L)),
-          s"restored cell count 2 plus 1 must emit 3: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_agree").toString
+    val input = MemoryStream[(String, String, String)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, String, Long)]
+    def start() = AgreementStream.cells(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, String, String, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("g", "y", "y"), ("g", "y", "y"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData(("g", "y", "y"))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      assert(got == List(("g", "y", "y", 3L)),
+        s"restored cell count 2 plus 1 must emit 3: $got")
+    } finally q2.stop()
   }
 
   test("streaming burstiness: gap extraction matches batch CV² incl. shuffled arrival and batch splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(String, String, Long, Long)]
-      val q = BurstinessStream.gaps(input.toDS())
-        .writeStream.format("memory").queryName("burst_stream")
-        .outputMode("append").start()
-      // events: (entity, group, tsMicros, tie) — two entities in group g,
-      // one in h; same-instant repeats give legitimate 0 gaps
-      val events = Seq(
-        ("u1", "g", 1000000L, 1L), ("u1", "g", 4000000L, 2L),
-        ("u1", "g", 4000000L, 3L), ("u1", "g", 10000000L, 4L),
-        ("u2", "g", 2000000L, 5L), ("u2", "g", 3000000L, 6L),
-        ("u3", "h", 7000000L, 7L)) // single event -> no gap
-      try {
-        // batch 1 shuffled within itself; batch 2 continues u1/u2
-        input.addData(events.take(4).reverse: _*)
-        q.processAllAvailable()
-        input.addData(events.drop(4): _*)
-        q.processAllAvailable()
-        val gapRows = spark.table("burst_stream")
-          .toDF("entity", "grp", "ts", "gap")
-        // batch reference over the SAME events through the operator
-        val batch = graft.operators.Burstiness.interArrivalCv2(
-          events.toDF("entity", "grp", "ts_us", "tie")
-            .withColumn("ts", timestamp_micros(col("ts_us"))),
-          "entity", "grp", "ts", "tie")
-          .collect().map(r => r.getString(0) ->
-            ((r.getLong(1), r.getLong(2), Option(r.get(3))))).toMap
-        val stream = graft.operators.Burstiness.cv2FromGaps(
-            gapRows, "grp", "gap")
-          .collect().map(r => r.getString(0) ->
-            ((r.getLong(1), r.getLong(2), Option(r.get(3))))).toMap
-        // group h has one event -> no gaps -> absent from both rollups
-        assert(batch.keySet == Set("g") && stream == batch,
-          s"batch $batch vs stream $stream")
-        // hand check: u1 gaps 3s,0s,6s + u2 gap 1s -> n=4, mean=2.5s,
-        // cv2 = 1000*(4*46e12 - 1e13*1e1... ) -> compare via formula
-        assert(stream("g")._1 == 4L && stream("g")._2 == 2500000L)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, String, Long, Long)]
+    val q = BurstinessStream.gaps(input.toDS())
+      .writeStream.format("memory").queryName("burst_stream")
+      .outputMode("append").start()
+    // events: (entity, group, tsMicros, tie) — two entities in group g,
+    // one in h; same-instant repeats give legitimate 0 gaps
+    val events = Seq(
+      ("u1", "g", 1000000L, 1L), ("u1", "g", 4000000L, 2L),
+      ("u1", "g", 4000000L, 3L), ("u1", "g", 10000000L, 4L),
+      ("u2", "g", 2000000L, 5L), ("u2", "g", 3000000L, 6L),
+      ("u3", "h", 7000000L, 7L)) // single event -> no gap
+    try {
+      // batch 1 shuffled within itself; batch 2 continues u1/u2
+      input.addData(events.take(4).reverse: _*)
+      q.processAllAvailable()
+      input.addData(events.drop(4): _*)
+      q.processAllAvailable()
+      val gapRows = spark.table("burst_stream")
+        .toDF("entity", "grp", "ts", "gap")
+      // batch reference over the SAME events through the operator
+      val batch = graft.operators.Burstiness.interArrivalCv2(
+        events.toDF("entity", "grp", "ts_us", "tie")
+          .withColumn("ts", timestamp_micros(col("ts_us"))),
+        "entity", "grp", "ts", "tie")
+        .collect().map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), Option(r.get(3))))).toMap
+      val stream = graft.operators.Burstiness.cv2FromGaps(
+          gapRows, "grp", "gap")
+        .collect().map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), Option(r.get(3))))).toMap
+      // group h has one event -> no gaps -> absent from both rollups
+      assert(batch.keySet == Set("g") && stream == batch,
+        s"batch $batch vs stream $stream")
+      // hand check: u1 gaps 3s,0s,6s + u2 gap 1s -> n=4, mean=2.5s,
+      // cv2 = 1000*(4*46e12 - 1e13*1e1... ) -> compare via formula
+      assert(stream("g")._1 == 4L && stream("g")._2 == 2500000L)
+    } finally q.stop()
   }
 
   test("streaming burstiness: last-timestamp state survives a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_burst").toString
-      val input = MemoryStream[(String, String, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Long, Long)]
-      def start() = BurstinessStream.gaps(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, String, Long, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("u1", "g", 1000000L, 1L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData(("u1", "g", 5000000L, 2L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        // a reset would emit no gap (no predecessor); the restored
-        // last-ts makes the 4s gap
-        assert(got == List(("u1", "g", 5000000L, 4000000L)),
-          s"state must survive the restart: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_burst").toString
+    val input = MemoryStream[(String, String, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, Long, Long)]
+    def start() = BurstinessStream.gaps(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, String, Long, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("u1", "g", 1000000L, 1L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData(("u1", "g", 5000000L, 2L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      // a reset would emit no gap (no predecessor); the restored
+      // last-ts makes the 4s gap
+      assert(got == List(("u1", "g", 5000000L, 4000000L)),
+        s"state must survive the restart: $got")
+    } finally q2.stop()
   }
 
   test("streaming seq patterns: upserted cells reproduce the batch rules incl. shuffled arrival, batch splits, and a same-ts group split") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      val min = 60000000L
-      // the SeqPatternsSpec fixture: A closes a->b (10m) and b->a at
-      // EXACTLY the 60m boundary; B closes b->a, b->c, a->c; C is
-      // antecedent-only; D's simultaneous a/b must chain neither way
-      val rows = Seq(
-        ("A", 0L, "a"), ("A", 10 * min, "b"), ("A", 70 * min, "a"),
-        ("A", 200 * min, "c"),
-        ("B", 0L, "b"), ("B", 5 * min, "a"), ("B", 50 * min, "c"),
-        ("C", 0L, "a"),
-        ("D", 0L, "a"), ("D", 0L, "b"))
-      val input = MemoryStream[(String, Long, String)]
-      val q = SeqPatternsStream.cells(input.toDS(), Seq("a", "b", "c"))
-        .writeStream.format("memory").queryName("seqpat_stream")
-        .outputMode("append").start()
-      try {
-        // batch 1 shuffled within itself; D's same-ts pair is SPLIT
-        // across batches 1 and 2 — the strict t_a < t guard must
-        // still refuse to chain it
-        input.addData(("A", 10 * min, "b"), ("A", 0L, "a"), ("D", 0L, "a"))
-        q.processAllAvailable()
-        input.addData(("D", 0L, "b"), ("B", 0L, "b"), ("B", 5 * min, "a"),
-          ("C", 0L, "a"))
-        q.processAllAvailable()
-        input.addData(("A", 70 * min, "a"), ("A", 200 * min, "c"),
-          ("B", 50 * min, "c"))
-        q.processAllAvailable()
-        val cells = spark.table("seqpat_stream")
-          .toDF("entity", "ante", "cons", "gap")
-        def key(r: org.apache.spark.sql.Row) =
-          (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
-        val stream = graft.operators.SeqPatterns.rulesFromCells(
-            cells, "entity", "ante", "cons", "gap",
-            maxGapMinutes = 60L)
-          .collect().map(key).toSet
-        val batch = graft.operators.SeqPatterns.level2(
-            rows.toDF("u", "us", "t")
-              .withColumn("ts", timestamp_micros(col("us"))),
-            "u", "ts", "t", Seq("a", "b", "c"), maxGapMinutes = 60L)
-          .collect().map(key).toSet
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        assert(batch.nonEmpty)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val min = 60000000L
+    // the SeqPatternsSpec fixture: A closes a->b (10m) and b->a at
+    // EXACTLY the 60m boundary; B closes b->a, b->c, a->c; C is
+    // antecedent-only; D's simultaneous a/b must chain neither way
+    val rows = Seq(
+      ("A", 0L, "a"), ("A", 10 * min, "b"), ("A", 70 * min, "a"),
+      ("A", 200 * min, "c"),
+      ("B", 0L, "b"), ("B", 5 * min, "a"), ("B", 50 * min, "c"),
+      ("C", 0L, "a"),
+      ("D", 0L, "a"), ("D", 0L, "b"))
+    val input = MemoryStream[(String, Long, String)]
+    val q = SeqPatternsStream.cells(input.toDS(), Seq("a", "b", "c"))
+      .writeStream.format("memory").queryName("seqpat_stream")
+      .outputMode("append").start()
+    try {
+      // batch 1 shuffled within itself; D's same-ts pair is SPLIT
+      // across batches 1 and 2 — the strict t_a < t guard must
+      // still refuse to chain it
+      input.addData(("A", 10 * min, "b"), ("A", 0L, "a"), ("D", 0L, "a"))
+      q.processAllAvailable()
+      input.addData(("D", 0L, "b"), ("B", 0L, "b"), ("B", 5 * min, "a"),
+        ("C", 0L, "a"))
+      q.processAllAvailable()
+      input.addData(("A", 70 * min, "a"), ("A", 200 * min, "c"),
+        ("B", 50 * min, "c"))
+      q.processAllAvailable()
+      val cells = spark.table("seqpat_stream")
+        .toDF("entity", "ante", "cons", "gap")
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
+      val stream = graft.operators.SeqPatterns.rulesFromCells(
+          cells, "entity", "ante", "cons", "gap",
+          maxGapMinutes = 60L)
+        .collect().map(key).toSet
+      val batch = graft.operators.SeqPatterns.level2(
+          rows.toDF("u", "us", "t")
+            .withColumn("ts", timestamp_micros(col("us"))),
+          "u", "ts", "t", Seq("a", "b", "c"), maxGapMinutes = 60L)
+        .collect().map(key).toSet
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      assert(batch.nonEmpty)
+    } finally q.stop()
   }
 
   test("streaming seq patterns L3: upserted cells reproduce the batch triples incl. the suffix-flag trap, shuffled arrival, batch splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      val min = 60000000L
-      // E: the level3 greedy trap (first b after a has no in-gap c, a
-      //    later in-gap b does); F: valid 2-prefix, c too late; S: the
-      //    SUFFIX-flag trap — a@0, b@9m, b@15m, c@16m with G=10m: only
-      //    the 9m b (step-1 gap 9 <= 10) completes a chain, and a
-      //    "latest b later flagged by c" state would have overwritten
-      //    it with the invalid 15m b; G: simultaneous a/b never chains
-      val rows = Seq(
-        ("E", 0L, "a"), ("E", 1 * min, "b"), ("E", 9 * min, "b"),
-        ("E", 12 * min, "c"),
-        ("F", 0L, "a"), ("F", 5 * min, "b"), ("F", 30 * min, "c"),
-        ("S", 0L, "a"), ("S", 9 * min, "b"), ("S", 15 * min, "b"),
-        ("S", 16 * min, "c"),
-        ("G", 0L, "a"), ("G", 0L, "b"), ("G", 5 * min, "c"))
-      val input = MemoryStream[(String, Long, String)]
-      val q = SeqPatternsStream.cells3(input.toDS(), Seq("a", "b", "c"),
-          maxGapMinutes = 10L)
-        .writeStream.format("memory").queryName("seqpat3_stream")
-        .outputMode("append").start()
-      try {
-        // shuffled within batches; G's same-ts a/b split across
-        // batches 1 and 2 — the strict guards must refuse every role
-        input.addData(("E", 1 * min, "b"), ("E", 0L, "a"),
-          ("S", 0L, "a"), ("G", 0L, "a"))
-        q.processAllAvailable()
-        input.addData(("G", 0L, "b"), ("S", 9 * min, "b"),
-          ("E", 9 * min, "b"), ("F", 5 * min, "b"), ("F", 0L, "a"))
-        q.processAllAvailable()
-        input.addData(("E", 12 * min, "c"), ("S", 15 * min, "b"),
-          ("S", 16 * min, "c"), ("F", 30 * min, "c"), ("G", 5 * min, "c"))
-        q.processAllAvailable()
-        val cells = spark.table("seqpat3_stream")
-          .toDF("entity", "s1", "s2", "s3", "gap")
-        def key(r: org.apache.spark.sql.Row) =
-          (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
-            r.getLong(4), r.getLong(5), r.getLong(6))
-        val stream = graft.operators.SeqPatterns.triplesFromCells(
-            cells, "entity", "s1", "s2", "s3", "gap", maxGapMinutes = 10L)
-          .collect().map(key).toSet
-        val batch = graft.operators.SeqPatterns.level3(
-            rows.toDF("u", "us", "t")
-              .withColumn("ts", timestamp_micros(col("us"))),
-            "u", "ts", "t", Seq("a", "b", "c"), maxGapMinutes = 10L)
-          .collect().map(key).toSet
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        // the trap entities: E and S both support <a,b,c> (2 of the 4)
-        assert(batch.exists(r => r._1 == "a" && r._2 == "b" &&
-          r._3 == "c" && r._4 == 2L), s"E+S must both complete: $batch")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val min = 60000000L
+    // E: the level3 greedy trap (first b after a has no in-gap c, a
+    //    later in-gap b does); F: valid 2-prefix, c too late; S: the
+    //    SUFFIX-flag trap — a@0, b@9m, b@15m, c@16m with G=10m: only
+    //    the 9m b (step-1 gap 9 <= 10) completes a chain, and a
+    //    "latest b later flagged by c" state would have overwritten
+    //    it with the invalid 15m b; G: simultaneous a/b never chains
+    val rows = Seq(
+      ("E", 0L, "a"), ("E", 1 * min, "b"), ("E", 9 * min, "b"),
+      ("E", 12 * min, "c"),
+      ("F", 0L, "a"), ("F", 5 * min, "b"), ("F", 30 * min, "c"),
+      ("S", 0L, "a"), ("S", 9 * min, "b"), ("S", 15 * min, "b"),
+      ("S", 16 * min, "c"),
+      ("G", 0L, "a"), ("G", 0L, "b"), ("G", 5 * min, "c"))
+    val input = MemoryStream[(String, Long, String)]
+    val q = SeqPatternsStream.cells3(input.toDS(), Seq("a", "b", "c"),
+        maxGapMinutes = 10L)
+      .writeStream.format("memory").queryName("seqpat3_stream")
+      .outputMode("append").start()
+    try {
+      // shuffled within batches; G's same-ts a/b split across
+      // batches 1 and 2 — the strict guards must refuse every role
+      input.addData(("E", 1 * min, "b"), ("E", 0L, "a"),
+        ("S", 0L, "a"), ("G", 0L, "a"))
+      q.processAllAvailable()
+      input.addData(("G", 0L, "b"), ("S", 9 * min, "b"),
+        ("E", 9 * min, "b"), ("F", 5 * min, "b"), ("F", 0L, "a"))
+      q.processAllAvailable()
+      input.addData(("E", 12 * min, "c"), ("S", 15 * min, "b"),
+        ("S", 16 * min, "c"), ("F", 30 * min, "c"), ("G", 5 * min, "c"))
+      q.processAllAvailable()
+      val cells = spark.table("seqpat3_stream")
+        .toDF("entity", "s1", "s2", "s3", "gap")
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6))
+      val stream = graft.operators.SeqPatterns.triplesFromCells(
+          cells, "entity", "s1", "s2", "s3", "gap", maxGapMinutes = 10L)
+        .collect().map(key).toSet
+      val batch = graft.operators.SeqPatterns.level3(
+          rows.toDF("u", "us", "t")
+            .withColumn("ts", timestamp_micros(col("us"))),
+          "u", "ts", "t", Seq("a", "b", "c"), maxGapMinutes = 10L)
+        .collect().map(key).toSet
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      // the trap entities: E and S both support <a,b,c> (2 of the 4)
+      assert(batch.exists(r => r._1 == "a" && r._2 == "b" &&
+        r._3 == "c" && r._4 == 2L), s"E+S must both complete: $batch")
+    } finally q.stop()
   }
 
   test("streaming seq patterns L3: valid-prefix state survives a restart; a changed gap fails loudly") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_seqpat3").toString
-      val input = MemoryStream[(String, Long, String)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, String, String, Long)]
-      def start(gap: Long) =
-        SeqPatternsStream.cells3(input.toDS(), Seq("a", "b"), gap)
-          .writeStream
-          .foreachBatch {
-            (df: org.apache.spark.sql.Dataset[
-              (String, String, String, String, Long)], _: Long) => {
-              val got = df.collect()
-              collected.synchronized { collected ++= got }
-              ()
-            }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_seqpat3").toString
+    val input = MemoryStream[(String, Long, String)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, String, String, Long)]
+    def start(gap: Long) =
+      SeqPatternsStream.cells3(input.toDS(), Seq("a", "b"), gap)
+        .writeStream
+        .foreachBatch {
+          (df: org.apache.spark.sql.Dataset[
+            (String, String, String, String, Long)], _: Long) => {
+            val got = df.collect()
+            collected.synchronized { collected ++= got }
+            ()
           }
-          .option("checkpointLocation", ckpt).start()
-      val q1 = start(10L)
-      try {
-        // a@1s, b@5s: a->b valid prefix (4s <= 10m) recorded pre-restart
-        input.addData(("u", 1000000L, "a"), ("u", 5000000L, "b"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start(10L)
-      try {
-        // b@8s completes <a,b,b>: the restored validB closes gap 3s; a
-        // state reset would see no valid prefix and emit nothing but
-        // the b seen-marker (already emitted pre-restart)
-        input.addData(("u", 8000000L, "b"))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList).toSet
-        assert(got == Set(("u", "a", "b", "b", 3000000L)),
-          s"valid-prefix state must survive the restart: $got")
-      } finally q2.stop()
-      // same alphabet, different gap: the fingerprint must refuse —
-      // validB entries are only meaningful under the gap that wrote them
-      val q3 = start(20L)
-      try {
-        val ex = intercept[Exception] {
-          input.addData(("u", 9000000L, "b"))
-          q3.processAllAvailable()
         }
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(e =>
-            Option(e.getMessage).toSeq ++ messages(e.getCause))
-        assert(messages(ex).exists(_.contains("different alphabet/gap")), ex)
-      } finally q3.stop()
-    }
+        .option("checkpointLocation", ckpt).start()
+    val q1 = start(10L)
+    try {
+      // a@1s, b@5s: a->b valid prefix (4s <= 10m) recorded pre-restart
+      input.addData(("u", 1000000L, "a"), ("u", 5000000L, "b"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start(10L)
+    try {
+      // b@8s completes <a,b,b>: the restored validB closes gap 3s; a
+      // state reset would see no valid prefix and emit nothing but
+      // the b seen-marker (already emitted pre-restart)
+      input.addData(("u", 8000000L, "b"))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList).toSet
+      assert(got == Set(("u", "a", "b", "b", 3000000L)),
+        s"valid-prefix state must survive the restart: $got")
+    } finally q2.stop()
+    // same alphabet, different gap: the fingerprint must refuse —
+    // validB entries are only meaningful under the gap that wrote them
+    val q3 = start(20L)
+    try {
+      val ex = intercept[Exception] {
+        input.addData(("u", 9000000L, "b"))
+        q3.processAllAvailable()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(ex).exists(_.contains("different alphabet/gap")), ex)
+    } finally q3.stop()
   }
 
   test("streaming funnel drop-off: upserted flags reproduce the batch readout incl. every drop-off bucket") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      val min = 60000000L
-      // the SeqPatternsSpec funnelFixture: one entity per bucket —
-      // u1 completes; u2 gap-expires at 2; u3 absent at 2 (click only
-      // BEFORE the view); u4 never views; u5 gap-expires at 3; u6
-      // absent at 3 (purchase precedes the click); u7 completes via
-      // the non-greedy trap; u8 same-ts view+click never chains
-      val rows = Seq(
-        ("u1", 0L, "view"), ("u1", 5 * min, "click"),
-        ("u1", 12 * min, "purchase"),
-        ("u2", 0L, "view"), ("u2", 20 * min, "click"),
-        ("u3", 0L, "click"), ("u3", 5 * min, "view"),
-        ("u4", 0L, "click"), ("u4", 1 * min, "purchase"),
-        ("u5", 0L, "view"), ("u5", 5 * min, "click"),
-        ("u5", 30 * min, "purchase"),
-        ("u6", 0L, "view"), ("u6", 2 * min, "purchase"),
-        ("u6", 5 * min, "click"),
-        ("u7", 0L, "view"), ("u7", 2 * min, "click"),
-        ("u7", 8 * min, "click"), ("u7", 15 * min, "purchase"),
-        ("u8", 0L, "view"), ("u8", 0L, "click"))
-      val steps = Seq("view", "click", "purchase")
-      val input = MemoryStream[(String, Long, String)]
-      val q = FunnelDropoffStream.flags(input.toDS(), steps, Seq(10L, 10L))
-        .writeStream.format("memory").queryName("funnel_dropoff_stream")
-        .outputMode("append").start()
-      try {
-        // shuffled within batches; u8's same-ts pair split across
-        // batches 1 and 2 — no role may chain it
-        input.addData(("u1", 0L, "view"), ("u8", 0L, "view"),
-          ("u3", 0L, "click"), ("u5", 0L, "view"), ("u7", 0L, "view"))
-        q.processAllAvailable()
-        input.addData(("u8", 0L, "click"), ("u1", 5 * min, "click"),
-          ("u7", 2 * min, "click"), ("u2", 0L, "view"),
-          ("u4", 0L, "click"), ("u6", 0L, "view"),
-          ("u3", 5 * min, "view"))
-        q.processAllAvailable()
-        input.addData(("u1", 12 * min, "purchase"), ("u5", 5 * min, "click"),
-          ("u7", 8 * min, "click"), ("u4", 1 * min, "purchase"),
-          ("u6", 2 * min, "purchase"), ("u2", 20 * min, "click"))
-        q.processAllAvailable()
-        input.addData(("u5", 30 * min, "purchase"),
-          ("u7", 15 * min, "purchase"), ("u6", 5 * min, "click"))
-        q.processAllAvailable()
-        val flags = spark.table("funnel_dropoff_stream")
-          .toDF("entity", "flag")
-        def key(r: org.apache.spark.sql.Row) =
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5),
-            Option(r.get(6)).map(_.asInstanceOf[Long]))
-        val stream = graft.operators.SeqPatterns.dropoffFromFlags(
-            flags, "entity", "flag", steps)
-          .collect().map(key).toSet
-        val batch = graft.operators.SeqPatterns.funnelDropoff3(
-            rows.toDF("u", "us", "t")
-              .withColumn("ts", timestamp_micros(col("us"))),
-            "u", "ts", "t", steps, gapsMinutes = Seq(10L, 10L))
-          .collect().map(key).toSet
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        // every bucket is live in this fixture
-        assert(batch.exists(r => r._1 == 3L && r._5 == 1L && r._6 == 1L),
-          s"step-3 gap-expired AND absent must both be 1: $batch")
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val min = 60000000L
+    // the SeqPatternsSpec funnelFixture: one entity per bucket —
+    // u1 completes; u2 gap-expires at 2; u3 absent at 2 (click only
+    // BEFORE the view); u4 never views; u5 gap-expires at 3; u6
+    // absent at 3 (purchase precedes the click); u7 completes via
+    // the non-greedy trap; u8 same-ts view+click never chains
+    val rows = Seq(
+      ("u1", 0L, "view"), ("u1", 5 * min, "click"),
+      ("u1", 12 * min, "purchase"),
+      ("u2", 0L, "view"), ("u2", 20 * min, "click"),
+      ("u3", 0L, "click"), ("u3", 5 * min, "view"),
+      ("u4", 0L, "click"), ("u4", 1 * min, "purchase"),
+      ("u5", 0L, "view"), ("u5", 5 * min, "click"),
+      ("u5", 30 * min, "purchase"),
+      ("u6", 0L, "view"), ("u6", 2 * min, "purchase"),
+      ("u6", 5 * min, "click"),
+      ("u7", 0L, "view"), ("u7", 2 * min, "click"),
+      ("u7", 8 * min, "click"), ("u7", 15 * min, "purchase"),
+      ("u8", 0L, "view"), ("u8", 0L, "click"))
+    val steps = Seq("view", "click", "purchase")
+    val input = MemoryStream[(String, Long, String)]
+    val q = FunnelDropoffStream.flags(input.toDS(), steps, Seq(10L, 10L))
+      .writeStream.format("memory").queryName("funnel_dropoff_stream")
+      .outputMode("append").start()
+    try {
+      // shuffled within batches; u8's same-ts pair split across
+      // batches 1 and 2 — no role may chain it
+      input.addData(("u1", 0L, "view"), ("u8", 0L, "view"),
+        ("u3", 0L, "click"), ("u5", 0L, "view"), ("u7", 0L, "view"))
+      q.processAllAvailable()
+      input.addData(("u8", 0L, "click"), ("u1", 5 * min, "click"),
+        ("u7", 2 * min, "click"), ("u2", 0L, "view"),
+        ("u4", 0L, "click"), ("u6", 0L, "view"),
+        ("u3", 5 * min, "view"))
+      q.processAllAvailable()
+      input.addData(("u1", 12 * min, "purchase"), ("u5", 5 * min, "click"),
+        ("u7", 8 * min, "click"), ("u4", 1 * min, "purchase"),
+        ("u6", 2 * min, "purchase"), ("u2", 20 * min, "click"))
+      q.processAllAvailable()
+      input.addData(("u5", 30 * min, "purchase"),
+        ("u7", 15 * min, "purchase"), ("u6", 5 * min, "click"))
+      q.processAllAvailable()
+      val flags = spark.table("funnel_dropoff_stream")
+        .toDF("entity", "flag")
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5),
+          Option(r.get(6)).map(_.asInstanceOf[Long]))
+      val stream = graft.operators.SeqPatterns.dropoffFromFlags(
+          flags, "entity", "flag", steps)
+        .collect().map(key).toSet
+      val batch = graft.operators.SeqPatterns.funnelDropoff3(
+          rows.toDF("u", "us", "t")
+            .withColumn("ts", timestamp_micros(col("us"))),
+          "u", "ts", "t", steps, gapsMinutes = Seq(10L, 10L))
+        .collect().map(key).toSet
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      // every bucket is live in this fixture
+      assert(batch.exists(r => r._1 == 3L && r._5 == 1L && r._6 == 1L),
+        s"step-3 gap-expired AND absent must both be 1: $batch")
+    } finally q.stop()
   }
 
   test("streaming funnel drop-off: state survives a restart; changed gaps fail loudly") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_funnel_dropoff").toString
-      val input = MemoryStream[(String, Long, String)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String)]
-      def start(g: Seq[Long]) =
-        FunnelDropoffStream.flags(input.toDS(),
-            Seq("view", "click", "purchase"), g)
-          .writeStream
-          .foreachBatch {
-            (df: org.apache.spark.sql.Dataset[(String, String)],
-             _: Long) => {
-              val got = df.collect()
-              collected.synchronized { collected ++= got }
-              ()
-            }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_funnel_dropoff").toString
+    val input = MemoryStream[(String, Long, String)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String)]
+    def start(g: Seq[Long]) =
+      FunnelDropoffStream.flags(input.toDS(),
+          Seq("view", "click", "purchase"), g)
+        .writeStream
+        .foreachBatch {
+          (df: org.apache.spark.sql.Dataset[(String, String)],
+           _: Long) => {
+            val got = df.collect()
+            collected.synchronized { collected ++= got }
+            ()
           }
-          .option("checkpointLocation", ckpt).start()
-      val q1 = start(Seq(10L, 10L))
-      try {
-        // view@1s, click@5s: valid prefix recorded pre-restart
-        input.addData(("u", 1000000L, "view"), ("u", 5000000L, "click"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start(Seq(10L, 10L))
-      try {
-        // purchase@8s completes against the RESTORED validB (3s ≤ 10m);
-        // a state reset would emit nothing new but the purchase is
-        // flag-silent anyway — r3/saw3 are the proof of restored state
-        input.addData(("u", 8000000L, "purchase"))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList).toSet
-        assert(got == Set(("u", "r3"), ("u", "saw3")),
-          s"valid-prefix state must survive the restart: $got")
-      } finally q2.stop()
-      val q3 = start(Seq(20L, 10L))
-      try {
-        val ex = intercept[Exception] {
-          input.addData(("u", 9000000L, "purchase"))
-          q3.processAllAvailable()
         }
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(e =>
-            Option(e.getMessage).toSeq ++ messages(e.getCause))
-        assert(messages(ex).exists(_.contains("different steps/gaps")), ex)
-      } finally q3.stop()
-    }
+        .option("checkpointLocation", ckpt).start()
+    val q1 = start(Seq(10L, 10L))
+    try {
+      // view@1s, click@5s: valid prefix recorded pre-restart
+      input.addData(("u", 1000000L, "view"), ("u", 5000000L, "click"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start(Seq(10L, 10L))
+    try {
+      // purchase@8s completes against the RESTORED validB (3s ≤ 10m);
+      // a state reset would emit nothing new but the purchase is
+      // flag-silent anyway — r3/saw3 are the proof of restored state
+      input.addData(("u", 8000000L, "purchase"))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList).toSet
+      assert(got == Set(("u", "r3"), ("u", "saw3")),
+        s"valid-prefix state must survive the restart: $got")
+    } finally q2.stop()
+    val q3 = start(Seq(20L, 10L))
+    try {
+      val ex = intercept[Exception] {
+        input.addData(("u", 9000000L, "purchase"))
+        q3.processAllAvailable()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(ex).exists(_.contains("different steps/gaps")), ex)
+    } finally q3.stop()
   }
 
   test("streaming seq patterns: last-seen state survives a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_seqpat").toString
-      val input = MemoryStream[(String, Long, String)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, String, Long)]
-      def start() = SeqPatternsStream.cells(input.toDS(), Seq("a", "b"))
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(String, String, String, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData(("u", 1000000L, "a"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData(("u", 5000000L, "b"))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList).toSet
-        // a reset would see no prior a and emit only b's seen-marker;
-        // the restored last-seen closes the 4s a->b gap
-        assert(got == Set(("u", "b", "*", 0L), ("u", "a", "b", 4000000L)),
-          s"state must survive the restart: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_seqpat").toString
+    val input = MemoryStream[(String, Long, String)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, String, Long)]
+    def start() = SeqPatternsStream.cells(input.toDS(), Seq("a", "b"))
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(String, String, String, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData(("u", 1000000L, "a"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData(("u", 5000000L, "b"))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList).toSet
+      // a reset would see no prior a and emit only b's seen-marker;
+      // the restored last-seen closes the 4s a->b gap
+      assert(got == Set(("u", "b", "*", 0L), ("u", "a", "b", 4000000L)),
+        s"state must survive the restart: $got")
+    } finally q2.stop()
   }
 
   test("streaming seq patterns: restart with a reordered alphabet of the same size fails loudly") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_seqpat_alpha").toString
-      val input = MemoryStream[(String, Long, String)]
-      def start(alphabet: Seq[String]) =
-        SeqPatternsStream.cells(input.toDS(), alphabet)
-          .writeStream
-          .foreachBatch {
-            // must CONSUME the frame — an unprocessed micro-batch trips
-            // Spark's state-store commit validation before our guard
-            (df: org.apache.spark.sql.Dataset[(String, String, String, Long)],
-             _: Long) => { df.collect(); () }
-          }
-          .option("checkpointLocation", ckpt).start()
-      val q1 = start(Seq("a", "b"))
-      try {
-        input.addData(("u", 1000000L, "a"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      // same size, same strings, different slot assignment: length-based
-      // validation can't see this — the persisted fingerprint must
-      val q2 = start(Seq("b", "a"))
-      try {
-        val ex = intercept[Exception] {
-          input.addData(("u", 5000000L, "b"))
-          q2.processAllAvailable()
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_seqpat_alpha").toString
+    val input = MemoryStream[(String, Long, String)]
+    def start(alphabet: Seq[String]) =
+      SeqPatternsStream.cells(input.toDS(), alphabet)
+        .writeStream
+        .foreachBatch {
+          // must CONSUME the frame — an unprocessed micro-batch trips
+          // Spark's state-store commit validation before our guard
+          (df: org.apache.spark.sql.Dataset[(String, String, String, Long)],
+           _: Long) => { df.collect(); () }
         }
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(e =>
-            Option(e.getMessage).toSeq ++ messages(e.getCause))
-        assert(messages(ex).exists(_.contains("different alphabet")), ex)
-      } finally q2.stop()
-    }
+        .option("checkpointLocation", ckpt).start()
+    val q1 = start(Seq("a", "b"))
+    try {
+      input.addData(("u", 1000000L, "a"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // same size, same strings, different slot assignment: length-based
+    // validation can't see this — the persisted fingerprint must
+    val q2 = start(Seq("b", "a"))
+    try {
+      val ex = intercept[Exception] {
+        input.addData(("u", 5000000L, "b"))
+        q2.processAllAvailable()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(ex).exists(_.contains("different alphabet")), ex)
+    } finally q2.stop()
   }
 
   test("streaming density: a negative id is rejected at ingest, not silently summed") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[(Long, Long, Long)]
-      val q = DensityStream.cells(input.toDS())
-        .writeStream.format("memory").queryName("density_negid")
-        .outputMode("append").start()
-      try {
-        val ex = intercept[Exception] {
-          input.addData((-7L, 0L, 0L))
-          q.processAllAvailable()
-        }
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(e =>
-            Option(e.getMessage).toSeq ++ messages(e.getCause))
-        assert(messages(ex).exists(_.contains("non-negative ids")), ex)
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(Long, Long, Long)]
+    val q = DensityStream.cells(input.toDS())
+      .writeStream.format("memory").queryName("density_negid")
+      .outputMode("append").start()
+    try {
+      val ex = intercept[Exception] {
+        input.addData((-7L, 0L, 0L))
+        q.processAllAvailable()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(ex).exists(_.contains("non-negative ids")), ex)
+    } finally q.stop()
   }
 
   test("streaming density: upserted grid cells reproduce the batch dbscan census incl. shuffled arrival and batch splits") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      import spark.implicits._
-      // the DensitySpec fixture: dense (0,0) block, border (2,0),
-      // noise (9,9), with a 60% relative gate
-      val vecs = Seq(
-        (1L, Array(0.05f, 0.05f)), (2L, Array(0.04f, 0.06f)),
-        (3L, Array(0.01f, 0.01f)), (4L, Array(0.09f, 0.09f)),
-        (5L, Array(0.05f, 0.01f)), (6L, Array(0.02f, 0.08f)),
-        (7L, Array(0.15f, 0.05f)), (8L, Array(0.16f, 0.04f)),
-        (9L, Array(0.25f, 0.05f)), (10L, Array(0.95f, 0.95f)))
-      val batchDf = vecs.toDF("id", "vec")
-      // quantize through the SHARED helper so the stream sees exactly
-      // the batch bucketing
-      val pts = graft.operators.Density.pointCells(
-          batchDf, "id", "vec", Seq(1, 2))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val input = MemoryStream[(Long, Long, Long)]
-      val q = DensityStream.cells(input.toDS())
-        .writeStream.format("memory").queryName("density_stream")
-        .outputMode("append").start()
-      try {
-        val shuffled = scala.util.Random.javaRandomToRandom(
-          new java.util.Random(42)).shuffle(pts.toSeq)
-        input.addData(shuffled.take(4): _*)
-        q.processAllAvailable()
-        input.addData(shuffled.drop(4): _*)
-        q.processAllAvailable()
-        // upsert semantics: last (= max, sums are monotone) per cell
-        val cells = spark.table("density_stream")
-          .toDF("c0", "c1", "n", "ids")
-          .groupBy("c0", "c1")
-          .agg(max(col("n")).as("n"), max(col("ids")).as("ids"))
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(r => r.getString(0) ->
-            ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-            .toMap
-        val stream = snap(graft.operators.Density.censusFromCells(
-          cells, Seq("c0", "c1"), "n", "ids", densityPpm = 600000L))
-        val batch = snap(graft.operators.Density.gridDbscanCensus(
-          batchDf, "id", "vec", Seq(1, 2), densityPpm = 600000L))
-        assert(stream == batch, s"stream $stream vs batch $batch")
-        assert(batch.keySet == Set("core", "border", "noise"))
-      } finally q.stop()
-    }
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    // the DensitySpec fixture: dense (0,0) block, border (2,0),
+    // noise (9,9), with a 60% relative gate
+    val vecs = Seq(
+      (1L, Array(0.05f, 0.05f)), (2L, Array(0.04f, 0.06f)),
+      (3L, Array(0.01f, 0.01f)), (4L, Array(0.09f, 0.09f)),
+      (5L, Array(0.05f, 0.01f)), (6L, Array(0.02f, 0.08f)),
+      (7L, Array(0.15f, 0.05f)), (8L, Array(0.16f, 0.04f)),
+      (9L, Array(0.25f, 0.05f)), (10L, Array(0.95f, 0.95f)))
+    val batchDf = vecs.toDF("id", "vec")
+    // quantize through the SHARED helper so the stream sees exactly
+    // the batch bucketing
+    val pts = graft.operators.Density.pointCells(
+        batchDf, "id", "vec", Seq(1, 2))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val input = MemoryStream[(Long, Long, Long)]
+    val q = DensityStream.cells(input.toDS())
+      .writeStream.format("memory").queryName("density_stream")
+      .outputMode("append").start()
+    try {
+      val shuffled = scala.util.Random.javaRandomToRandom(
+        new java.util.Random(42)).shuffle(pts.toSeq)
+      input.addData(shuffled.take(4): _*)
+      q.processAllAvailable()
+      input.addData(shuffled.drop(4): _*)
+      q.processAllAvailable()
+      // upsert semantics: last (= max, sums are monotone) per cell
+      val cells = spark.table("density_stream")
+        .toDF("c0", "c1", "n", "ids")
+        .groupBy("c0", "c1")
+        .agg(max(col("n")).as("n"), max(col("ids")).as("ids"))
+      def snap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+          .toMap
+      val stream = snap(graft.operators.Density.censusFromCells(
+        cells, Seq("c0", "c1"), "n", "ids", densityPpm = 600000L))
+      val batch = snap(graft.operators.Density.gridDbscanCensus(
+        batchDf, "id", "vec", Seq(1, 2), densityPpm = 600000L))
+      assert(stream == batch, s"stream $stream vs batch $batch")
+      assert(batch.keySet == Set("core", "border", "noise"))
+    } finally q.stop()
   }
 
   test("streaming density: cell counts survive a restart") {
-    withRocksDb {
-      implicit val sc = spark.sqlContext
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_density").toString
-      val input = MemoryStream[(Long, Long, Long)]
-      val collected = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long)]
-      def start() = DensityStream.cells(input.toDS())
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)],
-           _: Long) =>
-          collected.synchronized { collected ++= df.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt).start()
-      val q1 = start()
-      try {
-        input.addData((5L, 0L, 0L), (6L, 0L, 0L))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      collected.synchronized(collected.clear())
-      val q2 = start()
-      try {
-        input.addData((7L, 0L, 0L))
-        q2.processAllAvailable()
-        val got = collected.synchronized(collected.toList)
-        // a reset would re-emit (1, 7); the restored cell accumulates
-        assert(got == List((0L, 0L, 3L, 18L)),
-          s"state must survive the restart: $got")
-      } finally q2.stop()
-    }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_ckpt_density").toString
+    val input = MemoryStream[(Long, Long, Long)]
+    val collected = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Long, Long, Long)]
+    def start() = DensityStream.cells(input.toDS())
+      .writeStream
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[(Long, Long, Long, Long)],
+         _: Long) =>
+        collected.synchronized { collected ++= df.collect() }
+        ()
+      }
+      .option("checkpointLocation", ckpt).start()
+    val q1 = start()
+    try {
+      input.addData((5L, 0L, 0L), (6L, 0L, 0L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    collected.synchronized(collected.clear())
+    val q2 = start()
+    try {
+      input.addData((7L, 0L, 0L))
+      q2.processAllAvailable()
+      val got = collected.synchronized(collected.toList)
+      // a reset would re-emit (1, 7); the restored cell accumulates
+      assert(got == List((0L, 0L, 3L, 18L)),
+        s"state must survive the restart: $got")
+    } finally q2.stop()
   }
 }
