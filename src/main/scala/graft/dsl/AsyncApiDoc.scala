@@ -27,62 +27,6 @@ object AsyncApiDoc {
       s""""channels": {${channels.mkString(", ")}}}"""
   }
 
-  /** AsyncAPI 3.0 document: channels + operations split (the 3.0 shape),
-    * with payload schemas deduplicated into components/schemas — every
-    * channel's message payload is a `$ref`, and structurally identical
-    * serde schemas (a fan-out re-publishing its input type, two topics
-    * sharing one model) are emitted exactly once.
-    */
-  def renderV3(app: GraftApp, title: String, version: String): String = {
-    // Structural dedup: rendered-schema string -> component name. Names
-    // derive from the topic, so two DIFFERENT schemas can want the same
-    // name (a topic that is sink-with-one-schema then source-with-another,
-    // or sanitized collisions like "a.b"/"a_b") — disambiguate with a
-    // counter so every $ref resolves to its own schema.
-    val schemaNames = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val usedNames = scala.collection.mutable.HashSet.empty[String]
-    def refFor(topic: String, schema: String): String = {
-      val name = schemaNames.getOrElseUpdate(schema, {
-        val base = s"${sanitize(topic)}Payload"
-        var candidate = base
-        var i = 2
-        while (usedNames.contains(candidate)) { candidate = s"$base$i"; i += 1 }
-        candidate
-      })
-      usedNames += name
-      s"""{"$$ref": "#/components/schemas/$name"}"""
-    }
-    val BinarySchema = """{"type": "string", "format": "binary"}"""
-
-    // One channel per topic; a topic that is both someone's sink and
-    // someone's source keeps the source's (authoritative) payload schema.
-    val channels = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val operations = scala.collection.mutable.ListBuffer.empty[String]
-    app.topics.foreach { t =>
-      val spec = app.spec(t)
-      channels.update(t, refFor(t, jsonSchema(spec.valueSerde.dataType)))
-      operations += s"""${q(s"recv_$t")}: {"action": "receive", "channel": {"$$ref": ${q(s"#/channels/$t")}}}"""
-      spec.sinkTopics.foreach { st =>
-        val payload = spec.outValueSerde.map(s => jsonSchema(s.dataType))
-          .getOrElse(BinarySchema)
-        if (!channels.contains(st)) channels.update(st, refFor(st, payload))
-        operations += s"""${q(s"send_$st")}: {"action": "send", "channel": {"$$ref": ${q(s"#/channels/$st")}}}"""
-      }
-    }
-
-    val channelJson = channels.map { case (t, ref) =>
-      s"""${q(t)}: {"address": ${q(t)}, "messages": {"message": {"payload": $ref}}}"""
-    }.mkString(", ")
-    val componentJson = schemaNames.map { case (schema, name) =>
-      s"${q(name)}: $schema"
-    }.mkString(", ")
-
-    s"""{"asyncapi": "3.0.0", "info": {"title": ${q(title)}, "version": ${q(version)}}, """ +
-      s""""channels": {$channelJson}, """ +
-      s""""operations": {${operations.mkString(", ")}}, """ +
-      s""""components": {"schemas": {$componentJson}}}"""
-  }
-
   /** Self-contained HTML docs page: the AsyncAPI JSON embedded in the
     * standard `<asyncapi-component>` web component (the same page shape
     * the reference's docs renderer emits — kaflow `asyncapi/docs.py:9-37`
@@ -118,9 +62,6 @@ object AsyncApiDoc {
 
   private def attr2(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-
-  private def sanitize(s: String): String =
-    s.map(c => if (c.isLetterOrDigit) c else '_')
 
   /** Spark type → JSON Schema fragment. */
   def jsonSchema(t: DataType): String = t match {

@@ -77,16 +77,21 @@ class GraftApp {
   /** Decode one spec's records: value/key/header deserialization + metadata
     * projection (A4-A6, A13). Adds `value_raw`/`key_raw`, replaces
     * `value`/`key` with typed columns, adds `header_<name>` columns, and a
-    * `__deser_failed` indicator derived from the ALREADY-decoded columns
-    * (A12/A20) — each record is decoded once; the DLQ/ok split filters on
-    * the indicator instead of re-invoking the serde (which for UDF-backed
-    * Avro/Protobuf codecs would multiply decode CPU on the hot path).
+    * `__deser_failed` indicator built from the same decode expression as
+    * the typed columns (A12/A20). The decode is NOT evaluated once per
+    * record: Catalyst pushes the DLQ/ok split's filter on the indicator
+    * (and `processBatch`'s non-null output filter) below this projection,
+    * inlining the decode into a FilterExec, which has no subexpression
+    * elimination, and the projection above it decodes the surviving rows
+    * again. For a Protobuf or Avro consumer with a projecting handler (the
+    * ingest-wire benchmark app), each outputs branch's plan holds the value
+    * decoder twice in its FilterExec and once in its ProjectExec, and each
+    * DLQ branch once more in its FilterExec.
     */
   def decoded(spec: ConsumerSpec, records: DataFrame): DataFrame = {
-    // decodeWithFailure: value and indicator come from ONE decode
-    // evaluation per serde (JSON: a single corrupt-record-augmented parse;
-    // Avro/Protobuf: one shared deterministic native-expression tree,
-    // deduped by CSE — same property the UDF parity codecs had).
+    // decodeWithFailure: value and indicator share one decode expression
+    // tree per serde; subexpression elimination merges them only inside
+    // one projection (see the scaladoc above for what the planner does).
     val (valueDec, valueFailed) = spec.valueSerde.decodeWithFailure(col("value_raw"))
     val (keyDec, keyFailed) = spec.keySerde match {
       case Some(s) => s.decodeWithFailure(col("key_raw"))

@@ -48,14 +48,39 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements()) null
+    else CosineSimilarity.compute(x, isFloat(left), y, isFloat(right))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => s"""
+      if ($x.numElements() != $y.numElements()) {
+        ${ev.isNull} = true;
+      } else {
+        ${ev.value} = graft.functions.expressions.CosineSimilarity.compute(
+          $x, ${isFloat(left)}, $y, ${isFloat(right)});
+      }
+    """)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_similarity"
+}
+
+object CosineSimilarity {
+
+  /** The one kernel, shared by eval and codegen: dot product and both
+    * norms in one left-to-right double fold over equal-length arrays.
+    */
+  def compute(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
-    val lf = isFloat(left); val rf = isFloat(right)
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
-      val xi = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
+      val xi = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yi = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
       dot += xi * yi
       nx += xi * xi
       ny += yi * yi
@@ -64,42 +89,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     val denom = math.sqrt(nx) * math.sqrt(ny)
     if (denom == 0.0) 0.0 else dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val denom = ctx.freshName("denom")
-      s"""
-        final int $n = $x.numElements();
-        if ($n != $y.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            final double $xi = (double) $x.$lGet($i);
-            final double $yi = (double) $y.$rGet($i);
-            $dot += $xi * $yi;
-            $nx += $xi * $xi;
-            $ny += $yi * $yi;
-          }
-          final double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-          ${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;
-        }
-      """
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_similarity"
 }

@@ -45,48 +45,44 @@ case class L2DistanceSq(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val lf = isFloat(left); val rf = isFloat(right)
-    var d = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      val t = xi - yi
-      d += t * t
-      i += 1
-    }
-    d
+    if (x.numElements() != y.numElements()) null
+    else L2DistanceSq.compute(x, isFloat(left), y, isFloat(right))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      s"""
-        final int $n = $x.numElements();
-        if ($n != $y.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          double $d = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            final double $t = (double) $x.$lGet($i) - (double) $y.$rGet($i);
-            $d += $t * $t;
-          }
-          ${ev.value} = $d;
-        }
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => s"""
+      if ($x.numElements() != $y.numElements()) {
+        ${ev.isNull} = true;
+      } else {
+        ${ev.value} = graft.functions.expressions.L2DistanceSq.compute(
+          $x, ${isFloat(left)}, $y, ${isFloat(right)});
+      }
+    """)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2DistanceSq =
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "l2_distance_sq"
+}
+
+object L2DistanceSq {
+
+  /** The one kernel, shared by eval and codegen: the 0.0-seeded
+    * left-to-right double fold of squared differences over equal-length
+    * arrays.
+    */
+  def compute(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = x.numElements()
+    var d = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yi = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      val t = xi - yi
+      d += t * t
+      i += 1
+    }
+    d
+  }
 }

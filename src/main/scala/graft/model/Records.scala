@@ -1,12 +1,13 @@
 package graft.model
 
-/** Record shapes of the stream-processing surface.
+/** Inbound record shape of the stream-processing surface.
   *
   * Mirrors the reference's message model (kaflow `message.py:8-23`,
-  * `testclient.py:45-57`): an inbound Kafka-shaped record with metadata, and
-  * an outbound message of raw bytes. In Spark these are the row types of the
-  * Kafka source/sink DataFrames; the case classes give the typed
-  * (`Dataset[KafkaRecordIn]`) view and the testkit its input encoder.
+  * `testclient.py:45-57`): an inbound Kafka-shaped record with metadata.
+  * In Spark this is the row type of the Kafka source DataFrame; the case
+  * class gives the typed (`Dataset[KafkaRecordIn]`) view and the testkit
+  * its input encoder. The outbound shape is the sink's own row
+  * (`topic, key, value, headers`, see `graft.runtime.KafkaIO.sinkRows`).
   */
 case class KafkaRecordIn(
     topic: String,
@@ -17,20 +18,6 @@ case class KafkaRecordIn(
     key: Array[Byte] = null,
     value: Array[Byte] = null,
     headers: Map[String, Array[Byte]] = null)
-
-/** Outbound message (reference `message.py:17-23`): all fields optional;
-  * the producer fills topic-level routing.
-  *
-  * Deliberate deviation from the reference (SURVEY.md §7.4): kaflow passes
-  * `offset` into the producer's `timestamp` slot (`_consumer.py:227-229`) —
-  * a positional-arg bug we do not replicate; timestamp here is a timestamp.
-  */
-case class MessageOut(
-    value: Array[Byte],
-    key: Array[Byte] = null,
-    headers: Map[String, Array[Byte]] = null,
-    partition: Option[Int] = None,
-    timestamp: Option[Long] = None)
 
 object KafkaRecordIn {
   /** Spark SQL schema of the Kafka source (with includeHeaders), normalized

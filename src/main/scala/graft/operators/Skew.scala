@@ -3,24 +3,12 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation joins for 100 TB fact tables. AQE's skew-join split
-  * handles most cases at runtime; explicit salting is the deterministic
-  * fallback when a handful of hot keys dominate (the classic power-law
-  * key distribution of web/training corpora).
+/** Skew diagnostics for 100 TB fact tables. AQE's skew-join split
+  * handles most cases at runtime; explicit salting ([[Joins.saltedJoin]])
+  * is the deterministic fallback when a handful of hot keys dominate (the
+  * classic power-law key distribution of web/training corpora).
   */
 object Skew {
-
-  /** Salted equi-join — single-key facade over [[Joins.saltedJoin]]
-    * (one implementation, one contract): the skewed (big) side scatters
-    * across [0, factor) sub-keys via a DETERMINISTIC whole-row hash
-    * (rand() was the original salt source; the hash keeps the plan
-    * re-run- and retry-stable), the small side replicates `factor`
-    * times, and the output is exactly the plain join. Left-preserving
-    * join types only — see the delegate's scaladoc.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 factor: Int, joinType: String = "inner"): DataFrame =
-    Joins.saltedJoin(big, small, Seq(key), factor, joinType)
 
   /** Exact join-size audit: the output row count an equi-join WILL
     * produce — Σ_k cL(k)·cR(k) over the matched key values — before
@@ -61,7 +49,7 @@ object Skew {
 
   /** Shuffle-skew advisor: one diagnostic row per candidate join/group
     * key, in exact integer arithmetic — the measurement that DECIDES
-    * between plain shuffle, AQE skew split, and [[saltedJoin]], closing
+    * between plain shuffle, AQE skew split, and [[Joins.saltedJoin]], closing
     * the measure → apply loop (q211 applies what this recommends).
     * skew_ppm = hottest key ÷ mean key (1e6 = perfectly uniform);
     * recommended_salts = ⌈max·ndv / n⌉, the factor that levels the

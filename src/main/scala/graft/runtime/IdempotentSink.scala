@@ -1,9 +1,7 @@
 package graft.runtime
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
 
 /** Exactly-once-ish sink for foreachBatch: Spark's checkpoint gives
   * at-least-once, so a retried micro-batch re-runs the write. Guarding on
@@ -36,18 +34,6 @@ object IdempotentSink {
       write
       fs.create(marker, false).close()
       true
-    }
-  }
-
-  /** foreachBatch function wrapping a partitioned parquet append with the
-    * batch guard. The marker filesystem comes from the batch's own session
-    * conf, so it shares credentials/scheme handling with the checkpoint.
-    */
-  def parquetAppend(outPath: String, markerDir: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-    writeOnce(markerDir, batchId, conf) {
-      batch.write.mode("append").parquet(outPath)
     }
   }
 }

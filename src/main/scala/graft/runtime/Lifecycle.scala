@@ -1,12 +1,10 @@
 package graft.runtime
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
-
-/** Lifespan hooks (reference `lifespan` AsyncContextManager,
+/** Lifespan hook (reference `lifespan` AsyncContextManager,
   * kaflow `applications.py:218-242`, `544-559`): startup work runs before
-  * the query starts, shutdown work after it terminates; per-query
-  * start/progress/stop callbacks ride Spark's StreamingQueryListener.
+  * the body, shutdown work after it, even when the body throws. A
+  * streaming query's own start/stop is `KafkaIO.run` and
+  * `StreamingQuery.stop`.
   */
 object Lifecycle {
 
@@ -16,20 +14,5 @@ object Lifecycle {
   def withLifespan[A](startup: () => Unit, shutdown: () => Unit)(body: => A): A = {
     startup()
     try body finally shutdown()
-  }
-
-  /** Attach start/stop hooks as a listener; returns it for removal. */
-  def onQueryLifecycle(spark: SparkSession,
-                       onStart: String => Unit = _ => (),
-                       onStop: String => Unit = _ => ()): StreamingQueryListener = {
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        onStart(e.name match { case null => e.id.toString; case n => n })
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        onStop(e.id.toString)
-    }
-    spark.streams.addListener(listener)
-    listener
   }
 }

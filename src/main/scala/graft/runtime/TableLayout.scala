@@ -2,21 +2,15 @@ package graft.runtime
 
 import org.apache.spark.sql.DataFrame
 
-/** Table-layout helpers for the 100 TB lake: partitioned + bucketed writes
-  * so downstream joins/aggregations on the bucket key are co-located
-  * (no exchange) and partition pruning applies to time-ranged scans.
+/** Table-layout helpers for the 100 TB lake: bucketed writes so
+  * downstream joins/aggregations on the bucket key are co-located (no
+  * exchange), compacted writes, and Z-ordered writes for data skipping.
   *
   * On the testdata these wrap plain parquet dirs; on a real deployment the
   * same calls target the warehouse. Bucketed writes require `saveAsTable`
   * (bucket metadata lives in the catalog).
   */
 object TableLayout {
-
-  /** Write partitioned by low-cardinality columns (e.g. date) — scans with
-    * partition-key predicates prune whole directories.
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   /** Save as a bucketed (+ sorted) catalog table: joins and aggregations on
     * `bucketCols` between same-bucketed tables plan with zero exchange.
@@ -58,17 +52,5 @@ object TableLayout {
       .sortWithinPartitions(col("__zkey"))
       .drop("__zkey")
       .write.mode("overwrite").parquet(path)
-  }
-
-  /** Repartition to target a given in-memory partition size before a wide
-    * stage — the knob that keeps shuffle spills bounded when
-    * `spark.sql.shuffle.partitions` is tuned for the average query, not
-    * this one.
-    */
-  def repartitionForSize(df: DataFrame, approxRowBytes: Long,
-                         targetPartitionBytes: Long = 128L << 20): DataFrame = {
-    val rows = df.count()
-    val parts = math.max(1, (rows * approxRowBytes / targetPartitionBytes).toInt)
-    df.repartition(parts)
   }
 }

@@ -26,14 +26,16 @@ trait Serde extends Serializable {
   def serialize(value: Column): Column
 
   /** The decode contract: (typedValue, failed) as expressions over ONE
-    * decode evaluation, where `failed` is true for records whose payload
-    * fails to deserialize — the condition the pipeline uses for DLQ
-    * routing. Default: non-null input decoded to null (the codecs return
-    * null on malformed input), both derived from the same `deserialize`
-    * tree (deterministic expressions — Catalyst's subexpression
-    * elimination evaluates it once per row). Formats whose decode cannot
-    * signal failure through null (PERMISSIVE JSON's all-null struct)
-    * override this so the hot path still parses each record exactly once.
+    * decode expression tree, where `failed` is true for records whose
+    * payload fails to deserialize — the condition the pipeline uses for
+    * DLQ routing. Default: non-null input decoded to null (the codecs
+    * return null on malformed input), both derived from the same
+    * `deserialize` tree. Sharing the tree lets subexpression elimination
+    * evaluate it once per row only where both land in one projection; in
+    * `GraftApp` the planner pushes the `failed` filter into a FilterExec
+    * below the decode projection, so the decode runs again there (see
+    * `GraftApp.decoded`). Formats whose decode cannot signal failure
+    * through null (PERMISSIVE JSON's all-null struct) override this.
     */
   def decodeWithFailure(raw: Column): (Column, Column) = {
     val d = deserialize(raw)

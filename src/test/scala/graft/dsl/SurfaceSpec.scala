@@ -1,7 +1,7 @@
 package graft.dsl
 
 import graft.SparkSpec
-import graft.operators.Skew
+import graft.operators.Joins
 import graft.runtime.TableLayout
 import graft.serde.JsonSerde
 import org.apache.spark.sql.functions._
@@ -61,40 +61,6 @@ class SurfaceSpec extends SparkSpec {
     assert(doc.contains("\"user_id\": {\"type\": \"integer\"}"))
   }
 
-  test("AsyncAPI 3.0 doc dedups identical payload schemas into components") {
-    val clickSchema = StructType(Seq(
-      StructField("user_id", LongType, nullable = false),
-      StructField("url", StringType)))
-    val app = new GraftApp()
-      .consume(ConsumerSpec(
-        topic = "user_clicks", sinkTopics = Seq("clicks_out"),
-        valueSerde = JsonSerde(clickSchema),
-        outValueSerde = Some(JsonSerde(clickSchema)))) // same shape re-published
-      .consume(ConsumerSpec(
-        topic = "page_views", sinkTopics = Nil,
-        valueSerde = JsonSerde(clickSchema))) // identical model, second topic
-    val doc = AsyncApiDoc.renderV3(app, "graft app", "1.0.0")
-
-    // Syntactically valid JSON (jackson ships with Spark).
-    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
-    assert(tree.get("asyncapi").asText() == "3.0.0")
-
-    // Three channels, but ONE deduped schema component, referenced thrice.
-    assert(tree.get("channels").size() == 3)
-    val comps = tree.get("components").get("schemas")
-    assert(comps.size() == 1 && comps.has("user_clicksPayload"))
-    val refs = doc.sliding("#/components/schemas/user_clicksPayload".length)
-      .count(_ == "#/components/schemas/user_clicksPayload")
-    assert(refs == 3)
-
-    // 3.0 shape: operations split from channels, channel $refs.
-    val ops = tree.get("operations")
-    assert(ops.get("recv_user_clicks").get("action").asText() == "receive")
-    assert(ops.get("send_clicks_out").get("action").asText() == "send")
-    assert(ops.get("recv_user_clicks").get("channel").get("$ref").asText()
-      == "#/channels/user_clicks")
-  }
-
   test("AsyncAPI HTML docs page embeds the schema, escaped for its attribute") {
     val app = new GraftApp().consume(ConsumerSpec(
       topic = "user's_topic", // apostrophe must not break the single-quoted attr
@@ -119,7 +85,7 @@ class SurfaceSpec extends SparkSpec {
     val small = Seq((1, "X"), (2, "Y"), (3, "Z")).toDF("k", "w")
     val plain = big.join(small, Seq("k")).select("k", "v", "w")
       .as[(Int, String, String)].collect().sorted.toSeq
-    val salted = Skew.saltedJoin(big, small, "k", factor = 4)
+    val salted = Joins.saltedJoin(big, small, Seq("k"), 4)
       .select("k", "v", "w").as[(Int, String, String)].collect().sorted.toSeq
     assert(salted == plain)
   }
@@ -127,13 +93,13 @@ class SurfaceSpec extends SparkSpec {
   test("salted join supports left joins but rejects outer-on-replicated-side") {
     val big = Seq((1, "a"), (9, "nomatch")).toDF("k", "v")
     val small = Seq((1, "X"), (3, "Z")).toDF("k", "w")
-    val leftJoined = Skew.saltedJoin(big, small, "k", factor = 4, joinType = "left")
+    val leftJoined = Joins.saltedJoin(big, small, Seq("k"), 4, "left")
       .select("k", "v", "w").collect()
     assert(leftJoined.length == 2) // unmatched big row kept once, not 4x
     assert(leftJoined.count(_.isNullAt(2)) == 1)
     for (jt <- Seq("right", "full", "full_outer", "right_outer"))
       intercept[IllegalArgumentException] {
-        Skew.saltedJoin(big, small, "k", factor = 4, joinType = jt)
+        Joins.saltedJoin(big, small, Seq("k"), 4, jt)
       }
   }
 

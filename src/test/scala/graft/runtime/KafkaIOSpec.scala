@@ -2,10 +2,11 @@ package graft.runtime
 
 import graft.SparkSpec
 
-/** Config-mapping tests for the Kafka surface (the connector jar is not in
-  * this container, so `.load()` is integration-only; the option assembly —
-  * the part mirroring the reference's ~60-knob `Kaflow.__init__` surface —
-  * is verified here).
+/** Static tests for the Kafka surface. The connector jar is not a build
+  * dependency, so `.load()` and the sink write are integration-only; the
+  * option assembly (the part mirroring the reference's ~60-knob
+  * `Kaflow.__init__` surface) and the sink row shape are verified here,
+  * the streaming loop itself in StreamingSpec.
   */
 class KafkaIOSpec extends SparkSpec {
 
@@ -69,20 +70,67 @@ class KafkaIOSpec extends SparkSpec {
   }
 
   test("security + passthrough options map to kafka.-prefixed keys") {
+    val security = Map(
+      "kafka.security.protocol" -> "SASL_SSL",
+      "kafka.sasl.mechanism" -> "SCRAM-SHA-256",
+      "kafka.sasl.jaas.config" ->
+        "org.apache.kafka.common.security.scram.ScramLoginModule required;",
+      "kafka.ssl.truststore.location" -> "/etc/kafka/truststore.jks",
+      "kafka.ssl.keystore.location" -> "/etc/kafka/keystore.jks")
     val conf = KafkaConfig(
       bootstrapServers = "b:9092",
-      securityProtocol = Some("SASL_SSL"),
-      saslMechanism = Some("SCRAM-SHA-256"),
-      saslJaasConfig = Some("org.apache.kafka.common.security.scram.ScramLoginModule required;"),
-      extra = Map("kafka.compression.type" -> "zstd",
+      extra = security ++ Map("kafka.compression.type" -> "zstd",
         "kafka.isolation.level" -> "read_committed"))
-    val opts = conf.sourceOptions(Seq("t"))
-    assert(opts("kafka.security.protocol") == "SASL_SSL")
-    assert(opts("kafka.sasl.mechanism") == "SCRAM-SHA-256")
-    assert(opts("kafka.compression.type") == "zstd")
-    assert(opts("kafka.isolation.level") == "read_committed")
+    val source = conf.sourceOptions(Seq("t"))
+    for ((k, v) <- security) {
+      assert(source(k) == v, k)
+      assert(conf.sinkOptions(k) == v, k)
+    }
+    assert(source("kafka.compression.type") == "zstd")
+    assert(source("kafka.isolation.level") == "read_committed")
     assert(conf.sinkOptions("kafka.bootstrap.servers") == "b:9092")
     assert(!conf.sinkOptions.contains("subscribe"))
+  }
+
+  test("sinkRows: outputs plus optional DLQ rows in the Kafka sink's row shape") {
+    import graft.dsl.{ConsumerSpec, GraftApp}
+    import graft.model.KafkaRecordIn
+    import graft.serde.{JsonSerde, StringSerde}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val app = new GraftApp().consume(ConsumerSpec(
+      topic = "in", sinkTopics = Seq("out"),
+      valueSerde = JsonSerde(StructType(Seq(StructField("n", LongType)))),
+      outValueSerde = Some(StringSerde),
+      handler = df => df.select(col("value.n").cast("string").as("value"),
+        map(lit("src"), col("value_raw"), lit("n"),
+          col("value.n").cast("string").cast("binary")).as("out_headers"))))
+    val routed = app.processBatch(Seq(
+      KafkaRecordIn(topic = "in", key = "k1".getBytes, value = """{"n": 1}""".getBytes),
+      KafkaRecordIn(topic = "in", key = "k2".getBytes, value = "oops".getBytes)).toDF())
+    val headersType = DataType.fromDDL("array<struct<key:string,value:binary>>")
+    def utf8(b: Array[Byte]): String = new String(b, "UTF-8")
+
+    // No DLQ topic: the outputs only, headers converted entry for entry.
+    val outputs = KafkaIO.sinkRows(routed, None)
+    assert(outputs.columns.toSeq == Seq("topic", "key", "value", "headers"))
+    assert(outputs.schema("headers").dataType == headersType)
+    val Array(out) = outputs.collect()
+    assert(out.getAs[String]("topic") == "out" && out.isNullAt(1))
+    assert(utf8(out.getAs[Array[Byte]]("value")) == "1")
+    val entries = out.getSeq[org.apache.spark.sql.Row](3)
+      .map(e => e.getString(0) -> utf8(e.getAs[Array[Byte]](1)))
+    assert(entries == Seq("src" -> """{"n": 1}""", "n" -> "1"))
+
+    // DLQ topic set: one more row, the raw key/value, null headers.
+    val all = KafkaIO.sinkRows(routed, Some("dead"))
+    assert(all.schema("headers").dataType == headersType)
+    val dlq = all.collect().filter(_.getAs[String]("topic") == "dead")
+    assert(dlq.length == 1 && all.count() == 2)
+    assert(utf8(dlq(0).getAs[Array[Byte]]("key")) == "k2")
+    assert(utf8(dlq(0).getAs[Array[Byte]]("value")) == "oops")
+    assert(dlq(0).isNullAt(3))
   }
 
   test("kafka connector probe: source plan builds when the jar is present") {

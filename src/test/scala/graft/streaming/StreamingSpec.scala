@@ -53,34 +53,62 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("full GraftApp pipeline runs under Structured Streaming via foreachBatch") {
+    // Drives the shipped loop, KafkaIO.runWith, broker-free: a capturing
+    // writer stands in for the Kafka sink.
     import graft.dsl.{ConsumerSpec, GraftApp}
     import graft.model.KafkaRecordIn
+    import graft.runtime.KafkaIO
     import graft.serde.{JsonSerde, StringSerde}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
     implicit val sc = spark.sqlContext
     val app = new GraftApp().consume(ConsumerSpec(
       topic = "clicks",
-      sinkTopics = Seq("out"),
+      sinkTopics = Seq("out", "audit"),
       valueSerde = JsonSerde(StructType(Seq(StructField("user_id", LongType)))),
       outValueSerde = Some(StringSerde),
       handler = df => df.select(
         concat(lit("u"), col("value.user_id")).as("value"))))
     val input = MemoryStream[KafkaRecordIn]
-    val collected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = input.toDF().writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        app.processBatch(batch).outputs.collect().foreach { r =>
-          collected.add(r.getAs[String]("topic") + ":" +
-            new String(r.getAs[Array[Byte]]("value"), "UTF-8"))
-        }
-      }.start()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_kaflow_ckpt").toString
+    // (headers type, rows) per write call
+    val writes = scala.collection.mutable.ArrayBuffer.empty[(DataType, Seq[Row])]
+    def start() = KafkaIO.runWith(input.toDF(), app, ckpt, Some("dlq"),
+      Trigger.ProcessingTime(0L)) { (rows: DataFrame) =>
+      val captured = (rows.schema("headers").dataType, rows.collect().toSeq)
+      writes.synchronized { writes += captured }
+    }
+    def published(): Seq[String] = writes.synchronized(writes.toSeq)
+      .flatMap(_._2).map { r =>
+        def str(f: String) = Option(r.getAs[Array[Byte]](f))
+          .map(new String(_, "UTF-8")).orNull
+        s"${r.getAs[String]("topic")}:${str("key")}:${str("value")}"
+      }.sorted
+
+    val q1 = start()
     try {
       input.addData(
         KafkaRecordIn(topic = "clicks", value = """{"user_id": 7}""".getBytes),
+        KafkaRecordIn(topic = "clicks", key = "k9".getBytes, value = "not json".getBytes),
         KafkaRecordIn(topic = "other", value = """{"user_id": 8}""".getBytes))
-      q.processAllAvailable()
-      assert(collected.toArray.toSeq == Seq("out:u7"))
-    } finally q.stop()
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // One write per micro-batch: fan-out outputs and the DLQ row (raw
+    // key/value of the malformed record) together; "other" is unregistered.
+    assert(writes.size == 1)
+    assert(published() == Seq("audit:null:u7", "dlq:k9:not json", "out:null:u7"))
+    assert(writes.head._1 == DataType.fromDDL("array<struct<key:string,value:binary>>"))
+
+    // Restart from the same checkpoint: only the records added after it publish.
+    writes.synchronized(writes.clear())
+    val q2 = start()
+    try {
+      input.addData(KafkaRecordIn(topic = "clicks", value = """{"user_id": 3}""".getBytes))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(writes.size == 1)
+    assert(published() == Seq("audit:null:u3", "out:null:u3"))
   }
 
   test("streaming heavy hitters: Misra-Gries aggregate in complete mode") {
