@@ -28,13 +28,14 @@ object Tables {
     * generations: parquet TIMESTAMP(NANOS) (which Spark reads as a raw
     * long under the legacy conf, then we truncate ns→us — the same
     * truncation DuckDB applies on `CAST(ts AS TIMESTAMP)`), or a plain
-    * TIMESTAMP(MICROS) (read natively, possibly as NTZ). Normalize both
+    * TIMESTAMP(MICROS) (read natively, possibly as NTZ). The legacy conf
+    * (`spark.sql.legacy.parquet.nanosAsLong`) is set by
+    * [[graft.runtime.Sessions]] with the rest of the session. Normalize both
     * to the session-zone TIMESTAMP the rest of the library expects;
     * check_oracle.py applies the matching normalization on the DuckDB
     * side, keeping oracle parity either way.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

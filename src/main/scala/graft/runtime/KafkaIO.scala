@@ -64,12 +64,18 @@ object KafkaIO {
   private val HeadersDdl = "array<struct<key:string,value:binary>>"
 
   /** Normalize the Kafka source's `headers array<struct<key,value>>` to the
-    * engine's `map<string,binary>` record shape.
+    * engine's `map<string,binary>` record shape. Kafka lets a header key
+    * repeat; the last occurrence wins, as in a dict built from the pairs.
+    * Only that occurrence reaches `map_from_entries`, so a repeated key
+    * cannot fail the batch under any `spark.sql.mapKeyDedupPolicy`.
     */
   def normalizeHeaders(df: DataFrame): DataFrame =
-    if (df.columns.contains("headers"))
-      df.withColumn("headers", map_from_entries(col("headers")))
-    else df.withColumn("headers", lit(null).cast("map<string,binary>"))
+    if (df.columns.contains("headers")) {
+      val h = col("headers")
+      val lastOfKey = filter(h, (e, i) =>
+        !exists(slice(h, i + 2, size(h) - i - 1), _.getField("key") === e.getField("key")))
+      df.withColumn("headers", map_from_entries(lastOfKey))
+    } else df.withColumn("headers", lit(null).cast("map<string,binary>"))
 
   /** Build the streaming source for every topic the app consumes. */
   def source(spark: SparkSession, app: GraftApp, conf: KafkaConfig): DataFrame = {

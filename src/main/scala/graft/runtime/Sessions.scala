@@ -20,7 +20,9 @@ object Sessions {
 
   /** Cluster session builder: shuffle partitions sized to ~2-3 tasks per
     * core (AQE coalesces down), AQE + skew handling on, UTC timestamps,
-    * RocksDB state store for streaming state that outgrows heap.
+    * RocksDB state store for streaming state that outgrows heap, and
+    * parquet TIMESTAMP(NANOS) read as a raw long (`Tables.events`
+    * truncates it to micros).
     */
   def clusterBuilder(executors: Int, coresPerExecutor: Int): SparkSession.Builder =
     configure(SparkSession.builder()
@@ -34,4 +36,5 @@ object Sessions {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

@@ -80,13 +80,18 @@ final case class JsonSerde(schema: StructType) extends Serde {
 
   /** PERMISSIVE `from_json` yields an all-null struct (not null) for
     * malformed input, which a legitimate all-null payload also yields, so
-    * failure detection uses a corrupt-record column: populated iff the
-    * payload failed to parse as the declared schema. ONE
-    * corrupt-record-augmented `from_json` serves both outputs — the typed
-    * value is the parsed struct minus the corrupt field, the failure
-    * indicator is that field's non-nullness. Two separate parses (value
-    * and failure, different schemas) could not be merged by
-    * subexpression elimination — measurable on the ingest hot path.
+    * the default null-on-failure indicator cannot tell the two apart.
+    * This override flags failure by a corrupt-record column instead,
+    * populated iff the payload failed to parse as the declared schema;
+    * the typed value is written as the parsed struct minus that field.
+    * The optimiser does not keep that one parse: it rewrites the struct
+    * of field reads into a second `from_json` with the declared schema.
+    * In the plan of the ingest-text benchmark app's `processBatch`, the
+    * outputs ProjectExec holds both parses (the augmented one for the
+    * null check, the declared one for the value), and the FilterExec
+    * below it, which takes the pushed-down failure and handler filters,
+    * holds the same two in 23 copies. So a kept record is parsed at
+    * least twice in each of the two nodes.
     */
   override def decodeWithFailure(raw: Column): (Column, Column) = {
     val withCorrupt = StructType(schema.fields :+ StructField("__corrupt", StringType))

@@ -59,17 +59,8 @@ object Readers {
     * silently evolved table fails at plan time, not at 3 a.m. in a task.
     */
   def parquet(spark: SparkSession, path: String,
-              expect: Option[StructType] = None): DataFrame = {
-    val df = spark.read.parquet(path)
-    expect.foreach { s =>
-      val have = df.schema.map(f => f.name -> f.dataType).toMap
-      val missing = s.filter(f => !have.get(f.name).contains(f.dataType))
-      require(missing.isEmpty,
-        s"parquet at $path is missing declared columns: " +
-          missing.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
-    }
-    df
-  }
+              expect: Option[StructType] = None): DataFrame =
+    verified(spark.read.parquet(path), "parquet", path, expect)
 
   /** ORC: same contract as [[parquet]] — self-describing footer schema,
     * optional declared-schema verification. ORC is the other columnar
@@ -78,14 +69,20 @@ object Readers {
     * warehouse land here instead of parquet.
     */
   def orc(spark: SparkSession, path: String,
-          expect: Option[StructType] = None): DataFrame = {
-    val df = spark.read.orc(path)
+          expect: Option[StructType] = None): DataFrame =
+    verified(spark.read.orc(path), "orc", path, expect)
+
+  /** `df` unchanged when every declared column is in its footer schema
+    * with the declared type; fails naming each one that is not.
+    */
+  private def verified(df: DataFrame, format: String, path: String,
+                       expect: Option[StructType]): DataFrame = {
     expect.foreach { s =>
       val have = df.schema.map(f => f.name -> f.dataType).toMap
-      val missing = s.filter(f => !have.get(f.name).contains(f.dataType))
-      require(missing.isEmpty,
-        s"orc at $path is missing declared columns: " +
-          missing.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
+      val bad = s.filter(f => !have.get(f.name).contains(f.dataType))
+      require(bad.isEmpty,
+        s"$format at $path has missing or mistyped declared columns: " +
+          bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
     }
     df
   }

@@ -23,14 +23,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * operator drops them; a keyed null would otherwise become a live
   * cell). Out rows: (group, labelA, labelB, n).
   */
-class AgreementCellProcessor(ttl: TTLConfig)
+class AgreementCellProcessor
     extends StatefulProcessor[(String, String, String),
       (String, String, String), (String, String, String, Long)] {
 
   @transient private var n: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, ttl)
+    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: (String, String, String),
@@ -44,12 +44,11 @@ class AgreementCellProcessor(ttl: TTLConfig)
 }
 
 object AgreementStream {
-  def cells(ds: Dataset[(String, String, String)],
-            ttl: TTLConfig = TTLConfig.NONE):
+  def cells(ds: Dataset[(String, String, String)]):
       Dataset[(String, String, String, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(identity).transformWithState(
-      new AgreementCellProcessor(ttl), StreamModes.forTtl(ttl),
+      new AgreementCellProcessor, TimeMode.None(),
       OutputMode.Append())
   }
 }

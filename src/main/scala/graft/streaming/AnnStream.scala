@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * Shape: each record is assigned its `nprobe` nearest coarse-quantizer
   * cells NARROWLY (distance/sort/slice over the centroid literal — no
   * shuffle, append-mode safe); a transformWithState processor keyed by the
-  * cell id holds the recent vectors of that cell (ListState). A new
+  * cell id holds the vectors stored in that cell (ListState). A new
   * arrival scores exact cosine against its probed cells' members and
   * emits the hits with `cosine >= minCosine` (top `k` per cell). The
   * record is STORED only in its own (rank-1) cell — probes read, the home
@@ -28,8 +28,8 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * State hygiene at scale (same story as [[NearDupStream]]):
   *  - per-cell membership cap (`maxPerCell`): a degenerate cell cannot
   *    grow state without bound — beyond the cap new arrivals still score
-  *    against the stored sample but are not stored;
-  *  - TTL expires members so state tracks the recent corpus (RocksDB).
+  *    against the stored sample but are not stored, so state is at most
+  *    `maxPerCell` members per cell (RocksDB).
   */
 object AnnStream {
 
@@ -37,12 +37,13 @@ object AnnStream {
   case class StoredVec(vecId: Long, vec: Seq[Double])
   case class NeighborHit(queryId: Long, neighborId: Long, cell: Long, cosine: Double)
 
-  class CellProcessor(maxPerCell: Int, minCosine: Double, k: Int, ttl: TTLConfig)
+  class CellProcessor(maxPerCell: Int, minCosine: Double, k: Int)
       extends StatefulProcessor[Long, CellVec, NeighborHit] {
     @transient private var members: ListState[StoredVec] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[StoredVec]("members", Encoders.product[StoredVec], ttl)
+      members = getHandle.getListState[StoredVec]("members", Encoders.product[StoredVec],
+        TTLConfig.NONE)
 
     private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
       val n = math.min(a.length, b.length)
@@ -111,8 +112,7 @@ object AnnStream {
                 idCol: String, vecCol: String,
                 k: Int = 10, nprobe: Int = 1,
                 maxPerCell: Int = 4096,
-                minCosine: Double = -1.0,
-                ttl: TTLConfig = TTLConfig.NONE): Dataset[NeighborHit] = {
+                minCosine: Double = -1.0): Dataset[NeighborHit] = {
     import vecs.sparkSession.implicits._
     import graft.functions.VectorFunctions.toDouble
     val cents: Seq[(Long, Seq[Double])] = centroids
@@ -139,7 +139,7 @@ object AnnStream {
         col("vecId"), col("vec"))
       .as[CellVec]
       .groupByKey(_.cell)
-      .transformWithState(new CellProcessor(maxPerCell, minCosine, k, ttl),
-        StreamModes.forTtl(ttl), OutputMode.Append())
+      .transformWithState(new CellProcessor(maxPerCell, minCosine, k),
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -9,29 +9,28 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * group has accumulated k members; the first k-1 arrivals of a group
   * wait in state and flush together the moment member k arrives, and
   * everything after streams through immediately. A group that never
-  * reaches k never releases (TTL expires its buffer) — exactly the
+  * reaches k never releases — exactly the
   * suppression semantics, applied at arrival time instead of in a
   * batch pass.
   *
   * State hygiene: per group, one counter plus AT MOST k-1 buffered ids
   * (the buffer clears on release and is never repopulated) — state is
-  * bounded by (k-1)·|groups| regardless of stream length, and TTL
-  * reclaims groups that stall below k.
+  * bounded by (k-1)·|groups| regardless of stream length.
   *
   * Emission: (qi_key, id, rn) with rn the group admission index —
   * deterministic given arrival order; the released ID SET equals the
   * batch operator's level-0 release over the union of batches
   * (StreamingSpec pins it, including across a checkpoint restart).
   */
-class AnonymityGateProcessor(k: Int, ttl: TTLConfig)
+class AnonymityGateProcessor(k: Int)
     extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
 
   @transient private var cnt: ValueState[Long] = _
   @transient private var buf: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    cnt = getHandle.getValueState[Long]("cnt", Encoders.scalaLong, ttl)
-    buf = getHandle.getListState[Long]("buf", Encoders.scalaLong, ttl)
+    cnt = getHandle.getValueState[Long]("cnt", Encoders.scalaLong, TTLConfig.NONE)
+    buf = getHandle.getListState[Long]("buf", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String, rows: Iterator[(String, Long)],
@@ -64,11 +63,10 @@ object AnonymityGateStream {
   /** Wire the gate onto a (qi_key, id) stream; emits (qi_key, id, rn)
     * for admitted records only, in Append mode.
     */
-  def apply(ds: Dataset[(String, Long)], k: Int,
-            ttl: TTLConfig = TTLConfig.NONE): Dataset[(String, Long, Long)] = {
+  def apply(ds: Dataset[(String, Long)], k: Int): Dataset[(String, Long, Long)] = {
     import ds.sparkSession.implicits._
     require(k > 0, s"k must be positive, got $k")
-    ds.groupByKey(_._1).transformWithState(new AnonymityGateProcessor(k, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+    ds.groupByKey(_._1).transformWithState(new AnonymityGateProcessor(k),
+      TimeMode.None(), OutputMode.Append())
   }
 }

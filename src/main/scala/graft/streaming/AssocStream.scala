@@ -9,8 +9,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * CDC feed — and every co-membership pair is emitted EXACTLY ONCE,
   * the moment its second item arrives. State per basket is its
   * distinct item set, bounded by the basket-size contract (the same
-  * contract that bounds the batch pair space); `ttl` reclaims
-  * abandoned baskets.
+  * contract that bounds the batch pair space).
   *
   * Duplicate (basket, item) lines are absorbed by the state-set check
   * — membership semantics, the batch `distinct()`. Pairs are emitted
@@ -23,13 +22,13 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * In rows: (basket, item). Out: (item_a, item_b), a < b, once per
   * realized co-membership.
   */
-class BasketPairProcessor(ttl: TTLConfig)
+class BasketPairProcessor
     extends StatefulProcessor[String, (String, String), (String, String)] {
 
   @transient private var items: ListState[String] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    items = getHandle.getListState[String]("items", Encoders.STRING, ttl)
+    items = getHandle.getListState[String]("items", Encoders.STRING, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -59,12 +58,11 @@ class BasketPairProcessor(ttl: TTLConfig)
 }
 
 object AssocStream {
-  def basketPairs(ds: Dataset[(String, String)],
-                  ttl: TTLConfig = TTLConfig.NONE):
+  def basketPairs(ds: Dataset[(String, String)]):
       Dataset[(String, String)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new BasketPairProcessor(ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new BasketPairProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 }

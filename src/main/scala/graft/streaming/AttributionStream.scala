@@ -31,8 +31,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * Out rows: (user, convTsMicros, model, channel, creditPpm,
   * valueCents).
   */
-class MultiTouchProcessor(windowMicros: Long, maxTouches: Int,
-                          ttl: TTLConfig)
+class MultiTouchProcessor(windowMicros: Long, maxTouches: Int)
     extends StatefulProcessor[String,
       (String, Long, Long, String, Boolean, Long),
       (String, Long, String, String, Long, Long)] {
@@ -42,9 +41,9 @@ class MultiTouchProcessor(windowMicros: Long, maxTouches: Int,
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     pending = getHandle.getListState[(Long, Long, String)]("pending",
-      Encoders.product[(Long, Long, String)], ttl)
+      Encoders.product[(Long, Long, String)], TTLConfig.NONE)
     lastConv = getHandle.getValueState[Long]("lastConv",
-      Encoders.scalaLong, ttl)
+      Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -103,14 +102,13 @@ class MultiTouchProcessor(windowMicros: Long, maxTouches: Int,
 
 object AttributionStream {
   def credits(ds: Dataset[(String, Long, Long, String, Boolean, Long)],
-              windowMicros: Long, maxTouches: Int = 1000,
-              ttl: TTLConfig = TTLConfig.NONE):
+              windowMicros: Long, maxTouches: Int = 1000):
       Dataset[(String, Long, String, String, Long, Long)] = {
     require(windowMicros > 0, "windowMicros must be positive")
     require(maxTouches > 0, "maxTouches must be positive")
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new MultiTouchProcessor(windowMicros, maxTouches, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new MultiTouchProcessor(windowMicros, maxTouches),
+      TimeMode.None(), OutputMode.Append())
   }
 }

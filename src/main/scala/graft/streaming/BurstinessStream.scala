@@ -26,14 +26,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Out rows: (entity, group, tsMicros, gapMicros) — one per input row
   * that has a predecessor.
   */
-class GapProcessor(ttl: TTLConfig)
+class GapProcessor
     extends StatefulProcessor[(String, String), (String, String, Long, Long),
       (String, String, Long, Long)] {
 
   @transient private var last: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    last = getHandle.getValueState[Long]("last", Encoders.scalaLong, ttl)
+    last = getHandle.getValueState[Long]("last", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: (String, String),
@@ -53,11 +53,10 @@ class GapProcessor(ttl: TTLConfig)
 }
 
 object BurstinessStream {
-  def gaps(ds: Dataset[(String, String, Long, Long)],
-           ttl: TTLConfig = TTLConfig.NONE):
+  def gaps(ds: Dataset[(String, String, Long, Long)]):
       Dataset[(String, String, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(r => (r._1, r._2)).transformWithState(
-      new GapProcessor(ttl), StreamModes.forTtl(ttl), OutputMode.Append())
+      new GapProcessor, TimeMode.None(), OutputMode.Append())
   }
 }

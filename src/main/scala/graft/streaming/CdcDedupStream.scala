@@ -24,21 +24,20 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * The batch op's rare-chunk bound (df ≤ maxDf) becomes the per-bucket
   * membership cap here: a boilerplate chunk's bucket stops growing at
   * `maxPerChunk` (beyond it, arrivals still pair against the stored
-  * sample but are not stored), and TTL expires buckets so state tracks
-  * the recent corpus — the same two bounds [[NearDupStream]] applies
-  * to band buckets.
+  * sample but are not stored) — the same bound [[NearDupStream]]
+  * applies to band buckets.
   */
 object CdcDedupStream {
 
   case class ChunkDoc(chunkHash: Long, docId: Long)
   case class ChunkPair(idA: Long, idB: Long, chunkHash: Long)
 
-  class ChunkBucketProcessor(maxPerChunk: Int, ttl: TTLConfig)
+  class ChunkBucketProcessor(maxPerChunk: Int)
       extends StatefulProcessor[Long, ChunkDoc, ChunkPair] {
     @transient private var seen: ListState[java.lang.Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState[java.lang.Long]("seen", Encoders.LONG, ttl)
+      seen = getHandle.getListState[java.lang.Long]("seen", Encoders.LONG, TTLConfig.NONE)
 
     override def handleInputRows(chunkHash: Long, rows: Iterator[ChunkDoc],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[ChunkPair] = {
@@ -67,8 +66,7 @@ object CdcDedupStream {
     * where shared-chunk counts or Jaccard are needed.
     */
   def candidates(docs: DataFrame, idCol: String, textCol: String,
-                 w: Int = 3, divisor: Long = 8L, maxPerChunk: Int = 64,
-                 ttl: TTLConfig = TTLConfig.NONE): Dataset[ChunkPair] = {
+                 w: Int = 3, divisor: Long = 8L, maxPerChunk: Int = 64): Dataset[ChunkPair] = {
     import docs.sparkSession.implicits._
     docs
       .select(col(idCol).cast("long").as("docId"),
@@ -77,7 +75,7 @@ object CdcDedupStream {
       .select(col("docId"), explode(array_distinct(col("hs"))).as("chunkHash"))
       .select(col("chunkHash"), col("docId")).as[ChunkDoc]
       .groupByKey(_.chunkHash)
-      .transformWithState(new ChunkBucketProcessor(maxPerChunk, ttl),
-        StreamModes.forTtl(ttl), OutputMode.Append())
+      .transformWithState(new ChunkBucketProcessor(maxPerChunk),
+        TimeMode.None(), OutputMode.Append())
   }
 }

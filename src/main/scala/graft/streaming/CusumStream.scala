@@ -24,15 +24,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * @param slackMicro CUSUM allowance per tick, micro-units (k·10⁶)
   * @param hMicro     alarm threshold on S, micro-units
   */
-class CusumProcessor(muMicro: Long, slackMicro: Long, hMicro: Long,
-                     ttl: TTLConfig)
+class CusumProcessor(muMicro: Long, slackMicro: Long, hMicro: Long)
     extends StatefulProcessor[String, (String, Long, Long),
       (String, Long, Long, Long, Boolean)] {
 
   @transient private var cum: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    cum = getHandle.getValueState[Long]("cum", Encoders.scalaLong, ttl)
+    cum = getHandle.getValueState[Long]("cum", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
@@ -52,12 +51,11 @@ class CusumProcessor(muMicro: Long, slackMicro: Long, hMicro: Long,
 
 object CusumStream {
   def monitor(ds: Dataset[(String, Long, Long)], muMicro: Long,
-              slackMicro: Long, hMicro: Long,
-              ttl: TTLConfig = TTLConfig.NONE):
+              slackMicro: Long, hMicro: Long):
       Dataset[(String, Long, Long, Long, Boolean)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new CusumProcessor(muMicro, slackMicro, hMicro, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new CusumProcessor(muMicro, slackMicro, hMicro),
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * (key, anchor_bucket, n_events, decayed_weight) — n_events counts
   * the LIVE buckets (ages ≥ 63 pruned, matching batch).
   */
-class DecayProcessor(halfLifeDays: Int, ttl: TTLConfig)
+class DecayProcessor(halfLifeDays: Int)
     extends StatefulProcessor[String, (String, Long),
       (String, Long, Long, Long)] {
 
@@ -32,7 +32,7 @@ class DecayProcessor(halfLifeDays: Int, ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     hist = getHandle.getListState[(Long, Long)]("hist",
-      Encoders.product[(Long, Long)], ttl)
+      Encoders.product[(Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -56,12 +56,11 @@ class DecayProcessor(halfLifeDays: Int, ttl: TTLConfig)
 }
 
 object DecayStream {
-  def trending(ds: Dataset[(String, Long)], halfLifeDays: Int,
-               ttl: TTLConfig = TTLConfig.NONE):
+  def trending(ds: Dataset[(String, Long)], halfLifeDays: Int):
       Dataset[(String, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new DecayProcessor(halfLifeDays, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new DecayProcessor(halfLifeDays),
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -24,14 +24,14 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * @param sx2Ref trained Σx² (BigInt — x² can pass a long)
   */
 class EwmaProcessor(memory: Int, l: Int, nRef: Long, totRef: Long,
-                    sx2Ref: BigInt, ttl: TTLConfig)
+                    sx2Ref: BigInt)
     extends StatefulProcessor[String, (String, Long, Long),
       (String, Long, Long, Long, Boolean)] {
 
   @transient private var window: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    window = getHandle.getListState[Long]("window", Encoders.scalaLong, ttl)
+    window = getHandle.getListState[Long]("window", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
@@ -62,12 +62,11 @@ class EwmaProcessor(memory: Int, l: Int, nRef: Long, totRef: Long,
 
 object EwmaStream {
   def monitor(ds: Dataset[(String, Long, Long)], memory: Int, l: Int,
-              nRef: Long, totRef: Long, sx2Ref: BigInt,
-              ttl: TTLConfig = TTLConfig.NONE):
+              nRef: Long, totRef: Long, sx2Ref: BigInt):
       Dataset[(String, Long, Long, Long, Boolean)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new EwmaProcessor(memory, l, nRef, totRef, sx2Ref, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new EwmaProcessor(memory, l, nRef, totRef, sx2Ref),
+      TimeMode.None(), OutputMode.Append())
   }
 }

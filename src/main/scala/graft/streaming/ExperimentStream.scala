@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In rows: (variant, converted). Out per touched variant per batch:
   * (variant, n, conversions, rate_ppm, wilson_lo_ppm, wilson_hi_ppm).
   */
-class ConversionProcessor(ttl: TTLConfig)
+class ConversionProcessor
     extends StatefulProcessor[String, (String, Boolean),
       (String, Long, Long, Long, Long, Long)] {
 
@@ -28,7 +28,7 @@ class ConversionProcessor(ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getValueState[(Long, Long)]("counts",
-      Encoders.product[(Long, Long)], ttl)
+      Encoders.product[(Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -44,12 +44,11 @@ class ConversionProcessor(ttl: TTLConfig)
 }
 
 object ExperimentStream {
-  def conversions(ds: Dataset[(String, Boolean)],
-                  ttl: TTLConfig = TTLConfig.NONE):
+  def conversions(ds: Dataset[(String, Boolean)]):
       Dataset[(String, Long, Long, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new ConversionProcessor(ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new ConversionProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 }

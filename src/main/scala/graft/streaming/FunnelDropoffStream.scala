@@ -50,8 +50,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * In rows: (entity, tsUs, type). Out rows: (entity, flag) with
   * flag ∈ {seen, s1, r2, saw2, r3, saw3}, each emitted once.
   */
-class FunnelDropoffProcessor(steps: Seq[String], gapsMinutes: Seq[Long],
-                             ttl: TTLConfig)
+class FunnelDropoffProcessor(steps: Seq[String], gapsMinutes: Seq[Long])
     extends StatefulProcessor[String, (String, Long, String),
       (String, String)] {
 
@@ -72,7 +71,7 @@ class FunnelDropoffProcessor(steps: Seq[String], gapsMinutes: Seq[Long],
   @transient private var st: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getListState[Long]("funnel", Encoders.scalaLong, ttl)
+    st = getHandle.getListState[Long]("funnel", Encoders.scalaLong, TTLConfig.NONE)
 
   override def handleInputRows(key: String,
       rows: Iterator[(String, Long, String)],
@@ -118,14 +117,13 @@ class FunnelDropoffProcessor(steps: Seq[String], gapsMinutes: Seq[Long],
 
 object FunnelDropoffStream {
   def flags(ds: Dataset[(String, Long, String)], steps: Seq[String],
-            gapsMinutes: Seq[Long],
-            ttl: TTLConfig = TTLConfig.NONE): Dataset[(String, String)] = {
+            gapsMinutes: Seq[Long]): Dataset[(String, String)] = {
     require(steps.size == 3, s"declared funnel must have 3 steps, got $steps")
     require(gapsMinutes.size == 2 && gapsMinutes.forall(_ > 0),
       s"need one positive max-gap per step transition, got $gapsMinutes")
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new FunnelDropoffProcessor(steps, gapsMinutes, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new FunnelDropoffProcessor(steps, gapsMinutes),
+      TimeMode.None(), OutputMode.Append())
   }
 }

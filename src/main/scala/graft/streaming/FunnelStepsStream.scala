@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Out rows: (user, stage_idx [1-based], step, tsMicros,
   * gap_micros — from the previous stage's stamp; null for stage 1).
   */
-class FunnelStepsProcessor(steps: Array[String], ttl: TTLConfig)
+class FunnelStepsProcessor(steps: Array[String])
     extends StatefulProcessor[String, (String, Long, Long, String),
       (String, Long, String, Long, Option[Long])] {
 
@@ -36,7 +36,7 @@ class FunnelStepsProcessor(steps: Array[String], ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getValueState[(Long, Long, Long)]("funnel",
-      Encoders.product[(Long, Long, Long)], ttl)
+      Encoders.product[(Long, Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -63,15 +63,14 @@ class FunnelStepsProcessor(steps: Array[String], ttl: TTLConfig)
 }
 
 object FunnelStepsStream {
-  def track(ds: Dataset[(String, Long, Long, String)], steps: Seq[String],
-            ttl: TTLConfig = TTLConfig.NONE):
+  def track(ds: Dataset[(String, Long, Long, String)], steps: Seq[String]):
       Dataset[(String, Long, String, Long, Option[Long])] = {
     require(steps.nonEmpty && steps.distinct.size == steps.size,
       s"steps must be non-empty and distinct: $steps")
     import ds.sparkSession.implicits._
     val arr = steps.toArray
     ds.groupByKey(_._1).transformWithState(
-      new FunnelStepsProcessor(arr, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new FunnelStepsProcessor(arr),
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -11,12 +11,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * never-converted) against the FIRST signup, within `windowMicros`.
   *
   * State is one (firstSignup, firstPurchase) pair per user (RocksDB
-  * point read+write per row; TTL reclaims one-legged users who never
-  * complete the funnel). TTL CAVEAT: expiry applies to completed
-  * users' state equally — a late duplicate arriving after expiry
-  * re-opens the funnel and can emit a second verdict, so set the TTL
-  * beyond the duplicate/late-data horizon (the exactly-once contract
-  * holds while state lives). Within a micro-batch rows apply in
+  * point read+write per row); it lives as long as the query, which is
+  * what makes the verdict exactly-once. Within a micro-batch rows apply in
   * (tsMicros, isPurchase) order; arrival is assumed in event order
   * across batches (the ingest-twin contract) — the firsts are fixed at
   * first sighting, so a later duplicate cannot flip a verdict.
@@ -25,7 +21,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (userId, firstSignupMicros, firstPurchaseMicros, purchasedAfter,
   * converted — purchase after signup within the window).
   */
-class FunnelProcessor(windowMicros: Long, ttl: TTLConfig)
+class FunnelProcessor(windowMicros: Long)
     extends StatefulProcessor[Long, (Long, Long, String),
       (Long, Long, Long, Boolean, Boolean)] {
 
@@ -35,7 +31,7 @@ class FunnelProcessor(windowMicros: Long, ttl: TTLConfig)
     // (firstSignupMicros | -1, firstPurchaseMicros | -1); emission is
     // implied by both being set when the second one arrives
     st = getHandle.getValueState[(Long, Long)]("firsts",
-      Encoders.product[(Long, Long)], ttl)
+      Encoders.product[(Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: Long, rows: Iterator[(Long, Long, String)],
@@ -62,12 +58,11 @@ class FunnelProcessor(windowMicros: Long, ttl: TTLConfig)
 }
 
 object FunnelStream {
-  def conversions(ds: Dataset[(Long, Long, String)], windowMicros: Long,
-                  ttl: TTLConfig = TTLConfig.NONE):
+  def conversions(ds: Dataset[(Long, Long, String)], windowMicros: Long):
       Dataset[(Long, Long, Long, Boolean, Boolean)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new FunnelProcessor(windowMicros, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new FunnelProcessor(windowMicros),
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   *
   * Out rows: (bin, n_a, n_b).
   */
-class HistBinProcessor(ttl: TTLConfig)
+class HistBinProcessor
     extends StatefulProcessor[Long, (Long, Boolean, Long),
       (Long, Long, Long)] {
 
@@ -32,7 +32,7 @@ class HistBinProcessor(ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     counts = getHandle.getValueState[(Long, Long)]("counts",
-      Encoders.product[(Long, Long)], ttl)
+      Encoders.product[(Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: Long,
@@ -51,12 +51,11 @@ class HistBinProcessor(ttl: TTLConfig)
 object HistDriftStream {
 
   /** Wire the processor onto a (bin, isA, countDelta) stream. */
-  def bins(ds: Dataset[(Long, Boolean, Long)],
-           ttl: TTLConfig = TTLConfig.NONE):
+  def bins(ds: Dataset[(Long, Boolean, Long)]):
       Dataset[(Long, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new HistBinProcessor(ttl), StreamModes.forTtl(ttl),
+      new HistBinProcessor, TimeMode.None(),
       OutputMode.Append())
   }
 

@@ -30,21 +30,20 @@ import graft.operators.Multimodal
   * State hygiene at scale: per-bucket membership is capped
   * (`maxPerBucket` — a viral identical image fills its buckets once;
   * later arrivals still verify against the stored sample but are not
-  * stored, the [[Multimodal.imageNearDupPairs]] cap contract) and
-  * entries TTL-expire so state tracks the recent stream.
+  * stored, the [[Multimodal.imageNearDupPairs]] cap contract).
   */
 object ImageDedupStream {
 
   case class BandImage(bk: Long, id: Long, h: Long)
   case class ImagePair(idA: Long, idB: Long, hamming: Long)
 
-  class BandBucketProcessor(maxHamming: Int, maxPerBucket: Int, ttl: TTLConfig)
+  class BandBucketProcessor(maxHamming: Int, maxPerBucket: Int)
       extends StatefulProcessor[Long, BandImage, ImagePair] {
     @transient private var seen: ListState[(Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       seen = getHandle.getListState[(Long, Long)]("seen",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), ttl)
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
 
     override def handleInputRows(bk: Long, rows: Iterator[BandImage],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[ImagePair] = {
@@ -75,12 +74,11 @@ object ImageDedupStream {
     * dedup downstream).
     */
   def pairs(images: DataFrame, idCol: String, payloadCol: String,
-            maxHamming: Int = 10, maxPerBucket: Int = 64,
-            ttl: TTLConfig = TTLConfig.NONE): Dataset[ImagePair] =
+            maxHamming: Int = 10, maxPerBucket: Int = 64): Dataset[ImagePair] =
     pairsFromHashes(
       images.select(col(idCol).cast("long").as("id"),
         Multimodal.bmpAHash(col(payloadCol)).as("h")),
-      maxHamming, maxPerBucket, ttl)
+      maxHamming, maxPerBucket)
 
   /** [[pairs]] for AUDIO payloads: the 64-bit frame-energy fingerprint
     * ([[Multimodal.wavEnergyHash]], real PCM WAV decode) through the
@@ -88,20 +86,19 @@ object ImageDedupStream {
     * a recent one?" at arrival time.
     */
   def audioPairs(clips: DataFrame, idCol: String, payloadCol: String,
-                 maxHamming: Int = 10, maxPerBucket: Int = 64,
-                 ttl: TTLConfig = TTLConfig.NONE): Dataset[ImagePair] =
+                 maxHamming: Int = 10, maxPerBucket: Int = 64): Dataset[ImagePair] =
     pairsFromHashes(
       clips.select(col(idCol).cast("long").as("id"),
         Multimodal.wavEnergyHash(col(payloadCol)).as("h")),
-      maxHamming, maxPerBucket, ttl)
+      maxHamming, maxPerBucket)
 
   /** Hash-generic entry: wire the band-bucket processor onto any
     * (id long, h long) frame of 64-bit fingerprints — the stage every
     * perceptual modality shares once its narrow hash kernel has run.
     * Null hashes (undecodable payloads) drop out.
     */
-  def pairsFromHashes(hashed: DataFrame, maxHamming: Int, maxPerBucket: Int,
-                      ttl: TTLConfig): Dataset[ImagePair] = {
+  def pairsFromHashes(hashed: DataFrame, maxHamming: Int,
+                      maxPerBucket: Int): Dataset[ImagePair] = {
     import hashed.sparkSession.implicits._
     hashed
       .filter(col("h").isNotNull)
@@ -113,7 +110,7 @@ object ImageDedupStream {
       .select(col("bk"), col("id"), col("h"))
       .as[BandImage]
       .groupByKey(_.bk)
-      .transformWithState(new BandBucketProcessor(maxHamming, maxPerBucket, ttl),
-        StreamModes.forTtl(ttl), OutputMode.Append())
+      .transformWithState(new BandBucketProcessor(maxHamming, maxPerBucket),
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -23,13 +23,13 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * In rows: (group, id) — raw non-negative ids; hashing happens here
   * with the house affine map (same as the batch operator).
   */
-class KmvProcessor(k: Int, ttl: TTLConfig)
+class KmvProcessor(k: Int)
     extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
 
   @transient private var sk: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    sk = getHandle.getListState[Long]("sk", Encoders.scalaLong, ttl)
+    sk = getHandle.getListState[Long]("sk", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -62,13 +62,12 @@ object KmvStream {
   /** Wire the processor onto a (group, id) stream. `k` as in the batch
     * operator (256–4096 → ~2–8% relative error once saturated).
     */
-  def ndv(ds: Dataset[(String, Long)], k: Int,
-          ttl: TTLConfig = TTLConfig.NONE):
+  def ndv(ds: Dataset[(String, Long)], k: Int):
       Dataset[(String, Long, Long)] = {
     require(k >= 2, s"k must be >= 2, got $k")
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new KmvProcessor(k, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new KmvProcessor(k),
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -18,14 +18,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (StreamingSpec pins the parity). LATE rows — event time behind the
   * held state — are enriched against the state but do NOT regress it:
   * enrichment is processing-order, monotone, the same contract as the
-  * other ingest twins. `ttl` bounds state lifetime for keys that go
-  * quiet (the usable-TTL house rule).
+  * other ingest twins.
   *
   * In/out rows: (key, tsMicros, id, value) →
   * (key, tsMicros, id, value, prev = Some((prevTs, prevId, prevValue)),
   * gapMicros = Some(ts - prevTs)) — None for a key's first observation.
   */
-class LocfProcessor(ttl: TTLConfig)
+class LocfProcessor
     extends StatefulProcessor[String, (String, Long, Long, Double),
       (String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])] {
 
@@ -33,7 +32,7 @@ class LocfProcessor(ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     last = getHandle.getValueState[(Long, Long, Double)]("last",
-      Encoders.product[(Long, Long, Double)], ttl)
+      Encoders.product[(Long, Long, Double)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -56,11 +55,10 @@ class LocfProcessor(ttl: TTLConfig)
 }
 
 object LocfStream {
-  def enrichWithPrev(ds: Dataset[(String, Long, Long, Double)],
-                     ttl: TTLConfig = TTLConfig.NONE):
+  def enrichWithPrev(ds: Dataset[(String, Long, Long, Double)]):
       Dataset[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new LocfProcessor(ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+    ds.groupByKey(_._1).transformWithState(new LocfProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -27,9 +27,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   *  - per-bucket membership is capped (`maxPerBucket`) so a degenerate
   *    bucket (boilerplate text) cannot grow state without bound — beyond
   *    the cap new arrivals still emit pairs against the stored sample but
-  *    are not stored;
-  *  - a TTL (`ttl`) expires bucket entries so state tracks the recent
-  *    corpus, not all history (RocksDB-backed, per state API v2).
+  *    are not stored (RocksDB-backed, per state API v2).
   */
 object NearDupStream {
 
@@ -37,12 +35,12 @@ object NearDupStream {
   case class StoredDoc(docId: Long, sig: Seq[Long])
   case class CandidatePair(idA: Long, idB: Long, band: String, estJaccard: Double)
 
-  class BandBucketProcessor(maxPerBucket: Int, minEstJaccard: Double, ttl: TTLConfig)
+  class BandBucketProcessor(maxPerBucket: Int, minEstJaccard: Double)
       extends StatefulProcessor[String, BandDoc, CandidatePair] {
     @transient private var seen: ListState[StoredDoc] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState[StoredDoc]("seen", Encoders.product[StoredDoc], ttl)
+      seen = getHandle.getListState[StoredDoc]("seen", Encoders.product[StoredDoc], TTLConfig.NONE)
 
     private def estimate(a: Seq[Long], b: Seq[Long]): Double = {
       val n = math.min(a.length, b.length)
@@ -85,8 +83,7 @@ object NearDupStream {
   def candidates(docs: DataFrame, idCol: String, textCol: String,
                  numHashes: Int = 8, rowsPerBand: Int = 2, k: Int = 3,
                  maxPerBucket: Int = 64,
-                 minEstJaccard: Double = 0.0,
-                 ttl: TTLConfig = TTLConfig.NONE): Dataset[CandidatePair] = {
+                 minEstJaccard: Double = 0.0): Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
     docs
       .select(col(idCol).cast("long").as("docId"),
@@ -96,8 +93,8 @@ object NearDupStream {
         explode(Dedup.bandKeysCol(col("sig"), numHashes, rowsPerBand)).as("band"))
       .as[BandDoc]
       .groupByKey(_.band)
-      .transformWithState(new BandBucketProcessor(maxPerBucket, minEstJaccard, ttl),
-        StreamModes.forTtl(ttl), OutputMode.Append())
+      .transformWithState(new BandBucketProcessor(maxPerBucket, minEstJaccard),
+        TimeMode.None(), OutputMode.Append())
   }
 
   /** Streaming benchmark decontamination: per incoming document, one row

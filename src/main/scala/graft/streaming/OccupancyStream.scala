@@ -29,13 +29,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In rows: (tickHour, delta). Out per touched tick per batch:
   * (tick_hour, delta) — the tick's cumulative boundary sum.
   */
-class TickDeltaProcessor(ttl: TTLConfig)
+class TickDeltaProcessor
     extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
 
   @transient private var total: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    total = getHandle.getValueState[Long]("total", Encoders.scalaLong, ttl)
+    total = getHandle.getValueState[Long]("total", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
@@ -81,11 +81,10 @@ object OccupancyStream {
     * emissions upsert the per-tick delta table whose running sum is
     * the occupancy curve.
     */
-  def tickDeltas(ds: Dataset[(Long, Long)],
-                 ttl: TTLConfig = TTLConfig.NONE): Dataset[(Long, Long)] = {
+  def tickDeltas(ds: Dataset[(Long, Long)]): Dataset[(Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new TickDeltaProcessor(ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new TickDeltaProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 }

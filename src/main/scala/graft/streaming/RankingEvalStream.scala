@@ -31,7 +31,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * In rows: (query, rank, isRelevant). Out rows: (query, n_seen,
   * n_rel_k, first_rel_rank, ap_numerator_ppm).
   */
-class RankingEvalProcessor(k: Int, ttl: TTLConfig)
+class RankingEvalProcessor(k: Int)
     extends StatefulProcessor[String, (String, Long, Boolean),
       (String, Long, Long, Long, Long)] {
 
@@ -46,7 +46,7 @@ class RankingEvalProcessor(k: Int, ttl: TTLConfig)
   @transient private var st: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getListState[Long]("slots", Encoders.scalaLong, ttl)
+    st = getHandle.getListState[Long]("slots", Encoders.scalaLong, TTLConfig.NONE)
 
   override def handleInputRows(key: String,
       rows: Iterator[(String, Long, Boolean)],
@@ -81,12 +81,11 @@ class RankingEvalProcessor(k: Int, ttl: TTLConfig)
 }
 
 object RankingEvalStream {
-  def partials(ds: Dataset[(String, Long, Boolean)], k: Int,
-               ttl: TTLConfig = TTLConfig.NONE):
+  def partials(ds: Dataset[(String, Long, Boolean)], k: Int):
       Dataset[(String, Long, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new RankingEvalProcessor(k, ttl), StreamModes.forTtl(ttl),
+      new RankingEvalProcessor(k), TimeMode.None(),
       OutputMode.Append())
   }
 }

@@ -26,14 +26,14 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * Out rows: (user, last_us, f, m_cents). Sums raise on Long overflow
   * rather than wrap (the stream addExact rule).
   */
-class RfmProcessor(ttl: TTLConfig)
+class RfmProcessor
     extends StatefulProcessor[String, (String, Long, Long),
       (String, Long, Long, Long)] {
 
   @transient private var st: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getListState[Long]("rfm", Encoders.scalaLong, ttl)
+    st = getHandle.getListState[Long]("rfm", Encoders.scalaLong, TTLConfig.NONE)
 
   override def handleInputRows(key: String,
       rows: Iterator[(String, Long, Long)],
@@ -60,12 +60,11 @@ class RfmProcessor(ttl: TTLConfig)
 }
 
 object RfmStream {
-  def users(ds: Dataset[(String, Long, Long)],
-            ttl: TTLConfig = TTLConfig.NONE):
+  def users(ds: Dataset[(String, Long, Long)]):
       Dataset[(String, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new RfmProcessor(ttl), StreamModes.forTtl(ttl),
+      new RfmProcessor, TimeMode.None(),
       OutputMode.Append())
   }
 }

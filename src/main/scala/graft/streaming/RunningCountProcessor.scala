@@ -5,8 +5,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
 
 /** transformWithState (state API v2) example: per-key running counts with
   * typed ValueState. This is the forward path for B14 arbitrary state —
-  * unlike mapGroupsWithState, state variables are named/typed/evolvable
-  * and the operator supports state TTL natively.
+  * unlike mapGroupsWithState, state variables are named/typed/evolvable.
   */
 class RunningCountProcessor extends StatefulProcessor[Long, (Long, Double), (Long, Long, Double)] {
   @transient private var count: org.apache.spark.sql.streaming.ValueState[Long] = _

@@ -35,7 +35,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In rows: (key, tsMicros, seq, op, value).
   * Out rows: (key, value, valid_from, valid_to, version, is_current).
   */
-class Scd2Processor(deleteOp: String, ttl: TTLConfig)
+class Scd2Processor(deleteOp: String)
     extends StatefulProcessor[String, (String, Long, Long, String, Long),
       (String, Long, Long, Option[Long], Long, Boolean)] {
 
@@ -46,7 +46,7 @@ class Scd2Processor(deleteOp: String, ttl: TTLConfig)
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getValueState[(Long, Long, Long, Long, Long, Long, Boolean)](
       "scd2", Encoders.product[(Long, Long, Long, Long, Long, Long, Boolean)],
-      ttl)
+      TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -92,11 +92,11 @@ object Scd2Stream {
     * stream; emissions upsert a (key, version)-keyed SCD2 table.
     */
   def history(ds: Dataset[(String, Long, Long, String, Long)],
-              deleteOp: String = "D", ttl: TTLConfig = TTLConfig.NONE):
+              deleteOp: String = "D"):
       Dataset[(String, Long, Long, Option[Long], Long, Boolean)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new Scd2Processor(deleteOp, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new Scd2Processor(deleteOp),
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -41,7 +41,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * types. Out rows: (entity, ante, cons, minGapUs), with
   * cons = "*" marking "ante first seen" (gap 0, unused).
   */
-class SeqPatternsCellProcessor(alphabet: Seq[String], ttl: TTLConfig)
+class SeqPatternsCellProcessor(alphabet: Seq[String])
     extends StatefulProcessor[String, (String, Long, String),
       (String, String, String, Long)] {
 
@@ -59,8 +59,8 @@ class SeqPatternsCellProcessor(alphabet: Seq[String], ttl: TTLConfig)
   @transient private var minGap: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    lastSeen = getHandle.getListState[Long]("lastSeen", Encoders.scalaLong, ttl)
-    minGap = getHandle.getListState[Long]("minGap", Encoders.scalaLong, ttl)
+    lastSeen = getHandle.getListState[Long]("lastSeen", Encoders.scalaLong, TTLConfig.NONE)
+    minGap = getHandle.getListState[Long]("minGap", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -159,8 +159,7 @@ class SeqPatternsCellProcessor(alphabet: Seq[String], ttl: TTLConfig)
   * seen-markers — [[graft.operators.SeqPatterns.triplesFromCells]]
   * over the upserted table IS the readout.
   */
-class SeqPatternsL3Processor(alphabet: Seq[String], maxGapMinutes: Long,
-                             ttl: TTLConfig)
+class SeqPatternsL3Processor(alphabet: Seq[String], maxGapMinutes: Long)
     extends StatefulProcessor[String, (String, Long, String),
       (String, String, String, String, Long)] {
 
@@ -176,9 +175,9 @@ class SeqPatternsL3Processor(alphabet: Seq[String], maxGapMinutes: Long,
   @transient private var minG: ListState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    lastSeen = getHandle.getListState[Long]("lastSeen3", Encoders.scalaLong, ttl)
-    validB = getHandle.getListState[Long]("validB", Encoders.scalaLong, ttl)
-    minG = getHandle.getListState[Long]("minG", Encoders.scalaLong, ttl)
+    lastSeen = getHandle.getListState[Long]("lastSeen3", Encoders.scalaLong, TTLConfig.NONE)
+    validB = getHandle.getListState[Long]("validB", Encoders.scalaLong, TTLConfig.NONE)
+    minG = getHandle.getListState[Long]("minG", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -274,8 +273,7 @@ object SeqPatternsStream {
         s") — restart with the checkpoint's original $params or a " +
         "fresh checkpoint")
 
-  def cells(ds: Dataset[(String, Long, String)], alphabet: Seq[String],
-            ttl: TTLConfig = TTLConfig.NONE):
+  def cells(ds: Dataset[(String, Long, String)], alphabet: Seq[String]):
       Dataset[(String, String, String, Long)] = {
     require(alphabet.nonEmpty && alphabet.size <= 16,
       s"alphabet must be 1..16 types, got ${alphabet.size}")
@@ -284,7 +282,7 @@ object SeqPatternsStream {
         "alphabet containing it would corrupt the rulesFromCells readout")
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new SeqPatternsCellProcessor(alphabet, ttl), StreamModes.forTtl(ttl),
+      new SeqPatternsCellProcessor(alphabet), TimeMode.None(),
       OutputMode.Append())
   }
 
@@ -294,7 +292,7 @@ object SeqPatternsStream {
     * written under (it is folded into the state fingerprint).
     */
   def cells3(ds: Dataset[(String, Long, String)], alphabet: Seq[String],
-             maxGapMinutes: Long, ttl: TTLConfig = TTLConfig.NONE):
+             maxGapMinutes: Long):
       Dataset[(String, String, String, String, Long)] = {
     require(alphabet.nonEmpty && alphabet.size <= 8,
       s"alphabet must be 1..8 types (k^3 state), got ${alphabet.size}")
@@ -305,7 +303,7 @@ object SeqPatternsStream {
       s"maxGapMinutes must be positive, got $maxGapMinutes")
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new SeqPatternsL3Processor(alphabet, maxGapMinutes, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new SeqPatternsL3Processor(alphabet, maxGapMinutes),
+      TimeMode.None(), OutputMode.Append())
   }
 }

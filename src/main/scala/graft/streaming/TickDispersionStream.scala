@@ -22,14 +22,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (`unix_micros(ts) div stepMicros`; Math.floorDiv on the JVM side).
   * Out rows: (group, tick, n).
   */
-class TickCellProcessor(ttl: TTLConfig)
+class TickCellProcessor
     extends StatefulProcessor[(String, Long), (String, Long),
       (String, Long, Long)] {
 
   @transient private var n: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, ttl)
+    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: (String, Long),
@@ -43,12 +43,11 @@ class TickCellProcessor(ttl: TTLConfig)
 }
 
 object TickDispersionStream {
-  def cells(ds: Dataset[(String, Long)],
-            ttl: TTLConfig = TTLConfig.NONE):
+  def cells(ds: Dataset[(String, Long)]):
       Dataset[(String, Long, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(identity).transformWithState(
-      new TickCellProcessor(ttl), StreamModes.forTtl(ttl),
+      new TickCellProcessor, TimeMode.None(),
       OutputMode.Append())
   }
 }

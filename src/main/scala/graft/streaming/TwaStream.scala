@@ -24,13 +24,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * not per-record stream code. LATE rows (event time at or behind the
   * held observation and not a same-instant supersede) are emitted
   * with the unchanged running stats and do NOT regress state — the
-  * monotone contract of the other ingest twins. `ttl` bounds state
-  * for keys that go quiet.
+  * monotone contract of the other ingest twins.
   *
   * In/out: (key, tsMicros, id, cents) → (key, tsMicros, id, cents,
   * spanUs, twaCents = Some(sumNum div spanUs) once anything has held).
   */
-class TwaProcessor(ttl: TTLConfig)
+class TwaProcessor
     extends StatefulProcessor[String, (String, Long, Long, Long),
       (String, Long, Long, Long, Long, Option[Long])] {
 
@@ -38,7 +37,7 @@ class TwaProcessor(ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getValueState[(Long, Long, Long, Long, Long)]("twa",
-      Encoders.product[(Long, Long, Long, Long, Long)], ttl)
+      Encoders.product[(Long, Long, Long, Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -71,11 +70,10 @@ class TwaProcessor(ttl: TTLConfig)
 }
 
 object TwaStream {
-  def runningTwa(ds: Dataset[(String, Long, Long, Long)],
-                 ttl: TTLConfig = TTLConfig.NONE):
+  def runningTwa(ds: Dataset[(String, Long, Long, Long)]):
       Dataset[(String, Long, Long, Long, Long, Option[Long])] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new TwaProcessor(ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+    ds.groupByKey(_._1).transformWithState(new TwaProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 }

@@ -31,20 +31,19 @@ import graft.functions.expressions.{DeletionVariants, LevenshteinWithin}
   *
   * State hygiene at scale: per-bucket membership is capped
   * (`maxPerBucket` — beyond it new arrivals still verify against the
-  * stored sample but are not stored) and entries TTL-expire so state
-  * tracks the recent dictionary, not all history.
+  * stored sample but are not stored).
   */
 object TypoStream {
 
   case class VariantStr(h: Long, s: String)
   case class TypoPair(sA: String, sB: String, dist: Int)
 
-  class VariantBucketProcessor(tau: Int, maxPerBucket: Int, ttl: TTLConfig)
+  class VariantBucketProcessor(tau: Int, maxPerBucket: Int)
       extends StatefulProcessor[Long, VariantStr, TypoPair] {
     @transient private var seen: ListState[String] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState[String]("seen", Encoders.STRING, ttl)
+      seen = getHandle.getListState[String]("seen", Encoders.STRING, TTLConfig.NONE)
 
     override def handleInputRows(h: Long, rows: Iterator[VariantStr],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[TypoPair] = {
@@ -75,8 +74,7 @@ object TypoStream {
     * s_b; possibly repeated across shared variants — dedup downstream).
     */
   def pairs(strs: DataFrame, strCol: String, tau: Int,
-            maxPerBucket: Int = 64,
-            ttl: TTLConfig = TTLConfig.NONE): Dataset[TypoPair] = {
+            maxPerBucket: Int = 64): Dataset[TypoPair] = {
     import strs.sparkSession.implicits._
     val variantsCol = ColumnBridge.column(
       DeletionVariants(ColumnBridge.expression(col(strCol).cast("string")), tau))
@@ -87,7 +85,7 @@ object TypoStream {
       .select(xxhash64(col("v")).as("h"), col("s"))
       .as[VariantStr]
       .groupByKey(_.h)
-      .transformWithState(new VariantBucketProcessor(tau, maxPerBucket, ttl),
-        StreamModes.forTtl(ttl), OutputMode.Append())
+      .transformWithState(new VariantBucketProcessor(tau, maxPerBucket),
+        TimeMode.None(), OutputMode.Append())
   }
 }

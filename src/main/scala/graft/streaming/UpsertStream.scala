@@ -19,12 +19,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * arrivals, the batch count(*) contract) but cannot regress the
   * snapshot. Batch == stream parity under any arrival order is pinned
   * in StreamingSpec, including delete-then-reinsert and duplicate
-  * (ts, seq) stamps. `ttl` bounds state for keys gone quiet.
+  * (ts, seq) stamps.
   *
   * In rows: (key, tsMicros, seq, op, value).
   * Out rows: (key, tsMicros, seq, value, live, nChanges).
   */
-class UpsertProcessor(deleteOp: String, ttl: TTLConfig)
+class UpsertProcessor(deleteOp: String)
     extends StatefulProcessor[String, (String, Long, Long, String, Long),
       (String, Long, Long, Long, Boolean, Long)] {
 
@@ -32,7 +32,7 @@ class UpsertProcessor(deleteOp: String, ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     win = getHandle.getValueState[(Long, Long, String, Long, Long)]("win",
-      Encoders.product[(Long, Long, String, Long, Long)], ttl)
+      Encoders.product[(Long, Long, String, Long, Long)], TTLConfig.NONE)
   }
 
   override def handleInputRows(key: String,
@@ -74,11 +74,11 @@ class UpsertProcessor(deleteOp: String, ttl: TTLConfig)
 
 object UpsertStream {
   def compact(ds: Dataset[(String, Long, Long, String, Long)],
-              deleteOp: String = "D", ttl: TTLConfig = TTLConfig.NONE):
+              deleteOp: String = "D"):
       Dataset[(String, Long, Long, Long, Boolean, Long)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1).transformWithState(
-      new UpsertProcessor(deleteOp, ttl),
-      StreamModes.forTtl(ttl), OutputMode.Append())
+      new UpsertProcessor(deleteOp),
+      TimeMode.None(), OutputMode.Append())
   }
 }

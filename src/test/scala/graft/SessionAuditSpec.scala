@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and planner strategy is installed by [[GraftExtensions]]. A second
   * session builder, a runtime function registrar, or a runtime
   * strategy-list mutation fails this spec, so the config that is tested,
-  * verified, benched and shipped cannot drift apart again. Likewise every
+  * verified, benched and shipped cannot drift apart again; for the same
+  * reason no code outside the factory sets a session conf. Likewise every
   * local checkpoint and every count-guarded broadcast goes through
   * `graft.runtime.Materialize`, so the materialisation policy has one
   * home.
@@ -21,6 +22,7 @@ class SessionAuditSpec extends AnyFunSuite {
   private val builderCall = "SparkSession" + ".builder"
   private val registrar = "Function" + "Registrar"
   private val strategyList = "extra" + "Strategies"
+  private val confSet = ".conf" + ".set("
   private val materializer = "src/main/scala/graft/runtime/Materialize.scala"
   private val checkpointCall = ".local" + "Checkpoint("
   private val broadcastGuard = "count() " + "<="
@@ -53,6 +55,12 @@ class SessionAuditSpec extends AnyFunSuite {
     assert(inFactory.nonEmpty, s"$factory no longer builds sessions")
     assert(elsewhere.isEmpty,
       s"session built outside the factory (use Sessions.local): ${elsewhere.mkString("; ")}")
+  }
+
+  test("only graft/runtime/Sessions.scala sets a session conf in src/main") {
+    val elsewhere = sites(confSet, mainSources).filterNot(_.startsWith(factory + ":"))
+    assert(elsewhere.isEmpty,
+      s"session conf set outside the factory (add it to Sessions): ${elsewhere.mkString("; ")}")
   }
 
   test("GraftExtensions is the only function and strategy registration path") {

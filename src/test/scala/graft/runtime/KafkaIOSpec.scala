@@ -28,14 +28,16 @@ class KafkaIOSpec extends SparkSpec {
   test("normalizeHeaders converts the source's array<struct> to map<string,binary>") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val df = Seq(Tuple1(Seq(("h1", "v1".getBytes), ("h2", "v2".getBytes))))
+    val df = Seq(Tuple1(Seq(("h1", "v1".getBytes), ("h2", "v2".getBytes))),
+        // Kafka allows a repeated header key: the last occurrence wins
+        Tuple1(Seq(("a", "1".getBytes), ("b", "2".getBytes), ("a", "3".getBytes))))
       .toDF("headers")
       .select(transform(col("headers"),
         e => struct(e.getField("_1").as("key"), e.getField("_2").as("value"))).as("headers"))
-    val out = KafkaIO.normalizeHeaders(df).collect()(0)
-      .getAs[Map[String, Array[Byte]]]("headers")
-    assert(new String(out("h1"), "UTF-8") == "v1")
-    assert(new String(out("h2"), "UTF-8") == "v2")
+    val rows = KafkaIO.normalizeHeaders(df).collect()
+      .map(_.getAs[Map[String, Array[Byte]]]("headers")
+        .map { case (k, v) => k -> new String(v, "UTF-8") })
+    assert(rows.toSeq == Seq(Map("h1" -> "v1", "h2" -> "v2"), Map("b" -> "2", "a" -> "3")))
     // absent headers column → null map column of the right type
     val no = KafkaIO.normalizeHeaders(Seq(1).toDF("x"))
     assert(no.schema("headers").dataType.simpleString == "map<string,binary>")
