@@ -47,23 +47,13 @@ def connect(sf_dir):
         con.execute(f"SET memory_limit='{mem}'")
     for t in TABLES:
         # driver testdata ships single files; Spark-generated scale dirs
-        # (tools/GenData) are directories of part files — glob those
+        # (tools/GenData) are directories of part files — glob those. Both
+        # share graft.Tables' declared schemas, so the views need no type
+        # fixups (events.ts and the date columns are TIMESTAMP either way).
         p = Path(sf_dir, f"{t}.parquet")
         src = f"{p}/*.parquet" if p.is_dir() else str(p)
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
-        if t == "events":
-            # driver files carry timestamp[ns]; tools/GenData writes raw
-            # int64 nanos (mirroring Spark's nanosAsLong read path) —
-            # normalize to TIMESTAMP with the same ns->us truncation as
-            # Tables.events (timestamp_micros(ts div 1000))
-            (ts_type,) = [r[1] for r in con.execute(
-                "DESCRIBE events").fetchall() if r[0] == "ts"]
-            if ts_type == "BIGINT":
-                con.execute(
-                    "CREATE OR REPLACE VIEW events AS SELECT * REPLACE "
-                    f"(make_timestamp(ts // 1000) AS ts) "
-                    f"FROM read_parquet('{src}')")
     return con
 
 

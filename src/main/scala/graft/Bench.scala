@@ -64,8 +64,8 @@ object Bench {
       elapsed
     }
 
-    // Dev loop: SPARK_GRAFT_ONLY=q90_mad,q40_ngram_jaccard benches a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // Dev loop: SPARK_GRAFT_ONLY=q90,q40 benches a subset (SparkEntry.selected).
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
     // Headline drift is loud, and BEFORE the multi-minute run: a
     // renamed/dropped query (or a typo in the list) must not silently
     // shrink the driver-visible compact line. Full runs fail hard;
@@ -87,9 +87,7 @@ object Bench {
     // property of the plan; extra runs damp machine noise on the
     // shingle-heavy queries when the time budget allows.
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
+    val results = SparkEntry.selected(only).map { case (name, fn) =>
       val times = Seq.fill(nRuns)(run(name, fn)).filter(_ >= 0)
       name -> (if (times.isEmpty) -1.0 else times.min)
     }

@@ -32,4 +32,11 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     groups.flatMap(_.oracle).toMap
+
+  /** `queries` by name, filtered by Verify's and Bench's `SPARK_GRAFT_ONLY` value, if set:
+    * each query whose name contains one of its comma-separated entries. */
+  def selected(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val subs = only.map(_.split(",").map(_.trim).filter(_.nonEmpty))
+    queries.toSeq.sortBy(_._1).filter { case (name, _) => subs.forall(_.exists(name.contains)) }
+  }
 }

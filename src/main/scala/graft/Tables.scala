@@ -2,20 +2,42 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.immutable.ListMap
 
 /** Loaders for the driver-generated TPC-H-ish testdata (TESTDATA.md).
   *
-  * All queries go through here so scan options stay in one place. The tables
-  * are plain parquet; at 100 TB these would be partitioned/bucketed table
-  * paths, and this is the single seam where that changes.
+  * All queries go through here so the table format stays in one place. The
+  * tables are plain parquet; at 100 TB these would be partitioned/bucketed
+  * table paths, and this is the single seam where that changes.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** Exactly the schemas `spark.read.parquet` infers from the driver files. `load`
+    * reads with them (no inference job) and `tools/GenData` writes through them; a
+    * column Spark cannot read as its declared type fails the scan, naming it. */
+  private val declared = ListMap(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, " +
+      "c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, " +
+      "p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
+  val names: Seq[String] = declared.keys.toSeq
+  def schema(name: String): StructType = StructType.fromDDL(declared(name))
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schema(name)).parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -24,29 +46,9 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** The events table's `ts` encoding has varied across driver testdata
-    * generations: parquet TIMESTAMP(NANOS) (which Spark reads as a raw
-    * long under the legacy conf, then we truncate ns→us — the same
-    * truncation DuckDB applies on `CAST(ts AS TIMESTAMP)`), or a plain
-    * TIMESTAMP(MICROS) (read natively, possibly as NTZ). The legacy conf
-    * (`spark.sql.legacy.parquet.nanosAsLong`) is set by
-    * [[graft.runtime.Sessions]] with the rest of the session. Normalize both
-    * to the session-zone TIMESTAMP the rest of the library expects;
-    * check_oracle.py applies the matching normalization on the DuckDB
-    * side, keeping oracle parity either way.
-    */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val df = load(s, d, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        // Micros-encoded file: NTZ→LTZ cast in the UTC session is a
-        // wall-clock no-op; keeps the column type identical across
-        // testdata generations.
-        df.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
+  /** `ts` as a session-zone TIMESTAMP, a wall-clock no-op in the UTC session. */
+  def events(s: SparkSession, d: String): DataFrame =
+    load(s, d, "events").withColumn("ts", col("ts").cast("timestamp"))
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

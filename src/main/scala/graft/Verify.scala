@@ -10,13 +10,7 @@ object Verify {
     val spark = Sessions.local(cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (same contract as Bench): comma-separated
-    // substrings; unset = run everything (the driver's mode).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.contains)) }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY")).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

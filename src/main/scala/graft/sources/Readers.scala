@@ -54,16 +54,16 @@ object Readers {
         .select(col("__r.*")))
   }
 
-  /** Parquet: schema comes from the footer (no inference pass); an
-    * optional expected schema is VERIFIED (names ⊆ footer schema) so a
-    * silently evolved table fails at plan time, not at 3 a.m. in a task.
+  /** Parquet: the footer schema, read by one Spark job per call ([[graft.Tables]]
+    * declares its schemas instead); an optional expected schema is VERIFIED (names
+    * ⊆ footer schema) so a silently evolved table fails at plan time, not at 3 a.m. in a task.
     */
   def parquet(spark: SparkSession, path: String,
               expect: Option[StructType] = None): DataFrame =
     verified(spark.read.parquet(path), "parquet", path, expect)
 
-  /** ORC: same contract as [[parquet]] — self-describing footer schema,
-    * optional declared-schema verification. ORC is the other columnar
+  /** ORC: same contract as [[parquet]] — footer schema (read on the driver,
+    * no job), optional declared-schema verification. ORC is the other columnar
     * lake format Spark reads natively (predicate pushdown, column
     * pruning, vectorized scan all apply); pipelines migrating a Hive-era
     * warehouse land here instead of parquet.

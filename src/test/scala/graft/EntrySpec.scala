@@ -23,18 +23,47 @@ class EntrySpec extends SparkSpec {
     // q175 red in round 5). House rule: any collected list ships as
     // array_join(…, ' ') — this guard makes the rule structural for the
     // whole surface. Schema construction only; nothing executes.
+    //
+    // The same loop guards the fixed cost of building a query: no job may
+    // start from graft.Tables (every table is read with its declared
+    // schema, so no parquet footer-inference job runs). Eager seams start
+    // jobs from elsewhere, and those are allowed.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     val dir = "/root/testdata/sf0.001"
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, f) =>
+    val sc = spark.sparkContext
+    val tableJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        job.stageInfos.map(_.name).filter(_.contains("Tables.scala")).foreach { site =>
+          val query = Option(job.properties).map(_.getProperty("spark.job.description"))
+          tableJobs.add(s"${query.orNull}: $site")
+        }
+    }
+    sc.addSparkListener(listener)
+    val bad = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, f) =>
+      sc.setJobDescription(name)
       f(spark, dir).schema.fields.collect {
         case fld if fld.dataType.isInstanceOf[ArrayType] ||
             fld.dataType.isInstanceOf[MapType] ||
             fld.dataType.isInstanceOf[StructType] =>
           s"$name.${fld.name}: ${fld.dataType.simpleString}"
       }
+    } finally {
+      sc.setJobDescription(null)
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
     }
     assert(bad.isEmpty,
       s"non-atomic output columns (driver pandas sort would fail):\n${bad.mkString("\n")}")
+    assert(tableJobs.isEmpty, s"${tableJobs.size} jobs started from graft.Tables while " +
+      s"queries were built:\n${tableJobs.toArray.mkString("\n")}")
+  }
+
+  test("SPARK_GRAFT_ONLY selects queries by name substring, sorted by name") {
+    val names = SparkEntry.selected(Some("q36_exact, q03_")).map(_._1)
+    assert(names == Seq("q03_revenue_by_nation", "q36_exact_dedup"))
+    assert(SparkEntry.selected(None).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
   }
 
   test("oracle SQL references only the driver's table names") {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * reason no code outside the factory sets a session conf. Likewise every
   * local checkpoint and every count-guarded broadcast goes through
   * `graft.runtime.Materialize`, so the materialisation policy has one
-  * home.
+  * home. The same walk keeps every source file text: no literal NUL,
+  * which makes grep and git diff treat a file as binary.
   *
   * The searched names are assembled from pieces so this file never
   * matches itself.
@@ -71,6 +72,11 @@ class SessionAuditSpec extends AnyFunSuite {
     val strategyEdits = sites(strategyList, mainSources ++ sessionSpec)
     assert(strategyEdits.isEmpty,
       s"planner strategies installed outside GraftExtensions: ${strategyEdits.mkString("; ")}")
+  }
+
+  test("no source file contains a NUL character") {
+    val nuls = sites("\u0000", mainSources ++ testSources)
+    assert(nuls.isEmpty, s"literal NUL (write a unicode escape): ${nuls.mkString("; ")}")
   }
 
   test("only graft/runtime/Materialize.scala checkpoints or count-guards a broadcast") {
