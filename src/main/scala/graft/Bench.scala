@@ -58,8 +58,9 @@ object Bench {
       // (r12: untouched queries late in the alphabet drifted 2-3x while
       // their isolated cells were flat). Dropping them here is BETWEEN
       // queries, outside the timed window; every query still computes
-      // from the parquet inputs.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // from the parquet inputs. Blocking, so the drop has finished
+      // before the next query's clock starts.
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       if (gcBarrier) System.gc() // damp cross-query heap pressure in long runs
       elapsed
     }

@@ -29,7 +29,7 @@ object Packing {
     * Zero-token documents get last_bin == first_bin (the bin their
     * start offset falls in — they occupy no tokens but still carry a
     * position), the same clamp the streaming counterpart
-    * [[graft.streaming.PackingProcessor]] applies; batch == stream on
+    * [[graft.streaming.PackingStream]] applies; batch == stream on
     * every row, zero-token rows included (StreamingSpec parity pin).
     */
   def packPositions(df: DataFrame, orderCol: String, nTokensCol: String,

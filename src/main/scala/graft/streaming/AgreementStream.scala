@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch agreement audit
   * ([[graft.operators.Agreement.cohenKappa]]): the contingency CELLS
@@ -23,32 +22,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * operator drops them; a keyed null would otherwise become a live
   * cell). Out rows: (group, labelA, labelB, n).
   */
-class AgreementCellProcessor
-    extends StatefulProcessor[(String, String, String),
-      (String, String, String), (String, String, String, Long)] {
-
-  @transient private var n: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: (String, String, String),
-      rows: Iterator[(String, String, String)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, String, String, Long)] = {
-    val total = (if (n.exists()) n.get() else 0L) + rows.size
-    n.update(total)
-    Iterator.single((key._1, key._2, key._3, total))
-  }
-}
-
 object AgreementStream {
   def cells(ds: Dataset[(String, String, String)]):
       Dataset[(String, String, String, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(identity).transformWithState(
-      new AgreementCellProcessor, TimeMode.None(),
-      OutputMode.Append())
+    KeyedFold(ds)(identity, "n", Encoders.scalaLong) { (key, n, rows) =>
+      val total = n.getOrElse(0L) + rows.size
+      (total, Iterator.single((key._1, key._2, key._3, total)))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch burstiness monitor
   * ([[graft.operators.Burstiness.interArrivalCv2]]): the stateful part
@@ -26,37 +25,19 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Out rows: (entity, group, tsMicros, gapMicros) — one per input row
   * that has a predecessor.
   */
-class GapProcessor
-    extends StatefulProcessor[(String, String), (String, String, Long, Long),
-      (String, String, Long, Long)] {
-
-  @transient private var last: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    last = getHandle.getValueState[Long]("last", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: (String, String),
-      rows: Iterator[(String, String, Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, String, Long, Long)] = {
-    var prev = if (last.exists()) Some(last.get()) else None
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long, Long)]
-    for (r <- rows.toArray.sortBy(x => (x._3, x._4))) {
-      prev.foreach(p => out += ((key._1, key._2, r._3, r._3 - p)))
-      prev = Some(r._3)
-    }
-    prev.foreach(last.update)
-    out.iterator
-  }
-}
-
 object BurstinessStream {
   def gaps(ds: Dataset[(String, String, Long, Long)]):
       Dataset[(String, String, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(r => (r._1, r._2)).transformWithState(
-      new GapProcessor, TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(r => (r._1, r._2), "last", Encoders.scalaLong) {
+      (key, last, rows) =>
+        var prev = last
+        val out = rows.toArray.sortBy(x => (x._3, x._4)).flatMap { r =>
+          val gap = prev.map(p => (key._1, key._2, r._3, r._3 - p))
+          prev = Some(r._3)
+          gap
+        }
+        (prev.get, out.iterator)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TTLConfig}
+import org.apache.spark.sql.Dataset
 
 /** Ingest-time twin of the batch half-life decay
   * ([[graft.operators.Decay.halfLifeCounts]]): per-key trending
@@ -22,45 +21,25 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * (key, anchor_bucket, n_events, decayed_weight) — n_events counts
   * the LIVE buckets (ages ≥ 63 pruned, matching batch).
   */
-class DecayProcessor(halfLifeDays: Int)
-    extends StatefulProcessor[String, (String, Long),
-      (String, Long, Long, Long)] {
-
-  private val bucketUs = halfLifeDays.toLong * 24L * 3600L * 1000000L
-
-  @transient private var hist: ListState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    hist = getHandle.getListState[(Long, Long)]("hist",
-      Encoders.product[(Long, Long)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long, Long)] = {
-    val counts = scala.collection.mutable.Map.empty[Long, Long]
-    hist.get().foreach { case (b, c) => counts(b) = c }
-    for ((_, ts) <- rows) {
-      val b = Math.floorDiv(ts, bucketUs)
-      counts(b) = counts.getOrElse(b, 0L) + 1L
-    }
-    val anchor = counts.keys.max
-    val live = counts.toSeq.filter { case (b, _) => anchor - b < 63 }
-      .sortBy(_._1)
-    hist.put(live.toArray)
-    val n = live.map(_._2).sum
-    val decayed = live.map { case (b, c) => c >> (anchor - b) }.sum
-    Iterator.single((key, anchor, n, decayed))
-  }
-}
-
 object DecayStream {
   def trending(ds: Dataset[(String, Long)], halfLifeDays: Int):
       Dataset[(String, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new DecayProcessor(halfLifeDays),
-      TimeMode.None(), OutputMode.Append())
+    val bucketUs = halfLifeDays.toLong * 24L * 3600L * 1000000L
+    KeyedFold(ds)(_._1, "hist", newSequenceEncoder[Seq[(Long, Long)]]) {
+      (key, hist, rows) =>
+        val counts = scala.collection.mutable.Map.empty[Long, Long]
+        hist.foreach(_.foreach { case (b, c) => counts(b) = c })
+        for ((_, ts) <- rows) {
+          val b = Math.floorDiv(ts, bucketUs)
+          counts(b) = counts.getOrElse(b, 0L) + 1L
+        }
+        val anchor = counts.keys.max
+        val live = counts.toSeq.filter { case (b, _) => anchor - b < 63 }
+          .sortBy(_._1)
+        val n = live.map(_._2).sum
+        val decayed = live.map { case (b, c) => c >> (anchor - b) }.sum
+        (live, Iterator.single((key, anchor, n, decayed)))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Streaming per-domain quota — the q148 C4-style cap as a stream: pass
   * through at most `k` documents per key over the life of the stream,
@@ -13,36 +12,20 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * output is deterministic under shuffle (the batch parity in
   * StreamingSpec replays the same batches in order).
   */
-class DomainQuotaProcessor(k: Int)
-    extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
-
-  @transient private var used: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    used = getHandle.getValueState[Long]("used", Encoders.scalaLong,
-      TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[(String, Long, Long)] = {
-    var c = if (used.exists()) used.get() else 0L
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    for (id <- rows.map(_._2).toArray.sorted if c < k) {
-      c += 1
-      out += ((key, id, c))
-    }
-    used.update(c)
-    out.iterator
-  }
-}
-
 object DomainQuotaProcessor {
-  /** Wire the processor onto a (domain, doc_id) stream; emits
+  /** Wire the quota onto a (domain, doc_id) stream; emits
     * (domain, doc_id, rn) for admitted documents only.
     */
   def apply(ds: Dataset[(String, Long)], k: Int): Dataset[(String, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new DomainQuotaProcessor(k),
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "used", Encoders.scalaLong) { (key, used, rows) =>
+      var c = used.getOrElse(0L)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+      for (id <- rows.map(_._2).toArray.sorted if c < k) {
+        c += 1
+        out += ((key, id, c))
+      }
+      (c, out.iterator)
+    }
   }
 }

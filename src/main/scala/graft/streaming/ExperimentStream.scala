@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch A/B readout
   * ([[graft.operators.Experiment.conversionLift]]): per-variant running
@@ -20,35 +19,17 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In rows: (variant, converted). Out per touched variant per batch:
   * (variant, n, conversions, rate_ppm, wilson_lo_ppm, wilson_hi_ppm).
   */
-class ConversionProcessor
-    extends StatefulProcessor[String, (String, Boolean),
-      (String, Long, Long, Long, Long, Long)] {
-
-  @transient private var st: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    st = getHandle.getValueState[(Long, Long)]("counts",
-      Encoders.product[(Long, Long)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Boolean)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long, Long, Long, Long)] = {
-    var (n, conv) = if (st.exists()) st.get() else (0L, 0L)
-    rows.foreach { case (_, c) => n += 1L; if (c) conv += 1L }
-    st.update((n, conv))
-    val (lo, hi) = graft.operators.Experiment.wilsonPpmRef(conv, n)
-    Iterator.single((key, n, conv, (conv * 1000000L) / n, lo, hi))
-  }
-}
-
 object ExperimentStream {
   def conversions(ds: Dataset[(String, Boolean)]):
       Dataset[(String, Long, Long, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new ConversionProcessor,
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "counts", Encoders.product[(Long, Long)]) {
+      (key, st, rows) =>
+        var (n, conv) = st.getOrElse((0L, 0L))
+        rows.foreach { case (_, c) => n += 1L; if (c) conv += 1L }
+        val (lo, hi) = graft.operators.Experiment.wilsonPpmRef(conv, n)
+        ((n, conv),
+          Iterator.single((key, n, conv, (conv * 1000000L) / n, lo, hi)))
+    }
   }
 }

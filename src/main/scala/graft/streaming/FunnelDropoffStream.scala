@@ -1,15 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TTLConfig}
 
 /** Ingest-time twin of the declared-funnel drop-off readout
   * ([[graft.operators.SeqPatterns.funnelDropoff3]]) — B130's streaming
-  * side: the live funnel dashboard. Per-entity state is FOUR longs
-  * (fingerprint head, latest s1 timestamp, latest valid-prefix s2
-  * timestamp, and a monotone flag bitmask) — never the event history.
+  * side: the live funnel dashboard. Per-entity state is one typed
+  * (fingerprint, latest s1 timestamp, latest valid-prefix s2
+  * timestamp, monotone flag bitmask) tuple — never the event history.
   *
-  * Why the recurrence is exact (the [[SeqPatternsL3Processor]]
+  * Why the recurrence is exact (the [[SeqPatternsStream.cells3]]
   * valid-prefix argument, extended to per-step gaps and the relaxed
   * "saw" predicates):
   *  - reach2: at an s2-arrival t, the LATEST prior s1 minimizes
@@ -50,71 +49,6 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * In rows: (entity, tsUs, type). Out rows: (entity, flag) with
   * flag ∈ {seen, s1, r2, saw2, r3, saw3}, each emitted once.
   */
-class FunnelDropoffProcessor(steps: Seq[String], gapsMinutes: Seq[Long])
-    extends StatefulProcessor[String, (String, Long, String),
-      (String, String)] {
-
-  private val Seq(s1, s2, s3) = steps
-  private val g2 = gapsMinutes(0) * 60000000L
-  private val g3 = gapsMinutes(1) * 60000000L
-  private val stepSet = steps.toSet
-  // gaps are part of the semantics validB was written under; folded
-  // through the hash chain separately so distinct (g2, g3) pairs
-  // never share a fingerprint (a linear g2*31+g3 pre-mix would)
-  private val fp: Long =
-    SeqPatternsStream.alphabetFingerprint(steps, g2, g3)
-
-  private val FlagNames = Array("seen", "s1", "r2", "saw2", "r3", "saw3")
-  private val SEEN = 1L; private val HA1 = 2L; private val R2 = 4L
-  private val SAW2 = 8L; private val R3 = 16L; private val SAW3 = 32L
-
-  @transient private var st: ListState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getListState[Long]("funnel", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long, String)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, String)] = {
-    // state layout: [fp, lastS1, validB, flagBits]
-    val raw = st.get().toArray
-    val fresh = raw.isEmpty
-    if (!fresh && (raw.length != 4 || raw(0) != fp))
-      throw SeqPatternsStream.stateContractError("FunnelDropoffStream",
-        key, "steps/gaps", fp, "4", raw.length.toString, raw.headOption)
-    var lastS1 = if (fresh) Long.MinValue else raw(1)
-    var validB = if (fresh) Long.MinValue else raw(2)
-    var bits = if (fresh) 0L else raw(3)
-    val bits0 = bits
-    val byTs = rows.toArray.collect {
-      case (_, ts, t) if stepSet.contains(t) => (ts, t)
-    }.groupBy(_._1).toSeq.sortBy(_._1)
-    for ((ts, group) <- byTs) {
-      val types = group.map(_._2).toSet
-      // 1. s3 role against valid-prefix s2's from strictly earlier
-      //    groups
-      if (types.contains(s3) && validB != Long.MinValue && validB < ts) {
-        bits |= SAW3
-        if (ts - validB <= g3) bits |= R3
-      }
-      // 2. s2 role against s1's from strictly earlier groups
-      if (types.contains(s2) && lastS1 != Long.MinValue && lastS1 < ts) {
-        bits |= SAW2
-        if (ts - lastS1 <= g2) { bits |= R2; if (ts > validB) validB = ts }
-      }
-      // 3. the group joins the state
-      if (types.contains(s1)) { bits |= HA1; if (ts > lastS1) lastS1 = ts }
-      bits |= SEEN
-    }
-    st.clear()
-    Seq(fp, lastS1, validB, bits).foreach(st.appendValue)
-    FlagNames.indices.iterator
-      .filter(i => (bits & (1L << i)) != 0 && (bits0 & (1L << i)) == 0)
-      .map(i => (key, FlagNames(i)))
-  }
-}
-
 object FunnelDropoffStream {
   def flags(ds: Dataset[(String, Long, String)], steps: Seq[String],
             gapsMinutes: Seq[Long]): Dataset[(String, String)] = {
@@ -122,8 +56,48 @@ object FunnelDropoffStream {
     require(gapsMinutes.size == 2 && gapsMinutes.forall(_ > 0),
       s"need one positive max-gap per step transition, got $gapsMinutes")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new FunnelDropoffProcessor(steps, gapsMinutes),
-      TimeMode.None(), OutputMode.Append())
+    val Seq(s1, s2, s3) = steps
+    val g2 = gapsMinutes(0) * 60000000L
+    val g3 = gapsMinutes(1) * 60000000L
+    val stepSet = steps.toSet
+    // gaps are part of the semantics validB was written under; folded
+    // through the hash chain separately so distinct (g2, g3) pairs
+    // never share a fingerprint (a linear g2*31+g3 pre-mix would)
+    val fp = SeqPatternsStream.alphabetFingerprint(steps, g2, g3)
+    val flagNames = Array("seen", "s1", "r2", "saw2", "r3", "saw3")
+    val SEEN = 1L; val HA1 = 2L; val R2 = 4L
+    val SAW2 = 8L; val R3 = 16L; val SAW3 = 32L
+    // (fingerprint, lastS1, validB, flagBits)
+    KeyedFold(ds)(_._1, "funnel", Encoders.product[(Long, Long, Long, Long)]) {
+      (key, st, rows) =>
+        st.foreach(s => SeqPatternsStream.checkState("FunnelDropoffStream",
+          key, "steps/gaps", fp, s._1))
+        var (_, lastS1, validB, bits) =
+          st.getOrElse((fp, Long.MinValue, Long.MinValue, 0L))
+        val bits0 = bits
+        val byTs = rows.toArray.collect {
+          case (_, ts, t) if stepSet.contains(t) => (ts, t)
+        }.groupBy(_._1).toSeq.sortBy(_._1)
+        for ((ts, group) <- byTs) {
+          val types = group.map(_._2).toSet
+          // 1. s3 role against valid-prefix s2's from strictly earlier
+          //    groups
+          if (types.contains(s3) && validB != Long.MinValue && validB < ts) {
+            bits |= SAW3
+            if (ts - validB <= g3) bits |= R3
+          }
+          // 2. s2 role against s1's from strictly earlier groups
+          if (types.contains(s2) && lastS1 != Long.MinValue && lastS1 < ts) {
+            bits |= SAW2
+            if (ts - lastS1 <= g2) { bits |= R2; if (ts > validB) validB = ts }
+          }
+          // 3. the group joins the state
+          if (types.contains(s1)) { bits |= HA1; if (ts > lastS1) lastS1 = ts }
+          bits |= SEEN
+        }
+        ((fp, lastS1, validB, bits), flagNames.indices.iterator
+          .filter(i => (bits & (1L << i)) != 0 && (bits0 & (1L << i)) == 0)
+          .map(i => (key, flagNames(i))))
+    }
   }
 }

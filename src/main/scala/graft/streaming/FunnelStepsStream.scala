@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch ordered funnel
   * ([[graft.operators.Funnel.orderedFunnel]]): the live funnel
@@ -27,41 +26,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Out rows: (user, stage_idx [1-based], step, tsMicros,
   * gap_micros — from the previous stage's stamp; null for stage 1).
   */
-class FunnelStepsProcessor(steps: Array[String])
-    extends StatefulProcessor[String, (String, Long, Long, String),
-      (String, Long, String, Long, Option[Long])] {
-
-  // (stageDone, stampTs, stampSeq)
-  @transient private var st: ValueState[(Long, Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    st = getHandle.getValueState[(Long, Long, Long)]("funnel",
-      Encoders.product[(Long, Long, Long)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long, Long, String)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, String, Long, Option[Long])] = {
-    var (stage, sTs, sSeq) =
-      if (st.exists()) st.get() else (0L, Long.MinValue, Long.MinValue)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, String, Long, Option[Long])]
-    val ordered = rows.toArray.sortBy(r => (r._2, r._3))
-    for ((_, ts, seq, ty) <- ordered) {
-      if (stage < steps.length && ty == steps(stage.toInt) &&
-          (ts > sTs || (ts == sTs && seq > sSeq))) {
-        val gap = if (stage == 0L) None else Some(ts - sTs)
-        stage += 1L
-        out += ((key, stage, ty, ts, gap))
-        sTs = ts; sSeq = seq
-      }
-    }
-    st.update((stage, sTs, sSeq))
-    out.iterator
-  }
-}
-
 object FunnelStepsStream {
   def track(ds: Dataset[(String, Long, Long, String)], steps: Seq[String]):
       Dataset[(String, Long, String, Long, Option[Long])] = {
@@ -69,8 +33,23 @@ object FunnelStepsStream {
       s"steps must be non-empty and distinct: $steps")
     import ds.sparkSession.implicits._
     val arr = steps.toArray
-    ds.groupByKey(_._1).transformWithState(
-      new FunnelStepsProcessor(arr),
-      TimeMode.None(), OutputMode.Append())
+    // (stageDone, stampTs, stampSeq)
+    KeyedFold(ds)(_._1, "funnel", Encoders.product[(Long, Long, Long)]) {
+      (key, st, rows) =>
+        var (stage, sTs, sSeq) =
+          st.getOrElse((0L, Long.MinValue, Long.MinValue))
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(String, Long, String, Long, Option[Long])]
+        for ((_, ts, seq, ty) <- rows.toArray.sortBy(r => (r._2, r._3))) {
+          if (stage < arr.length && ty == arr(stage.toInt) &&
+              (ts > sTs || (ts == sTs && seq > sSeq))) {
+            val gap = if (stage == 0L) None else Some(ts - sTs)
+            stage += 1L
+            out += ((key, stage, ty, ts, gap))
+            sTs = ts; sSeq = seq
+          }
+        }
+        ((stage, sTs, sSeq), out.iterator)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the q83 batch funnel: per-user first-signup /
   * first-purchase tracking with a conversion-window verdict, decided
@@ -21,48 +20,30 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (userId, firstSignupMicros, firstPurchaseMicros, purchasedAfter,
   * converted — purchase after signup within the window).
   */
-class FunnelProcessor(windowMicros: Long)
-    extends StatefulProcessor[Long, (Long, Long, String),
-      (Long, Long, Long, Boolean, Boolean)] {
-
-  @transient private var st: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    // (firstSignupMicros | -1, firstPurchaseMicros | -1); emission is
-    // implied by both being set when the second one arrives
-    st = getHandle.getValueState[(Long, Long)]("firsts",
-      Encoders.product[(Long, Long)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long, String)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(Long, Long, Long, Boolean, Boolean)] = {
-    var (fs, fp) = if (st.exists()) st.get() else (-1L, -1L)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long, Boolean, Boolean)]
-    for ((_, ts, tpe) <- rows.toArray.sortBy(r => (r._2, r._3))) {
-      val before = fs >= 0L && fp >= 0L
-      tpe match {
-        case "signup" if fs < 0L => fs = ts
-        case "purchase" if fp < 0L => fp = ts
-        case _ => // later events never move a first
-      }
-      if (!before && fs >= 0L && fp >= 0L) {
-        val after = fp > fs
-        out += ((key, fs, fp, after, after && fp - fs <= windowMicros))
-      }
-    }
-    st.update((fs, fp))
-    out.iterator
-  }
-}
-
 object FunnelStream {
   def conversions(ds: Dataset[(Long, Long, String)], windowMicros: Long):
       Dataset[(Long, Long, Long, Boolean, Boolean)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new FunnelProcessor(windowMicros),
-      TimeMode.None(), OutputMode.Append())
+    // (firstSignupMicros | -1, firstPurchaseMicros | -1); emission is
+    // implied by both being set when the second one arrives
+    KeyedFold(ds)(_._1, "firsts", Encoders.product[(Long, Long)]) {
+      (key, st, rows) =>
+        var (fs, fp) = st.getOrElse((-1L, -1L))
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, Long, Long, Boolean, Boolean)]
+        for ((_, ts, tpe) <- rows.toArray.sortBy(r => (r._2, r._3))) {
+          val before = fs >= 0L && fp >= 0L
+          tpe match {
+            case "signup" if fs < 0L => fs = ts
+            case "purchase" if fp < 0L => fp = ts
+            case _ => // later events never move a first
+          }
+          if (!before && fs >= 0L && fp >= 0L) {
+            val after = fp > fs
+            out += ((key, fs, fp, after, after && fp - fs <= windowMicros))
+          }
+        }
+        ((fs, fp), out.iterator)
+    }
   }
 }

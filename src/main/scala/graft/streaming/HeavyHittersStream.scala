@@ -2,8 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig}
+import org.apache.spark.sql.Dataset
 
 import graft.functions.expressions.MisraGriesAgg
 
@@ -24,42 +23,22 @@ import graft.functions.expressions.MisraGriesAgg
   * arrival order for throughput, and the StreamingSpec parity fixture
   * feeds one shard in a deterministic order so batch == stream exactly.
   */
-class HeavyHittersProcessor(k: Int)
-    extends StatefulProcessor[Long, (Long, String), (Long, String, Long)] {
-
-  @transient private var entries
-      : org.apache.spark.sql.streaming.ListState[HeavyHittersStream.MgEntry] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    entries = getHandle.getListState[HeavyHittersStream.MgEntry]("mg",
-      Encoders.product[HeavyHittersStream.MgEntry], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, String)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, String, Long)] = {
-    val buf = mutable.HashMap.empty[String, Long]
-    entries.get().foreach(e => buf.update(e.item, e.count))
-    rows.foreach { case (_, item) =>
-      if (item != null) MisraGriesAgg.offer(buf, item, 1L, k)
-    }
-    val sorted = buf.toSeq.sortBy { case (item, c) => (-c, item) }
-    entries.put(sorted.map { case (i, c) =>
-      HeavyHittersStream.MgEntry(i, c) }.toArray)
-    sorted.iterator.map { case (item, c) => (key, item, c) }
-  }
-}
-
 object HeavyHittersStream {
-  /** One MG counter in state. */
-  case class MgEntry(item: String, count: Long)
-
-  /** Wire the processor onto a (shard, item) stream; after each batch a
+  /** Wire the summary onto a (shard, item) stream; after each batch a
     * shard re-emits its full current summary (count desc, item asc).
+    * State: the k counters as one typed Seq of (item, count).
     */
   def apply(ds: Dataset[(Long, String)], k: Int): Dataset[(Long, String, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new HeavyHittersProcessor(k),
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "mg", newSequenceEncoder[Seq[(String, Long)]]) {
+      (key, entries, rows) =>
+        val buf = mutable.HashMap.empty[String, Long]
+        entries.foreach(buf ++= _)
+        rows.foreach { case (_, item) =>
+          if (item != null) MisraGriesAgg.offer(buf, item, 1L, k)
+        }
+        val sorted = buf.toSeq.sortBy { case (item, c) => (-c, item) }
+        (sorted, sorted.iterator.map { case (item, c) => (key, item, c) })
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch histogram-drift monitor
   * ([[graft.operators.Profile.histogramDrift]]): per-bin (n_a, n_b)
@@ -24,39 +23,20 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   *
   * Out rows: (bin, n_a, n_b).
   */
-class HistBinProcessor
-    extends StatefulProcessor[Long, (Long, Boolean, Long),
-      (Long, Long, Long)] {
-
-  @transient private var counts: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    counts = getHandle.getValueState[(Long, Long)]("counts",
-      Encoders.product[(Long, Long)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Boolean, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(Long, Long, Long)] = {
-    var (na, nb) = if (counts.exists()) counts.get() else (0L, 0L)
-    rows.foreach { case (_, isA, dn) =>
-      if (isA) na += dn else nb += dn
-    }
-    counts.update((na, nb))
-    Iterator.single((key, na, nb))
-  }
-}
-
 object HistDriftStream {
 
-  /** Wire the processor onto a (bin, isA, countDelta) stream. */
+  /** Wire the bin counts onto a (bin, isA, countDelta) stream. */
   def bins(ds: Dataset[(Long, Boolean, Long)]):
       Dataset[(Long, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new HistBinProcessor, TimeMode.None(),
-      OutputMode.Append())
+    KeyedFold(ds)(_._1, "counts", Encoders.product[(Long, Long)]) {
+      (key, counts, rows) =>
+        var (na, nb) = counts.getOrElse((0L, 0L))
+        rows.foreach { case (_, isA, dn) =>
+          if (isA) na += dn else nb += dn
+        }
+        ((na, nb), Iterator.single((key, na, nb)))
+    }
   }
 
   /** Raw (isA, value) rows → (bin, isA, +1) deltas under the batch

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TTLConfig}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
 
 /** Ingest-time twin of the batch KMV distinct sketch
   * ([[graft.operators.Sketches.kminNdv]]): per-group k-smallest-hash
@@ -23,51 +24,30 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * In rows: (group, id) — raw non-negative ids; hashing happens here
   * with the house affine map (same as the batch operator).
   */
-class KmvProcessor(k: Int)
-    extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
-
-  @transient private var sk: ListState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    sk = getHandle.getListState[Long]("sk", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long)] = {
-    val set = new java.util.TreeSet[Long]()
-    sk.get().foreach(set.add)
-    rows.foreach { case (_, id) =>
-      val h = Math.floorMod(id * 1000003L + 17L,
-        graft.operators.Sketches.M)
-      if (set.size < k) { set.add(h); () }
-      else if (h < set.last()) {
-        if (set.add(h)) { set.remove(set.last()); () }
-      }
-    }
-    val arr = new Array[Long](set.size)
-    val it = set.iterator()
-    var i = 0
-    while (it.hasNext) { arr(i) = it.next(); i += 1 }
-    sk.put(arr)
-    val est =
-      if (arr.length < k) arr.length.toLong
-      else ((k - 1).toLong * graft.operators.Sketches.M) / arr(k - 1)
-    Iterator.single((key, arr.length.toLong, est))
-  }
-}
-
 object KmvStream {
-  /** Wire the processor onto a (group, id) stream. `k` as in the batch
+  /** Wire the sketch onto a (group, id) stream. `k` as in the batch
     * operator (256–4096 → ~2–8% relative error once saturated).
     */
   def ndv(ds: Dataset[(String, Long)], k: Int):
       Dataset[(String, Long, Long)] = {
     require(k >= 2, s"k must be >= 2, got $k")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new KmvProcessor(k),
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "sk", newSequenceEncoder[Seq[Long]]) { (key, sk, rows) =>
+      val set = new java.util.TreeSet[Long]()
+      sk.foreach(_.foreach(set.add))
+      rows.foreach { case (_, id) =>
+        val h = Math.floorMod(id * 1000003L + 17L,
+          graft.operators.Sketches.M)
+        if (set.size < k) { set.add(h); () }
+        else if (h < set.last()) {
+          if (set.add(h)) { set.remove(set.last()); () }
+        }
+      }
+      val arr = set.asScala.toVector
+      val est =
+        if (arr.length < k) arr.length.toLong
+        else ((k - 1).toLong * graft.operators.Sketches.M) / arr(k - 1)
+      (arr, Iterator.single((key, arr.length.toLong, est)))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch gap-fill
   * ([[graft.operators.Resample.locfGrid]]): per-key LAST-OBSERVATION
@@ -24,41 +23,23 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (key, tsMicros, id, value, prev = Some((prevTs, prevId, prevValue)),
   * gapMicros = Some(ts - prevTs)) — None for a key's first observation.
   */
-class LocfProcessor
-    extends StatefulProcessor[String, (String, Long, Long, Double),
-      (String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])] {
-
-  @transient private var last: ValueState[(Long, Long, Double)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    last = getHandle.getValueState[(Long, Long, Double)]("last",
-      Encoders.product[(Long, Long, Double)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long, Long, Double)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])] = {
-    var st: Option[(Long, Long, Double)] =
-      if (last.exists()) Some(last.get()) else None
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])]
-    for ((_, ts, id, v) <- rows.toArray.sortBy(r => (r._2, r._3))) {
-      out += ((key, ts, id, v, st, st.map(p => ts - p._1)))
-      // monotone: only a strictly newer (ts, id) replaces the observation
-      val newer = st.forall(p => ts > p._1 || (ts == p._1 && id > p._2))
-      if (newer) st = Some((ts, id, v))
-    }
-    st.foreach(last.update)
-    out.iterator
-  }
-}
-
 object LocfStream {
   def enrichWithPrev(ds: Dataset[(String, Long, Long, Double)]):
       Dataset[(String, Long, Long, Double, Option[(Long, Long, Double)], Option[Long])] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new LocfProcessor,
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "last", Encoders.product[(Long, Long, Double)]) {
+      (key, last, rows) =>
+        var st = last
+        val out = rows.toArray.sortBy(r => (r._2, r._3)).map {
+          case (_, ts, id, v) =>
+            val row = (key, ts, id, v, st, st.map(p => ts - p._1))
+            // monotone: only a strictly newer (ts, id) replaces the
+            // observation
+            if (st.forall(p => ts > p._1 || (ts == p._1 && id > p._2)))
+              st = Some((ts, id, v))
+            row
+        }
+        (st.get, out.iterator)
+    }
   }
 }

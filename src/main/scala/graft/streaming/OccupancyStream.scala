@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch sweep-line occupancy
   * ([[graft.operators.Intervals.hourlyCoverage]]): maintains the
@@ -29,25 +28,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In rows: (tickHour, delta). Out per touched tick per batch:
   * (tick_hour, delta) — the tick's cumulative boundary sum.
   */
-class TickDeltaProcessor
-    extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
-
-  @transient private var total: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    total = getHandle.getValueState[Long]("total", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(Long, Long)] = {
-    var t = if (total.exists()) total.get() else 0L
-    rows.foreach { case (_, d) => t = Math.addExact(t, d) }
-    total.update(t)
-    Iterator.single((key, t))
-  }
-}
-
 object OccupancyStream {
 
   private val BucketUs = 3600L * 1000000L
@@ -77,14 +57,16 @@ object OccupancyStream {
     }
   }
 
-  /** Wire the processor onto a (tick, delta) boundary stream;
+  /** Wire the per-tick totals onto a (tick, delta) boundary stream;
     * emissions upsert the per-tick delta table whose running sum is
     * the occupancy curve.
     */
   def tickDeltas(ds: Dataset[(Long, Long)]): Dataset[(Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new TickDeltaProcessor,
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "total", Encoders.scalaLong) { (key, total, rows) =>
+      var t = total.getOrElse(0L)
+      rows.foreach { case (_, d) => t = Math.addExact(t, d) }
+      (t, Iterator.single((key, t)))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming sequence packing — the stateful counterpart of
   * [[graft.operators.Packing]]: each shard keeps a running token offset
@@ -16,38 +16,21 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
   * within a micro-batch are sorted by docId before applying the offset,
   * because iterator order inside a batch is not deterministic.
   */
-class PackingProcessor(capacity: Long)
-  extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long, Long, Long)] {
-
-  @transient private var off: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    off = getHandle.getValueState[Long]("offset", Encoders.scalaLong,
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Long, Long, Long)] = {
-    var o = if (off.exists()) off.get() else 0L
-    val out = rows.toSeq.sortBy(_._2).map { case (_, docId, n) =>
-      val start = o
-      o += n
-      (key, docId, start, start / capacity,
-        (start + math.max(n, 1L) - 1L) / capacity)
-    }
-    off.update(o)
-    out.iterator
-  }
-}
-
 object PackingStream {
-  /** Wire the processor onto a (shard, docId, nTokens) stream. */
+  /** Wire the offsets onto a (shard, docId, nTokens) stream. */
   def apply(ds: Dataset[(Long, Long, Long)], capacity: Long)
       : Dataset[(Long, Long, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1)
-      .transformWithState(new PackingProcessor(capacity),
-        TimeMode.None(), OutputMode.Update())
+    KeyedFold(ds)(_._1, "offset", Encoders.scalaLong, OutputMode.Update()) {
+      (key, off, rows) =>
+        var o = off.getOrElse(0L)
+        val out = rows.toArray.sortBy(_._2).map { case (_, docId, n) =>
+          val start = o
+          o += n
+          (key, docId, start, start / capacity,
+            (start + math.max(n, 1L) - 1L) / capacity)
+        }
+        (o, out.iterator)
+    }
   }
 }

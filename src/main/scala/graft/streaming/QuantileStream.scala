@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig}
 
 import graft.functions.expressions.QuantileSketchAgg
 
@@ -20,39 +19,21 @@ import graft.functions.expressions.QuantileSketchAgg
   * 2·(levels+1)·n/k holds for ANY merge/arrival order, which is what
   * the spec pins (estimates are order-dependent; the guarantee is not).
   */
-class QuantileSketchProcessor(k: Int, quantiles: Seq[Double])
-    extends StatefulProcessor[Long, (Long, Double), (Long, Double, Double, Long)] {
-
-  @transient private var state
-      : org.apache.spark.sql.streaming.ValueState[Array[Byte]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    state = getHandle.getValueState[Array[Byte]]("sketch", Encoders.BINARY,
-      TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Double, Double, Long)] = {
-    val sk = if (state.exists()) QuantileSketchAgg.fromBytes(state.get(), k)
-             else new QuantileSketchAgg.Sketch(k)
-    rows.foreach { case (_, v) => sk.add(v) }
-    state.update(QuantileSketchAgg.toBytes(sk))
-    if (sk.n == 0L) Iterator.empty
-    else quantiles.iterator.map(q => (key, q, sk.quantile(q), sk.n))
-  }
-}
-
 object QuantileStream {
 
-  /** Wire the processor onto a (shard, value) stream; after each batch a
+  /** Wire the sketch onto a (shard, value) stream; after each batch a
     * shard re-emits (shard, p, est, n) for every requested quantile.
     */
   def apply(ds: Dataset[(Long, Double)], k: Int, quantiles: Seq[Double])
       : Dataset[(Long, Double, Double, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new QuantileSketchProcessor(k, quantiles),
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "sketch", Encoders.BINARY) { (key, state, rows) =>
+      val sk = state.map(QuantileSketchAgg.fromBytes(_, k))
+        .getOrElse(new QuantileSketchAgg.Sketch(k))
+      rows.foreach { case (_, v) => sk.add(v) }
+      (QuantileSketchAgg.toBytes(sk),
+        if (sk.n == 0L) Iterator.empty
+        else quantiles.iterator.map(q => (key, q, sk.quantile(q), sk.n)))
+    }
   }
 }

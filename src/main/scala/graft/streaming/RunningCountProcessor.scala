@@ -1,40 +1,22 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** transformWithState (state API v2) example: per-key running counts with
-  * typed ValueState. This is the forward path for B14 arbitrary state —
-  * unlike mapGroupsWithState, state variables are named/typed/evolvable.
+/** transformWithState (state API v2) example: per-key running (count,
+  * sum) in one typed [[KeyedFold]] value. This is the forward path for
+  * B14 arbitrary state — unlike mapGroupsWithState, state variables are
+  * named/typed/evolvable.
   */
-class RunningCountProcessor extends StatefulProcessor[Long, (Long, Double), (Long, Long, Double)] {
-  @transient private var count: org.apache.spark.sql.streaming.ValueState[Long] = _
-  @transient private var sum: org.apache.spark.sql.streaming.ValueState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    count = getHandle.getValueState[Long]("count", Encoders.scalaLong,
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-    sum = getHandle.getValueState[Double]("sum", Encoders.scalaDouble,
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[(Long, Long, Double)] = {
-    var c = if (count.exists()) count.get() else 0L
-    var s = if (sum.exists()) sum.get() else 0.0
-    rows.foreach { case (_, v) => c += 1; s += v }
-    count.update(c)
-    sum.update(s)
-    Iterator.single((key, c, s))
-  }
-}
-
 object RunningCountProcessor {
-  /** Wire the processor onto a (key, value) stream. */
+  /** Wire the counts onto a (key, value) stream. */
   def apply(ds: Dataset[(Long, Double)]): Dataset[(Long, Long, Double)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1)
-      .transformWithState(new RunningCountProcessor,
-        TimeMode.None(), OutputMode.Update())
+    KeyedFold(ds)(_._1, "count", Encoders.product[(Long, Double)],
+        OutputMode.Update()) { (key, st, rows) =>
+      var (c, s) = st.getOrElse((0L, 0.0))
+      rows.foreach { case (_, v) => c += 1; s += v }
+      ((c, s), Iterator.single((key, c, s)))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig}
+import org.apache.spark.sql.Dataset
 
 /** Ingest-time weighted sampling — `Sampling.weightedSample` as a
   * stream: rows arrive as (group, id, weight); each group keeps the k
@@ -18,53 +17,34 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * batches — arrival order and batch boundaries cannot change the k
   * smallest of a fixed multiset (StreamingSpec pins batch == stream).
   */
-class WeightedSampleProcessor(k: Int)
-    extends StatefulProcessor[String, (String, Long, Long), (String, Long, Long, Long, Long)] {
-
-  @transient private var entries
-      : org.apache.spark.sql.streaming.ListState[SamplingStream.SampleEntry] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    entries = getHandle.getListState[SamplingStream.SampleEntry]("sample",
-      Encoders.product[SamplingStream.SampleEntry], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(String, Long, Long, Long, Long)] = {
-    var buf = entries.get().map(e => (e.priority, e.id, e.weight)).toVector
-    rows.foreach { case (_, id, w) =>
-      // floorMod (not %) so negative ids still hash onto [0, P) — the
-      // batch operator's pmod, kept in lockstep
-      val pri = math.floorMod(id * 1000003L + 17L, 1000000007L) / math.max(w, 1L)
-      buf = (pri, id, w) +: buf
-    }
-    // dedup BY ID keeping the smallest priority: a re-offered id with a
-    // changed weight must never occupy two reservoir slots (the batch
-    // operator emits one row per unique id); then keep the k smallest.
-    buf = buf.groupBy(_._2).valuesIterator
-      .map(_.minBy(e => (e._1, e._3))).toVector
-      .sortBy(e => (e._1, e._2)).take(k)
-    entries.put(buf.map { case (p, id, w) =>
-      SamplingStream.SampleEntry(p, id, w) }.toArray)
-    buf.iterator.zipWithIndex.map { case ((p, id, w), i) =>
-      (key, i + 1L, id, w, p)
-    }
-  }
-}
-
 object SamplingStream {
-  /** One reservoir slot in state. */
-  case class SampleEntry(priority: Long, id: Long, weight: Long)
-
-  /** Wire the processor onto a (group, id, weight) stream; after each
+  /** Wire the reservoir onto a (group, id, weight) stream; after each
     * batch a group re-emits its full current sample as (group, rn, id,
-    * weight, priority), smallest priority first.
+    * weight, priority), smallest priority first. State: the sample as
+    * one typed Seq of (priority, id, weight).
     */
   def apply(ds: Dataset[(String, Long, Long)], k: Int)
       : Dataset[(String, Long, Long, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new WeightedSampleProcessor(k),
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "sample", newSequenceEncoder[Seq[(Long, Long, Long)]]) {
+      (key, sample, rows) =>
+        var buf = sample.fold(Vector.empty[(Long, Long, Long)])(_.toVector)
+        rows.foreach { case (_, id, w) =>
+          // floorMod (not %) so negative ids still hash onto [0, P) — the
+          // batch operator's pmod, kept in lockstep
+          val pri = math.floorMod(id * 1000003L + 17L, 1000000007L) / math.max(w, 1L)
+          buf = (pri, id, w) +: buf
+        }
+        // dedup BY ID keeping the smallest priority: a re-offered id with
+        // a changed weight must never occupy two reservoir slots (the
+        // batch operator emits one row per unique id); then keep the k
+        // smallest.
+        buf = buf.groupBy(_._2).valuesIterator
+          .map(_.minBy(e => (e._1, e._3))).toVector
+          .sortBy(e => (e._1, e._2)).take(k)
+        (buf, buf.iterator.zipWithIndex.map { case ((p, id, w), i) =>
+          (key, i + 1L, id, w, p)
+        })
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch SCD2 history
   * ([[graft.operators.Changelog.scd2]]): the version-tracking op a CDC
@@ -35,68 +34,48 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In rows: (key, tsMicros, seq, op, value).
   * Out rows: (key, value, valid_from, valid_to, version, is_current).
   */
-class Scd2Processor(deleteOp: String)
-    extends StatefulProcessor[String, (String, Long, Long, String, Long),
-      (String, Long, Long, Option[Long], Long, Boolean)] {
-
-  // (lastTs, lastSeq, nChanges, openFrom, openVersion, openValue, hasOpen)
-  @transient private var st
-      : ValueState[(Long, Long, Long, Long, Long, Long, Boolean)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    st = getHandle.getValueState[(Long, Long, Long, Long, Long, Long, Boolean)](
-      "scd2", Encoders.product[(Long, Long, Long, Long, Long, Long, Boolean)],
-      TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long, Long, String, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long, Option[Long], Long, Boolean)] = {
-    var (lastTs, lastSeq, n, openFrom, openVer, openVal, hasOpen) =
-      if (st.exists()) st.get()
-      else (Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, false)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Option[Long], Long, Boolean)]
-    // null op sorts as "" (Ordering[String] NPEs on null) and below
-    // behaves like a delete — the batch twin's `op =!= deleteOp`
-    // filter drops null-op rows while their ts still closes the prior
-    // version, exactly the delete shape.
-    val ordered = rows.toArray.sortBy(r =>
-      (r._2, r._3, if (r._4 == null) "" else r._4, r._5))
-    for ((_, ts, seq, op, v) <- ordered) {
-      val fresh = ts > lastTs || (ts == lastTs && seq > lastSeq)
-      if (fresh) {
-        n += 1L
-        if (hasOpen) {
-          // the held version closes at this change's ts — emit the
-          // corrected row so a (key, version)-keyed sink supersedes
-          // the open form it applied earlier
-          out += ((key, openVal, openFrom, Some(ts), openVer, false))
-          hasOpen = false
-        }
-        if (op != null && op != deleteOp) {
-          openFrom = ts; openVer = n; openVal = v; hasOpen = true
-          out += ((key, v, ts, None, n, true))
-        }
-        lastTs = ts; lastSeq = seq
-      } // late cross-batch row: dropped, see the ordering contract
-    }
-    st.update((lastTs, lastSeq, n, openFrom, openVer, openVal, hasOpen))
-    out.iterator
-  }
-}
-
 object Scd2Stream {
-  /** Wire the processor onto a (key, ts, seq, op, value) change
+  /** Wire the history onto a (key, ts, seq, op, value) change
     * stream; emissions upsert a (key, version)-keyed SCD2 table.
     */
   def history(ds: Dataset[(String, Long, Long, String, Long)],
               deleteOp: String = "D"):
       Dataset[(String, Long, Long, Option[Long], Long, Boolean)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(
-      new Scd2Processor(deleteOp),
-      TimeMode.None(), OutputMode.Append())
+    // (lastTs, lastSeq, nChanges, openFrom, openVersion, openValue, hasOpen)
+    KeyedFold(ds)(_._1, "scd2",
+        Encoders.product[(Long, Long, Long, Long, Long, Long, Boolean)]) {
+      (key, st, rows) =>
+        var (lastTs, lastSeq, n, openFrom, openVer, openVal, hasOpen) =
+          st.getOrElse((Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, false))
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(String, Long, Long, Option[Long], Long, Boolean)]
+        // null op sorts as "" (Ordering[String] NPEs on null) and below
+        // behaves like a delete — the batch twin's `op =!= deleteOp`
+        // filter drops null-op rows while their ts still closes the
+        // prior version, exactly the delete shape.
+        val ordered = rows.toArray.sortBy(r =>
+          (r._2, r._3, if (r._4 == null) "" else r._4, r._5))
+        for ((_, ts, seq, op, v) <- ordered) {
+          val fresh = ts > lastTs || (ts == lastTs && seq > lastSeq)
+          if (fresh) {
+            n += 1L
+            if (hasOpen) {
+              // the held version closes at this change's ts — emit the
+              // corrected row so a (key, version)-keyed sink supersedes
+              // the open form it applied earlier
+              out += ((key, openVal, openFrom, Some(ts), openVer, false))
+              hasOpen = false
+            }
+            if (op != null && op != deleteOp) {
+              openFrom = ts; openVer = n; openVal = v; hasOpen = true
+              out += ((key, v, ts, None, n, true))
+            }
+            lastTs = ts; lastSeq = seq
+          } // late cross-batch row: dropped, see the ordering contract
+        }
+        ((lastTs, lastSeq, n, openFrom, openVer, openVal, hasOpen),
+          out.iterator)
+    }
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming equivalents (transformWithState, state API v2) of the two
+/** Streaming equivalents ([[KeyedFold]], state API v2) of the two
   * batch session/sequence exports, with cross-batch state:
   *
   *  - [[SessionLabelProcessor]] ≡ `Sessionize.withSessionIds` (q81): label
@@ -19,38 +19,20 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * micro-batch rows are sorted before folding, so intra-batch disorder is
   * fine. StreamingSpec pins batch≡stream on a two-batch split.
   */
-class SessionLabelProcessor(gapMicros: Long)
-    extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long)] {
-
-  // (last event-time micros, session seq so far) per user
-  @transient private var sess: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    sess = getHandle.getValueState[(Long, Long)]("sess",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-  /** rows: (userId, usMicros, eventId) → (eventId, userId, sessionSeq). */
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[(Long, Long, Long)] = {
-    val sorted = rows.toArray.sortBy(r => (r._2, r._3))
-    var (lastUs, seq) = if (sess.exists()) sess.get() else (0L, 0L)
-    val out = sorted.map { case (_, us, eventId) =>
-      if (seq == 0L || us - lastUs > gapMicros) seq += 1
-      lastUs = us
-      (eventId, key, seq)
-    }
-    sess.update((lastUs, seq))
-    out.iterator
-  }
-}
-
 object SessionLabelProcessor {
   /** (userId, usMicros, eventId) stream → appended (eventId, userId, sessionSeq). */
   def apply(ds: Dataset[(Long, Long, Long)], gapMicros: Long): Dataset[(Long, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1)
-      .transformWithState(new SessionLabelProcessor(gapMicros),
-        TimeMode.None(), OutputMode.Append())
+    // (last event-time micros, session seq so far) per user
+    KeyedFold(ds)(_._1, "sess", Encoders.product[(Long, Long)]) { (key, sess, rows) =>
+      var (lastUs, seq) = sess.getOrElse((0L, 0L))
+      val out = rows.toArray.sortBy(r => (r._2, r._3)).map { case (_, us, eventId) =>
+        if (seq == 0L || us - lastUs > gapMicros) seq += 1
+        lastUs = us
+        (eventId, key, seq)
+      }
+      ((lastUs, seq), out.iterator)
+    }
   }
 }
 
@@ -60,41 +42,20 @@ case class SeqEvent(us: Long, eventId: Long, eventType: String)
 /** Per-user running answer: first `maxLen` events so far, '>'-joined. */
 case class SeqOutput(userId: Long, nEvents: Long, seq: String)
 
-class BoundedSequenceProcessor(maxLen: Int)
-    extends StatefulProcessor[Long, (Long, Long, Long, String), SeqOutput] {
-
-  // The kept prefix itself IS the state — capped at maxLen rows, ordered.
-  // Stored via a product wrapper (value-state encoders are product-shaped).
-  @transient private var kept: ValueState[ListHolder] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    kept = getHandle.getValueState[ListHolder]("kept",
-      Encoders.product[ListHolder], TTLConfig.NONE)
-
-  /** rows: (userId, usMicros, eventId, eventType) → updated SeqOutput. */
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long, String)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[SeqOutput] = {
-    val prev = if (kept.exists()) kept.get().items else Nil
-    val merged = (prev ++ rows.map(r => SeqEvent(r._2, r._3, r._4)))
-      .sortBy(e => (e.us, e.eventId))
-      .take(maxLen)
-    kept.update(ListHolder(merged))
-    Iterator.single(SeqOutput(key, merged.length.toLong,
-      merged.map(_.eventType).mkString(">")))
-  }
-}
-
-/** Product wrapper for the capped per-user event list state. */
-case class ListHolder(items: List[SeqEvent])
-
 object BoundedSequenceProcessor {
   /** (userId, usMicros, eventId, eventType) stream → updated per-user
     * bounded sequences (Update mode; latest row per key is the answer).
+    * The kept prefix itself IS the state — capped at maxLen rows, ordered.
     */
   def apply(ds: Dataset[(Long, Long, Long, String)], maxLen: Int): Dataset[SeqOutput] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1)
-      .transformWithState(new BoundedSequenceProcessor(maxLen),
-        TimeMode.None(), OutputMode.Update())
+    KeyedFold(ds)(_._1, "kept", newSequenceEncoder[Seq[SeqEvent]],
+        OutputMode.Update()) { (key, kept, rows) =>
+      val merged = (kept.getOrElse(Nil) ++ rows.map(r => SeqEvent(r._2, r._3, r._4)))
+        .sortBy(e => (e.us, e.eventId))
+        .take(maxLen)
+      (merged, Iterator.single(SeqOutput(key, merged.length.toLong,
+        merged.map(_.eventType).mkString(">"))))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch tick-dispersion census
   * ([[graft.operators.Burstiness.tickDispersion]]): the per-(group,
@@ -22,32 +21,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (`unix_micros(ts) div stepMicros`; Math.floorDiv on the JVM side).
   * Out rows: (group, tick, n).
   */
-class TickCellProcessor
-    extends StatefulProcessor[(String, Long), (String, Long),
-      (String, Long, Long)] {
-
-  @transient private var n: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: (String, Long),
-      rows: Iterator[(String, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long)] = {
-    val total = (if (n.exists()) n.get() else 0L) + rows.size
-    n.update(total)
-    Iterator.single((key._1, key._2, total))
-  }
-}
-
 object TickDispersionStream {
   def cells(ds: Dataset[(String, Long)]):
       Dataset[(String, Long, Long)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(identity).transformWithState(
-      new TickCellProcessor, TimeMode.None(),
-      OutputMode.Append())
+    KeyedFold(ds)(identity, "n", Encoders.scalaLong) { (key, n, rows) =>
+      val total = n.getOrElse(0L) + rows.size
+      (total, Iterator.single((key._1, key._2, total)))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
 /** Ingest-time twin of the batch time-weighted average
   * ([[graft.operators.Resample.timeWeightedAvg]]): per-key RUNNING
@@ -29,51 +28,31 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * In/out: (key, tsMicros, id, cents) → (key, tsMicros, id, cents,
   * spanUs, twaCents = Some(sumNum div spanUs) once anything has held).
   */
-class TwaProcessor
-    extends StatefulProcessor[String, (String, Long, Long, Long),
-      (String, Long, Long, Long, Long, Option[Long])] {
-
-  @transient private var st: ValueState[(Long, Long, Long, Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    st = getHandle.getValueState[(Long, Long, Long, Long, Long)]("twa",
-      Encoders.product[(Long, Long, Long, Long, Long)], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long, Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues):
-      Iterator[(String, Long, Long, Long, Long, Option[Long])] = {
-    var cur: Option[(Long, Long, Long, Long, Long)] =
-      if (st.exists()) Some(st.get()) else None
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Option[Long])]
-    for ((_, ts, id, cents) <- rows.toArray.sortBy(r => (r._2, r._3))) {
-      cur match {
-        case None =>
-          cur = Some((ts, id, cents, 0L, 0L))
-        case Some((hTs, hId, hCents, sumDt, sumNum))
-            if ts > hTs || (ts == hTs && id > hId) =>
-          val dt = Math.subtractExact(ts, hTs)
-          cur = Some((ts, id, cents,
-            Math.addExact(sumDt, dt),
-            Math.addExact(sumNum, Math.multiplyExact(hCents, dt))))
-        case _ => // late or duplicate: observe, never regress
-      }
-      val (_, _, _, sumDt, sumNum) = cur.get
-      out += ((key, ts, id, cents, sumDt,
-        if (sumDt > 0) Some(sumNum / sumDt) else None))
-    }
-    cur.foreach(st.update)
-    out.iterator
-  }
-}
-
 object TwaStream {
   def runningTwa(ds: Dataset[(String, Long, Long, Long)]):
       Dataset[(String, Long, Long, Long, Long, Option[Long])] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_._1).transformWithState(new TwaProcessor,
-      TimeMode.None(), OutputMode.Append())
+    KeyedFold(ds)(_._1, "twa",
+        Encoders.product[(Long, Long, Long, Long, Long)]) { (key, st, rows) =>
+      var cur = st
+      val out = rows.toArray.sortBy(r => (r._2, r._3)).map {
+        case (_, ts, id, cents) =>
+          cur match {
+            case None =>
+              cur = Some((ts, id, cents, 0L, 0L))
+            case Some((hTs, hId, hCents, sumDt, sumNum))
+                if ts > hTs || (ts == hTs && id > hId) =>
+              val dt = Math.subtractExact(ts, hTs)
+              cur = Some((ts, id, cents,
+                Math.addExact(sumDt, dt),
+                Math.addExact(sumNum, Math.multiplyExact(hCents, dt))))
+            case _ => // late or duplicate: observe, never regress
+          }
+          val (_, _, _, sumDt, sumNum) = cur.get
+          (key, ts, id, cents, sumDt,
+            if (sumDt > 0) Some(sumNum / sumDt) else None)
+      }
+      (cur.get, out.iterator)
+    }
   }
 }

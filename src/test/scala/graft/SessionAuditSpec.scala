@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * local checkpoint and every count-guarded broadcast goes through
   * `graft.runtime.Materialize`, so the materialisation policy has one
   * home. The same walk keeps every source file text: no literal NUL,
-  * which makes grep and git diff treat a file as binary.
+  * which makes grep and git diff treat a file as binary. And every
+  * stateful ingest twin folds through `graft.streaming.KeyedFold`,
+  * except the six whose state grows by appending, so the state
+  * lifecycle (handle, load, write-back, TTL and time mode) has one home.
   *
   * The searched names are assembled from pieces so this file never
   * matches itself.
@@ -27,6 +30,19 @@ class SessionAuditSpec extends AnyFunSuite {
   private val materializer = "src/main/scala/graft/runtime/Materialize.scala"
   private val checkpointCall = ".local" + "Checkpoint("
   private val broadcastGuard = "count() " + "<="
+  private val processorBase = "Stateful" + "Processor"
+  private val stateHandles = Seq("getValue" + "State", "getList" + "State")
+  private val streaming = "src/main/scala/graft/streaming/"
+  /** (file, class) of the one fold and the six append-state processors. */
+  private val lifecycleOwners = Set(
+    "KeyedFold.scala" -> "KeyedFold",
+    "AnnStream.scala" -> "CellProcessor",
+    "CdcDedupStream.scala" -> "ChunkBucketProcessor",
+    "ImageDedupStream.scala" -> "BandBucketProcessor",
+    "NearDupStream.scala" -> "BandBucketProcessor",
+    "TypoStream.scala" -> "VariantBucketProcessor",
+    "AnonymityGateStream.scala" -> "AnonymityGateProcessor"
+  ).map { case (f, c) => (streaming + f, c) }
 
   /** (path from the project root, lines) of every .scala file under `dir`. */
   private def sources(dir: String): Seq[(String, Array[String])] = {
@@ -88,5 +104,25 @@ class SessionAuditSpec extends AnyFunSuite {
           s"Materialize.seam / broadcastIfFits): ${elsewhere.mkString("; ")}")
       assert(inModule.nonEmpty, s"$materializer no longer holds `$needle`")
     }
+  }
+
+  test("only KeyedFold and the six append-state processors own a state lifecycle") {
+    // a class header runs from `class Name` to its `extends`, with no
+    // body brace and no other class keyword in between
+    val header = ("""\bclass\s+(\w+)(?:(?!\bclass\b)[^{])*?\bextends\s+""" +
+      processorBase + """\b""").r
+    val processors = mainSources.flatMap { case (path, lines) =>
+      header.findAllMatchIn(lines.mkString("\n")).map(m => (path, m.group(1)))
+    }
+    val extra = processors.filterNot(lifecycleOwners.contains)
+    assert(extra.isEmpty, s"${extra.size} processors outside KeyedFold (fold " +
+      s"through KeyedFold): ${extra.map { case (p, c) => s"$p:$c" }.mkString("; ")}")
+    assert(processors.toSet == lifecycleOwners,
+      s"missing: ${(lifecycleOwners -- processors).mkString("; ")}")
+    val ownerFiles = lifecycleOwners.map(_._1)
+    val handles = stateHandles.flatMap(sites(_, mainSources))
+      .filterNot(site => ownerFiles.exists(f => site.startsWith(f + ":")))
+    assert(handles.isEmpty,
+      s"state handle opened outside KeyedFold: ${handles.mkString("; ")}")
   }
 }
