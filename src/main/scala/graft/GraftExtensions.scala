@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.expressions._
 import graft.operators.Dedup
-import graft.plans.{AsofJoinStrategy, RangeJoinStrategy}
+import graft.plans.{AsofJoinStrategy, DecodeBarrierStrategy, RangeJoinStrategy}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
@@ -13,11 +13,12 @@ import scala.reflect.ClassTag
 
 /** SparkSessionExtensions entry point and the engine's only registration
   * path: installs every SQL function in [[GraftExtensions.functions]] and
-  * the as-of / range-join planner strategies. Every session from
-  * [[graft.runtime.Sessions]] loads it through
-  * `spark.sql.extensions=graft.GraftExtensions`. Extensions apply when a
-  * session is created, so a session built any other way has neither the
-  * functions nor the custom join operators.
+  * three planner strategies: as-of join, range join and the kaflow
+  * decode barrier. Every session from [[graft.runtime.Sessions]] loads it
+  * through `spark.sql.extensions=graft.GraftExtensions`. Extensions apply
+  * when a session is created, so a session built any other way has
+  * neither the functions nor the custom operators, and cannot plan
+  * `GraftApp.processBatch`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => RangeJoinStrategy)
+    ext.injectPlannerStrategy(_ => DecodeBarrierStrategy)
   }
 }
 

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import graft.serde.{BytesSerde, Serde}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType}
 
 /** Declarative consume pipeline registration — the Spark-native form of the
   * reference's `@app.consume(topic, sink_topics)` decorator surface
@@ -64,51 +65,60 @@ class GraftApp {
     * `Message` return type at runtime; here the shape is enforced at plan
     * time (a missing `value` column fails analysis).
     */
-  def produce(sinkTopic: String)(messages: DataFrame): DataFrame = {
-    val withKey =
-      if (messages.columns.contains("key")) messages
-      else messages.withColumn("key", lit(null).cast("binary"))
-    withKey
-      .withColumn("value", col("value").cast("binary"))
-      .withColumn("topic", lit(sinkTopic))
-      .select(col("topic"), col("key").cast("binary").as("key"), col("value"))
-  }
+  def produce(sinkTopic: String)(messages: DataFrame): DataFrame =
+    messages.select(lit(sinkTopic).as("topic"),
+      (if (messages.columns.contains("key")) col("key") else lit(null)).cast(BinaryType).as("key"),
+      col("value").cast(BinaryType).as("value"))
 
   /** Decode one spec's records: value/key/header deserialization + metadata
-    * projection (A4-A6, A13). Adds `value_raw`/`key_raw`, replaces
-    * `value`/`key` with typed columns, adds `header_<name>` columns, and a
-    * `__deser_failed` indicator built from the same decode expression as
-    * the typed columns (A12/A20). The decode is NOT evaluated once per
-    * record: Catalyst pushes the DLQ/ok split's filter on the indicator
-    * (and `processBatch`'s non-null output filter) below this projection,
-    * inlining the decode into a FilterExec, which has no subexpression
-    * elimination, and the projection above it decodes the surviving rows
-    * again. For a Protobuf or Avro consumer with a projecting handler (the
-    * ingest-wire benchmark app), each outputs branch's plan holds the value
-    * decoder twice in its FilterExec and once in its ProjectExec, and each
-    * DLQ branch once more in its FilterExec.
+    * projection (A4-A6, A13). Replaces `value`/`key` with typed columns and
+    * adds `value_raw`/`key_raw`, `header_<name>` columns and a
+    * `__deser_failed` indicator (A12/A20). Each record is decoded once per
+    * write, as kaflow decodes each consumed record once before its
+    * handler: one projection evaluates every decoder (the value and key
+    * serdes' `decodeStage`, the header serdes' `deserialize`) below a
+    * [[graft.plans.DecodeBarrier]], and the typed columns and the
+    * indicator are read from the decoded columns above it (`fromDecoded`).
+    * The optimiser pushes no filter through the barrier, so the DLQ/ok
+    * split, the handler's filters and `processBatch`'s non-null output
+    * filter read decoded columns instead of inlining a decoder into a
+    * FilterExec; column pruning still passes through it.
     */
   def decoded(spec: ConsumerSpec, records: DataFrame): DataFrame = {
-    // decodeWithFailure: value and indicator share one decode expression
-    // tree per serde; subexpression elimination merges them only inside
-    // one projection (see the scaladoc above for what the planner does).
-    val (valueDec, valueFailed) = spec.valueSerde.decodeWithFailure(col("value_raw"))
-    val (keyDec, keyFailed) = spec.keySerde match {
-      case Some(s) => s.decodeWithFailure(col("key_raw"))
+    val (barrier, columns, failed) = decodeOnce(spec, records)
+    barrier.select(columns :+ failed.as("__deser_failed"): _*)
+  }
+
+  /** The barrier over one spec's decoded records, the columns `decoded`
+    * reads above it, and the deserialization-failure indicator.
+    */
+  private def decodeOnce(spec: ConsumerSpec, records: DataFrame)
+      : (DataFrame, Seq[Column], Column) = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val below = records.filter(col("topic") === spec.topic).select(
+      records.columns.toSeq.map(named) ++ Seq(
+        col("value").as("value_raw"), col("key").as("key_raw"),
+        spec.valueSerde.decodeStage(col("value")).as("__value")) ++
+        spec.keySerde.map(_.decodeStage(col("key")).as("__key")) ++
+        spec.headerSerdes.map { case (name, serde) =>
+          serde.deserialize(element_at(col("headers"), name)).as("header_" + name)
+        }: _*)
+    val (value, valueFailed) = spec.valueSerde.fromDecoded(col("__value"), col("value_raw"))
+    val (key, keyFailed) = spec.keySerde match {
+      case Some(s) => s.fromDecoded(col("__key"), col("key_raw"))
       case None => (col("key_raw"), lit(false))
     }
-    val base = records
-      .filter(col("topic") === spec.topic)
-      .withColumn("value_raw", col("value"))
-      .withColumn("key_raw", col("key"))
-      .withColumn("value", valueDec)
-      .withColumn("key", keyDec)
-      .withColumn("__deser_failed", valueFailed || keyFailed)
-    spec.headerSerdes.foldLeft(base) { case (df, (name, serde)) =>
-      df.withColumn(s"header_$name",
-        serde.deserialize(element_at(col("headers"), name)))
-    }
+    val typed = Map("value" -> value, "key" -> key)
+    val columns = records.columns.toSeq.map(c => typed.get(c).fold(named(c))(_.as(c))) ++
+      Seq(col("value_raw"), col("key_raw")) ++
+      spec.headerSerdes.keys.map(n => named("header_" + n))
+    (ColumnBridge.ofRows(records.sparkSession,
+      graft.plans.DecodeBarrier(ColumnBridge.logicalPlan(below))),
+      columns, valueFailed || keyFailed)
   }
+
+  /** The column called `name`, dots and dashes included. */
+  private def named(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Route a batch of Kafka-shaped records (KafkaRecordIn schema) through
     * every registered consumer: decode → split DLQ → handler → serialize →
@@ -118,36 +128,32 @@ class GraftApp {
   def processBatch(records: DataFrame): RoutedBatch = {
     require(specs.nonEmpty, "no consumers registered")
     val parts = specs.values.map { spec =>
-      val dec = decoded(spec, records)
-      val failed = dec.filter(col("__deser_failed"))
+      val (barrier, columns, failed) = decodeOnce(spec, records)
+      val dlq = barrier.filter(failed)
         .select(col("topic"), col("partition"), col("offset"), col("timestamp"),
           col("value_raw"), col("key_raw"),
           lit("deserialization_error").as("error"))
-      val ok = dec.filter(!col("__deser_failed")).drop("__deser_failed")
-      val handled = spec.handler(ok)
-      // 1 → 0-or-1 semantics (A15): handlers drop rows via filter; a null
-      // value column after the handler also publishes nothing.
-      val withValue = handled.withColumn("value",
-        spec.outValueSerde.map(_.serialize(col("value"))).getOrElse(col("value")))
-        .filter(col("value").isNotNull)
-      val out = withValue
-        .withColumn("key",
-          if (withValue.columns.contains("key")) col("key").cast("binary")
-          else lit(null).cast("binary"))
-        .withColumn("out_headers",
-          if (withValue.columns.contains("out_headers")) col("out_headers")
-          else lit(null).cast("map<string,binary>"))
-        .select(col("key"), col("value"), col("out_headers").as("headers"))
+      val handled = spec.handler(barrier.filter(!failed).select(columns: _*))
+      def orNull(name: String, t: DataType): Column =
+        if (handled.columns.contains(name)) col(name) else lit(null).cast(t)
       // Fan-out (A16): one output row per sink topic, single sink write.
       // No sink topics → nothing published (matches the reference).
-      val topicsArr =
-        if (spec.sinkTopics.isEmpty) lit(null).cast("array<string>")
+      val topics =
+        if (spec.sinkTopics.isEmpty) lit(null).cast(ArrayType(StringType))
         else array(spec.sinkTopics.map(lit): _*)
-      val fanned = out.withColumn("topic", explode(topicsArr))
-      (fanned, failed)
+      // 1 → 0-or-1 semantics (A15): handlers drop rows via filter; a null
+      // value column after the handler also publishes nothing.
+      val outputs = handled.select(
+        orNull("key", BinaryType).cast(BinaryType).as("key"),
+        spec.outValueSerde.fold(col("value"))(_.serialize(col("value"))).as("value"),
+        orNull("out_headers", MapType(StringType, BinaryType)).as("headers"),
+        explode(topics).as("topic"))
+        .filter(col("value").isNotNull)
+      (outputs, dlq)
     }.toSeq
+    // every branch has the same columns in the same order
     RoutedBatch(
-      outputs = parts.map(_._1).reduce(_ unionByName _),
-      dlq = parts.map(_._2).reduce(_ unionByName _))
+      outputs = parts.map(_._1).reduce(_ union _),
+      dlq = parts.map(_._2).reduce(_ union _))
   }
 }

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{Schema => AvroSchema}
 import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericFixed, GenericRecord, IndexedRecord}
 import org.apache.avro.io.DecoderFactory
+import org.apache.avro.util.Utf8
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -21,10 +22,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the engine half of [[AvroDecode]]. Versus the UDF codec
   * ([[graft.serde.AvroSerde.deserializeUdf]], kept as the parity
   * reference) this skips the external-Row materialization + catalyst
-  * re-conversion per record and REUSES the Avro binary decoder and
-  * datum across records (the two dominant allocation sources on a hot
-  * Kafka ingest path). Decode failures return null — the DLQ routing
-  * contract, identical to the UDF codec.
+  * re-conversion per record, REUSES the Avro binary decoder and datum
+  * across records, and converts the datum with per-field converters
+  * compiled once per schema (no per-value type match or union lookup).
+  * Decode failures return null — the DLQ routing contract, identical to
+  * the UDF codec.
   *
   * Supported Avro types mirror `AvroSerde.toSparkType` exactly: record
   * (nested), string, int, long, float, double, boolean, bytes/fixed,
@@ -35,82 +37,118 @@ final class AvroWireDecoder(schemaJson: String, includeSchema: Boolean,
 
   @transient private lazy val schema = new AvroSchema.Parser().parse(schemaJson)
   @transient private lazy val reader = new GenericDatumReader[GenericRecord](schema)
+  @transient private lazy val toRow = AvroWireDecoder.converter(schema)
   // per-task reuse: binaryDecoder re-inits over the new payload, the
-  // datum recycles its field containers (safe — conversion to internal
-  // values below copies everything out before the next decode)
+  // datum recycles its field containers (safe — the converters copy
+  // everything out before the next decode)
   @transient private var reuseDecoder: org.apache.avro.io.BinaryDecoder = _
   @transient private var reuseRecord: GenericRecord = _
 
   def decode(raw: Array[Byte]): InternalRow = {
-    if (raw == null) return null
+    if (raw == null || (seekOffset > 0 && seekOffset >= raw.length)) return null
     try {
-      val payload =
-        if (seekOffset > 0) {
-          if (seekOffset >= raw.length) return null
-          java.util.Arrays.copyOfRange(raw, seekOffset, raw.length)
-        } else raw
       val rec: GenericRecord =
         if (includeSchema) {
           val r = new DataFileReader[GenericRecord](
-            new SeekableByteArrayInput(payload),
+            new SeekableByteArrayInput(
+              if (seekOffset > 0) java.util.Arrays.copyOfRange(raw, seekOffset, raw.length)
+              else raw),
             new GenericDatumReader[GenericRecord](null, schema))
           try { if (r.hasNext) r.next() else null } finally r.close()
         } else {
-          reuseDecoder = DecoderFactory.get().binaryDecoder(payload, reuseDecoder)
+          reuseDecoder = DecoderFactory.get().binaryDecoder(
+            raw, seekOffset, raw.length - seekOffset, reuseDecoder)
           reuseRecord = reader.read(reuseRecord, reuseDecoder)
           reuseRecord
         }
-      if (rec == null) null else toInternal(rec, schema)
+      if (rec == null) null else toRow(rec).asInstanceOf[InternalRow]
     } catch { case scala.util.control.NonFatal(_) => null }
   }
+}
 
-  private def unwrap(s: AvroSchema): AvroSchema =
-    if (s.getType == AvroSchema.Type.UNION)
-      s.getTypes.asScala.find(_.getType != AvroSchema.Type.NULL).getOrElse(s)
-    else s
+object AvroWireDecoder {
+  /** Maps a non-null Avro datum value to its Catalyst internal value. */
+  type Converter = AnyRef => Any
 
-  private def toInternal(rec: GenericRecord, s: AvroSchema): InternalRow = {
-    val fields = s.getFields
-    val out = new Array[Any](fields.size())
-    var i = 0
-    while (i < fields.size()) {
-      out(i) = fromAvro(rec.get(i), unwrap(fields.get(i).schema()))
-      i += 1
-    }
-    new GenericInternalRow(out)
-  }
-
-  private def fromAvro(v: Any, s: AvroSchema): Any = v match {
-    case null => null
-    case r: GenericRecord => toInternal(r, s)
-    case cs: CharSequence => UTF8String.fromString(cs.toString)
-    case e: org.apache.avro.generic.GenericEnumSymbol[_] =>
-      UTF8String.fromString(e.toString)
-    case bb: ByteBuffer =>
-      val arr = new Array[Byte](bb.remaining()); bb.duplicate().get(arr); arr
-    case fx: org.apache.avro.generic.GenericFixed => fx.bytes().clone()
-    case l: java.util.List[_] =>
-      val et = unwrap(s.getElementType)
-      val arr = new Array[Any](l.size())
-      var i = 0
-      while (i < l.size()) { arr(i) = fromAvro(l.get(i), et); i += 1 }
-      new GenericArrayData(arr)
-    case m: java.util.Map[_, _] =>
-      val vt = unwrap(s.getValueType)
-      val n = m.size()
-      val keys = new Array[Any](n)
-      val vals = new Array[Any](n)
-      var i = 0
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        keys(i) = UTF8String.fromString(e.getKey.toString)
-        vals(i) = fromAvro(e.getValue, vt)
-        i += 1
+  /** The converter for values of schema `s`, built once per schema. */
+  def converter(s: AvroSchema): Converter = s.getType match {
+    case AvroSchema.Type.RECORD =>
+      val fields = s.getFields
+      val convs = Array.tabulate(fields.size)(i => converter(fields.get(i).schema()))
+      v => {
+        val rec = v.asInstanceOf[IndexedRecord]
+        val out = new Array[Any](convs.length)
+        var i = 0
+        while (i < convs.length) {
+          val x = rec.get(i)
+          if (x != null) out(i) = convs(i)(x)
+          i += 1
+        }
+        new GenericInternalRow(out)
       }
-      ArrayBasedMapData(keys, vals)
-    case other => other // int/long/float/double/boolean
+    case AvroSchema.Type.STRING | AvroSchema.Type.ENUM => string
+    case AvroSchema.Type.BYTES => v => {
+      val bb = v.asInstanceOf[ByteBuffer]
+      val arr = new Array[Byte](bb.remaining()); bb.duplicate().get(arr); arr
+    }
+    case AvroSchema.Type.FIXED => v => v.asInstanceOf[GenericFixed].bytes().clone()
+    case AvroSchema.Type.ARRAY =>
+      val conv = converter(s.getElementType)
+      v => {
+        val l = v.asInstanceOf[java.util.List[AnyRef]]
+        val arr = new Array[Any](l.size())
+        var i = 0
+        while (i < arr.length) {
+          val x = l.get(i)
+          if (x != null) arr(i) = conv(x)
+          i += 1
+        }
+        new GenericArrayData(arr)
+      }
+    case AvroSchema.Type.MAP =>
+      val conv = converter(s.getValueType)
+      v => {
+        val m = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
+        val keys = new Array[Any](m.size())
+        val vals = new Array[Any](m.size())
+        var i = 0
+        val it = m.entrySet().iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          keys(i) = string(e.getKey)
+          if (e.getValue != null) vals(i) = conv(e.getValue)
+          i += 1
+        }
+        ArrayBasedMapData(keys, vals)
+      }
+    case AvroSchema.Type.UNION =>
+      converter(s.getTypes.asScala.find(_.getType != AvroSchema.Type.NULL).getOrElse(s))
+    case AvroSchema.Type.INT | AvroSchema.Type.LONG | AvroSchema.Type.FLOAT |
+         AvroSchema.Type.DOUBLE | AvroSchema.Type.BOOLEAN => v => v
+    case other => throw new IllegalArgumentException(s"unsupported Avro type: $other")
   }
+
+  /** A `Utf8`'s bytes copied straight into a UTF8String: a reader may
+    * reuse its `Utf8` buffers, so they are never aliased. Bytes that are
+    * not valid UTF-8 take the `String` path, as the UDF codec does; ASCII,
+    * checked first, is valid without `isValid`'s code-point walk.
+    */
+  private val string: Converter = {
+    case u: Utf8 =>
+      val n = u.getByteLength
+      val bytes = java.util.Arrays.copyOf(u.getBytes, n)
+      var i = 0
+      while (i < n && bytes(i) >= 0) i += 1
+      val s = UTF8String.fromBytes(bytes)
+      if (i == n || s.isValid) s else UTF8String.fromString(u.toString)
+    case other => UTF8String.fromString(other.toString)
+  }
+
+  /** A schema in plan strings: its record name and a short hash of the
+    * JSON, instead of the whole JSON in every operator that holds it.
+    */
+  def label(schemaJson: String): String =
+    f"${new AvroSchema.Parser().parse(schemaJson).getFullName}#${schemaJson.hashCode}%08x"
 }
 
 /** `avro_decode(binary)` — schemaless Avro wire format (fastavro
@@ -153,6 +191,11 @@ case class AvroDecode(child: Expression, schemaJson: String,
       if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
     """)
   }
+
+  @transient private lazy val schemaLabel = AvroWireDecoder.label(schemaJson)
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, schemaLabel, includeSchema, seekOffset)
 
   override protected def withNewChildInternal(newChild: Expression): AvroDecode =
     copy(child = newChild)

@@ -163,6 +163,11 @@ case class AvroEncode(child: Expression, schemaJson: String,
       s"${ev.value} = $enc.encode((org.apache.spark.sql.catalyst.InternalRow) $c);")
   }
 
+  @transient private lazy val schemaLabel = AvroWireDecoder.label(schemaJson)
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, schemaLabel, includeSchema)
+
   override protected def withNewChildInternal(newChild: Expression): AvroEncode =
     copy(child = newChild)
 

@@ -3,6 +3,7 @@ package graft.runtime
 import graft.dsl.{GraftApp, RoutedBatch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Kafka client configuration surface (reference `Kaflow.__init__`,
@@ -61,7 +62,7 @@ object KafkaIO {
     * [[normalizeHeaders]]), nullable throughout: the sink's writer checks
     * it by type equality, and `map_entries` alone yields non-null entries.
     */
-  private val HeadersDdl = "array<struct<key:string,value:binary>>"
+  private val HeadersType = DataType.fromDDL("array<struct<key:string,value:binary>>")
 
   /** Normalize the Kafka source's `headers array<struct<key,value>>` to the
     * engine's `map<string,binary>` record shape. Kafka lets a header key
@@ -93,11 +94,11 @@ object KafkaIO {
     */
   def sinkRows(routed: RoutedBatch, dlqTopic: Option[String]): DataFrame = {
     val outputs = routed.outputs.select(col("topic"), col("key"), col("value"),
-      map_entries(col("headers")).cast(HeadersDdl).as("headers"))
+      map_entries(col("headers")).cast(HeadersType).as("headers"))
     dlqTopic.fold(outputs) { t =>
       outputs.unionByName(routed.dlq.select(lit(t).as("topic"),
         col("key_raw").as("key"), col("value_raw").as("value"),
-        lit(null).cast(HeadersDdl).as("headers")))
+        lit(null).cast(HeadersType).as("headers")))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.serde
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructField, StructType}
 
 /** Wire-format serde as Column transformations (the Spark-native analog of
   * the reference's Serializer ABC, kaflow `serializers.py:32-43`).
@@ -25,22 +25,33 @@ trait Serde extends Serializable {
   def deserialize(bytes: Column): Column
   def serialize(value: Column): Column
 
-  /** The decode contract: (typedValue, failed) as expressions over ONE
-    * decode expression tree, where `failed` is true for records whose
-    * payload fails to deserialize — the condition the pipeline uses for
-    * DLQ routing. Default: non-null input decoded to null (the codecs
-    * return null on malformed input), both derived from the same
-    * `deserialize` tree. Sharing the tree lets subexpression elimination
-    * evaluate it once per row only where both land in one projection; in
-    * `GraftApp` the planner pushes the `failed` filter into a FilterExec
-    * below the decode projection, so the decode runs again there (see
-    * `GraftApp.decoded`). Formats whose decode cannot signal failure
-    * through null (PERMISSIVE JSON's all-null struct) override this.
+  /** The decode itself: the one expression over the raw bytes that
+    * `GraftApp.decoded` evaluates once per record, below its decode
+    * barrier. Default: [[deserialize]].
     */
-  def decodeWithFailure(raw: Column): (Column, Column) = {
-    val d = deserialize(raw)
-    (d, raw.isNotNull && d.isNull)
-  }
+  def decodeStage(raw: Column): Column = deserialize(raw)
+
+  /** (typedValue, failed) read from `decoded`, the result of
+    * [[decodeStage]], and the raw bytes. `GraftApp.decoded` evaluates
+    * these above its decode barrier, so the DLQ split and every later
+    * filter read the decoded column and never repeat the decode. Default:
+    * the decoded column is the value, and a record failed when non-null
+    * input decoded to null (the codecs return null on malformed input).
+    * Formats whose decode cannot signal failure through null (PERMISSIVE
+    * JSON's all-null struct) override both stages.
+    */
+  def fromDecoded(decoded: Column, raw: Column): (Column, Column) =
+    (decoded, raw.isNotNull && decoded.isNull)
+
+  /** The decode contract in one step: (typedValue, failed) over one
+    * decode expression tree, `failed` being the DLQ routing condition.
+    * Evaluated together in one projection, subexpression elimination
+    * decodes once; a filter on `failed` placed below that projection
+    * decodes again, which is why `GraftApp` splits the two stages
+    * around a barrier instead of calling this.
+    */
+  final def decodeWithFailure(raw: Column): (Column, Column) =
+    fromDecoded(decodeStage(raw), raw)
 }
 
 /** UTF-8 string passthrough (reference StringSerializer,
@@ -48,15 +59,15 @@ trait Serde extends Serializable {
   */
 object StringSerde extends Serde {
   val dataType: DataType = StringType
-  def deserialize(bytes: Column): Column = bytes.cast("string")
-  def serialize(value: Column): Column = value.cast("string").cast("binary")
+  def deserialize(bytes: Column): Column = bytes.cast(StringType)
+  def serialize(value: Column): Column = value.cast(StringType).cast(BinaryType)
 }
 
 /** Raw bytes passthrough (reference's un-serded `bytes` params,
   * `parameters.py:51-56`).
   */
 object BytesSerde extends Serde {
-  val dataType: DataType = org.apache.spark.sql.types.BinaryType
+  val dataType: DataType = BinaryType
   def deserialize(bytes: Column): Column = bytes
   def serialize(value: Column): Column = value
 }
@@ -75,28 +86,28 @@ final case class JsonSerde(schema: StructType) extends Serde {
     * structs; [[decodeWithFailure]] flags them for the DLQ.
     */
   def deserialize(bytes: Column): Column =
-    from_json(bytes.cast("string"), schema)
-  def serialize(value: Column): Column = to_json(value).cast("binary")
+    from_json(bytes.cast(StringType), schema)
+  def serialize(value: Column): Column = to_json(value).cast(BinaryType)
 
   /** PERMISSIVE `from_json` yields an all-null struct (not null) for
     * malformed input, which a legitimate all-null payload also yields, so
     * the default null-on-failure indicator cannot tell the two apart.
-    * This override flags failure by a corrupt-record column instead,
-    * populated iff the payload failed to parse as the declared schema;
-    * the typed value is written as the parsed struct minus that field.
-    * The optimiser does not keep that one parse: it rewrites the struct
-    * of field reads into a second `from_json` with the declared schema.
-    * In the plan of the ingest-text benchmark app's `processBatch`, the
-    * outputs ProjectExec holds both parses (the augmented one for the
-    * null check, the declared one for the value), and the FilterExec
-    * below it, which takes the pushed-down failure and handler filters,
-    * holds the same two in 23 copies. So a kept record is parsed at
-    * least twice in each of the two nodes.
+    * The decode stage is therefore one parse against the declared schema
+    * plus a corrupt-record column, populated iff the payload failed to
+    * parse; [[fromDecoded]] reads the typed value (the parsed struct minus
+    * that field) and the failure flag from it. In `GraftApp` the parse
+    * sits below the decode barrier and the two reads above it, so each
+    * record is parsed once per write: with both reads in one projection
+    * over the parse, the optimiser would rewrite the struct of field
+    * reads into a second `from_json` with the declared schema.
     */
-  override def decodeWithFailure(raw: Column): (Column, Column) = {
+  override def decodeStage(raw: Column): Column = {
     val withCorrupt = StructType(schema.fields :+ StructField("__corrupt", StringType))
-    val parsed = from_json(raw.cast("string"), withCorrupt,
+    from_json(raw.cast(StringType), withCorrupt,
       Map("columnNameOfCorruptRecord" -> "__corrupt"))
+  }
+
+  override def fromDecoded(parsed: Column, raw: Column): (Column, Column) = {
     val value = when(parsed.isNull, lit(null).cast(schema))
       .otherwise(struct(schema.fieldNames.toSeq.map(n => parsed.getField(n).as(n)): _*))
     val failed = raw.isNotNull && parsed.getField("__corrupt").isNotNull
@@ -119,6 +130,6 @@ final case class JsonSerde(schema: StructType) extends Serde {
   */
 object VariantSerde extends Serde {
   val dataType: DataType = org.apache.spark.sql.types.VariantType
-  def deserialize(bytes: Column): Column = try_parse_json(bytes.cast("string"))
-  def serialize(value: Column): Column = to_json(value).cast("binary")
+  def deserialize(bytes: Column): Column = try_parse_json(bytes.cast(StringType))
+  def serialize(value: Column): Column = to_json(value).cast(BinaryType)
 }

@@ -2,12 +2,18 @@ package graft
 
 import java.sql.Timestamp
 
+import graft.dsl.{ConsumerSpec, GraftApp}
+import graft.model.KafkaRecordIn
 import graft.operators.Joins
+import graft.plans.DecodeBarrier
+import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.types.StructType
 
-/** The single registration path: every graft SQL function and both custom
-  * join strategies reach the shared session (built by
-  * [[graft.runtime.Sessions]]) through [[GraftExtensions]] alone, with no
-  * per-call registration and no runtime strategy mutation.
+/** The single registration path: every graft SQL function, both custom
+  * join strategies and the decode barrier's strategy reach the shared
+  * session (built by [[graft.runtime.Sessions]]) through
+  * [[GraftExtensions]] alone, with no per-call registration and no
+  * runtime strategy mutation.
   */
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -36,5 +42,22 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(range.select("payload").as[Long].collect().toSeq == Seq(8L))
 
     assert(spark.experimental.extraStrategies.isEmpty)
+  }
+
+  test("the Sessions-built session plans the decode barrier as a projection") {
+    val app = new GraftApp().consume(ConsumerSpec("t", Seq("out")))
+    val rows = Seq(KafkaRecordIn("t", value = Array[Byte](1)), KafkaRecordIn("u"))
+      .toDF().collect().toSeq
+    val records = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType.fromDDL(KafkaRecordIn.schemaDdl))
+    val decoded = app.decoded(app.spec("t"), records)
+    val barriers = decoded.queryExecution.optimizedPlan.collect { case b: DecodeBarrier => b }
+    assert(barriers.size == 1)
+    assert(decoded.queryExecution.sparkPlan.exists {
+      case p: ProjectExec => p.output == barriers.head.output && p.child.output == p.output
+      case _ => false
+    }, decoded.queryExecution.sparkPlan.toString)
+    val values = decoded.select("value").as[Array[Byte]].collect().map(_.toSeq).toSeq
+    assert(values == Seq(Seq[Byte](1)))
   }
 }

@@ -16,6 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * stateful ingest twin folds through `graft.streaming.KeyedFold`,
   * except the six whose state grows by appending, so the state
   * lifecycle (handle, load, write-back, TTL and time mode) has one home.
+  * The kaflow decode barrier is built only by `GraftApp`, and
+  * `GraftExtensions` installs exactly the three planner strategies.
   *
   * The searched names are assembled from pieces so this file never
   * matches itself.
@@ -33,6 +35,13 @@ class SessionAuditSpec extends AnyFunSuite {
   private val processorBase = "Stateful" + "Processor"
   private val stateHandles = Seq("getValue" + "State", "getList" + "State")
   private val streaming = "src/main/scala/graft/streaming/"
+  private val barrierBuild = "Decode" + "Barrier("
+  private val barrierHome = "src/main/scala/graft/plans/DecodeBarrier.scala"
+  private val barrierUser = "src/main/scala/graft/dsl/GraftApp.scala"
+  private val extensions = "src/main/scala/graft/GraftExtensions.scala"
+  private val strategyInjection = "inject" + "PlannerStrategy("
+  private val expectedStrategies =
+    Set("AsofJoinStrategy", "RangeJoinStrategy", "DecodeBarrierStrategy")
   /** (file, class) of the one fold and the six append-state processors. */
   private val lifecycleOwners = Set(
     "KeyedFold.scala" -> "KeyedFold",
@@ -124,5 +133,27 @@ class SessionAuditSpec extends AnyFunSuite {
       .filterNot(site => ownerFiles.exists(f => site.startsWith(f + ":")))
     assert(handles.isEmpty,
       s"state handle opened outside KeyedFold: ${handles.mkString("; ")}")
+  }
+
+  test("only GraftApp builds the decode barrier") {
+    val (inGraftApp, elsewhere) = sites(barrierBuild, mainSources ++ testSources)
+      .filterNot(_.startsWith(barrierHome + ":"))
+      .partition(_.startsWith(barrierUser + ":"))
+    assert(inGraftApp.nonEmpty, s"$barrierUser no longer builds the barrier")
+    assert(elsewhere.isEmpty,
+      s"decode barrier built outside GraftApp.decoded: ${elsewhere.mkString("; ")}")
+  }
+
+  test("GraftExtensions installs exactly the three planner strategies") {
+    val injection = ("inject" + """PlannerStrategy\(\s*_\s*=>\s*(\w+)\s*\)""").r
+    val (inExtensions, elsewhere) =
+      sites(strategyInjection, mainSources).partition(_.startsWith(extensions + ":"))
+    assert(elsewhere.isEmpty, s"strategy injected outside $extensions: ${elsewhere.mkString("; ")}")
+    val lines = mainSources.collectFirst { case (`extensions`, l) => l }.getOrElse(Array.empty)
+    val installed = lines.toSeq.flatMap(l => injection.findAllMatchIn(l).map(_.group(1)))
+    assert(installed.size == inExtensions.size,
+      s"an injection this audit cannot read: ${inExtensions.mkString("; ")}")
+    assert(installed.sorted == expectedStrategies.toSeq.sorted,
+      s"installed ${installed.mkString(", ")}; expected ${expectedStrategies.mkString(", ")}")
   }
 }

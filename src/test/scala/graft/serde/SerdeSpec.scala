@@ -1,6 +1,16 @@
 package graft.serde
 
+import java.io.ByteArrayOutputStream
+import java.nio.ByteBuffer
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import graft.functions.expressions.AvroWireDecoder
+import org.apache.avro.{Schema => AvroSchema}
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -201,6 +211,146 @@ class SerdeSpec extends SparkSpec {
     val viaUdf = firstRow(df.select(
       container.deserialize(container.serializeUdf(flatStruct)).as("v"))).getAs[Row]("v")
     assert(viaNative == viaUdf && viaNative.getAs[String]("key") == "unit_test_key")
+  }
+
+  /** Every Avro type the decoder supports, nested and in null unions. */
+  private val allTypesJson =
+    """{"type":"record","name":"All","namespace":"graft.test","fields":[
+       {"name":"s","type":"string"},
+       {"name":"i","type":"int"},
+       {"name":"l","type":"long"},
+       {"name":"f","type":"float"},
+       {"name":"d","type":"double"},
+       {"name":"b","type":"boolean"},
+       {"name":"by","type":"bytes"},
+       {"name":"fx","type":{"type":"fixed","name":"Four","size":4}},
+       {"name":"e","type":{"type":"enum","name":"Color","symbols":["RED","GREEN"]}},
+       {"name":"arr","type":{"type":"array","items":["null","string"]}},
+       {"name":"m","type":{"type":"map","values":"long"}},
+       {"name":"opt","type":["null","double"],"default":null},
+       {"name":"optStr","type":["string","null"]},
+       {"name":"inner","type":{"type":"record","name":"Inner","fields":[
+          {"name":"n","type":"long"},
+          {"name":"tags","type":{"type":"array","items":"string"}}]}},
+       {"name":"optInner","type":["null","Inner"],"default":null}]}"""
+  private lazy val allTypes = new AvroSchema.Parser().parse(allTypesJson)
+
+  /** An `All` record; `big` makes every string, list and map longer. */
+  private def allRecord(big: Boolean, nulls: Boolean): GenericRecord = {
+    val r = new GenericData.Record(allTypes)
+    val w = if (big) "x" * 300 else "y"
+    val inner = new GenericData.Record(allTypes.getField("inner").schema())
+    inner.put("n", if (big) Long.MinValue else 7L)
+    inner.put("tags", Seq.fill(if (big) 5 else 1)(w + "-tag").asJava)
+    r.put("s", w); r.put("i", if (big) Int.MaxValue else -3)
+    r.put("l", if (big) Long.MaxValue else 0L); r.put("f", 1.5f); r.put("d", -2.25)
+    r.put("b", big)
+    r.put("by", ByteBuffer.wrap(Array.fill[Byte](if (big) 64 else 2)(9)))
+    r.put("fx", new GenericData.Fixed(allTypes.getField("fx").schema(), Array[Byte](1, 2, 3, 4)))
+    r.put("e", new GenericData.EnumSymbol(allTypes.getField("e").schema(),
+      if (big) "RED" else "GREEN"))
+    r.put("arr", (if (big) Seq(w, null, w + "2") else Seq(w)).asJava)
+    r.put("m", (if (big) Map("a" -> 1L, w -> 2L, "c" -> 3L) else Map("a" -> 4L))
+      .map { case (k, v) => k -> java.lang.Long.valueOf(v) }.asJava)
+    r.put("opt", if (nulls) null else 0.5)
+    r.put("optStr", if (nulls) null else w + "-opt")
+    r.put("inner", inner)
+    r.put("optInner", if (nulls) null else inner)
+    r
+  }
+
+  /** Avro's own writer: schemaless binary, or object-container framing. */
+  private def avroBytes(schema: AvroSchema, recs: Seq[GenericRecord],
+                        container: Boolean = false): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    val writer = new GenericDatumWriter[GenericRecord](schema)
+    if (container) {
+      val w = new DataFileWriter[GenericRecord](writer)
+      w.create(schema, out); recs.foreach(w.append); w.close()
+    } else {
+      val enc = EncoderFactory.get().directBinaryEncoder(out, null)
+      recs.foreach(writer.write(_, enc)); enc.flush()
+    }
+    out.toByteArray
+  }
+
+  /** Native and UDF decode of each payload, in one partition so the
+    * native decoder reuses its datum across them, must agree.
+    */
+  private def assertAvroParity(serde: AvroSerde, payloads: Seq[Array[Byte]]): Unit = {
+    val df = payloads.toDF("raw").coalesce(1)
+    val native = df.select(serde.deserialize(col("raw")).as("v")).collect().toSeq
+    val udf = df.select(serde.deserializeUdf(col("raw")).as("v")).collect().toSeq
+    assert(native == udf, s"native $native vs udf $udf")
+  }
+
+  test("AvroSerde: compiled converters == UDF reference on every supported type") {
+    val recs = Seq(allRecord(big = true, nulls = false), allRecord(big = false, nulls = false),
+      allRecord(big = false, nulls = true), allRecord(big = true, nulls = true))
+    val wires = recs.map(r => avroBytes(allTypes, Seq(r)))
+    assertAvroParity(AvroSerde(allTypesJson), wires :+ wires.head.take(7))
+    val prefix = Array[Byte](0, 0, 0, 0, 7)
+    assertAvroParity(AvroSerde(allTypesJson, seekOffset = 5),
+      wires.map(prefix ++ _) :+ prefix.take(3))
+    val containers = recs.map(r => avroBytes(allTypes, Seq(r), container = true))
+    assertAvroParity(AvroSerde(allTypesJson, includeSchema = true), containers)
+    assertAvroParity(AvroSerde(allTypesJson, includeSchema = true, seekOffset = 5),
+      containers.map(prefix ++ _))
+    val first = firstRow(Seq(Tuple1(wires.head)).toDF("raw")
+      .select(AvroSerde(allTypesJson).deserialize(col("raw")).as("v"))).getAs[Row]("v")
+    assert(first.getAs[String]("e") == "RED")
+    assert(first.getAs[Array[Byte]]("fx").toSeq == Seq(1, 2, 3, 4))
+  }
+
+  test("AvroWireDecoder: a reused Utf8 buffer never aliases an earlier row's string") {
+    val decoder = new AvroWireDecoder(allTypesJson, includeSchema = false, seekOffset = 0)
+    val rows = Seq(allRecord(big = true, nulls = false), allRecord(big = false, nulls = false))
+      .map(r => decoder.decode(avroBytes(allTypes, Seq(r))))
+    assert(rows.head.getUTF8String(0).toString == "x" * 300)
+    assert(rows(1).getUTF8String(0).toString == "y")
+    assert(rows.head.getStruct(13, 2).getArray(1).getUTF8String(0).toString == "x" * 300 + "-tag")
+    assert(rows.head.getMap(10).keyArray().numElements() == 3)
+    // what a reading decoder does to the datum's Utf8 for a shorter
+    // string: same buffer, new length, new bytes in front
+    val schema = new AvroSchema.Parser().parse(
+      """{"type":"record","name":"S","fields":[{"name":"s","type":"string"}]}""")
+    val datum = new GenericData.Record(schema)
+    val utf8 = new org.apache.avro.util.Utf8("x" * 30)
+    datum.put("s", utf8)
+    val row = AvroWireDecoder.converter(schema)(datum)
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    utf8.setByteLength(1)
+    utf8.getBytes()(0) = 'y'.toByte
+    assert(row.getUTF8String(0).toString == "x" * 30)
+  }
+
+  test("AvroSerde: string bytes that are not UTF-8 decode as the UDF decodes them") {
+    val schema = """{"type":"record","name":"S","fields":[{"name":"s","type":"string"}]}"""
+    val serde = AvroSerde(schema)
+    val wire = Array[Byte](0x04, 0xff.toByte, 0xfe.toByte) // length 2, invalid bytes
+    val df = Seq(Tuple1(wire)).toDF("raw")
+    def bytesOf(v: org.apache.spark.sql.Column) =
+      firstRow(df.select(v.getField("s").cast("binary"))).getAs[Array[Byte]](0).toSeq
+    val replaced = "\uFFFD\uFFFD".getBytes("UTF-8").toSeq
+    assert(bytesOf(serde.deserializeUdf(col("raw"))) == replaced)
+    assert(bytesOf(serde.deserialize(col("raw"))) == replaced)
+  }
+
+  test("Avro plan strings name the schema by record name and hash, SQL keeps the call") {
+    val serde = AvroSerde(allTypesJson)
+    val df = spark.range(1).select(when(col("id") >= 0, lit(Array[Byte](0))).as("raw"))
+      .select(serde.deserialize(col("raw")).as("v"))
+      .select(serde.serialize(col("v")).as("w"))
+    val plan = df.queryExecution.executedPlan.toString
+    val label = AvroWireDecoder.label(allTypesJson)
+    assert(label.startsWith("graft.test.All#") && label.length == "graft.test.All#".length + 8)
+    assert(plan.contains("avro_decode(") && plan.contains("avro_encode(") &&
+      plan.contains(label), plan)
+    assert(!plan.contains("symbols"), s"schema JSON printed in the plan:\n$plan")
+    // an unaliased column is named by the expression's SQL
+    val named = spark.range(1).select(lit(Array[Byte](0)).as("raw"))
+      .select(serde.deserialize(col("raw")))
+    assert(named.columns.toSeq == Seq("avro_decode(raw)"))
   }
 
   test("AvroSerde encode plans natively: no UDF, inside WholeStageCodegen") {
