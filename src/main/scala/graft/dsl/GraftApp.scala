@@ -2,10 +2,13 @@ package graft.dsl
 
 import scala.collection.mutable
 
+import graft.plans.BatchPlaceholder
 import graft.serde.{BytesSerde, Serde}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType, StructField}
 
 /** Declarative consume pipeline registration — the Spark-native form of the
   * reference's `@app.consume(topic, sink_topics)` decorator surface
@@ -17,6 +20,16 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, Str
   * execution happens per micro-batch (streaming) or on a batch of
   * Kafka-shaped records (testkit) — the "plan compile" the reference does
   * with one-time signature introspection is Catalyst analysis here.
+  *
+  * The handler contract: `handler` is a pure plan transform. `GraftApp`
+  * applies it once per app, session and input schema, to a template
+  * whose input is a placeholder, and binds each micro-batch into the
+  * analysed result, as Structured Streaming analyses a native query
+  * once and substitutes each batch's relation. So a handler runs no
+  * action on its frame (the placeholder cannot be executed), everything
+  * it captures is fixed at that first call (a `rand()` seed is the same
+  * in every micro-batch, and a static frame it joins is resolved once),
+  * and it sees no batch's content.
   *
   * Deliberate deviations from the reference, kept fail-safe
   * (SURVEY.md §7.4):
@@ -47,11 +60,14 @@ final case class RoutedBatch(outputs: DataFrame, dlq: DataFrame)
 class GraftApp {
   private val specs = mutable.LinkedHashMap.empty[String, ConsumerSpec]
 
+  private var current: Option[GraftApp.Template] = None
+
   /** Register a consumer; one handler per topic (duplicate → error). */
-  def consume(spec: ConsumerSpec): this.type = {
+  def consume(spec: ConsumerSpec): this.type = synchronized {
     require(!specs.contains(spec.topic),
       s"topic '${spec.topic}' already has a registered consumer")
     specs += spec.topic -> spec
+    current = None
     this
   }
 
@@ -94,7 +110,6 @@ class GraftApp {
     */
   private def decodeOnce(spec: ConsumerSpec, records: DataFrame)
       : (DataFrame, Seq[Column], Column) = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val below = records.filter(col("topic") === spec.topic).select(
       records.columns.toSeq.map(named) ++ Seq(
         col("value").as("value_raw"), col("key").as("key_raw"),
@@ -123,9 +138,39 @@ class GraftApp {
   /** Route a batch of Kafka-shaped records (KafkaRecordIn schema) through
     * every registered consumer: decode → split DLQ → handler → serialize →
     * fan out to sink topics. Wholly narrow (no shuffle): the plan is a
-    * union of filtered, mapped scans.
+    * union of filtered, mapped scans. The routing is analysed once per
+    * session and input schema ([[template]]); each call only binds
+    * `records` into it.
     */
   def processBatch(records: DataFrame): RoutedBatch = {
+    val t = template(records)
+    RoutedBatch(bind(t.outputs, records), bind(t.dlq, records))
+  }
+
+  /** The routed frames over a [[graft.plans.BatchPlaceholder]] with the
+    * columns of `records`. They are built, and the handlers applied, once
+    * per session and set of input columns (by name, in any order), and
+    * again after [[consume]] adds a topic. A session's analysis depends
+    * on its conf (the time zone, for one), so a template never crosses
+    * sessions.
+    */
+  private[graft] def template(records: DataFrame): RoutedBatch = synchronized {
+    val session = records.sparkSession
+    val fields = records.schema.fields.toSeq.sortBy(_.name)
+    current.filter(t => (t.session eq session) && t.fields == fields).getOrElse {
+      val input = BatchPlaceholder(DataTypeUtils.toAttributes(records.schema))
+      val t = GraftApp.Template(session, fields, route(ColumnBridge.ofRows(session, input)))
+      current = Some(t)
+      t
+    }.routed
+  }
+
+  /** `frame`, built over [[template]]`(records)`, reading `records`. */
+  private[graft] def bind(frame: DataFrame, records: DataFrame): DataFrame =
+    ColumnBridge.ofRows(records.sparkSession, BatchPlaceholder.bind(
+      ColumnBridge.logicalPlan(frame), ColumnBridge.logicalPlan(records)))
+
+  private def route(records: DataFrame): RoutedBatch = {
     require(specs.nonEmpty, "no consumers registered")
     val parts = specs.values.map { spec =>
       val (barrier, columns, failed) = decodeOnce(spec, records)
@@ -156,4 +201,13 @@ class GraftApp {
       outputs = parts.map(_._1).reduce(_ union _),
       dlq = parts.map(_._2).reduce(_ union _))
   }
+}
+
+object GraftApp {
+
+  /** The routing over a placeholder, for one session and one set of
+    * input columns; see [[GraftApp.template]].
+    */
+  private final case class Template(session: SparkSession, fields: Seq[StructField],
+                                    routed: RoutedBatch)
 }

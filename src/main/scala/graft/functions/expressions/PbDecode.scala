@@ -246,6 +246,14 @@ case class PbDecode(child: Expression, fields: Seq[PbField])
     """)
   }
 
+  /** The message in plan strings: its field count and a short hash of
+    * the field list, instead of every [[PbField]] in every operator that
+    * holds it (as [[AvroWireDecoder.label]] does for an Avro schema).
+    */
+  @transient private lazy val fieldsLabel = f"${fields.size} fields#${fields.hashCode}%08x"
+
+  override protected def stringArgs: Iterator[Any] = Iterator(child, fieldsLabel)
+
   override protected def withNewChildInternal(newChild: Expression): PbDecode =
     copy(child = newChild)
 

@@ -102,22 +102,30 @@ object KafkaIO {
     }
   }
 
-  /** The routing loop: each micro-batch of `records` (KafkaRecordIn
-    * schema) goes through `app.processBatch` and [[sinkRows]], and `write`
-    * publishes the result — one write, so one job, per micro-batch, with
-    * the outputs and the DLQ rows committed together. Checkpointing gives
-    * at-least-once end-to-end.
+  /** The routing loop: `write` publishes each micro-batch of `records`
+    * (KafkaRecordIn schema) as `sinkRows(app.processBatch(batch))` — one
+    * write, so one job, per micro-batch, with the outputs and the DLQ rows
+    * committed together. Checkpointing gives at-least-once end-to-end.
+    * [[sinkRows]] is built once over the app's template, and again only
+    * when the template is, so a micro-batch costs one bind.
     */
   def runWith(records: DataFrame, app: GraftApp, checkpointLocation: String,
               dlqTopic: Option[String], trigger: Trigger)(
-              write: DataFrame => Unit): StreamingQuery =
+              write: DataFrame => Unit): StreamingQuery = {
+    var sink: Option[(RoutedBatch, DataFrame)] = None
     records.writeStream
       .option("checkpointLocation", checkpointLocation)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        write(sinkRows(app.processBatch(batch), dlqTopic))
+        val routed = app.template(batch)
+        val rows = sink.filter(_._1 eq routed).getOrElse {
+          sink = Some(routed -> sinkRows(routed, dlqTopic))
+          sink.get
+        }._2
+        write(app.bind(rows, batch))
       }
       .start()
+  }
 
   /** Run the app as one streaming query from the Kafka source to the
     * Kafka sink, DLQ rows to `dlqTopic` when set.

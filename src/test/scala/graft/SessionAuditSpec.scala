@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * stateful ingest twin folds through `graft.streaming.KeyedFold`,
   * except the six whose state grows by appending, so the state
   * lifecycle (handle, load, write-back, TTL and time mode) has one home.
-  * The kaflow decode barrier is built only by `GraftApp`, and
+  * The kaflow decode barrier and the batch placeholder of its plan
+  * template are built only by `GraftApp`, and
   * `GraftExtensions` installs exactly the three planner strategies.
   *
   * The searched names are assembled from pieces so this file never
@@ -37,7 +38,9 @@ class SessionAuditSpec extends AnyFunSuite {
   private val streaming = "src/main/scala/graft/streaming/"
   private val barrierBuild = "Decode" + "Barrier("
   private val barrierHome = "src/main/scala/graft/plans/DecodeBarrier.scala"
-  private val barrierUser = "src/main/scala/graft/dsl/GraftApp.scala"
+  private val placeholderBuild = "Batch" + "Placeholder("
+  private val placeholderHome = "src/main/scala/graft/plans/BatchPlaceholder.scala"
+  private val graftApp = "src/main/scala/graft/dsl/GraftApp.scala"
   private val extensions = "src/main/scala/graft/GraftExtensions.scala"
   private val strategyInjection = "inject" + "PlannerStrategy("
   private val expectedStrategies =
@@ -135,13 +138,21 @@ class SessionAuditSpec extends AnyFunSuite {
       s"state handle opened outside KeyedFold: ${handles.mkString("; ")}")
   }
 
+  /** Fails unless `build` occurs in `graftApp` and nowhere else but `home`. */
+  private def builtOnlyByGraftApp(build: String, home: String, what: String): Unit = {
+    val (inGraftApp, elsewhere) = sites(build, mainSources ++ testSources)
+      .filterNot(_.startsWith(home + ":"))
+      .partition(_.startsWith(graftApp + ":"))
+    assert(inGraftApp.nonEmpty, s"$graftApp no longer builds the $what")
+    assert(elsewhere.isEmpty, s"$what built outside GraftApp: ${elsewhere.mkString("; ")}")
+  }
+
   test("only GraftApp builds the decode barrier") {
-    val (inGraftApp, elsewhere) = sites(barrierBuild, mainSources ++ testSources)
-      .filterNot(_.startsWith(barrierHome + ":"))
-      .partition(_.startsWith(barrierUser + ":"))
-    assert(inGraftApp.nonEmpty, s"$barrierUser no longer builds the barrier")
-    assert(elsewhere.isEmpty,
-      s"decode barrier built outside GraftApp.decoded: ${elsewhere.mkString("; ")}")
+    builtOnlyByGraftApp(barrierBuild, barrierHome, "decode barrier")
+  }
+
+  test("only GraftApp builds the batch placeholder") {
+    builtOnlyByGraftApp(placeholderBuild, placeholderHome, "batch placeholder")
   }
 
   test("GraftExtensions installs exactly the three planner strategies") {

@@ -201,6 +201,145 @@ class GraftAppSpec extends SparkSpec {
     assert(decodes(KafkaIO.sinkRows(routed, Some("dlq"))) == 2 * n)
   }
 
+  // ---- one template per app, session and input schema
+
+  /** `wireApp`, with each record's offset, partition and timestamp (as a
+    * string, so in the session's time zone when it is a TIMESTAMP) in its
+    * published value, and `calls` counting the handler's calls.
+    */
+  private def metadataApp(calls: java.util.concurrent.atomic.AtomicInteger =
+                            new java.util.concurrent.atomic.AtomicInteger): GraftApp =
+    wireTopics.foldLeft(new GraftApp()) { case (app, (topic, s, _)) =>
+      app.consume(ConsumerSpec(topic, Seq("audit"), s, Some(StringSerde),
+        outValueSerde = Some(StringSerde),
+        handler = { df =>
+          calls.incrementAndGet()
+          df.filter(col("value.id") % 3 =!= 1).withColumn("value", concat_ws(" ",
+            col("value.event"), col("offset").cast("string"),
+            col("partition").cast("string"), col("timestamp").cast("string")))
+        }))
+    }
+
+  /** Every published and DLQ row, with bytes and maps made comparable. */
+  private def rows(routed: RoutedBatch): (Seq[String], Seq[String]) = {
+    def norm(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case m: scala.collection.Map[_, _] => m.map { case (k, x) => norm(k) -> norm(x) }.toMap
+      case r: Row => r.toSeq.map(norm)
+      case x => x
+    }
+    def all(df: DataFrame) = df.collect().map(r => norm(r).toString).sorted.toSeq
+    (all(routed.outputs), all(routed.dlq))
+  }
+
+  /** `records` with its rows in `schema`, as a `foreachBatch` LogicalRDD. */
+  private def batchOf(records: DataFrame,
+                      session: org.apache.spark.sql.SparkSession = spark): DataFrame =
+    session.createDataFrame(records.rdd, records.schema)
+
+  test("one app reused over differing batches routes each as a fresh app does") {
+    val reused = metadataApp()
+    val stamped = wireRecords.withColumn("timestamp", lit(1700000000123L) + col("offset"))
+    val zone = spark.newSession()
+    zone.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val asTimestamp = stamped.withColumn("timestamp", timestamp_millis(col("timestamp")))
+    val batches = Seq(
+      "KafkaRecordIn order" -> batchOf(stamped),
+      "empty" -> batchOf(stamped.limit(0)),
+      "all malformed" -> batchOf(stamped.filter(col("offset") % 10 === 0)),
+      // same columns, another order: shares the template, binds by name
+      "Kafka source order" -> batchOf(stamped.select("key", "value", "topic", "partition",
+        "offset", "timestamp", "timestampType", "headers")),
+      // another schema: a TIMESTAMP timestamp, as the raw Kafka source has
+      "TIMESTAMP timestamp" -> batchOf(asTimestamp),
+      // another session: the same batch, printed in its own time zone
+      "other session" -> batchOf(asTimestamp, zone))
+    for ((name, batch) <- batches) {
+      val (outputs, dlq) = rows(reused.processBatch(batch))
+      val (freshOutputs, freshDlq) = rows(metadataApp().processBatch(batch))
+      assert(outputs == freshOutputs, s"$name: outputs differ from a fresh app's")
+      assert(dlq == freshDlq, s"$name: DLQ rows differ from a fresh app's")
+      val n = batch.count()
+      assert(dlq.size == batch.filter(col("offset") % 10 === 0).count(), name)
+      assert(outputs.size == batch.filter(col("offset") % 10 =!= 0 && col("offset") % 3 =!= 1)
+        .count(), name)
+      if (name != "empty") assert(n > 0, name)
+    }
+    val printed = batches.map { case (_, b) => rows(reused.processBatch(b))._1 }
+    assert(printed(4) != printed(5), "the time zone never showed in the published values")
+  }
+
+  test("a handler may join its records with themselves") {
+    // each kept record with the number of kept records sharing its
+    // timestamp, a column the handler reads straight from the batch
+    val (topic, serde, _) = wireTopics.head
+    val app = new GraftApp().consume(ConsumerSpec(topic, Seq("out"), serde,
+      outValueSerde = Some(StringSerde), handler = { df =>
+        val kept = df.filter(col("value.id") % 3 =!= 1)
+        kept.join(kept.groupBy("timestamp").count(), "timestamp")
+          .withColumn("value", concat_ws(" ", col("value.event"), col("count").cast("string")))
+      }))
+    val keyed = wireRecords.withColumn("timestamp", col("offset") % 4)
+    val expected = (0 until perTopic).filter(i => i % 10 != 0 && i % 3 != 1)
+      .groupBy(_ % 4).values.flatMap(ids => ids.map(i => s"event-$i ${ids.size}")).toSeq.sorted
+    for (batch <- Seq(batchOf(keyed), batchOf(keyed.select(keyed.columns.reverse.map(col): _*)))) {
+      val values = app.processBatch(batch).outputs.collect()
+        .map(r => new String(r.getAs[Array[Byte]]("value"), "UTF-8")).toSeq.sorted
+      assert(values == expected)
+    }
+  }
+
+  test("the handler runs once per template, not once per batch") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val app = metadataApp(calls)
+    val outputs = (1 to 4).map { i =>
+      app.processBatch(batchOf(wireRecords.filter(col("offset") < i * 10))).outputs.count()
+    }
+    assert(calls.get == wireTopics.size, s"${calls.get} handler calls")
+    val kept = (1 to 4).map(i => (0 until i * 10).count(j => j % 10 != 0 && j % 3 != 1))
+    assert(outputs == kept.map(_.toLong * wireTopics.size))
+  }
+
+  test("a new session gets its own template") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val app = metadataApp(calls)
+    val other = spark.newSession()
+    app.processBatch(wireRecords)
+    val routed = app.processBatch(batchOf(wireRecords, other))
+    assert(calls.get == 2 * wireTopics.size)
+    assert((routed.outputs.sparkSession eq other) && (routed.dlq.sparkSession eq other))
+    app.processBatch(batchOf(wireRecords, other))
+    assert(calls.get == 2 * wireTopics.size)
+  }
+
+  test("consume after processBatch routes the new topic on the next call") {
+    val (topic, serde, _) = wireTopics.head
+    val app = new GraftApp().consume(ConsumerSpec(topic, Seq("out"), serde))
+    def topics(routed: RoutedBatch) =
+      routed.dlq.select("topic").distinct().collect().map(_.getString(0)).toSet
+    assert(topics(app.processBatch(wireRecords)) == Set(topic))
+    val (next, nextSerde, _) = wireTopics(1)
+    app.consume(ConsumerSpec(next, Seq("out"), nextSerde))
+    val routed = app.processBatch(wireRecords)
+    assert(topics(routed) == Set(topic, next))
+    assert(routed.outputs.count() == 2L * (perTopic - perTopic / 10))
+  }
+
+  test("no planner strategy plans a template that was never bound") {
+    val template = wireApp().template(wireRecords)
+    for (frame <- Seq(template.outputs, template.dlq)) {
+      val plan = frame.queryExecution.analyzed
+      assert(plan.exists(_.isInstanceOf[graft.plans.BatchPlaceholder]), plan.toString)
+      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val e = intercept[AssertionError](classic.sessionState.planner.plan(plan).next())
+      assert(e.getMessage.contains("No plan for BatchPlaceholder"), e.getMessage)
+      // so an action on the template fails too, and never reads as empty
+      val run = intercept[Throwable](frame.collect())
+      assert(Iterator.iterate(run)(_.getCause).takeWhile(_ != null)
+        .exists(_.toString.contains("No plan for BatchPlaceholder")), run.toString)
+    }
+  }
+
   test("a planner without GraftExtensions' strategies cannot plan the decode barrier") {
     val routed = wireApp().processBatch(wireRecords)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

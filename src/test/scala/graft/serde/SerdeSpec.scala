@@ -415,6 +415,17 @@ class SerdeSpec extends SparkSpec {
     assert(wire.toSeq == pbGolden.toSeq, "byte-exact round trip")
   }
 
+  test("Protobuf plan strings name the message by field count and hash, not every field") {
+    val serde = ProtobufSerde(pbFields)
+    val df = spark.range(1).select(when(col("id") >= 0, lit(pbGolden)).as("raw"))
+      .select(serde.deserialize(col("raw")).as("v"))
+      .select(col("v.key").as("key"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("pb_decode(") && plan.contains("2 fields#"), plan)
+    assert(!plan.contains("PbField("), s"field descriptors printed in the plan:\n$plan")
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("unit_test_key"))
+  }
+
   test("ProtobufSerde: varints, unknown fields, proto3 defaults") {
     val fields = Seq(
       PbField(1, "n", PbType.PbInt64),

@@ -111,6 +111,56 @@ class StreamingSpec extends SparkSpec {
     assert(published() == Seq("audit:null:u3", "out:null:u3"))
   }
 
+  test("KafkaIO.runWith applies the handler once across micro-batches") {
+    import graft.dsl.{ConsumerSpec, GraftApp}
+    import graft.model.KafkaRecordIn
+    import graft.runtime.KafkaIO
+    import graft.serde.{JsonSerde, StringSerde}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types._
+    implicit val sc = spark.sqlContext
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val app = new GraftApp().consume(ConsumerSpec(
+      topic = "clicks",
+      sinkTopics = Seq("out", "audit"),
+      valueSerde = JsonSerde(StructType(Seq(StructField("user_id", LongType)))),
+      outValueSerde = Some(StringSerde),
+      handler = { df =>
+        calls.incrementAndGet()
+        df.select(concat(lit("u"), col("value.user_id"), lit("@"), col("offset")).as("value"))
+      }))
+    val input = MemoryStream[KafkaRecordIn]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_kaflow_once").toString
+    // the published (topic:key:value) rows of each write call
+    val writes = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val q = KafkaIO.runWith(input.toDF(), app, ckpt, Some("dlq"),
+      Trigger.ProcessingTime(0L)) { (rows: DataFrame) =>
+      val published = rows.collect().toSeq.map { r =>
+        def str(f: String) = Option(r.getAs[Array[Byte]](f))
+          .map(new String(_, "UTF-8")).orNull
+        s"${r.getAs[String]("topic")}:${str("key")}:${str("value")}"
+      }.sorted
+      writes.synchronized { writes += published }
+    }
+    try {
+      input.addData(KafkaRecordIn(topic = "clicks", offset = 1, value = """{"user_id": 7}""".getBytes),
+        KafkaRecordIn(topic = "clicks", offset = 2, key = "k2".getBytes, value = "not json".getBytes))
+      q.processAllAvailable()
+      input.addData(KafkaRecordIn(topic = "clicks", offset = 3, value = """{"user_id": 8}""".getBytes),
+        KafkaRecordIn(topic = "other", offset = 4, value = """{"user_id": 9}""".getBytes))
+      q.processAllAvailable()
+      input.addData(KafkaRecordIn(topic = "clicks", offset = 5, key = "k5".getBytes,
+        value = "{".getBytes))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(writes.synchronized(writes.toSeq) == Seq(
+      Seq("audit:null:u7@1", "dlq:k2:not json", "out:null:u7@1"),
+      Seq("audit:null:u8@3", "out:null:u8@3"),
+      Seq("dlq:k5:{")))
+    assert(calls.get == 1, s"${calls.get} handler calls over 3 micro-batches")
+  }
+
   test("streaming heavy hitters: Misra-Gries aggregate in complete mode") {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[String]
