@@ -110,26 +110,46 @@ class GraftApp {
     */
   private def decodeOnce(spec: ConsumerSpec, records: DataFrame)
       : (DataFrame, Seq[Column], Column) = {
+    val stages = GraftApp.stages(spec, "")
     val below = records.filter(col("topic") === spec.topic).select(
       records.columns.toSeq.map(named) ++ Seq(
-        col("value").as("value_raw"), col("key").as("key_raw"),
-        spec.valueSerde.decodeStage(col("value")).as("__value")) ++
-        spec.keySerde.map(_.decodeStage(col("key")).as("__key")) ++
+        col("value").as("value_raw"), col("key").as("key_raw")) ++
+        stages.below.map { case (name, decode) => decode.as(name) } ++
         spec.headerSerdes.map { case (name, serde) =>
           serde.deserialize(element_at(col("headers"), name)).as("header_" + name)
         }: _*)
-    val (value, valueFailed) = spec.valueSerde.fromDecoded(col("__value"), col("value_raw"))
-    val (key, keyFailed) = spec.keySerde match {
-      case Some(s) => s.fromDecoded(col("__key"), col("key_raw"))
-      case None => (col("key_raw"), lit(false))
-    }
-    val typed = Map("value" -> value, "key" -> key)
+    val typed = Map("value" -> stages.value, "key" -> stages.key)
     val columns = records.columns.toSeq.map(c => typed.get(c).fold(named(c))(_.as(c))) ++
       Seq(col("value_raw"), col("key_raw")) ++
       spec.headerSerdes.keys.map(n => named("header_" + n))
-    (ColumnBridge.ofRows(records.sparkSession,
-      graft.plans.DecodeBarrier(ColumnBridge.logicalPlan(below))),
-      columns, valueFailed || keyFailed)
+    (barrier(below), columns, stages.failed)
+  }
+
+  /** `below` under a [[graft.plans.DecodeBarrier]]. */
+  private def barrier(below: DataFrame): DataFrame =
+    ColumnBridge.ofRows(below.sparkSession,
+      graft.plans.DecodeBarrier(ColumnBridge.logicalPlan(below)))
+
+  /** Every consumer's DLQ records in one pass over `records`: one
+    * projection below one barrier evaluates each consumer's value and key
+    * decode stages, each only on its own topic's records, and a record is
+    * kept when a decode of its own consumer failed. Records of
+    * unregistered topics are dropped.
+    */
+  private def dlq(records: DataFrame): DataFrame = {
+    val byTopic = specs.values.toSeq.zipWithIndex.map { case (spec, i) =>
+      spec.topic -> GraftApp.stages(spec, "_" + i)
+    }
+    val below = records.select(Seq(col("topic"), col("partition"), col("offset"),
+      col("timestamp"), col("value").as("value_raw"), col("key").as("key_raw")) ++
+      byTopic.flatMap { case (topic, stages) =>
+        stages.below.map { case (name, decode) => when(col("topic") === topic, decode).as(name) }
+      }: _*)
+    barrier(below)
+      .filter(byTopic.map { case (topic, stages) => col("topic") === topic && stages.failed }
+        .reduce(_ || _))
+      .select(col("topic"), col("partition"), col("offset"), col("timestamp"),
+        col("value_raw"), col("key_raw"), lit("deserialization_error").as("error"))
   }
 
   /** The column called `name`, dots and dashes included. */
@@ -137,8 +157,9 @@ class GraftApp {
 
   /** Route a batch of Kafka-shaped records (KafkaRecordIn schema) through
     * every registered consumer: decode → split DLQ → handler → serialize →
-    * fan out to sink topics. Wholly narrow (no shuffle): the plan is a
-    * union of filtered, mapped scans. The routing is analysed once per
+    * fan out to sink topics. Wholly narrow (no shuffle): `outputs` is a
+    * union of one filtered, mapped scan per consumer, and `dlq` is one
+    * scan for every consumer. The routing is analysed once per
     * session and input schema ([[template]]); each call only binds
     * `records` into it.
     */
@@ -172,12 +193,10 @@ class GraftApp {
 
   private def route(records: DataFrame): RoutedBatch = {
     require(specs.nonEmpty, "no consumers registered")
-    val parts = specs.values.map { spec =>
+    // one outputs branch per consumer: a handler is a plan transform of
+    // its own topic's records
+    val outputs = specs.values.map { spec =>
       val (barrier, columns, failed) = decodeOnce(spec, records)
-      val dlq = barrier.filter(failed)
-        .select(col("topic"), col("partition"), col("offset"), col("timestamp"),
-          col("value_raw"), col("key_raw"),
-          lit("deserialization_error").as("error"))
       val handled = spec.handler(barrier.filter(!failed).select(columns: _*))
       def orNull(name: String, t: DataType): Column =
         if (handled.columns.contains(name)) col(name) else lit(null).cast(t)
@@ -188,22 +207,40 @@ class GraftApp {
         else array(spec.sinkTopics.map(lit): _*)
       // 1 → 0-or-1 semantics (A15): handlers drop rows via filter; a null
       // value column after the handler also publishes nothing.
-      val outputs = handled.select(
+      handled.select(
         orNull("key", BinaryType).cast(BinaryType).as("key"),
         spec.outValueSerde.fold(col("value"))(_.serialize(col("value"))).as("value"),
         orNull("out_headers", MapType(StringType, BinaryType)).as("headers"),
         explode(topics).as("topic"))
         .filter(col("value").isNotNull)
-      (outputs, dlq)
-    }.toSeq
+    }
     // every branch has the same columns in the same order
-    RoutedBatch(
-      outputs = parts.map(_._1).reduce(_ union _),
-      dlq = parts.map(_._2).reduce(_ union _))
+    RoutedBatch(outputs = outputs.reduce(_ union _), dlq = dlq(records))
   }
 }
 
 object GraftApp {
+
+  /** One consumer's value and key decode stages, as (column name, decode
+    * of the raw `value`/`key` column) pairs to evaluate below a decode
+    * barrier, and the typed value, typed key and failure indicator its
+    * serdes read from those columns above it (`fromDecoded`). `suffix`
+    * tells apart the columns of consumers that share a projection.
+    */
+  private final case class Stages(below: Seq[(String, Column)], value: Column, key: Column,
+                                  failed: Column)
+
+  private def stages(spec: ConsumerSpec, suffix: String): Stages = {
+    val (valueName, keyName) = ("__value" + suffix, "__key" + suffix)
+    val (value, valueFailed) = spec.valueSerde.fromDecoded(col(valueName), col("value_raw"))
+    val (key, keyFailed) = spec.keySerde match {
+      case Some(s) => s.fromDecoded(col(keyName), col("key_raw"))
+      case None => (col("key_raw"), lit(false))
+    }
+    Stages((valueName -> spec.valueSerde.decodeStage(col("value"))) +:
+      spec.keySerde.map(keyName -> _.decodeStage(col("key"))).toSeq,
+      value, key, valueFailed || keyFailed)
+  }
 
   /** The routing over a placeholder, for one session and one set of
     * input columns; see [[GraftApp.template]].

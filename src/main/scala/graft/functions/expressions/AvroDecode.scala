@@ -166,12 +166,12 @@ case class AvroDecode(child: Expression, schemaJson: String,
                       includeSchema: Boolean = false,
                       seekOffset: Int = 0) extends UnaryExpression {
 
-  @transient private lazy val sparkType: DataType =
-    graft.serde.AvroSerde.sparkTypeOf(schemaJson)
+  @transient private lazy val derived = AvroDecode.derived(schemaJson)
+  // per instance: the decoder reuses its buffers, so no two tasks may share it
   @transient private lazy val decoder =
     new AvroWireDecoder(schemaJson, includeSchema, seekOffset)
 
-  override def dataType: DataType = sparkType
+  override def dataType: DataType = derived._1
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -192,13 +192,25 @@ case class AvroDecode(child: Expression, schemaJson: String,
     """)
   }
 
-  @transient private lazy val schemaLabel = AvroWireDecoder.label(schemaJson)
-
   override protected def stringArgs: Iterator[Any] =
-    Iterator(child, schemaLabel, includeSchema, seekOffset)
+    Iterator(child, derived._2, includeSchema, seekOffset)
 
   override protected def withNewChildInternal(newChild: Expression): AvroDecode =
     copy(child = newChild)
 
   override def prettyName: String = "avro_decode"
+}
+
+object AvroDecode {
+
+  private val bySchema = new java.util.concurrent.ConcurrentHashMap[String, (DataType, String)]
+
+  /** The Spark type and plan label of a schema, derived once per schema
+    * JSON: the optimiser, planner and codegen copy the expression many
+    * times per write, and each copy would otherwise parse the JSON again.
+    * An app holds a handful of schemas, so entries are never dropped.
+    */
+  private def derived(schemaJson: String): (DataType, String) =
+    bySchema.computeIfAbsent(schemaJson,
+      json => (graft.serde.AvroSerde.sparkTypeOf(json), AvroWireDecoder.label(json)))
 }

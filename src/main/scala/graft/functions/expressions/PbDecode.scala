@@ -221,11 +221,10 @@ final class PbWireDecoder(val fields: Seq[PbField]) extends Serializable {
 case class PbDecode(child: Expression, fields: Seq[PbField])
     extends UnaryExpression {
 
-  @transient private lazy val sparkType: DataType =
-    ProtobufSerde.toSparkType(PbType.PbMessage(fields))
+  @transient private lazy val derived = PbDecode.derived(fields)
   @transient private lazy val decoder = new PbWireDecoder(fields)
 
-  override def dataType: DataType = sparkType
+  override def dataType: DataType = derived._1
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -246,16 +245,26 @@ case class PbDecode(child: Expression, fields: Seq[PbField])
     """)
   }
 
-  /** The message in plan strings: its field count and a short hash of
-    * the field list, instead of every [[PbField]] in every operator that
-    * holds it (as [[AvroWireDecoder.label]] does for an Avro schema).
-    */
-  @transient private lazy val fieldsLabel = f"${fields.size} fields#${fields.hashCode}%08x"
-
-  override protected def stringArgs: Iterator[Any] = Iterator(child, fieldsLabel)
+  override protected def stringArgs: Iterator[Any] = Iterator(child, derived._2)
 
   override protected def withNewChildInternal(newChild: Expression): PbDecode =
     copy(child = newChild)
 
   override def prettyName: String = "pb_decode"
+}
+
+object PbDecode {
+
+  private val byFields = new java.util.concurrent.ConcurrentHashMap[Seq[PbField], (DataType, String)]
+
+  /** The Spark type of a message, and its label in plan strings (its
+    * field count and a short hash of the field list, instead of every
+    * [[PbField]] in every operator that holds it, as
+    * [[AvroWireDecoder.label]] does for an Avro schema), derived once per
+    * field list rather than once per copy of the expression. An app
+    * holds a handful of messages, so entries are never dropped.
+    */
+  private def derived(fields: Seq[PbField]): (DataType, String) =
+    byFields.computeIfAbsent(fields, fs =>
+      (ProtobufSerde.toSparkType(PbType.PbMessage(fs)), f"${fs.size} fields#${fs.hashCode}%08x"))
 }

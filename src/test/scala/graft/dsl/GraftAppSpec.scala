@@ -8,7 +8,7 @@ import graft.serde.{AvroSerde, JsonSerde, PbField, PbType, ProtobufSerde, Serde,
 import graft.testkit.TestHarness
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
-import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan, SparkPlanner}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, RDDScanExec, SparkPlan, SparkPlanner}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -133,9 +133,12 @@ class GraftAppSpec extends SparkSpec {
       StructType.fromDDL(KafkaRecordIn.schemaDdl))
   }
 
-  /** Every wire topic through a filtering, projecting handler to two sinks. */
-  private def wireApp(serde: Serde => Serde = identity): GraftApp =
-    wireTopics.foldLeft(new GraftApp()) { case (app, (topic, s, _)) =>
+  /** Every wire topic (or `topics`) through a filtering, projecting
+    * handler to two sinks.
+    */
+  private def wireApp(serde: Serde => Serde = identity,
+                      topics: Seq[(String, Serde, Array[Byte])] = wireTopics): GraftApp =
+    topics.foldLeft(new GraftApp()) { case (app, (topic, s, _)) =>
       app.consume(ConsumerSpec(topic, Seq("audit", "analytics"), serde(s), Some(StringSerde),
         outValueSerde = Some(StringSerde),
         handler = _.filter(col("value.id") % 3 =!= 1).withColumn("value", col("value.event"))))
@@ -199,6 +202,75 @@ class GraftAppSpec extends SparkSpec {
     // one write, but each topic's outputs and DLQ branches read the batch
     // apart, so each decodes it once
     assert(decodes(KafkaIO.sinkRows(routed, Some("dlq"))) == 2 * n)
+  }
+
+  // ---- one DLQ pass over the batch for every consumer
+
+  test("the DLQ pass routes each consumer's value and key failures, and nothing else") {
+    val keySerde = AvroSerde(
+      """{"type":"record","name":"OrderKey","fields":[{"name":"id","type":"long"}]}""")
+    def consumer(topic: String, value: Serde, key: Option[Serde] = None) =
+      ConsumerSpec(topic, Seq("out"), value, key, outValueSerde = Some(StringSerde),
+        handler = _.select(col("value.event").as("value")))
+    val app = new GraftApp()
+      .consume(consumer("orders-pb", ProtobufSerde(orderFields)))
+      .consume(consumer("orders-avro", AvroSerde(orderAvro), Some(keySerde)))
+      .consume(consumer("orders-json", JsonSerde(orderJson)))
+    def encode(serde: Serde, fields: Column*): Array[Byte] =
+      spark.range(1).select(serde.serialize(struct(fields: _*))).head().getAs[Array[Byte]](0)
+    def encoded(serde: Serde, id: Long): Array[Byte] =
+      encode(serde, lit(id).as("id"), lit(s"event-$id").as("event"))
+    val (pb, avro, json) = (ProtobufSerde(orderFields), AvroSerde(orderAvro), JsonSerde(orderJson))
+    val key = encode(keySerde, lit(7L).as("id"))
+    val badKey = Array(0x80.toByte) // a varint cut short
+    val badPb = Array[Byte](0x0f)   // wire type 7
+    val badAvro = Array[Byte](0x02) // cut short
+    // (topic, offset, key, value, routed to the DLQ)
+    val records = Seq(
+      ("orders-pb", 1L, "k".getBytes, encoded(pb, 1), false),
+      ("orders-pb", 2L, "k".getBytes, badPb, true),
+      ("orders-pb", 3L, badKey, encoded(pb, 3), false), // no key serde on this topic
+      ("orders-avro", 11L, key, encoded(avro, 11), false),
+      ("orders-avro", 12L, badKey, encoded(avro, 12), true), // key failure
+      ("orders-avro", 13L, key, badAvro, true),              // value failure
+      ("orders-avro", 14L, badKey, badAvro, true),           // both, one DLQ row
+      ("orders-avro", 15L, null, encoded(avro, 15), false),  // a null key is no failure
+      ("orders-json", 21L, null, encoded(json, 21), false),
+      ("orders-json", 22L, null, "{not json".getBytes, true), // corrupt document
+      ("orders-json", 23L, null, "{}".getBytes, false),       // all-null, not corrupt
+      ("orders-json", 24L, null, null, false),
+      ("other", 31L, badKey, badPb, false))                   // unregistered: dropped
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(records.map {
+      case (topic, offset, k, v, _) => Row(topic, 0, offset, 0L, 0, k, v, null)
+    }, 2), StructType.fromDDL(KafkaRecordIn.schemaDdl))
+    val routed = app.processBatch(batch)
+    def bytes(b: Array[Byte]): Option[Seq[Byte]] = Option(b).map(_.toSeq)
+    val dlq = routed.dlq.collect().map(r => (r.getAs[String]("topic"), r.getAs[Int]("partition"),
+      r.getAs[Long]("offset"), r.getAs[Long]("timestamp"), bytes(r.getAs[Array[Byte]]("value_raw")),
+      bytes(r.getAs[Array[Byte]]("key_raw")), r.getAs[String]("error"))).toSeq.sortBy(_._3)
+    val expected = records.collect { case (topic, offset, k, v, true) =>
+      (topic, 0, offset, 0L, bytes(v), bytes(k), "deserialization_error")
+    }
+    assert(dlq == expected)
+    val published = routed.outputs.collect()
+      .map(r => new String(r.getAs[Array[Byte]]("value"), "UTF-8")).toSeq.sorted
+    assert(published == Seq(1, 11, 15, 21, 3).map(i => s"event-$i"))
+  }
+
+  test("the bound DLQ plan reads the batch once, for one, two and three consumers") {
+    def scans(df: DataFrame): Seq[SparkPlan] = {
+      val leaves = executed(df).collectLeaves()
+      assert(leaves.forall(_.isInstanceOf[RDDScanExec]), executed(df).toString)
+      leaves
+    }
+    for (n <- 1 to wireTopics.size) {
+      val routed = wireApp(topics = wireTopics.take(n)).processBatch(wireRecords)
+      assert(scans(routed.dlq).size == 1, s"$n consumers")
+      // outputs keep one branch, so one read, per consumer
+      assert(scans(routed.outputs).size == n, s"$n consumers")
+      assert(scans(KafkaIO.sinkRows(routed, Some("dlq"))).size == n + 1, s"$n consumers")
+      assert(routed.dlq.count() == n * perTopic / 10, s"$n consumers")
+    }
   }
 
   // ---- one template per app, session and input schema
